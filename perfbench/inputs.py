@@ -13,15 +13,38 @@ import json
 import numpy as np
 import pandas as pd
 
-# Query mix, recorded in NOTES.md.  Terms are drawn per band of the built
-# index's df distribution; 5% are absent from the vocabulary.
-BAND_MIX = {"tail": 0.30, "mid": 0.35, "head": 0.30, "absent": 0.05}
-SHAPE_MIX = {"or": 0.30, "and": 0.20, "must_should": 0.20,
-             "exclude": 0.15, "expansions": 0.15}
-K_MIX = {10: 0.4, 100: 0.4, 1000: 0.2}
-MAX_TERMS = 5
-BLOCK = 20  # queries per block of templates
-PROBE_TEMPLATE = {"shape": "or", "k": 100, "bands": ["head", "mid", "tail"]}
+# The query mix is one block of templates, sent in a seeded order, block
+# after block.  Ten templates are the classes of the repository's reference
+# query set (FIXTURES.md section 4, as bench.py's QUERY_SUITE runs it), one
+# each; three more add the MUST+SHOULD, exclude and expansions shapes, each
+# a variant of the two-mid-term query q03.  Bands name the df band a term is
+# drawn from; "absent" terms are not in the vocabulary.  Recorded in NOTES.md
+# with the reason for each weight.
+BLOCK_TEMPLATES = [
+    {"name": "q01_rare_single", "shape": "or", "k": 10, "bands": ["tail"]},
+    {"name": "q02_head_term", "shape": "or", "k": 10, "bands": ["head"]},
+    {"name": "q03_two_mid", "shape": "or", "k": 10, "bands": ["mid", "mid"]},
+    {"name": "q04_rare_plus_head", "shape": "and", "k": 10,
+     "bands": ["tail", "head"]},
+    {"name": "q05_five_mid", "shape": "or", "k": 10, "bands": ["mid"] * 5},
+    {"name": "q06_absent", "shape": "or", "k": 10, "bands": ["absent"]},
+    {"name": "q07_repeated", "shape": "or", "k": 10, "bands": ["head"],
+     "repeat": 3},
+    {"name": "q08_all_head", "shape": "or", "k": 10, "bands": ["head"] * 3},
+    # the suite's large-k class uses k=10000; the mix's k set stops at 1000
+    {"name": "q09_large_k", "shape": "or", "k": 1000, "bands": ["mid", "mid"]},
+    {"name": "q10_and_five", "shape": "and", "k": 10, "bands": ["mid"] * 5},
+    # added shapes: q03 plus one clause; k=100 (assumed, no recorded share)
+    {"name": "s1_must_should", "shape": "must_should", "k": 100,
+     "bands": ["mid", "mid"], "extra": "head"},
+    {"name": "s2_exclude", "shape": "exclude", "k": 100,
+     "bands": ["mid", "mid"], "extra": "head"},
+    {"name": "s3_expansions", "shape": "expansions", "k": 100,
+     "bands": ["mid", "mid"], "extra": "mid"},
+]
+BLOCK = len(BLOCK_TEMPLATES)  # queries per block
+PROBE_TEMPLATE = {"name": "probe", "shape": "or", "k": 100,
+                  "bands": ["head", "mid", "tail"]}
 # df thresholds, as shares of the document count
 HEAD_MIN_SHARE = 0.05
 TAIL_MAX_SHARE = 0.002
@@ -36,7 +59,7 @@ def _rng(seed: int, stream: str) -> np.random.Generator:
 
 
 def add_seed(seed: int) -> int:
-    """ADD batches come from a corpus seed no workload seed can equal."""
+    """The ADD corpus comes from a corpus seed no workload seed can equal."""
     return 1_000_000_007 + seed
 
 
@@ -70,11 +93,6 @@ def df_bands(term_df: dict[str, int], n_docs: int) -> dict[str, list[str]]:
     return bands
 
 
-def _pick(rng: np.random.Generator, mix: dict):
-    keys = list(mix)
-    return keys[int(rng.choice(len(keys), p=np.array(list(mix.values()))))]
-
-
 def _absent_term(rng: np.random.Generator, vocab: dict) -> str:
     while True:
         t = f"zq{int(rng.integers(1 << 40)):x}x"
@@ -82,47 +100,19 @@ def _absent_term(rng: np.random.Generator, vocab: dict) -> str:
             return t
 
 
-def block_templates() -> list[dict]:
-    """One block of BLOCK query templates (shape, k, band per term) with
-    exactly the mix's proportions.  The block is the same for every seed,
-    so each run sends the same composition of work; the seed picks the
-    order within each block and the terms."""
-    rng = _rng(0, "block")
-    shapes = [s for s, w in SHAPE_MIX.items() for _ in range(round(w * BLOCK))]
-    ks = [k for k, w in K_MIX.items() for _ in range(round(w * BLOCK))]
-    sizes = [n for n in range(1, MAX_TERMS + 1)
-             for _ in range(BLOCK // MAX_TERMS)]
-    bands = [b for b, w in BAND_MIX.items()
-             for _ in range(round(w * sum(sizes)))]
-    if not len(shapes) == len(ks) == len(sizes) == BLOCK or \
-            len(bands) != sum(sizes):
-        raise ValueError("mix proportions do not fill a block exactly")
-    for xs in (shapes, ks, sizes, bands):
-        rng.shuffle(xs)
-    for i, shape in enumerate(shapes):  # MUST+SHOULD needs two terms
-        if shape == "must_should" and sizes[i] == 1:
-            j = next(j for j, n in enumerate(sizes)
-                     if n > 1 and shapes[j] != "must_should")
-            sizes[i], sizes[j] = sizes[j], sizes[i]
-    it = iter(bands)
-    return [{"shape": shape, "k": k, "bands": [next(it) for _ in range(n)],
-             "exclude_band": _pick(rng, {"head": 0.5, "mid": 0.5})}
-            for shape, k, n in zip(shapes, ks, sizes)]
-
-
 def make_queries(
     seed: int, term_df: dict[str, int], n_docs: int, count: int
 ) -> list[dict]:
     """``count`` seeded search specs over the index's df distribution, in
-    blocks of ``block_templates()``.
+    blocks of ``BLOCK_TEMPLATES``, each block in a seeded order.
 
     Each spec holds the keyword arguments of ``SearchEngine.search`` (and of
     ``oracle.bm25_topk``): ``query``, ``k``, ``mode``, ``should``,
-    ``exclude`` and ``expansions``, plus the ``shape`` and the ``bands``
-    its terms came from."""
+    ``exclude`` and ``expansions``, plus the template ``name``, its
+    ``shape`` and the ``bands`` its distinct query and SHOULD terms came
+    from."""
     rng = _rng(seed, "queries")
     bands = df_bands(term_df, n_docs)
-    templates = block_templates()
 
     def term(band: str) -> str:
         if band == "absent":
@@ -133,7 +123,7 @@ def make_queries(
     out = []
     while len(out) < count:
         for t in rng.permutation(BLOCK)[: count - len(out)]:
-            out.append(_spec(templates[t], term, rng))
+            out.append(_spec(BLOCK_TEMPLATES[t], term, rng))
     return out
 
 
@@ -152,25 +142,27 @@ def probe_query(seed: int, term_df: dict[str, int], n_docs: int) -> dict:
 def _spec(tpl: dict, term, rng: np.random.Generator) -> dict:
     """A search spec for one template, terms drawn by ``term(band)``."""
     picked: list[str] = []
-    for band in tpl["bands"]:
+
+    def fresh(band: str) -> str:
         while (w := term(band)) in picked:
             pass
         picked.append(w)
+        return w
+
+    query = [fresh(band) for band in tpl["bands"]]
     shape = tpl["shape"]
-    spec = {"shape": shape, "bands": tpl["bands"], "k": tpl["k"],
-            "mode": "and" if shape == "and" else "or",
-            "query": " ".join(picked), "should": None, "exclude": None,
-            "expansions": None}
+    spec = {"name": tpl["name"], "shape": shape, "bands": list(tpl["bands"]),
+            "k": tpl["k"], "mode": "and" if shape == "and" else "or",
+            "query": " ".join(query * tpl.get("repeat", 1)), "should": None,
+            "exclude": None, "expansions": None}
     if shape == "must_should":
-        cut = int(rng.integers(1, len(picked)))
-        spec["query"] = " ".join(picked[:cut])
-        spec["should"] = " ".join(picked[cut:])
+        spec["should"] = fresh(tpl["extra"])
+        spec["bands"].append(tpl["extra"])
     elif shape == "exclude":
-        spec["exclude"] = term(tpl["exclude_band"])
+        spec["exclude"] = fresh(tpl["extra"])
     elif shape == "expansions":
-        while (syn := term("mid")) in picked:
-            pass
-        spec["expansions"] = {picked[int(rng.integers(len(picked)))]: [syn]}
+        target = query[int(rng.integers(len(query)))]
+        spec["expansions"] = {target: [fresh(tpl["extra"])]}
     return spec
 
 
@@ -180,10 +172,38 @@ def queries_digest(queries: list[dict]) -> str:
     ).hexdigest()
 
 
+def add_batches(pdf: pd.DataFrame, n_batches: int) -> list[pd.DataFrame]:
+    """Split the ADD corpus into ``n_batches`` equal batches by sorted key,
+    so the split depends on the seed only."""
+    rows = pdf.sort_values(KEY).reset_index(drop=True)
+    size = len(rows) // n_batches
+    return [rows.iloc[b * size:(b + 1) * size] for b in range(n_batches)]
+
+
+def org_of(repo: str) -> str:
+    """The org part of a repo name: ``org3/repo5`` -> ``org3``."""
+    return repo.rsplit("/", 1)[0]
+
+
 def remove_keys(
-    seed: int, batch: int, live: list[tuple[str, str, str]], n: int
+    seed: int, batch: int, base: list[tuple[str, str, str]], live: set,
+    n: int, shard: int, docs_per_shard: int,
 ) -> list[tuple[str, str, str]]:
-    """Seeded sample of ``n`` keys out of ``live`` (a sorted key list)."""
+    """REMOVE batch ``batch``: a seeded sample of ``n`` live keys, all from
+    one seeded org of the base corpus ``base`` (a sorted key list) whose
+    documents lie in shard ``shard``, the way deleting part of a project
+    does.  The build gives each base document its key's sorted rank as doc
+    id, so the batch rewrites that shard only, and every seed rewrites the
+    same shards."""
     rng = _rng(seed, f"remove-{batch}")
-    idx = rng.choice(len(live), size=min(n, len(live)), replace=False)
-    return [live[i] for i in sorted(idx.tolist())]
+    ranks: dict[str, list[int]] = {}
+    for rank, key in enumerate(base):
+        ranks.setdefault(org_of(key[0]), []).append(rank)
+    orgs = sorted(
+        o for o, rs in ranks.items()
+        if {r // docs_per_shard for r in rs} == {shard}
+        and sum(base[r] in live for r in rs) >= n)
+    pool = [base[r] for r in ranks[orgs[int(rng.integers(len(orgs)))]]
+            if base[r] in live]
+    idx = rng.choice(len(pool), size=n, replace=False)
+    return [pool[i] for i in sorted(idx.tolist())]

@@ -1,4 +1,5 @@
-"""Process-tree memory, on-disk bytes, lineage stage walls, and shutdown."""
+"""Process-tree memory, host CPU steal, on-disk bytes, lineage stage walls,
+and shutdown."""
 
 from __future__ import annotations
 
@@ -28,6 +29,30 @@ def median(values: list[float]) -> float:
 
 def mean(values: list[float]) -> float:
     return float(np.mean(values)) if values else 0.0
+
+
+def cpu_jiffies() -> tuple[int, int]:
+    """(all, steal) CPU time of the host since boot, from /proc/stat."""
+    with open("/proc/stat") as f:
+        vals = [int(x) for x in f.readline().split()[1:]]
+    return sum(vals), (vals[7] if len(vals) > 7 else 0)
+
+
+class StealMeter:
+    """Share of the host's CPU time the hypervisor stole over one window.
+
+    Steal slows every timed figure without any change to the program, so a
+    run records it next to what it timed."""
+
+    def start(self) -> None:
+        self._start = cpu_jiffies()
+
+    def stop(self) -> None:
+        self._end = cpu_jiffies()
+
+    def pct(self) -> float:
+        total = self._end[0] - self._start[0]
+        return 100.0 * (self._end[1] - self._start[1]) / max(total, 1)
 
 
 def descendants(pid: int) -> list[int]:

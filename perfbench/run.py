@@ -28,9 +28,10 @@ ROOT = Path(__file__).resolve().parent.parent
 WORKLOAD_NAMES = ("search_warm", "ingest_maintain")
 
 E2E_UNITS = {
-    "setup_s": "s", "op_p50_ms": "ms", "op_p75_ms": "ms", "ops_per_s": "1/s",
-    "build_docs_per_s": "docs/s", "first_answer_ms": "ms",
-    "index_bytes_per_content_byte": "ratio", "peak_rss_mb": "MB",
+    "setup_s": "s", "op_p50_ms": "ms", "op_p60_ms": "ms", "ops_per_s": "1/s",
+    "build_docs_per_s": "docs/s", "rewrite_docs_per_s": "docs/s",
+    "first_answer_ms": "ms", "index_bytes_per_content_byte": "ratio",
+    "store_bytes_per_content_byte": "ratio", "peak_rss_mb": "MB",
 }
 
 
@@ -75,14 +76,18 @@ def _run(args, work: Path) -> int:
     try:
         run = workloads.Run(spark, work, args.seed, args.seconds,
                             bool(args.trace), time.perf_counter() - t0)
+        run.note("session start")
         metrics = workloads.WORKLOADS[args.workload](run)
         metrics["peak_rss_mb"] = tree_peak_rss_bytes() / (1 << 20)
+        print(f"perfbench: host CPU steal {run.steal.pct():.2f}% over the "
+              "timed part", file=sys.stderr)
         if run.trace:
             layers = workloads.layer_metrics(run)
             run.tracer.write(ROOT / ".perfbench_out" / (
                 f"spans-{args.workload}-s{args.seed}.jsonl"))
     finally:
         stop_spark(spark)
+    run.note("shutdown")
     if run.trace:
         out = {k: {"value": v, "unit": workloads.LAYER_UNITS[k]}
                for k, v in layers.items()}

@@ -2,9 +2,9 @@
 
 ``search_warm``      closed loop, one client: seeded searches against a warm
                      SearchEngine over a freshly built index.
-``ingest_maintain``  one caller: a from-scratch build, then an ADD batch, a
-                     REMOVE batch and a compaction, each followed by the
-                     first search on the new generation.
+``ingest_maintain``  one caller: a from-scratch build, then a seeded sequence
+                     of ADD and REMOVE batches and a compaction, each
+                     followed by the first search on the new generation.
 
 Every answer is checked against the brute-force oracle over the corpus of
 the generation that produced it, after the timed part.
@@ -20,6 +20,7 @@ import traceback
 from collections import defaultdict
 from pathlib import Path
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -37,21 +38,26 @@ from strucmotif_search_spark.tokenizer import analyze_text
 
 from . import inputs
 from .measure import (
-    BUILD_STAGES, build_stage_walls, dir_bytes, mean, median, percentile,
+    BUILD_STAGES, StealMeter, build_stage_walls, dir_bytes, mean, median,
+    percentile,
 )
 from .tracing import Tracer
 
-N_DOCS = 4000          # corpus size of both workloads
-QUERY_POOL = 1000      # seeded searches generated; a run uses a prefix
-MIN_QUERIES = 40       # two blocks; p75 then has >= 10 samples beyond it
+N_DOCS = 12_000        # corpus size
+DOCS_PER_SHARD = 8192  # build_index's default
+N_SHARDS = -(-N_DOCS // DOCS_PER_SHARD)
+MIN_BLOCKS = 2         # 26 searches: every template twice; 10 beyond p60
+QUERY_POOL = 40 * inputs.BLOCK  # seeded searches generated; a run uses a prefix
 ENGINE_OPENS = 5       # search_warm set-up: engine opens, median reported
 QUERY_TIMEOUT_S = 30.0  # a slower answer counts as failed
-ADD_DOCS = 200
-REMOVE_DOCS = 100
+ROUNDS = 2             # ingest_maintain: ADD batch + REMOVE batch, this often
+ADD_DOCS = 200         # per ADD batch
+REMOVE_DOCS = 100      # per REMOVE batch
 DRIVER_MEMORY = "2g"
+T0 = time.perf_counter()  # process start, for the phase log
 # set-up warm-up: two head terms every seeded corpus contains
-WARMUP = {"query": "import return", "k": 10, "mode": "or", "should": None,
-          "exclude": None, "expansions": None, "shape": "or"}
+WARMUP = {"name": "warmup", "query": "import return", "k": 10, "mode": "or",
+          "should": None, "exclude": None, "expansions": None, "shape": "or"}
 
 # per-layer metrics of the traced run, with units
 LAYER_UNITS = {
@@ -69,12 +75,12 @@ LAYER_UNITS = {
     "incremental.add_ms": "ms", "incremental.remove_ms": "ms",
     "incremental.compact_ms": "ms", "incremental.affected_shards": "count",
     "incremental.bytes_written": "bytes", "incremental.jobs": "count",
+    "index_store.n_shards": "count",
     "index_store.postings_bytes": "bytes",
     "index_store.doc_map_bytes": "bytes",
     "index_store.terms_bytes": "bytes", "index_store.norms_bytes": "bytes",
-    "index_store.store_bytes_per_content_byte": "ratio",
     "session.start_s": "s", "corpus.generate_s": "s", "setup.build_s": "s",
-    "trace.overhead_ms": "ms",
+    "trace.overhead_ms": "ms", "host.steal_pct": "%",
 }
 
 
@@ -108,6 +114,12 @@ class Run:
         self.failures: list[str] = []
         self.answers: list[tuple[str, dict, list]] = []  # (gen, spec, hits)
         self.extra: dict[str, float] = {}  # per-layer values measured aside
+        self.steal = StealMeter()  # over the timed part
+
+    def note(self, phase: str) -> None:
+        """Log on stderr when a phase of the run ended."""
+        print(f"perfbench: {phase} done at {time.perf_counter() - T0:.1f} s",
+              file=sys.stderr)
 
     def fail(self, what: str) -> None:
         self.failures.append(what)
@@ -125,12 +137,17 @@ class Run:
 
 # ---- layer calls ----------------------------------------------------------
 
-def make_corpus(run: Run, n: int, seed: int, path: Path, repo_prefix=""):
+def make_corpus(run: Run, n: int, seed: int, path: Path | None,
+                repo_prefix=""):
+    """``generate_corpus(n, seed)``, persisted as parquet at ``path``, or
+    collected to pandas when ``path`` is None."""
     with run.tracer.span("corpus.generate", "setup"):
         docs = generate_corpus(run.spark, n, seed=seed)
         if repo_prefix:
             docs = docs.withColumn(
                 "repo", F.concat(F.lit(repo_prefix), "repo"))
+        if path is None:
+            return docs.schema, docs.toPandas()
         docs.write.parquet(str(path))
     return run.spark.read.parquet(str(path))
 
@@ -158,15 +175,24 @@ def open_engine(run: Run, store: IndexStore, req: str) -> SearchEngine:
 
 
 def search(run: Run, eng: SearchEngine, spec: dict, req: str):
-    """One search with metadata, collected: (hits, ms, span)."""
+    """One search with metadata, collected: (hits, span)."""
     with run.tracer.span("engine.search", req, shape=spec["shape"]) as rec:
         rows = eng.search(
             spec["query"], k=spec["k"], mode=spec["mode"], with_meta=True,
             expansions=spec["expansions"], exclude=spec["exclude"],
             should=spec["should"],
         ).collect()
-    hits = [(int(r["doc_id"]), float(r["score"])) for r in rows]
-    return hits, (rec["end"] - rec["start"]) * 1000, rec
+    return [(int(r["doc_id"]), float(r["score"])) for r in rows], rec
+
+
+def timed_search(run: Run, eng: SearchEngine, spec: dict, req: str):
+    """``search`` timed from outside, so a traced call's wall includes the
+    job-group set-up, the listener-bus drain and the status reads tracing
+    adds: (hits, ms, span), or None if it raised."""
+    t0 = time.perf_counter()
+    out = run.attempt(req, search, run, eng, spec, req)
+    ms = (time.perf_counter() - t0) * 1000
+    return None if out is None else (out[0], ms, out[1])
 
 
 def replay(run: Run, eng: SearchEngine, spec: dict, req: str, parent: dict):
@@ -207,11 +233,11 @@ def replay(run: Run, eng: SearchEngine, spec: dict, req: str, parent: dict):
 def checked_search(run: Run, eng: SearchEngine, spec: dict, req: str,
                    cold: bool = False):
     """A search whose answer is kept for the oracle check; in the traced
-    run it is replayed layer by layer and the replay must agree.  ``cold``:
-    the search was the engine's first, so the replay runs on a new engine
-    with uncached norms and pays what that search paid.  Returns the
-    search's ms, or None if it failed."""
-    out = run.attempt(req, search, run, eng, spec, req)
+    run it is then replayed layer by layer and the replay must agree.
+    ``cold``: the search was the engine's first, so the replay runs on a
+    new engine with uncached norms and pays what that search paid.
+    Returns the search's ms (replay excluded), or None if it failed."""
+    out = timed_search(run, eng, spec, req)
     if out is None:
         return None
     hits, ms, rec = out
@@ -230,6 +256,53 @@ def checked_search(run: Run, eng: SearchEngine, spec: dict, req: str,
 
 # ---- checks ---------------------------------------------------------------
 
+class KeyedOracle:
+    """The oracle's index, kept by natural key so that one tokenization of
+    every document ever indexed serves each generation.
+
+    Only the postings of the terms the checked searches name are kept: a
+    search's scores depend on its own terms' postings, the document count
+    and the document lengths, so ``oracle.bm25_topk`` over this index
+    equals it over ``oracle.build_oracle`` of the whole corpus."""
+
+    def __init__(self, content: dict, terms: set[str]):
+        self.doclen: dict[tuple, int] = {}
+        self.tf: dict[str, dict[tuple, int]] = {t: {} for t in terms}
+        for key, text in content.items():
+            toks = oracle.tokenize(text)
+            self.doclen[key] = len(toks)
+            for t in terms.intersection(toks):
+                self.tf[t][key] = toks.count(t)
+
+    def index(self, doc_ids: list[int], keys: list[tuple]):
+        """The oracle index of the generation whose doc_map maps
+        ``keys[i]`` to ``doc_ids[i]``."""
+        id_of = dict(zip(keys, doc_ids))
+        order = sorted(range(len(keys)), key=doc_ids.__getitem__)
+        postings = {}
+        for t, by_key in self.tf.items():
+            pairs = sorted((id_of[k], tf) for k, tf in by_key.items()
+                           if k in id_of)
+            if pairs:
+                ds, tfs = zip(*pairs)
+                postings[t] = (np.asarray(ds, dtype=np.int64),
+                               np.asarray(tfs, dtype=np.int64))
+        return oracle.OracleIndex(
+            doc_ids=np.asarray([doc_ids[i] for i in order], dtype=np.int64),
+            doclens=np.asarray([self.doclen[keys[i]] for i in order],
+                               dtype=np.int64),
+            postings=postings)
+
+
+def spec_terms(spec: dict) -> set[str]:
+    """Every term a search spec names, in any clause."""
+    text = " ".join([spec["query"], spec["should"] or "",
+                     spec["exclude"] or "",
+                     *(w for syns in (spec["expansions"] or {}).values()
+                       for w in syns)])
+    return set(oracle.tokenize(text))
+
+
 def check_answers(run: Run, store: IndexStore, content: dict) -> None:
     """Compare every kept answer with ``oracle.bm25_topk`` over the corpus
     of its generation: same doc ids, bitwise-equal float64 scores.  Doc ids
@@ -238,11 +311,13 @@ def check_answers(run: Run, store: IndexStore, content: dict) -> None:
     by_gen: dict[str, list] = defaultdict(list)
     for gen, spec, hits in run.answers:
         by_gen[gen].append((spec, hits))
+    keyed = KeyedOracle(content, set().union(
+        *(spec_terms(spec) for _, spec, _ in run.answers)))
     for gen, answers in by_gen.items():
         dm = store.read_table(run.spark, "doc_map", gen).select(
             "doc_id", *inputs.KEY).toPandas()
-        texts = [content[k] for k in zip(dm.repo, dm.path, dm.commit)]
-        index = oracle.build_oracle(dm.doc_id.tolist(), texts)
+        index = keyed.index(dm.doc_id.astype(int).tolist(),
+                            list(zip(dm.repo, dm.path, dm.commit)))
         terms = store.read_table(run.spark, "terms", gen).select(
             "term", "term_id").toPandas()
         order = dict(zip(terms.term, terms.term_id.astype(int)))
@@ -267,9 +342,11 @@ def term_dfs(run: Run, store: IndexStore, gen: str) -> dict[str, int]:
     return dict(zip(t.term, t.df.astype(int)))
 
 
-def table_bytes(run: Run, gen_dir: Path) -> None:
+def table_bytes(run: Run, store: IndexStore, gen: str) -> None:
     for t in ("postings", "doc_map", "terms", "norms"):
-        run.extra[f"index_store.{t}_bytes"] = dir_bytes(gen_dir / t)
+        run.extra[f"index_store.{t}_bytes"] = dir_bytes(store.root / gen / t)
+    meta = json.loads((store.root / gen / "_meta.json").read_text())
+    run.extra["index_store.n_shards"] = meta["n_shards"]
 
 
 # ---- workloads ------------------------------------------------------------
@@ -290,10 +367,12 @@ def search_warm(run: Run) -> dict:
         search(run, eng, WARMUP, f"setup-warmup-{i}")
         opens.append(time.perf_counter() - t1)
     setup_s = run.session_s + corpus_s + build_s + median(opens)
+    run.note("set-up")
 
     queries = inputs.make_queries(
         run.seed, term_dfs(run, store, gen), N_DOCS, QUERY_POOL)
     lat: list[float] = []
+    run.steal.start()
     start = time.perf_counter()
     if run.trace:
         # each search runs untraced and traced + replayed, alternating which
@@ -301,7 +380,8 @@ def search_warm(run: Run) -> dict:
         # plan); the difference of the medians is the tracing overhead
         traced: list[float] = []
         for i, spec in enumerate(queries):
-            if time.perf_counter() - start >= run.seconds:
+            if i % inputs.BLOCK == 0 and i > 0 \
+                    and time.perf_counter() - start >= run.seconds:
                 break
             for traced_turn in ((False, True) if i % 2 else (True, False)):
                 run.tracer.enabled = traced_turn
@@ -310,41 +390,46 @@ def search_warm(run: Run) -> dict:
                     if ms is not None:
                         traced.append(ms)
                 else:
-                    lat.append(search(run, eng, spec, "untraced")[1])
+                    out = timed_search(run, eng, spec, "untraced")
+                    if out is not None:
+                        lat.append(out[1])
         run.tracer.enabled = True
         run.extra["trace.overhead_ms"] = median(traced) - median(lat)
     else:
         for i, spec in enumerate(queries):
             # stop only between whole blocks, so every run sends the mix's
             # exact composition
-            if i % inputs.BLOCK == 0 and i >= MIN_QUERIES \
+            if i % inputs.BLOCK == 0 and i >= MIN_BLOCKS * inputs.BLOCK \
                     and time.perf_counter() - start >= run.seconds:
                 break
             ms = checked_search(run, eng, spec, f"q{i}")
             if ms is not None:
                 lat.append(ms)
     wall = time.perf_counter() - start
+    run.steal.stop()
+    run.note("timed part")
 
     pdf = docs.toPandas()
     check_answers(run, store, content_by_key(pdf))
+    run.note("oracle check")
     cbytes = inputs.content_bytes(pdf)
-    table_bytes(run, store.root / gen)
+    table_bytes(run, store, gen)
     run.extra.update({
         "session.start_s": run.session_s, "corpus.generate_s": corpus_s,
         "setup.build_s": build_s,
-        "index_store.store_bytes_per_content_byte":
-            dir_bytes(store.root) / cbytes,
     })
     print(f"perfbench: search_warm {len(lat)} searches in {wall:.1f} s, "
           f"corpus {inputs.corpus_hash(pdf)[:12]}", file=sys.stderr)
     return {
         "setup_s": setup_s,
         "op_p50_ms": median(lat),
-        "op_p75_ms": percentile(lat, 75),
+        "op_p60_ms": percentile(lat, 60),
         "ops_per_s": len(lat) / wall,
         "build_docs_per_s": N_DOCS / build_s,
+        "rewrite_docs_per_s": N_DOCS / build_s,
         "first_answer_ms": median(opens) * 1000,
         "index_bytes_per_content_byte": dir_bytes(store.root / gen) / cbytes,
+        "store_bytes_per_content_byte": dir_bytes(store.root) / cbytes,
     }
 
 
@@ -352,21 +437,32 @@ def ingest_maintain(run: Run) -> dict:
     spark = run.spark
     t0 = time.perf_counter()
     docs = make_corpus(run, N_DOCS, run.seed, run.work / "corpus")
-    added = make_corpus(run, ADD_DOCS, inputs.add_seed(run.seed),
-                        run.work / "add", repo_prefix="added/")
+    add_schema, add_pdf = make_corpus(
+        run, ROUNDS * ADD_DOCS, inputs.add_seed(run.seed), None,
+        repo_prefix="added/")
+    base_pdf = docs.toPandas()
+    # the seeded batch sequence: ADD batch r, then a REMOVE batch from
+    # shard r of the base documents
+    base = sorted(zip(base_pdf.repo, base_pdf.path, base_pdf.commit))
+    live = set(base)
+    batches = []
+    for r, batch in enumerate(inputs.add_batches(add_pdf, ROUNDS)):
+        live.update(zip(batch.repo, batch.path, batch.commit))
+        victims = inputs.remove_keys(run.seed, r, base, live, REMOVE_DOCS,
+                                     r % N_SHARDS, DOCS_PER_SHARD)
+        live.difference_update(victims)
+        batches.append((
+            spark.createDataFrame(batch, schema=add_schema),
+            spark.createDataFrame(pd.DataFrame(victims, columns=inputs.KEY)),
+        ))
     corpus_s = time.perf_counter() - t0
     setup_s = run.session_s + corpus_s
-    base_pdf, add_pdf = docs.toPandas(), added.toPandas()
-    live = sorted([*zip(base_pdf.repo, base_pdf.path, base_pdf.commit),
-                   *zip(add_pdf.repo, add_pdf.path, add_pdf.commit)])
-    victims = inputs.remove_keys(run.seed, 0, live, REMOVE_DOCS)
-    victims_df = spark.createDataFrame(
-        pd.DataFrame(victims, columns=inputs.KEY))
+    run.note("set-up")
 
     store = IndexStore(run.work / "index")
     firsts: list[float] = []
-    ops: dict[str, float] = {}
-    growth: list[int] = []
+    ops: dict[str, list[float]] = defaultdict(list)
+    sizes: list[int] = []  # store root bytes after the build and each commit
 
     def probe(req: str) -> None:
         t1 = time.perf_counter()
@@ -379,53 +475,63 @@ def ingest_maintain(run: Run) -> dict:
         eng.norms.unpersist()
 
     def commit(name: str, fn, *args) -> None:
-        before = dir_bytes(store.root)
         with run.tracer.span(f"incremental.{name}", name) as rec:
             out = run.attempt(name, fn, spark, store, *args)
         if out is not None:
-            ops[name] = (rec["end"] - rec["start"]) * 1000
-            growth.append(dir_bytes(store.root) - before)
-            probe(f"probe-{name}")
+            ops[name].append((rec["end"] - rec["start"]) * 1000)
+            sizes.append(dir_bytes(store.root))
+            probe(f"probe-{name}-{len(ops[name])}")
 
+    run.steal.start()
     run.attempted += 1
     gen, build_s = traced_build(run, docs, store, "build")
     probe_spec = inputs.probe_query(run.seed, term_dfs(run, store, gen),
                                     N_DOCS)
-    probe("probe-build")
-    commit("add", add_documents, added)
-    commit("remove", remove_documents, victims_df)
-    store_bytes = dir_bytes(store.root)
+    sizes.append(dir_bytes(store.root))
+    for add_df, remove_df in batches:
+        commit("add", add_documents, add_df)
+        commit("remove", remove_documents, remove_df)
+    store_bytes = sizes[-1]
     commit("compact", compact)
+    run.steal.stop()
+    run.note("timed part")
 
     run.attempted += 1
     report = verify_consistency(spark, store)
     if any(report.values()):
         run.fail(f"verify_consistency: {report}")
+    run.note("verify_consistency")
     content = content_by_key(base_pdf, add_pdf)
     check_answers(run, store, content)
-    live_bytes = inputs.content_bytes(base_pdf) + inputs.content_bytes(
-        add_pdf) - sum(len(content[k].encode()) for k in victims)
-    final = store.root / store.current_gen()
-    table_bytes(run, final)
-    affected = sum(e.get("affected_shards", 0) for e in store.lineage()
-                   if e.get("status") == "done")
+    run.note("oracle check")
+    live_bytes = sum(len(content[k].encode()) for k in live)
+    final = store.current_gen()
+    table_bytes(run, store, final)
+    churn = [e.get("affected_shards", 0) for e in store.lineage()
+             if e.get("status") == "done" and e.get("stage") in
+             ("add", "remove")]
     run.extra.update({
         "session.start_s": run.session_s, "corpus.generate_s": corpus_s,
         "setup.build_s": 0.0,
-        "incremental.affected_shards": affected,
-        "incremental.bytes_written": mean(growth),
-        "index_store.store_bytes_per_content_byte": store_bytes / live_bytes,
+        "incremental.affected_shards": mean(churn),
+        "incremental.bytes_written": mean(
+            [b - a for a, b in zip(sizes, sizes[1:])]),
     })
-    print(f"perfbench: ingest_maintain ops {ops}", file=sys.stderr)
-    op_ms = list(ops.values())
+    print(f"perfbench: ingest_maintain ops {dict(ops)}", file=sys.stderr)
+    # one op is one churn round: an ADD batch and the REMOVE batch after it
+    rounds = [a + r for a, r in zip(ops["add"], ops["remove"])]
+    compact_s = sum(ops["compact"]) / 1000
     return {
         "setup_s": setup_s,
-        "op_p50_ms": median(op_ms),
-        "op_p75_ms": percentile(op_ms, 75),
-        "ops_per_s": len(op_ms) / (sum(op_ms) / 1000),
+        "op_p50_ms": median(rounds),
+        "op_p60_ms": percentile(rounds, 60),
+        "ops_per_s": len(rounds) / (sum(rounds) / 1000),
         "build_docs_per_s": N_DOCS / build_s,
+        "rewrite_docs_per_s": len(live) / compact_s,
         "first_answer_ms": median(firsts),
-        "index_bytes_per_content_byte": dir_bytes(final) / live_bytes,
+        "index_bytes_per_content_byte":
+            dir_bytes(store.root / final) / live_bytes,
+        "store_bytes_per_content_byte": store_bytes / live_bytes,
     }
 
 
@@ -485,6 +591,7 @@ def layer_metrics(run: Run) -> dict[str, float]:
         "incremental.jobs": mean([s["jobs"] for s in commits]),
         "incremental.affected_shards": 0, "incremental.bytes_written": 0,
         "trace.overhead_ms": 0.0,
+        "host.steal_pct": run.steal.pct(),
     }
     for stage in BUILD_STAGES:
         out[f"builder.{stage}_ms"] = sum(ms(f"builder.{stage}")) / max(
