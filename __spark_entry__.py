@@ -77,9 +77,7 @@ def _engine(spark: SparkSession, sf_dir: str) -> SearchEngine:
             _as_corpus(_docs(spark, sf_dir)),
             store,
             docs_per_shard=512,
-            shards_per_chunk=1 << 20,  # single chunk at gate scale
-            checkpoint_partials=False,  # fused fast path
-            with_positions=True,        # positional payloads (phrase queries)
+            with_positions=True,  # positional payloads (phrase queries)
         )
         _ENGINES[key] = SearchEngine(spark, store)
     return _ENGINES[key]
@@ -119,10 +117,7 @@ def _incr_engine(spark: SparkSession, sf_dir: str, kind: str) -> SearchEngine:
             spark,
             _as_corpus(base),
             store,
-            docs_per_shard=512,
-            shards_per_chunk=1 << 20,
-            checkpoint_partials=False,
-            with_positions=True,
+            docs_per_shard=512, with_positions=True,
         )
         if kind == "add":
             add_documents(
@@ -164,9 +159,7 @@ def _code_engine(spark: SparkSession, sf_dir: str) -> SearchEngine:
         root = tempfile.mkdtemp(prefix="ssx_code_")
         store = IndexStore(root)
         build_index(
-            spark, corpus, store, docs_per_shard=512,
-            shards_per_chunk=1 << 20, checkpoint_partials=False,
-            analyzer="code",
+            spark, corpus, store, docs_per_shard=512, analyzer="code",
         )
         _ENGINES[key] = SearchEngine(spark, store)
     return _ENGINES[key]
@@ -1157,8 +1150,7 @@ def _q_bm25_after_delete_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         store = IndexStore(root)
         build_index(
             spark, _as_corpus(_docs(spark, sf_dir)), store,
-            docs_per_shard=512, shards_per_chunk=1 << 20,
-            checkpoint_partials=False,
+            docs_per_shard=512,
         )
         pre = SearchEngine(spark, store)
         pre.delete_by_query("customer", mode="or")

@@ -229,15 +229,13 @@ def density_worker(master_url: str, idx: int, n_docs: int) -> None:
         wroot = tf_mod.mkdtemp(prefix=f"dwarm{idx}_", dir=scratch)
         build_index(
             spark, spark.read.parquet(warm_src), IndexStore(wroot),
-            docs_per_shard=512, shards_per_chunk=1 << 20,
-            checkpoint_partials=False,
+            docs_per_shard=512,
         )
         root = tf_mod.mkdtemp(prefix=f"dens{idx}_", dir=scratch)
         t0 = time.time()
         build_index(
             spark, spark.read.parquet(src), IndexStore(root),
-            docs_per_shard=_scale_dps(n_docs), shards_per_chunk=1 << 20,
-            checkpoint_partials=False,
+            docs_per_shard=_scale_dps(n_docs),
         )
         print(f"DENSITY_WALL {idx} {time.time() - t0:.3f}", flush=True)
     finally:
@@ -374,8 +372,7 @@ def scale_pair(
                     build_index(
                         spark, spark.read.parquet(warm_src),
                         IndexStore(warm_root),
-                        docs_per_shard=512, shards_per_chunk=1 << 20,
-                        checkpoint_partials=False,
+                        docs_per_shard=512,
                     )
                     root = tempfile.mkdtemp(prefix=f"bs_{cores}_", dir=scratch)
                     cleanup.append(root)
@@ -399,8 +396,6 @@ def scale_pair(
                     build_index(
                         spark, docs, store,
                         docs_per_shard=_scale_dps(n_docs),
-                        shards_per_chunk=1 << 20,
-                        checkpoint_partials=False,
                     )
                     wall = time.time() - t0
                     jif1, st1 = _cpu_times()
@@ -1288,8 +1283,6 @@ def main() -> None:
         build_index(
             spark, corpus, IndexStore(cand_root),
             docs_per_shard=max(n_docs // (cpus * 4), 256),
-            shards_per_chunk=1 << 20,
-            checkpoint_partials=False,  # fused production path (bucketed)
         )
         wall = time.time() - t0
         jif1, st1 = _cpu_times()
@@ -1437,8 +1430,7 @@ def main() -> None:
         build_index(
             spark, corpus, IndexStore(pos_root),
             docs_per_shard=max(n_docs // (cpus * 4), 256),
-            shards_per_chunk=1 << 20,
-            checkpoint_partials=False, with_positions=True,
+            with_positions=True,
         )
         queries["build_index_positional"] = round(time.time() - t0, 3)
         pos_engine = SearchEngine(spark, IndexStore(pos_root))
@@ -1713,8 +1705,7 @@ def main() -> None:
             build_index(
                 spark, big, IndexStore(big_root),
                 docs_per_shard=max(at_scale_docs // (cpus * 4), 256),
-                shards_per_chunk=1 << 20,
-                checkpoint_partials=False, with_positions=True,
+                with_positions=True,
             )
             wall = time.time() - t0
             queries["at_scale_build"] = round(wall, 3)

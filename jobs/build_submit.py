@@ -13,7 +13,13 @@ and the library arrives through ``--py-files strucmotif_search_spark.zip``
         --py-files dist/strucmotif_search_spark.zip \
         jobs/build_submit.py \
         --source /data/corpus.parquet --index-root /data/index \
-        --docs-per-shard 8192 --query "hash join" --k 10
+        --docs-per-shard 8192 [--with-positions] \
+        [--resume-gen gen-000001] --query "hash join" --k 10
+
+A build killed part-way is resumed by rerunning the same command with
+``--resume-gen`` set to the generation it was writing: stages already logged
+done in the index's lineage WAL are skipped and the scratch run spill is
+reused while it exists.
 
 Prints ONE JSON line with build metrics (and query results when --query is
 given) so callers/schedulers can parse the outcome.  Reference analogue: the
@@ -36,17 +42,11 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--index-root", required=True,
                     help="directory for the IndexStore (generations+CURRENT)")
     ap.add_argument("--docs-per-shard", type=int, default=8192)
-    ap.add_argument("--shards-per-chunk", type=int, default=None,
-                    help="shards per commit chunk; default: single-chunk "
-                         "for the fused path, the library's chunked "
-                         "default (4) with --checkpoint-partials — "
-                         "per-chunk resume needs MULTIPLE chunks")
     ap.add_argument("--with-positions", action="store_true")
-    ap.add_argument("--checkpoint-partials", action="store_true",
-                    help="durable per-chunk SPIMI partials (resumable "
-                         "mid-build); default is the fused one-pass path")
     ap.add_argument("--resume-gen", default=None,
-                    help="resume an interrupted build of this generation")
+                    help="resume an interrupted build of this generation: "
+                         "stages it logged done are skipped and its run "
+                         "spill is reused")
     ap.add_argument("--query", default=None,
                     help="optional smoke query to run after the build")
     ap.add_argument("--mode", default="or", choices=["or", "and"])
@@ -65,20 +65,12 @@ def main(argv: list[str] | None = None) -> int:
     docs = spark.read.parquet(args.source)
     n_docs = docs.count()
     store = IndexStore(args.index_root)
-    # default chunking follows the chosen path: fused one-pass wants one
-    # big chunk; the checkpointed path only resumes per-chunk if there ARE
-    # chunks (the library's default 4)
-    shards_per_chunk = args.shards_per_chunk
-    if shards_per_chunk is None:
-        shards_per_chunk = 4 if args.checkpoint_partials else 1 << 20
     t0 = time.time()
     gen = build_index(
         spark,
         docs,
         store,
         docs_per_shard=args.docs_per_shard,
-        shards_per_chunk=shards_per_chunk,
-        checkpoint_partials=args.checkpoint_partials,
         with_positions=args.with_positions,
         gen=args.resume_gen,
     )

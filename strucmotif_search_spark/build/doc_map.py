@@ -18,44 +18,4 @@ reference's analogous move is shuffling the doc axis before chunking,
 math/Partition.java:27-29, plus term-prefix partitioning, Context.java:50-52).
 """
 
-from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from ..tokenizer import doclen_expr
-from .ids import assign_sorted_rank
-
 DOC_KEY = ["repo", "path", "commit"]
-
-
-def build_doc_map(
-    docs: DataFrame,
-    docs_per_shard: int = 8192,
-    content_col: str = "content",
-    start_doc_id: int = 0,
-    analyzer: str = "standard",
-) -> DataFrame:
-    """Source table (repo,path,commit,lang,content) -> doc_map.  The
-    sha256 invariant hashes RAW content; doclen counts analyzed tokens."""
-    enriched = docs.select(
-        *DOC_KEY,
-        "lang",
-        F.sha2(F.col(content_col), 256).alias("content_sha256"),
-        doclen_expr(F.col(content_col), analyzer).cast("long").alias("doclen"),
-    )
-    with_ids = assign_sorted_rank(enriched, DOC_KEY, "doc_id", start=start_doc_id)
-    return with_ids.select(
-        "doc_id",
-        *DOC_KEY,
-        "lang",
-        "content_sha256",
-        "doclen",
-        (F.col("doc_id") / docs_per_shard).cast("int").alias("shard"),
-    )
-
-
-def attach_doc_ids(docs: DataFrame, doc_map: DataFrame) -> DataFrame:
-    """Join source rows back to their minted doc_id (equi join on the natural
-    key; sort-merge at scale, broadcast when doc_map is small — AQE decides)."""
-    return docs.join(doc_map.select("doc_id", "shard", *DOC_KEY), on=DOC_KEY)

@@ -12,15 +12,15 @@ stand-in with identical semantics):
 
     root/
       gen-000001/{doc_map,terms,stats,postings,...}/   # immutable tables
-      _partials/gen-000001/chunk=N/                    # stage-1 SPIMI runs
+      _partials/gen-000001/                            # build's scratch spill
       _lineage.jsonl                                   # append-only WAL
       CURRENT                                          # atomic pointer
 
 Readers resolve CURRENT once; a build writes into an unpublished gen dir and
-flips CURRENT via atomic ``os.replace`` only after every chunk committed —
+flips CURRENT via atomic ``os.replace`` only after every stage committed —
 readers never observe a partial merge.  The lineage log is the dirty-list
-analogue: each (gen, chunk, stage) transition is appended with metrics, and a
-resumed build skips chunks whose terminal event is already logged (recovery
+analogue: each (gen, stage) transition is appended with metrics, and a
+resumed build skips stages whose terminal event is already logged (recovery
 protocol T1-T3 in SURVEY.md §2.8).
 """
 
@@ -263,8 +263,8 @@ class IndexStore:
             _json.loads(meta_file.read_text()).get("with_positions")
         ) if meta_file.exists() else False
         # canonical projection per part: parts come from heterogeneous
-        # layouts (fused flat bucketed files, chunk=N partition dirs,
-        # chunk=add/remove repacks) whose discovered schemas differ by
+        # layouts (flat bucketed files, chunk=N partition dirs of older
+        # builds, chunk=add/remove repacks) whose discovered schemas differ by
         # partition columns — project each to the one true POSTINGS schema
         # before the union (schema contract, not discovery accident)
         canon = [
@@ -290,14 +290,8 @@ class IndexStore:
             out = out.unionByName(p)
         return out
 
-    def partials_path(self, gen: str, chunk: int | None = None) -> str:
-        p = self.root / "_partials" / gen
-        if chunk is not None:
-            p = p / f"chunk={chunk}"
-        return str(p)
-
-    def postings_chunk_path(self, gen: str, chunk: int) -> str:
-        return str(self.root / gen / "postings" / f"chunk={chunk}")
+    def partials_path(self, gen: str) -> str:
+        return str(self.root / "_partials" / gen)
 
     # ---- lineage WAL ---------------------------------------------------
     @property
@@ -324,16 +318,6 @@ class IndexStore:
 
     def lineage_df(self, spark: SparkSession) -> DataFrame:
         return spark.read.json(str(self.lineage_path))
-
-    def completed(self, gen: str, stage: str) -> set[int]:
-        """Chunk ids whose (gen, stage) reached status=done — the resume
-        skip-set (RECOVER analogue, StrucmotifUpdate.java:532-546)."""
-        done: set[int] = set()
-        for e in self.lineage():
-            if e.get("gen") == gen and e.get("stage") == stage:
-                if e.get("status") == "done":
-                    done.add(int(e.get("chunk", -1)))
-        return done
 
     def stage_done(self, gen: str, stage: str) -> bool:
         return any(

@@ -3,7 +3,7 @@
 Reference analogues:
 - stage 1 (map): per-doc tokenize + tf extraction = the per-doc work in
   StrucmotifUpdate.handleUpdateItem (update/StrucmotifUpdate.java:327-373),
-  expressed as mapInPandas over the source table (tokenizer.term_frequencies);
+  expressed as mapInPandas over the source table (tokenizer.packed_term_runs);
 - the shuffle: the reference's per-thread per-term-prefix partial files
   (update/Context.java:50-73) are Spark's shuffle made explicit — we group by
   (shard, term_id) where ``shard`` is the doc-range partition;

@@ -6,40 +6,16 @@ frequency ranking, ResiduePairOccurrence.java:230-463) becomes an exact
 ``stats(n_docs, sum_doclen, avgdl)``.
 
 Both must be EXACT (no approx_count_distinct) because BM25 scores are judged
-rank-identical against the oracle (SURVEY.md §2.4 A3).  df/cf are computed
-with map-side partial aggregation (plain groupBy — Catalyst does the partial
-combine), and term_id is the deterministic sorted rank of the term string.
+rank-identical against the oracle (SURVEY.md §2.4 A3).  The build derives
+the terms table from its SPIMI runs (builder.py: df/cf are sums of per-run
+partials, term_id the deterministic sorted rank of the term string);
+incremental updates recompute the stats row with :func:`build_stats`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .ids import assign_sorted_rank
-
-
-def build_terms(tf: DataFrame) -> DataFrame:
-    """(doc_id, term, tf) -> terms(term, term_id, df, cf).
-
-    df = number of docs containing the term (exact); cf = total occurrences.
-    One shuffle on ``term`` with map-side combine; the df-ascending query
-    ordering (rarest-first, ResiduePairOccurrence.java:53-57) reads this
-    table.
-    """
-    # persist the vocab agg before ranking: assign_sorted_rank's
-    # repartitionByRange SAMPLES its child in a separate pass, which would
-    # re-run this full groupBy over the tf spill — with the cache, the
-    # sample pass materializes the agg once and the rank shuffle reads it
-    # back (MEMORY_AND_DISK — spills, stays one pass at any vocab size).
-    # Callers publish the result to parquet immediately, after which the
-    # build's end-of-run clearCache() drops it.
-    agg = tf.groupBy("term").agg(
-        F.count("*").alias("df"), F.sum("tf").alias("cf")
-    ).persist()
-    return assign_sorted_rank(agg, ["term"], "term_id").select(
-        "term", "term_id", "df", "cf"
-    )
 
 
 def build_stats(doc_map: DataFrame) -> DataFrame:

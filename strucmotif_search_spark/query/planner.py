@@ -151,7 +151,9 @@ def plan_query(
     distinct = sorted(set(tokenize(query)))
     should_distinct = sorted(set(tokenize(should)) - set(distinct))
     st = stats_row if stats_row is not None else stats_table.first()
-    n_docs, avgdl = int(st["n_docs"]), float(st["avgdl"])
+    # an empty corpus has a null avgdl; read it as 0.0 like the oracle does
+    # (no posting is ever scored against it)
+    n_docs, avgdl = int(st["n_docs"]), float(st["avgdl"] or 0.0)
     if not distinct and not should_distinct:
         return QueryPlan([], [], [], [], 0, n_docs, avgdl)
     # group member sets: base term ∪ its expansions (expansion terms go

@@ -39,10 +39,6 @@ from ..build.terms import build_stats
 from ..tokenizer import term_frequencies
 
 
-def read_current_postings(spark: SparkSession, store: IndexStore) -> DataFrame:
-    return store.read_postings(spark)
-
-
 def _meta(store: IndexStore, gen: str) -> dict:
     return json.loads((Path(store.root) / gen / "_meta.json").read_text())
 
@@ -371,7 +367,7 @@ def compact(spark: SparkSession, store: IndexStore) -> str:
     store.log(gen=gen, stage="compact", status="start", base=old_gen)
     dps = meta["docs_per_shard"]
     rows = decode_postings(
-        read_current_postings(spark, store), with_positions=wp
+        store.read_postings(spark), with_positions=wp
     ).withColumn("shard", (F.col("doc_id") / dps).cast("int"))
     nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
     pcols = ["shard", "term_id", "doc_id", "tf"] + (["positions"] if wp else [])
@@ -408,7 +404,7 @@ def verify_consistency(spark: SparkSession, store: IndexStore) -> dict:
     """
     doc_map = store.read_table(spark, "doc_map")
     terms = store.read_table(spark, "terms")
-    decoded = decode_postings(read_current_postings(spark, store))
+    decoded = decode_postings(store.read_postings(spark))
     orphans = (
         decoded.select("doc_id")
         .distinct()

@@ -9,14 +9,16 @@ distance/angle binning rules (DistanceType.java:161-170) — the vocabulary is
 defined by the rule, and exactness is asserted against the oracle, not
 assumed.
 
-Two code paths, both JVM/Arrow friendly:
+Three code paths, all JVM/Arrow friendly:
 
 - :func:`tokenize_expr` — pure Catalyst expression (``regexp_extract_all``),
   whole-stage-codegen'd, used when a token *array column* is all we need.
 - :func:`term_frequencies` — ``mapInPandas`` kernel emitting
-  ``(doc_id, term, tf)`` + doclen, array-at-a-time via pandas
-  ``str.findall`` + ``explode`` + ``value_counts`` (no per-row Python).
-  This is SPIMI stage-1's map side (StrucmotifUpdate.java:327-373 analogue).
+  ``(doc_id, term, tf)`` rows, array-at-a-time in Arrow + numpy (no
+  per-token Python); incremental ADD and classification tokenize with it.
+- :func:`packed_term_runs` — the same tokenization packed map-side into
+  per-(shard, term) posting runs: the full build's SPIMI stage-1 map side
+  (StrucmotifUpdate.java:327-373 analogue).
 """
 
 from __future__ import annotations
@@ -56,30 +58,6 @@ TFP_SCHEMA = StructType(
         StructField("positions", ArrayType(LongType(), False), False),
     ]
 )
-
-DOCLEN_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("doclen", LongType(), False),
-    ]
-)
-
-
-def _with_sha(schema: StructType) -> StructType:
-    """Schema variant carrying ``content_sha256`` on ONE row per document
-    (null elsewhere) — the fused build's single-content-pass trick: the
-    digest is computed JVM-side in the same scan that feeds tokenization,
-    so the build never re-reads document content for the doc_map stage.
-    A token-less document emits one sentinel row (term '', tf 0) so its
-    digest still reaches the spill; consumers filter ``tf > 0``."""
-    return StructType(
-        schema.fields + [StructField("content_sha256", StringType(), True)]
-    )
-
-
-TF_SHA_SCHEMA = _with_sha(TF_SCHEMA)
-TFP_SHA_SCHEMA = _with_sha(TFP_SCHEMA)
-
 
 ANALYZERS = ("standard", "code")
 
@@ -142,11 +120,6 @@ def tokenize_expr(content: Column, analyzer: str = "standard") -> Column:
     )
 
 
-def doclen_expr(content: Column, analyzer: str = "standard") -> Column:
-    """Token count per document as a Catalyst expression."""
-    return F.size(tokenize_expr(content, analyzer))
-
-
 # 32-bit Arrow string offsets cap an array at 2^31 bytes.  Spark's
 # maxRecordsPerBatch bounds ROWS, not bytes, so a batch of large documents
 # (10k rows x 1 MB) can overflow pa.string().  128M chars per slice keeps
@@ -185,7 +158,6 @@ def _tf_batches(
     batches: Iterator[pd.DataFrame],
     pattern: str,
     with_positions: bool = False,
-    with_sha: bool = False,
 ) -> Iterator[pd.DataFrame]:
     """Arrow-native tf kernel: zero per-token Python objects.
 
@@ -201,20 +173,6 @@ def _tf_batches(
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
-
-    def sentinels(pdf: pd.DataFrame, rows: "np.ndarray") -> pd.DataFrame:
-        """One (term='', tf=0) row per token-less document, carrying its
-        digest — consumers filter tf > 0; the inner dictionary join drops
-        these before packing."""
-        out = {
-            "doc_id": pdf["doc_id"].to_numpy()[rows].astype("int64"),
-            "term": [""] * len(rows),
-            "tf": np.zeros(len(rows), dtype="int64"),
-        }
-        if with_positions:
-            out["positions"] = [[] for _ in range(len(rows))]
-        out["content_sha256"] = pdf["content_sha256"].to_numpy()[rows]
-        return pd.DataFrame(out)
 
     for whole in batches:
       if len(whole) == 0:
@@ -237,8 +195,6 @@ def _tf_batches(
         flat = flat.filter(mask)
         parent = parent.filter(mask)
         if len(flat) == 0:
-            if with_sha:
-                yield sentinels(pdf, np.arange(len(pdf)))
             continue
         d = pc.dictionary_encode(flat)
         codes = d.indices.to_numpy().astype(np.int64)
@@ -250,28 +206,13 @@ def _tf_batches(
             ucodes = (uniq & np.uint64(0xFFFFFFFF)).astype(np.int64)
             doc_ids = pdf["doc_id"].to_numpy()[urows]
             terms = d.dictionary.take(pa.array(ucodes)).to_pandas()
-            out = pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "doc_id": doc_ids.astype("int64"),
                     "term": terms.to_numpy(),
                     "tf": counts.astype("int64"),
                 }
             )
-            if with_sha:
-                # digest on the FIRST emitted row of each doc (uniq keys are
-                # ascending by row index, so first occurrence = first row)
-                present, first_idx = np.unique(urows, return_index=True)
-                sha = np.full(len(out), None, dtype=object)
-                sha[first_idx] = pdf["content_sha256"].to_numpy()[present]
-                out["content_sha256"] = sha
-                missing = np.setdiff1d(
-                    np.arange(len(pdf)), present, assume_unique=True
-                )
-                if missing.size:
-                    out = pd.concat(
-                        [out, sentinels(pdf, missing)], ignore_index=True
-                    )
-            yield out
             continue
         # token ordinal within its doc: arange minus the doc's first index
         row_change = np.empty(rows.size, dtype=bool)
@@ -290,7 +231,7 @@ def _tf_batches(
         doc_ids = pdf["doc_id"].to_numpy()[urows]
         terms = d.dictionary.take(pa.array(ucodes)).to_pandas()
         positions = np.split(spos, starts[1:])
-        out = pd.DataFrame(
+        yield pd.DataFrame(
             {
                 "doc_id": doc_ids.astype("int64"),
                 "term": terms.to_numpy(),
@@ -298,23 +239,10 @@ def _tf_batches(
                 "positions": positions,
             }
         )
-        if with_sha:
-            present, first_idx = np.unique(urows, return_index=True)
-            sha = np.full(len(out), None, dtype=object)
-            sha[first_idx] = pdf["content_sha256"].to_numpy()[present]
-            out["content_sha256"] = sha
-            missing = np.setdiff1d(
-                np.arange(len(pdf)), present, assume_unique=True
-            )
-            if missing.size:
-                out = pd.concat(
-                    [out, sentinels(pdf, missing)], ignore_index=True
-                )
-        yield out
 
 
 # ---------------------------------------------------------------------------
-# SPIMI map-side packed runs (the fused build's map output)
+# SPIMI map-side packed runs (the build's map output)
 # ---------------------------------------------------------------------------
 #
 # One row per (shard, term) PER ARROW BATCH, postings varint-packed into
@@ -641,44 +569,23 @@ def term_frequencies(
     docs: DataFrame,
     content_col: str = "content",
     with_positions: bool = False,
-    with_sha: bool = False,
     analyzer: str = "standard",
 ) -> DataFrame:
     """``(doc_id, content)`` -> ``(doc_id, term, tf[, positions])`` via
-    mapInPandas.
-
-    The map side of the SPIMI build (one pass over documents, embarrassingly
-    parallel — the analogue of the reference's parallelStream over docs at
+    mapInPandas — one pass over documents, embarrassingly parallel (the
+    analogue of the reference's parallelStream over docs at
     StrucmotifUpdate.java:209).  ``with_positions`` also emits each term's
     ascending token ordinals (the occurrence-payload analogue,
     ArrayBucket.java:34).
 
-    ``with_sha`` additionally emits ``content_sha256`` on one row per doc
-    (computed JVM-side by ``sha2`` inside the SAME scan — whole-stage
-    codegen during the content read), making this the build's ONLY pass
-    over document content; token-less docs emit a (term '', tf 0) sentinel
-    row so every doc's digest reaches the output.
-
-    ``analyzer`` pre-transforms content JVM-side inside the same scan; the
-    digest always hashes the RAW content column (input_hint invariant).
+    ``analyzer`` pre-transforms content JVM-side inside the same scan.
     """
-    cols = ["doc_id", analyze_expr(F.col(content_col), analyzer).alias("content")]
-    if with_sha:
-        cols.append(F.sha2(F.col(content_col), 256).alias("content_sha256"))
-    src = docs.select(*cols)
-    pattern = TOKEN_PATTERN
-    if with_sha:
-        schema = TFP_SHA_SCHEMA if with_positions else TF_SHA_SCHEMA
-    else:
-        schema = TFP_SCHEMA if with_positions else TF_SCHEMA
-    return src.mapInPandas(
-        lambda it: _tf_batches(it, pattern, with_positions, with_sha),
-        schema=schema,
+    src = docs.select(
+        "doc_id", analyze_expr(F.col(content_col), analyzer).alias("content")
     )
-
-
-def doc_lengths(docs: DataFrame, content_col: str = "content") -> DataFrame:
-    """``(doc_id, doclen)`` — pure Catalyst, no Python."""
-    return docs.select(
-        "doc_id", doclen_expr(F.col(content_col)).cast("long").alias("doclen")
+    pattern = TOKEN_PATTERN
+    schema = TFP_SCHEMA if with_positions else TF_SCHEMA
+    return src.mapInPandas(
+        lambda it: _tf_batches(it, pattern, with_positions),
+        schema=schema,
     )

@@ -30,8 +30,8 @@ def engine(spark, tmp_path_factory):
         "repo string, path string, commit string, lang string, content string",
     )
     build_index(
-        spark, docs, store, docs_per_shard=2, shards_per_chunk=1 << 20,
-        checkpoint_partials=False, with_positions=True, analyzer="code",
+        spark, docs, store, docs_per_shard=2,
+        with_positions=True, analyzer="code",
     )
     return SearchEngine(spark, store)
 
@@ -123,8 +123,8 @@ def test_incremental_add_replays_analyzer(spark, engine, tmp_path_factory):
         "repo string, path string, commit string, lang string, content string",
     )
     build_index(
-        spark, base, store, docs_per_shard=2, shards_per_chunk=1 << 20,
-        checkpoint_partials=False, with_positions=True, analyzer="code",
+        spark, base, store, docs_per_shard=2,
+        with_positions=True, analyzer="code",
     )
     delta = spark.createDataFrame(
         DOCS[4:],

@@ -69,8 +69,7 @@ def fixture(spark, tmp_path_factory):
     docs = generate_corpus(spark, N_DOCS, seed=11, partitions=4)
     store = IndexStore(tmp_path_factory.mktemp("boolq"))
     build_index(
-        spark, docs, store, docs_per_shard=32, shards_per_chunk=1 << 20,
-        checkpoint_partials=False,
+        spark, docs, store, docs_per_shard=32,
     )
     eng = SearchEngine(spark, store)
     dm = (

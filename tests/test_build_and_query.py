@@ -25,7 +25,7 @@ def built(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("index")
     docs = generate_corpus(spark, N_DOCS, seed=42, partitions=8)
     store = IndexStore(root)
-    build_index(spark, docs, store, docs_per_shard=64, shards_per_chunk=2)
+    build_index(spark, docs, store, docs_per_shard=64)
     engine = SearchEngine(spark, store)
     # oracle over the same corpus keyed by the engine's doc_ids
     dm = engine.doc_map.select("doc_id", "repo", "path", "commit").toPandas()
@@ -236,8 +236,7 @@ def test_fused_build_query_plan_is_exchange_free(spark, tmp_path_factory):
     store = IndexStore(tmp_path_factory.mktemp("fusedplan"))
     docs = generate_corpus(spark, 300, seed=3, partitions=8)
     build_index(
-        spark, docs, store, docs_per_shard=64, shards_per_chunk=1 << 20,
-        checkpoint_partials=False,
+        spark, docs, store, docs_per_shard=64,
     )
     eng = SearchEngine(spark, store)
     plan = (

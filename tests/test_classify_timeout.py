@@ -19,8 +19,7 @@ from strucmotif_search_spark.oracle import tokenize
 def engine(spark, tmp_path_factory):
     store = IndexStore(tmp_path_factory.mktemp("cls"))
     docs = generate_corpus(spark, 300, seed=31, partitions=4)
-    build_index(spark, docs, store, docs_per_shard=64, shards_per_chunk=1 << 20,
-                checkpoint_partials=False)
+    build_index(spark, docs, store, docs_per_shard=64)
     return SearchEngine(spark, store)
 
 

@@ -40,8 +40,7 @@ def engine(spark, tmp_path_factory):
         "repo string, path string, commit string, lang string, content string",
     )
     build_index(
-        spark, docs, store, docs_per_shard=3, shards_per_chunk=1 << 20,
-        checkpoint_partials=False,
+        spark, docs, store, docs_per_shard=3,
     )
     return SearchEngine(spark, store)
 

@@ -54,11 +54,11 @@ def test_add_matches_fresh_rebuild(spark, corpus, tmp_path_factory):
     full, base, extra = corpus
     # incremental: build base, then ADD extra
     store_inc = IndexStore(tmp_path_factory.mktemp("inc"))
-    build_index(spark, base, store_inc, docs_per_shard=64, shards_per_chunk=1 << 20)
+    build_index(spark, base, store_inc, docs_per_shard=64)
     add_documents(spark, store_inc, extra)
     # fresh: build everything at once
     store_fresh = IndexStore(tmp_path_factory.mktemp("fresh"))
-    build_index(spark, full, store_fresh, docs_per_shard=64, shards_per_chunk=1 << 20)
+    build_index(spark, full, store_fresh, docs_per_shard=64)
 
     inc = _decoded_index(spark, store_inc)
     fresh = _decoded_index(spark, store_fresh)
@@ -77,7 +77,7 @@ def test_add_matches_fresh_rebuild(spark, corpus, tmp_path_factory):
 def test_add_is_idempotent(spark, corpus, tmp_path_factory):
     full, base, extra = corpus
     store = IndexStore(tmp_path_factory.mktemp("idem"))
-    build_index(spark, base, store, docs_per_shard=64, shards_per_chunk=1 << 20)
+    build_index(spark, base, store, docs_per_shard=64)
     add_documents(spark, store, extra)
     before = _decoded_index(spark, store)
     terms_before = (
@@ -98,7 +98,7 @@ def test_add_is_idempotent(spark, corpus, tmp_path_factory):
 def test_remove_shrinks_exactly_and_query_parity(spark, corpus, tmp_path_factory):
     full, base, extra = corpus
     store = IndexStore(tmp_path_factory.mktemp("rm"))
-    build_index(spark, full, store, docs_per_shard=64, shards_per_chunk=1 << 20)
+    build_index(spark, full, store, docs_per_shard=64)
     # remove the 'extra' subset
     remove_documents(spark, store, extra.select("repo", "path", "commit"))
     res = verify_consistency(spark, store)
@@ -124,132 +124,57 @@ def test_remove_shrinks_exactly_and_query_parity(spark, corpus, tmp_path_factory
         )
 
 
-def test_kill_and_resume_identical(spark, corpus, tmp_path_factory):
-    """Abort the chunked build mid-merge; resume; final index must equal an
-    uninterrupted build (RECOVER contract)."""
-    full, base, extra = corpus
-    store_a = IndexStore(tmp_path_factory.mktemp("resume"))
-
-    calls = {"n": 0}
-    import strucmotif_search_spark.build.builder as bmod
-
-    real_pack = bmod.pack_postings
-
-    def exploding_pack(df, *a, **kw):
-        calls["n"] += 1
-        if calls["n"] == 2:  # die while packing the second chunk
-            raise RuntimeError("simulated crash mid-merge")
-        return real_pack(df, *a, **kw)
-
-    bmod.pack_postings = exploding_pack
-    try:
-        with pytest.raises(Exception, match="simulated crash"):
-            build_index(
-                spark, base, store_a, docs_per_shard=64, shards_per_chunk=2,
-                gen="gen-000001",
-            )
-    finally:
-        bmod.pack_postings = real_pack
-
-    assert store_a.current_gen() is None  # crash never published
-    done_before = store_a.completed("gen-000001", "pack")
-    assert len(done_before) >= 1  # first chunk committed its pack
-
-    # resume the SAME generation: completed chunks must be skipped
-    build_index(
-        spark, base, store_a, docs_per_shard=64, shards_per_chunk=2,
-        gen="gen-000001",
-    )
-    assert store_a.current_gen() == "gen-000001"
-    events = [
-        e for e in store_a.lineage()
-        if e.get("stage") == "pack" and e.get("status") == "start"
-        and e.get("chunk") in done_before
-    ]
-    # chunk 0 started exactly once across both runs (the resume skipped it)
-    assert len(events) == len(done_before)
-
-    store_b = IndexStore(tmp_path_factory.mktemp("clean"))
-    build_index(spark, base, store_b, docs_per_shard=64, shards_per_chunk=2)
-    assert _decoded_index(spark, store_a).equals(_decoded_index(spark, store_b))
-
-
-def test_fused_equals_checkpointed(spark, corpus, tmp_path_factory):
-    full, base, extra = corpus
-    s1 = IndexStore(tmp_path_factory.mktemp("ck"))
-    s2 = IndexStore(tmp_path_factory.mktemp("fu"))
-    build_index(spark, base, s1, docs_per_shard=64, shards_per_chunk=2)
-    build_index(
-        spark, base, s2, docs_per_shard=64, shards_per_chunk=2,
-        checkpoint_partials=False,
-    )
-    assert _decoded_index(spark, s1).equals(_decoded_index(spark, s2))
-    t1 = SearchEngine(spark, s1).terms.toPandas().sort_values("term_id").reset_index(drop=True)
-    t2 = SearchEngine(spark, s2).terms.toPandas().sort_values("term_id").reset_index(drop=True)
-    assert t1.equals(t2)
-
-
-def test_fused_resume_mid_merge(spark, corpus, tmp_path_factory):
-    """Crash the FUSED (production) build after the spill but before the
-    pack/terms stages; resume the same generation; the final index must
-    equal an uninterrupted fused build, and the spill must not be
-    re-tokenized (T3 on the fused path)."""
+@pytest.mark.parametrize("crash_at", ["decode_doc_meta", "pack_posting_runs"])
+def test_fused_resume_mid_merge(spark, corpus, tmp_path_factory, crash_at):
+    """Crash the build after the spill — at the doc-metadata decode (before
+    terms) or at the postings pack (after terms, with the side stages
+    running); resume the same generation.  The final index must equal an
+    uninterrupted build, the spill must not be re-tokenized, and no stage
+    logged done may run again (RECOVER contract)."""
     full, base, extra = corpus
     store_a = IndexStore(tmp_path_factory.mktemp("fresume"))
 
     import strucmotif_search_spark.build.builder as bmod
 
-    # decode_doc_meta is the first post-spill call on the fused path (the
-    # SPIMI-runs layout inlines the vocab agg, so build_terms is no longer
-    # on this path)
-    real_meta = bmod.decode_doc_meta
-
-    def exploding_meta(*a, **kw):
+    def exploding(*a, **kw):
         raise RuntimeError("simulated crash post-spill")
 
-    bmod.decode_doc_meta = exploding_meta
+    real = getattr(bmod, crash_at)
+    setattr(bmod, crash_at, exploding)
     try:
         with pytest.raises(Exception, match="simulated crash"):
             build_index(
-                spark, base, store_a, docs_per_shard=64,
-                shards_per_chunk=1 << 20, checkpoint_partials=False,
-                gen="gen-000001",
+                spark, base, store_a, docs_per_shard=64, gen="gen-000001",
             )
     finally:
-        bmod.decode_doc_meta = real_meta
+        setattr(bmod, crash_at, real)
 
     assert store_a.current_gen() is None  # crash never published
     assert store_a.stage_done("gen-000001", "partials")
 
-    build_index(
-        spark, base, store_a, docs_per_shard=64,
-        shards_per_chunk=1 << 20, checkpoint_partials=False,
-        gen="gen-000001",
-    )
+    build_index(spark, base, store_a, docs_per_shard=64, gen="gen-000001")
     assert store_a.current_gen() == "gen-000001"
+    events = [e for e in store_a.lineage() if e.get("gen") == "gen-000001"]
     # the resume reused the spill (exactly one partials 'done' + one
     # 'resumed' event across both runs)
-    partials = [
-        e for e in store_a.lineage()
-        if e.get("gen") == "gen-000001" and e.get("stage") == "partials"
-    ]
-    assert [e["status"] for e in partials] == ["done", "resumed"]
+    partials = [e["status"] for e in events if e["stage"] == "partials"]
+    assert partials == ["done", "resumed"]
+    # every stage ran to 'done' exactly once across both runs
+    for stage in ("terms", "doc_map", "norms", "stats", "pack"):
+        done = [e for e in events
+                if e["stage"] == stage and e["status"] == "done"]
+        assert len(done) == 1, stage
 
     store_b = IndexStore(tmp_path_factory.mktemp("fclean"))
-    build_index(
-        spark, base, store_b, docs_per_shard=64,
-        shards_per_chunk=1 << 20, checkpoint_partials=False,
-    )
+    build_index(spark, base, store_b, docs_per_shard=64)
     assert _decoded_index(spark, store_a).equals(_decoded_index(spark, store_b))
-    dm_a = (
-        SearchEngine(spark, store_a).doc_map.toPandas()
-        .sort_values("doc_id").reset_index(drop=True)
-    )
-    dm_b = (
-        SearchEngine(spark, store_b).doc_map.toPandas()
-        .sort_values("doc_id").reset_index(drop=True)
-    )
-    assert dm_a.equals(dm_b)
+    for table, key in (("doc_map", "doc_id"), ("terms", "term_id")):
+        got, want = (
+            getattr(SearchEngine(spark, s), table).toPandas()
+            .sort_values(key).reset_index(drop=True)
+            for s in (store_a, store_b)
+        )
+        assert got.equals(want), table
 
 
 def test_docid_free_list_reuse(spark, corpus, tmp_path_factory):
@@ -259,8 +184,7 @@ def test_docid_free_list_reuse(spark, corpus, tmp_path_factory):
     full, base, extra = corpus
     store = IndexStore(tmp_path_factory.mktemp("freelist"))
     build_index(
-        spark, full, store, docs_per_shard=64, shards_per_chunk=1 << 20,
-        checkpoint_partials=False,
+        spark, full, store, docs_per_shard=64,
     )
     eng = SearchEngine(spark, store)
     max_before = eng.doc_map.agg(F.max("doc_id")).first()[0]
@@ -306,8 +230,7 @@ def test_remove_on_fused_base_reads_back(spark, corpus, tmp_path_factory):
     full, base, extra = corpus
     store = IndexStore(tmp_path_factory.mktemp("rmfused"))
     build_index(
-        spark, full, store, docs_per_shard=64, shards_per_chunk=1 << 20,
-        checkpoint_partials=False,
+        spark, full, store, docs_per_shard=64,
     )
     remove_documents(spark, store, extra.select("repo", "path", "commit"))
     eng = SearchEngine(spark, store)
@@ -345,8 +268,7 @@ def test_compact_collapses_refs_and_restores_bucketing(
     full, base, extra = corpus
     store = IndexStore(tmp_path_factory.mktemp("cmp"))
     build_index(
-        spark, base, store, docs_per_shard=64, shards_per_chunk=1 << 20,
-        checkpoint_partials=False,
+        spark, base, store, docs_per_shard=64,
     )
     add_documents(spark, store, extra)
     gen_before = store.current_gen()
@@ -398,8 +320,7 @@ def test_compact_after_remove_restores_bucketing(
     full, base, extra = corpus
     store = IndexStore(tmp_path_factory.mktemp("cmp_rm"))
     build_index(
-        spark, full, store, docs_per_shard=64, shards_per_chunk=1 << 20,
-        checkpoint_partials=False,
+        spark, full, store, docs_per_shard=64,
     )
     remove_documents(spark, store, extra.select("repo", "path", "commit"))
     gen_before = store.current_gen()
@@ -477,7 +398,6 @@ def test_changelog_spans_compose_over_random_histories(
     members = set(keys[:60])
     build_index(
         spark, subset_df(sorted(members)), store, docs_per_shard=16,
-        shards_per_chunk=1 << 20, checkpoint_partials=False,
     )
     history = [(store.current_gen(), frozenset(members))]
 
@@ -539,8 +459,7 @@ def test_expire_keeps_referenced_chain_and_current(spark, tmp_path_factory):
     store = IndexStore(root)
     base = generate_corpus(spark, 120, seed=11, partitions=4)
     build_index(
-        spark, base, store, docs_per_shard=16, shards_per_chunk=1 << 20,
-        checkpoint_partials=False,
+        spark, base, store, docs_per_shard=16,
     )
     gen1 = store.current_gen()
     add_documents(spark, store, generate_corpus(spark, 30, seed=12, partitions=2))
@@ -576,8 +495,7 @@ def test_expire_keep_last_retention(spark, tmp_path_factory):
     store = IndexStore(root)
     build_index(
         spark, generate_corpus(spark, 60, seed=13, partitions=2), store,
-        docs_per_shard=16, shards_per_chunk=1 << 20,
-        checkpoint_partials=False,
+        docs_per_shard=16,
     )
     compact(spark, store)
     compact(spark, store)
@@ -593,7 +511,7 @@ def test_time_travel_pinned_generation(spark, corpus, tmp_path_factory):
     from-scratch build over the base corpus — and refuses mutation."""
     full, base, extra = corpus
     store = IndexStore(tmp_path_factory.mktemp("tt"))
-    build_index(spark, base, store, docs_per_shard=64, shards_per_chunk=1 << 20)
+    build_index(spark, base, store, docs_per_shard=64)
     base_gen = store.current_gen()
     add_documents(spark, store, extra)
     assert store.current_gen() != base_gen
@@ -601,7 +519,7 @@ def test_time_travel_pinned_generation(spark, corpus, tmp_path_factory):
     # pinned engine == engine over a fresh base-only build, query for query
     store_fresh = IndexStore(tmp_path_factory.mktemp("tt_fresh"))
     build_index(
-        spark, base, store_fresh, docs_per_shard=64, shards_per_chunk=1 << 20
+        spark, base, store_fresh, docs_per_shard=64,
     )
     pinned = SearchEngine(spark, store, gen=base_gen)
     fresh = SearchEngine(spark, store_fresh)
@@ -642,7 +560,7 @@ def test_changelog_and_snapshot_isolation(spark, corpus, tmp_path_factory):
 
     full, base, extra = corpus
     store = IndexStore(tmp_path_factory.mktemp("cdc"))
-    build_index(spark, base, store, docs_per_shard=64, shards_per_chunk=1 << 20)
+    build_index(spark, base, store, docs_per_shard=64)
     gen1 = store.current_gen()
 
     # snapshot isolation: engine constructed NOW, queried after the commits
@@ -694,7 +612,7 @@ def test_free_list_mint_base_avoids_collision(spark, tmp_path_factory):
     store = IndexStore(tmp_path_factory.mktemp("mint"))
     all_docs = generate_corpus(spark, 120, seed=41, partitions=4).cache()
     base = all_docs.limit(100)
-    build_index(spark, base, store, docs_per_shard=16, shards_per_chunk=1 << 20)
+    build_index(spark, base, store, docs_per_shard=16)
     eng0 = SearchEngine(spark, store)
     # retire the two HIGHEST doc_ids (their natural keys)
     top = (
@@ -725,7 +643,7 @@ def test_add_after_remove_all(spark, tmp_path_factory):
 
     store = IndexStore(tmp_path_factory.mktemp("rm_all"))
     docs = generate_corpus(spark, 40, seed=43, partitions=2).cache()
-    build_index(spark, docs, store, docs_per_shard=16, shards_per_chunk=1 << 20)
+    build_index(spark, docs, store, docs_per_shard=16)
     remove_documents(
         spark, store, docs.select("repo", "path", "commit")
     )
@@ -761,7 +679,7 @@ def test_delete_by_query_compact_time_travel_triple(
     full, base, extra = corpus
     store = IndexStore(tmp_path_factory.mktemp("triple"))
     build_index(
-        spark, base, store, docs_per_shard=64, shards_per_chunk=1 << 20
+        spark, base, store, docs_per_shard=64,
     )
     gen1 = store.current_gen()
     eng1 = SearchEngine(spark, store)
@@ -800,7 +718,7 @@ def test_delete_by_query_compact_time_travel_triple(
     store_fresh = IndexStore(tmp_path_factory.mktemp("triple_fresh"))
     build_index(
         spark, survivors, store_fresh,
-        docs_per_shard=64, shards_per_chunk=1 << 20,
+        docs_per_shard=64,
     )
     eng_fresh = SearchEngine(spark, store_fresh)
     assert rows(eng_fresh) == post_delete
@@ -840,7 +758,7 @@ def test_random_mutation_history_equals_rebuild(
 
     store = IndexStore(tmp_path_factory.mktemp("fuzzhist"))
     build_index(
-        spark, base, store, docs_per_shard=64, shards_per_chunk=1 << 20
+        spark, base, store, docs_per_shard=64,
     )
     member = set(base_keys)
     pool = list(extra_keys)
@@ -866,7 +784,7 @@ def test_random_mutation_history_equals_rebuild(
         store_ref = IndexStore(tmp_path_factory.mktemp("fuzzref"))
         build_index(
             spark, df_for(member), store_ref,
-            docs_per_shard=64, shards_per_chunk=1 << 20,
+            docs_per_shard=64,
         )
         want = hits(SearchEngine(spark, store_ref))
         assert got == want, f"divergence at step {len(snapshots)}"

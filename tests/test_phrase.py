@@ -43,8 +43,7 @@ def engine(spark, tmp_path_factory):
         DOCS, "repo string, path string, commit string, lang string, content string"
     )
     build_index(
-        spark, docs, store, docs_per_shard=4, shards_per_chunk=1 << 20,
-        checkpoint_partials=False, with_positions=True,
+        spark, docs, store, docs_per_shard=4, with_positions=True,
     )
     return SearchEngine(spark, store)
 
@@ -105,8 +104,7 @@ def test_phrase_requires_positional_index(spark, tmp_path_factory):
     docs = spark.createDataFrame(
         DOCS, "repo string, path string, commit string, lang string, content string"
     )
-    build_index(spark, docs, store, docs_per_shard=4, shards_per_chunk=1 << 20,
-                checkpoint_partials=False)
+    build_index(spark, docs, store, docs_per_shard=4)
     eng = SearchEngine(spark, store)
     with pytest.raises(ValueError, match="positional"):
         eng.phrase_search("new york")
@@ -132,8 +130,7 @@ def test_head_term_phrase_skips_blocks(spark, tmp_path_factory):
     # ONE big shard so the head term's run spans many 128-doc blocks —
     # in-shard block-range skipping is what's under test
     build_index(
-        spark, docs, store, docs_per_shard=4096, shards_per_chunk=1 << 20,
-        checkpoint_partials=False, with_positions=True,
+        spark, docs, store, docs_per_shard=4096, with_positions=True,
     )
     eng = SearchEngine(spark, store)
     # rare: a per-repo unique identifier; head: 'import' (df ~ 0.48 * N)

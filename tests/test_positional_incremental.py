@@ -71,8 +71,7 @@ def stores(spark, tmp_path_factory):
     store = IndexStore(tmp_path_factory.mktemp("posinc"))
     # fused production layout (bucketed), positional
     build_index(
-        spark, base, store, docs_per_shard=4, shards_per_chunk=1 << 20,
-        checkpoint_partials=False, with_positions=True,
+        spark, base, store, docs_per_shard=4, with_positions=True,
     )
     return store, base, extra
 

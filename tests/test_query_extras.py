@@ -41,8 +41,7 @@ def engine(spark, tmp_path_factory):
         "repo string, path string, commit string, lang string, content string",
     )
     build_index(
-        spark, docs, store, docs_per_shard=4, shards_per_chunk=1 << 20,
-        checkpoint_partials=False, with_positions=True,
+        spark, docs, store, docs_per_shard=4, with_positions=True,
     )
     return SearchEngine(spark, store)
 
@@ -465,8 +464,7 @@ def test_delete_by_query_removes_full_match_set(spark, tmp_path_factory):
         "repo string, path string, commit string, lang string, content string",
     )
     build_index(
-        spark, docs, store, docs_per_shard=4, shards_per_chunk=1 << 20,
-        checkpoint_partials=False, with_positions=True,
+        spark, docs, store, docs_per_shard=4, with_positions=True,
     )
     eng = SearchEngine(spark, store)
     n_before = eng.doc_map.count()
@@ -511,8 +509,7 @@ def test_delete_by_query_absent_is_noop(spark, tmp_path_factory):
         "repo string, path string, commit string, lang string, content string",
     )
     build_index(
-        spark, docs, store, docs_per_shard=4, shards_per_chunk=1 << 20,
-        checkpoint_partials=False,
+        spark, docs, store, docs_per_shard=4,
     )
     eng = SearchEngine(spark, store)
     eng.delete_by_query("zz_absent", mode="or")

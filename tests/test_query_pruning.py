@@ -16,7 +16,7 @@ N = 500
 def engine(spark, tmp_path_factory):
     store = IndexStore(tmp_path_factory.mktemp("prune"))
     docs = generate_corpus(spark, N, seed=21, partitions=8)
-    build_index(spark, docs, store, docs_per_shard=32, shards_per_chunk=1 << 20)
+    build_index(spark, docs, store, docs_per_shard=32)
     return SearchEngine(spark, store)
 
 

@@ -52,8 +52,7 @@ def engine(spark, tmp_path_factory):
         "repo string, path string, commit string, lang string, content string",
     )
     build_index(
-        spark, docs, store, docs_per_shard=8, shards_per_chunk=1 << 20,
-        checkpoint_partials=False, with_positions=True,
+        spark, docs, store, docs_per_shard=8, with_positions=True,
     )
     return SearchEngine(spark, store)
 

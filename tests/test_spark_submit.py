@@ -137,7 +137,6 @@ def test_update_submit_operation_chain(spark, tmp_path):
     index_root = str(tmp_path / "index_upd")
     build_index(
         spark, docs, IndexStore(index_root), docs_per_shard=64,
-        shards_per_chunk=1 << 20, checkpoint_partials=False,
     )
 
     sys.path.insert(0, os.path.join(REPO, "tools"))
@@ -210,7 +209,6 @@ def test_query_submit_cli(spark, tmp_path):
     store = IndexStore(index_root)
     build_index(
         spark, docs, store, docs_per_shard=64,
-        shards_per_chunk=1 << 20, checkpoint_partials=False,
     )
     base_gen = store.current_gen()
     add_documents(spark, store, delta)

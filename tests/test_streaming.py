@@ -32,7 +32,7 @@ def test_stream_ingest_available_now(spark, tmp_path_factory):
     late = full.join(head, on=["repo", "path", "commit"], how="left_anti")
 
     store = IndexStore(base_dir / "index")
-    build_index(spark, base, store, docs_per_shard=64, shards_per_chunk=1 << 20)
+    build_index(spark, base, store, docs_per_shard=64)
 
     # drop the stream files (several, so multiple micro-batches can form)
     late.repartition(4).write.mode("overwrite").parquet(src)
@@ -182,8 +182,7 @@ def test_classify_stream_matches_batch(spark, tmp_path_factory):
     base = tmp_path_factory.mktemp("sclassify")
     corpus = generate_corpus(spark, 150, seed=23, partitions=4).cache()
     store = IndexStore(base / "index")
-    build_index(spark, corpus, store, docs_per_shard=64,
-                shards_per_chunk=1 << 20)
+    build_index(spark, corpus, store, docs_per_shard=64)
     eng = SearchEngine(spark, store)
 
     feed = generate_corpus(spark, 60, seed=77, partitions=3).cache()

@@ -47,16 +47,13 @@ def test_tf_kernel_matches_findall(texts):
     pdf = pd.DataFrame({
         "doc_id": [d for d, _ in rows],
         "content": [t for _, t in rows],
-        "content_sha256": ["x"] * len(rows),
     })
     parts = list(_tf_batches(iter([pdf]), TOKEN_PATTERN))
-    # a batch whose docs are all token-less yields nothing in the plain
-    # pass (sentinels only exist in the with_sha pass)
+    # a batch whose docs are all token-less yields nothing
     got = (
         pd.concat(parts) if parts
         else pd.DataFrame({"doc_id": [], "term": [], "tf": []})
     )
-    got = got[got["tf"] > 0]  # sentinels carry tf == 0
     ref = _reference(rows)
     got_map = {
         (int(r.doc_id), r.term): int(r.tf)
@@ -75,7 +72,6 @@ def test_tf_kernel_positions_match_findall(texts):
     pdf = pd.DataFrame({
         "doc_id": [d for d, _ in rows],
         "content": [t for _, t in rows],
-        "content_sha256": ["x"] * len(rows),
     })
     parts = list(
         _tf_batches(iter([pdf]), TOKEN_PATTERN, with_positions=True)
@@ -84,7 +80,6 @@ def test_tf_kernel_positions_match_findall(texts):
         assert all(not TOK.findall(t) for t in texts)
         return
     got = pd.concat(parts)
-    got = got[got["tf"] > 0]
     ref = _reference(rows)
     # completeness: every reference (doc, term) pair is present...
     exp_pairs = {

@@ -52,8 +52,7 @@ def main() -> None:
     store = IndexStore(idx_root)
     # positional so the fixture also pins the position-payload codec
     build_index(
-        spark, docs, store, docs_per_shard=16, shards_per_chunk=1 << 20,
-        checkpoint_partials=False, with_positions=True,
+        spark, docs, store, docs_per_shard=16, with_positions=True,
     )
 
     eng = SearchEngine(spark, store)

@@ -58,15 +58,13 @@ def main() -> None:
         build_index(
             spark, spark.read.parquet(warm),
             IndexStore(tempfile.mkdtemp(prefix="pw_", dir=scratch)),
-            docs_per_shard=512, shards_per_chunk=1 << 20,
-            checkpoint_partials=False,
+            docs_per_shard=512,
         )
         root = tempfile.mkdtemp(prefix=f"prof_{cores}_", dir=scratch)
         t0 = time.time()
         build_index(
             spark, docs, IndexStore(root),
             docs_per_shard=max(n_docs // 256, 256),
-            shards_per_chunk=1 << 20, checkpoint_partials=False,
         )
         wall = time.time() - t0
         print(f"== build wall {wall:.1f}s at {cores} cores "
