@@ -551,9 +551,9 @@ def run_scaling() -> dict:
     # per-job driver overhead (~5s/leg across rank/terms/doc_map/norms/
     # stats, fit f = (4*t_hi - t_lo)/3 on pair stage walls).  At 480k the
     # post-rework build's hi leg fell to ~20s and the fixed fraction alone
-    # capped a perfectly clean solo window at ~0.78; at 960k a clean window
-    # measured solo 0.817 / density-matched 0.95 in one pair (PLANS.md §15,
-    # scale_960k_pair3.json).  Per-doc cost is flat 480k->960k at both
+    # capped a perfectly clean solo window at ~0.78; at 960k the clean pairs
+    # in scale_record.json's history measure solo 0.59-0.84 and
+    # density-matched 0.80-1.00.  Per-doc cost is flat 480k->960k at both
     # cluster sizes, so the bigger legs change the overhead fraction, not
     # the work.
     n_scale = int(os.environ.get("SPARK_GRAFT_SCALE_DOCS", "960000"))
@@ -1658,28 +1658,23 @@ def main() -> None:
             best = min(best, time.time() - t0)
         queries["op_hybrid_ivf_kmeans"] = round(best, 3)
         log(f"[bench] op_hybrid_ivf_kmeans: {best*1000:.0f} ms")
-        # IVF centroid assignment at production cell count (round-4
-        # verdict item 2): 256 cells x emb dim — the Catalyst literal
-        # expression tree vs the Arrow-batched numpy argmax, full-corpus
-        # assignment each.  At thousands-of-cells scale only the UDF path
-        # survives plan compilation; this row shows it winning already.
+        # IVF centroid assignment at production cell count: 256 cells x
+        # emb dim, full-corpus assignment through the Arrow-batched
+        # sequential-sum kernel
         big_cent = [
             (int(r["doc_id"]), [float(x) for x in r["embedding"]])
             for r in emb_internal.orderBy("doc_id").limit(256).collect()
         ]
-        for meth, row in (("expr", "op_ivf_assign256_expr"),
-                          ("udf", "op_ivf_assign256_udf")):
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.time()
-                emb_internal.select(
-                    similarity.ivf_assign(
-                        F.col("embedding"), big_cent, meth
-                    ).alias("cell")
-                ).groupBy("cell").count().collect()
-                best = min(best, time.time() - t0)
-            queries[row] = round(best, 3)
-            log(f"[bench] {row}: {best*1000:.0f} ms")
+        best = float("inf")
+        for _ in range(2):
+            t0 = time.time()
+            emb_internal.select(
+                similarity.ivf_assign(F.col("embedding"), big_cent)
+                .alias("cell")
+            ).groupBy("cell").count().collect()
+            best = min(best, time.time() - t0)
+        queries["op_ivf_assign256"] = round(best, 3)
+        log(f"[bench] op_ivf_assign256: {best*1000:.0f} ms")
 
     # ---- query latency at scale (north-rule "query p95 latency") ----
     # The sf0.1 suite (5k docs) prices Spark fixed overhead, not index
@@ -1846,22 +1841,22 @@ def _write_bench_md(r: dict, fname: str = "BENCH.md") -> None:
             "",
             "Note: op_hybrid_ivf can read SLOWER than brute-force "
             "q21_hybrid_rrf at suite scale — the per-row 8-centroid "
-            "assignment expression costs more than scanning 5k embeddings "
+            "assignment UDF costs more than scanning 5k embeddings "
             "outright.  The IVF shape pays at corpus scale, where the dense "
             "side scans nprobe/n_cells of the embeddings instead of all of "
             "them; the row is here to price the assignment overhead "
             "honestly, not to win at 5k docs.",
         ]
-    if "op_ivf_assign256_udf" in r["queries"]:
+    if "op_ivf_assign256" in r["queries"]:
         lines += [
             "",
-            "Note: op_ivf_assign256_{expr,udf} price full-corpus centroid "
-            "assignment at 256 cells both ways.  The literal-expression "
-            "tree costs tens of seconds in PLAN COMPILATION alone at this "
-            "cell count (and grows with n_cells x dim); the Arrow-batched "
-            "numpy path is flat.  ivf_assign auto-dispatches at "
-            "IVF_EXPR_MAX_TERMS=4096 terms, so production cell counts "
-            "never touch the expression path.",
+            "Note: op_ivf_assign256 prices full-corpus centroid assignment "
+            "at 256 cells.  ivf_assign is one Arrow-batched numpy kernel "
+            "that adds every cosine sum dimension by dimension, the order "
+            "the SQL oracles replay, so assignments agree with them bit for "
+            "bit at every cell count; it costs several times a float64 "
+            "GEMM in kernel time, which reorders the sums and can flip "
+            "exact ties.",
         ]
     if "q20_fielded" in r["queries"]:
         lines += [

@@ -216,7 +216,7 @@ def build_index(
         # kernel from doc_id — no 10^8-row dictionary join.
         tf = packed_term_runs(
             docs_keyed, docs_per_shard=docs_per_shard, content_col=content_col,
-            with_positions=with_positions, with_sha=True, analyzer=analyzer,
+            with_positions=with_positions, analyzer=analyzer,
         )
         # Spill the SPIMI runs as parquet, SHUFFLED BY SHARD AND SORTED
         # (shard, term, first_doc) — the build's one big shuffle.  Downstream:
@@ -333,9 +333,7 @@ def build_index(
         # consumers above.  It has no dependency on terms, so its job runs
         # CONCURRENTLY with the terms build (terms is the critical path —
         # pack waits on it; doc_meta backfills idle cores).
-        doc_meta = decode_doc_meta(
-            tf.where(F.col("term") == ""), with_sha=True
-        ).persist()
+        doc_meta = decode_doc_meta(tf.where(F.col("term") == "")).persist()
         persisted.append(doc_meta)
         doc_meta_fut = pool.submit(doc_meta.count)
 

@@ -13,10 +13,9 @@
 - :func:`embedding_near_dup_pairs` — near-duplicate pairs by cosine >= tau,
   candidate-generated by LSH buckets and verified exactly.
 - :func:`ivf_cosine_topk` / :func:`semantic_dedup` — IVF (inverted-file)
-  cell-bucketed ANN / SemDeDup; centroid assignment dispatches between a
-  pure-Catalyst literal expression (small centroid sets — the SQL-oracle
-  seam) and an Arrow-batched numpy argmax (production cell counts), see
-  :func:`ivf_assign`.
+  cell-bucketed ANN / SemDeDup; centroid assignment is one Arrow-batched
+  numpy argmax that sums in :func:`cosine_expr`'s order, so it agrees with
+  the SQL oracles bit for bit at every cell count, see :func:`ivf_assign`.
 - :func:`write_ivf_partitioned` / :func:`ivf_cosine_topk_partitioned` —
   the materialized layout: cells become parquet partitions, probes become
   partition pruning at the scan.
@@ -195,8 +194,8 @@ def kmeans_centroids(
     external oracle as literals.
 
     At 100 TB the collect is ``sample_size`` rows — bounded and tiny
-    relative to the corpus; assignment stays the same map-only Catalyst
-    expression (:func:`ivf_assign_expr`), so nothing downstream changes.
+    relative to the corpus; assignment stays the same map-only
+    :func:`ivf_assign`, so nothing downstream changes.
     Returned cids are 0..n_cells-1 (centroids are synthetic points, not
     member ids).
     """
@@ -273,94 +272,93 @@ def _lloyd(xn: np.ndarray, cent: np.ndarray, iters: int) -> np.ndarray:
     return cent
 
 
-def ivf_assign_expr(
-    vec: Column, centroids: list[tuple[int, list[float]]]
-) -> Column:
-    """Coarse-quantizer cell id: argmax cosine over the (small, broadcast-
-    literal) centroid set, ties to the smallest cid.  Pure Catalyst — a
-    map-only expression with no shuffle, so at ingest time the corpus can be
-    written ``partitionBy("cell")`` and a query's probe predicate becomes
-    partition pruning at the parquet scan."""
-    best = F.array_max(
-        F.array(
-            *[
-                F.struct(
-                    cosine_expr(
-                        vec, F.array(*[F.lit(float(x)) for x in cv])
-                    ).alias("sim"),
-                    F.lit(-int(cid)).cast("long").alias("neg_cid"),
-                )
-                for cid, cv in centroids
-            ]
-        )
-    )
-    return (-best["neg_cid"]).cast("long")
+# Rows per block of the cosine kernel: the block's (rows x n_cells) float64
+# partial sums (64k doubles, 512 KiB) stay cache-resident across the
+# dimension loop.
+_KERNEL_BLOCK_ELEMS = 1 << 16
 
 
-# Above this many literal terms (n_cells x dim) the Catalyst expression tree
-# for ivf_assign_expr stops being "small": thousands of cells x 768-dim
-# embeddings would put millions of literal nodes into the plan and kill
-# compilation/codegen long before the data hurts.  Past it, assignment
-# switches to one Arrow-batched numpy argmax per batch (round-4 verdict
-# item 2).
-IVF_EXPR_MAX_TERMS = 4096
+def _seq_sum_sq(x: np.ndarray) -> np.ndarray:
+    """Row-wise sum of squares added dimension by dimension from 0.0 — the
+    order of :func:`_norm`'s ``aggregate`` (numpy's ``sum`` is pairwise
+    and can differ in the last ulp)."""
+    acc = np.zeros(x.shape[0], dtype=np.float64)
+    for j in range(x.shape[1]):
+        acc += x[:, j] * x[:, j]
+    return acc
 
 
-def ivf_assign_udf(
-    vec: Column, centroids: list[tuple[int, list[float]]]
-) -> Column:
-    """Coarse-quantizer cell id via a vectorized pandas UDF — the
-    production-cell-count path.  The centroid matrix is captured once
-    (normalized float64, cid-ascending) and each Arrow batch does a single
-    ``(batch / ||batch||) @ centroids.T`` + argmax.  Semantics match
-    :func:`ivf_assign_expr`: cosine in float64, exact-tie -> smallest cid
-    (cid-ascending matrix order + numpy first-occurrence argmax).  Still
-    map-only — no shuffle, same partitionBy("cell") ingest story."""
-    from pyspark.sql.functions import pandas_udf
-
-    order = sorted(range(len(centroids)), key=lambda i: int(centroids[i][0]))
-    cids = np.asarray([int(centroids[i][0]) for i in order], dtype=np.int64)
+def _centroid_matrix(
+    centroids: list[tuple[int, list[float]]],
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``(cids, matrix, norms)`` sorted by cid, so a first-occurrence argmax
+    breaks exact ties to the smallest cid.  A zero-norm centroid has no
+    cosine to anything; it is rejected here rather than left to capture
+    every vector or none."""
+    ordered = sorted(centroids, key=lambda c: int(c[0]))
+    cids = np.asarray([int(c) for c, _v in ordered], dtype=np.int64)
     mat = np.asarray(
-        [[float(x) for x in centroids[i][1]] for i in order],
-        dtype=np.float64,
+        [[float(x) for x in v] for _c, v in ordered], dtype=np.float64
     )
-    cnorm = np.linalg.norm(mat, axis=1)
-    cnorm[cnorm == 0.0] = 1.0
-    matn = (mat / cnorm[:, None]).T             # (dim, k), contiguous GEMM
+    norms = np.sqrt(_seq_sum_sq(mat))
+    zero = cids[norms == 0.0]
+    if zero.size:
+        raise ValueError(f"zero-norm centroid: cid {int(zero[0])}")
+    return cids, mat, norms
 
-    @pandas_udf("long")
-    def _assign(batch: pd.Series) -> pd.Series:
-        x = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in batch], dtype=np.float64
-        )
-        if x.size == 0:
-            return pd.Series(np.empty(0, dtype=np.int64))
-        n = np.linalg.norm(x, axis=1)
-        n[n == 0.0] = 1.0
-        sims = (x / n[:, None]) @ matn          # (batch, k)
-        return pd.Series(cids[np.argmax(sims, axis=1)])
 
-    return _assign(vec)
+def _cosines(x: np.ndarray, mat: np.ndarray, cnorm: np.ndarray) -> np.ndarray:
+    """``(rows, n_cells)`` cosines with :func:`cosine_expr`'s arithmetic
+    exactly: float64 products, every sum started at 0.0 and added in
+    dimension order, then ``dot / (||x|| * ||c||)``.  Vectorized across
+    rows and centroids only, so results are bit-identical to the Catalyst
+    expression and the DuckDB oracles (a GEMM reorders the sums and can
+    flip an argmax on ties).  A zero row gives NaN against every centroid,
+    which the argmax sends to the smallest cid, as Spark's ordering does."""
+    n, dim = x.shape
+    k = mat.shape[0]
+    mat_t = np.ascontiguousarray(mat.T)
+    rows = max(1, _KERNEL_BLOCK_ELEMS // k)
+    prod = np.empty((min(rows, n), k), dtype=np.float64)
+    out = np.empty((n, k), dtype=np.float64)
+    for s in range(0, n, rows):
+        xb = x[s:s + rows]
+        p = prod[: xb.shape[0]]
+        dot = np.zeros_like(p)
+        for j in range(dim):
+            np.multiply(xb[:, j, None], mat_t[j], out=p)
+            dot += p
+        xnorm = np.sqrt(_seq_sum_sq(xb))
+        with np.errstate(invalid="ignore", divide="ignore"):
+            out[s:s + xb.shape[0]] = dot / (xnorm[:, None] * cnorm)
+    return out
 
 
 def ivf_assign(
-    vec: Column,
-    centroids: list[tuple[int, list[float]]],
-    method: str = "auto",
+    vec: Column, centroids: list[tuple[int, list[float]]]
 ) -> Column:
-    """Dispatch centroid assignment: the pure-Catalyst literal expression
-    while the tree stays small (``n_cells x dim <= IVF_EXPR_MAX_TERMS`` —
-    the seam every SQL oracle replays), the Arrow-batched numpy path past
-    it.  ``method`` forces ``"expr"`` or ``"udf"`` explicitly (the
-    bit-equality test pins both paths against each other at n_cells=8)."""
-    if method not in ("auto", "expr", "udf"):
-        raise ValueError(f"unknown ivf assignment method: {method!r}")
-    n_terms = sum(len(cv) for _, cv in centroids)
-    if method == "expr" or (
-        method == "auto" and n_terms <= IVF_EXPR_MAX_TERMS
-    ):
-        return ivf_assign_expr(vec, centroids)
-    return ivf_assign_udf(vec, centroids)
+    """Coarse-quantizer cell id: argmax cosine over the centroid set, exact
+    ties to the smallest cid.  One Arrow-batched pandas UDF over the
+    :func:`_cosines` kernel, so every cell count assigns in the summation
+    order the SQL oracles replay.  Map-only, no shuffle: at ingest time the
+    corpus can be written ``partitionBy("cell")`` and a query's probe
+    predicate becomes partition pruning at the parquet scan.  Raises
+    ``ValueError`` for a zero-norm centroid."""
+    from pyspark.sql.functions import pandas_udf
+
+    if not centroids:  # empty quantizer (empty corpus): no cell for anyone
+        return F.lit(None).cast("long")
+    cids, mat, cnorm = _centroid_matrix(centroids)
+
+    @pandas_udf("long")
+    def _assign(batch: pd.Series) -> pd.Series:
+        if len(batch) == 0:
+            return pd.Series(np.empty(0, dtype=np.int64))
+        # float32 -> float64 before any multiply, as cosine_expr casts
+        x = np.stack(batch.to_numpy()).astype(np.float64)
+        return pd.Series(cids[np.argmax(_cosines(x, mat, cnorm), axis=1)])
+
+    return _assign(vec)
 
 
 def _rank_probe_cells(
@@ -369,33 +367,16 @@ def _rank_probe_cells(
     nprobe: int,
 ) -> list[int]:
     """The ``nprobe`` cells whose centroids are nearest the query by
-    cosine, ties to the smaller cid — ONE implementation shared by the
-    in-memory and partitioned IVF paths so they can never diverge.  Below
-    IVF_EXPR_MAX_TERMS the ranking uses plain float64 SEQUENTIAL sums
-    (the summation order the SQL oracles replay exactly); above it, one
-    numpy GEMV (same threshold as the assignment dispatch; the last-ulp
-    summation-order difference only matters for razor-edge probe ties,
-    which the oracle-replayed small-n seam never has)."""
-    qv = np.asarray(query, dtype=np.float64)
-    qn = float(np.sqrt((qv * qv).sum()))
-    n_terms = sum(len(cv) for _, cv in centroids)
-    if n_terms <= IVF_EXPR_MAX_TERMS:
-        ranked = sorted(
-            (
-                (
-                    -(sum(float(a) * float(b) for a, b in zip(cv, qv))
-                      / (np.sqrt(sum(float(a) * float(a) for a in cv)) * qn)),
-                    cid,
-                )
-                for cid, cv in centroids
-            )
-        )
-        return sorted(cid for _, cid in ranked[:nprobe])
-    cids = np.asarray([int(c) for c, _v in centroids], dtype=np.int64)
-    mat = np.asarray([v for _c, v in centroids], dtype=np.float64)
-    sims = (mat @ qv) / (np.linalg.norm(mat, axis=1) * qn)
+    cosine, ties to the smaller cid.  The query is a one-row batch through
+    the same kernel as :func:`ivf_assign`, and the in-memory and
+    partitioned IVF paths share this ranking, so neither can diverge from
+    assignment or from each other."""
+    if not centroids:
+        return []
+    cids, mat, cnorm = _centroid_matrix(centroids)
+    sims = _cosines(np.asarray([query], dtype=np.float64), mat, cnorm)[0]
     order = np.lexsort((cids, -sims))[:nprobe]
-    return sorted(int(cids[i]) for i in order)
+    return sorted(int(c) for c in cids[order])
 
 
 def ivf_cosine_topk(
@@ -408,7 +389,6 @@ def ivf_cosine_topk(
     vec_col: str = "embedding",
     centroids: list[tuple[int, list[float]]] | str | None = None,
     seed: int = 42,
-    assign_method: str = "auto",
 ) -> DataFrame:
     """IVF (inverted-file) ANN top-k — the list-partitioned scale path
     alongside :func:`lsh_cosine_topk`.
@@ -418,11 +398,13 @@ def ivf_cosine_topk(
     k-means — the production quantizer) on ``vectors`` in one line; when
     omitted, the ``n_cells`` lowest-id vectors — a deterministic seed rule
     so tests and the SQL oracle replay the exact same quantizer
-    (everything downstream is unchanged across all three).  Every vector is assigned to its nearest centroid by cosine
-    (map-only, :func:`ivf_assign_expr`); the query probes only the
-    ``nprobe`` cells whose centroids are nearest to it, and exact cosine
-    ranks the survivors.  Scan cost ~ nprobe/n_cells of the corpus; recall
-    is tunable via nprobe (tested against the brute-force oracle).
+    (everything downstream is unchanged across all three).  Every vector
+    is assigned to its nearest centroid by cosine (map-only,
+    :func:`ivf_assign`); the query probes only the ``nprobe`` cells whose
+    centroids are nearest to it, and exact cosine ranks the survivors.
+    Scan cost ~ nprobe/n_cells of the corpus; recall is tunable via nprobe
+    (tested against the brute-force oracle).  A zero-norm centroid raises
+    ``ValueError``.
 
     Reference analogue: discretize-then-invert is exactly the reference's
     binned-descriptor strategy (SURVEY.md §2.3 — ranges become equality
@@ -442,7 +424,7 @@ def ivf_cosine_topk(
     q = F.array(*[F.lit(float(x)) for x in query])
     return (
         vectors.withColumn(
-            "cell", ivf_assign(F.col(vec_col), centroids, assign_method)
+            "cell", ivf_assign(F.col(vec_col), centroids)
         )
         .where(F.col("cell").isin(probe))
         .select(F.col(id_col), cosine_expr(F.col(vec_col), q).alias("cosine"))
@@ -456,7 +438,6 @@ def write_ivf_partitioned(
     path: str,
     centroids: list[tuple[int, list[float]]],
     vec_col: str = "embedding",
-    assign_method: str = "auto",
 ) -> None:
     """Materialize an IVF-partitioned corpus: assign every vector to its
     coarse cell (map-only, :func:`ivf_assign`) and write
@@ -469,7 +450,7 @@ def write_ivf_partitioned(
     layout instead of a custom container)."""
     (
         vectors.withColumn(
-            "cell", ivf_assign(F.col(vec_col), centroids, assign_method)
+            "cell", ivf_assign(F.col(vec_col), centroids)
         )
         .repartition("cell")
         .write.mode("overwrite")
@@ -492,8 +473,7 @@ def ivf_cosine_topk_partitioned(
     predicate is a partition filter (no per-row assignment at query time,
     no full scan — `.explain` shows the pruned PartitionFilters), exact
     cosine ranks the survivors.  Probe selection is the SAME
-    :func:`_rank_probe_cells` the in-memory path uses (including the
-    sequential-sum small-n seam the SQL oracles replay), so the two paths
+    :func:`_rank_probe_cells` the in-memory path uses, so the two paths
     cannot diverge on razor-edge probe ties."""
     probe = _rank_probe_cells(centroids, query, nprobe)
     q = F.array(*[F.lit(float(x)) for x in query])
@@ -533,7 +513,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     centroids: list[tuple[int, list[float]]] | str | None = None,
     seed: int = 42,
-    assign_method: str = "auto",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication over an embedding column.
 
@@ -546,7 +525,7 @@ def semantic_dedup(
     exact_dedup).  Returns dropped rows only:
     (vec_id, dup_of, cosine) with cosine = similarity to the canonical.
 
-    The quantizer is :func:`ivf_assign_expr` over the same deterministic
+    The quantizer is :func:`ivf_assign` over the same deterministic
     lowest-id centroid rule as :func:`ivf_cosine_topk`, so an external SQL
     oracle can replay cell assignment exactly; a production run swaps in
     :func:`kmeans_centroids` (seeded sampled spherical k-means) without
@@ -571,7 +550,7 @@ def semantic_dedup(
             (int(r[id_col]), [float(x) for x in r[vec_col]]) for r in rows
         ]
     cells = vectors.withColumn(
-        "cell", ivf_assign(F.col(vec_col), centroids, assign_method)
+        "cell", ivf_assign(F.col(vec_col), centroids)
     )
     lhs = cells.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"), "cell"

@@ -279,13 +279,11 @@ RUNS_POS_SCHEMA = StructType(
 )
 
 
-def _runs_schema(with_positions: bool, with_sha: bool) -> StructType:
+def _runs_schema(with_positions: bool) -> StructType:
     base = RUNS_POS_SCHEMA if with_positions else RUNS_SCHEMA
-    if with_sha:
-        base = StructType(
-            base.fields + [StructField("sha_data", BinaryType(), True)]
-        )
-    return base
+    return StructType(
+        base.fields + [StructField("sha_data", BinaryType(), True)]
+    )
 
 
 def _run_batches(
@@ -293,13 +291,12 @@ def _run_batches(
     pattern: str,
     docs_per_shard: int,
     with_positions: bool,
-    with_sha: bool,
 ) -> Iterator[pd.DataFrame]:
     """Packed-run kernel: tokenization identical to :func:`_tf_batches`
     (frozen contract), then entries are sorted (term-code, doc_id) in numpy
     and each maximal (term, shard) run is varint-packed exactly like a
     posting block payload (absolute first doc, then gaps; tfs as varints).
-    Doc-metadata rows (term '') pack (doc_id -> doclen[, sha256]) per shard.
+    Doc-metadata rows (term '') pack (doc_id -> doclen, sha256) per shard.
     """
     import numpy as np
     import pyarrow as pa
@@ -308,14 +305,13 @@ def _run_batches(
     from .codec import varint_encode_with_lengths
 
     pos_cols = ["pos_data"] if with_positions else []
-    sha_cols = ["sha_data"] if with_sha else []
     all_cols = (
         ["shard", "term", "n_docs", "sum_tf", "first_doc", "doc_deltas",
-         "tfs"] + pos_cols + sha_cols
+         "tfs"] + pos_cols + ["sha_data"]
     )
 
     def _doc_rows(doc_ids, doclens, shas) -> pd.DataFrame:
-        """One packed row per shard: this batch's (doc_id, doclen[, sha])."""
+        """One packed row per shard: this batch's (doc_id, doclen, sha)."""
         order = np.argsort(doc_ids, kind="stable")
         ids = doc_ids[order].astype(np.int64)
         lens = doclens[order].astype(np.int64)
@@ -351,11 +347,8 @@ def _run_batches(
         }
         if with_positions:
             cols["pos_data"] = [b""] * starts.size
-        if with_sha:
-            sh = shas[order]
-            cols["sha_data"] = [
-                b"".join(sh[s:e]) for s, e in zip(starts, ends)
-            ]
+        sh = shas[order]
+        cols["sha_data"] = [b"".join(sh[s:e]) for s, e in zip(starts, ends)]
         return pd.DataFrame(cols)
 
     for whole in batches:
@@ -363,9 +356,7 @@ def _run_batches(
           continue
       for pdf in _content_slices(whole):
         doc_id_arr = pdf["doc_id"].to_numpy().astype(np.int64)
-        sha_arr = (
-            pdf["content_sha256"].to_numpy() if with_sha else None
-        )
+        sha_arr = pdf["content_sha256"].to_numpy()
         content = pa.array(pdf["content"], type=pa.string())
         toks = pc.split_pattern_regex(content, pattern="[^A-Za-z0-9_]+")
         parent = pc.list_parent_indices(toks)
@@ -471,11 +462,8 @@ def _run_batches(
                 bytes(pv[po[pstarts[s]]:po[pstarts[e]]])
                 for s, e in zip(starts, ends)
             ]
-        if with_sha:
-            cols["sha_data"] = [None] * starts.size
-        out = pd.DataFrame(cols)[
-            [c for c in all_cols if c in cols or c in ("sha_data",)]
-        ]
+        cols["sha_data"] = [None] * starts.size
+        out = pd.DataFrame(cols)[all_cols]
         yield pd.concat(
             [out, _doc_rows(doc_id_arr, doclens, sha_arr)],
             ignore_index=True,
@@ -487,28 +475,23 @@ def packed_term_runs(
     docs_per_shard: int,
     content_col: str = "content",
     with_positions: bool = False,
-    with_sha: bool = False,
     analyzer: str = "standard",
 ) -> DataFrame:
     """``(doc_id, content)`` -> packed SPIMI runs, one row per (shard, term)
-    per Arrow batch (see module comment above).  ``with_sha`` computes the
-    content digest JVM-side inside the same scan (``unhex(sha2(...))``) and
-    packs the raw 32-byte digests into the per-shard doc-metadata rows.
+    per Arrow batch (see module comment above).  The content digest is
+    computed JVM-side inside the same scan (``unhex(sha2(...))``) and the
+    raw 32-byte digests are packed into the per-shard doc-metadata rows.
     ``analyzer`` pre-transforms the tokenized text in the same scan; the
     digest always hashes the RAW content column."""
-    cols = ["doc_id", analyze_expr(F.col(content_col), analyzer).alias("content")]
-    if with_sha:
-        cols.append(
-            F.unhex(F.sha2(F.col(content_col), 256)).alias("content_sha256")
-        )
-    src = docs.select(*cols)
+    src = docs.select(
+        "doc_id",
+        analyze_expr(F.col(content_col), analyzer).alias("content"),
+        F.unhex(F.sha2(F.col(content_col), 256)).alias("content_sha256"),
+    )
     pattern = TOKEN_PATTERN
-    schema = _runs_schema(with_positions, with_sha)
     return src.mapInPandas(
-        lambda it: _run_batches(
-            it, pattern, docs_per_shard, with_positions, with_sha
-        ),
-        schema=schema,
+        lambda it: _run_batches(it, pattern, docs_per_shard, with_positions),
+        schema=_runs_schema(with_positions),
     )
 
 
@@ -516,17 +499,13 @@ DOC_META_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),
         StructField("doclen", LongType(), False),
+        StructField("content_sha256", StringType(), True),
     ]
 )
 
-DOC_META_SHA_SCHEMA = StructType(
-    DOC_META_SCHEMA.fields
-    + [StructField("content_sha256", StringType(), True)]
-)
 
-
-def decode_doc_meta(doc_rows: DataFrame, with_sha: bool = False) -> DataFrame:
-    """Inverse of the doc-metadata packing: ``(doc_id, doclen[, sha hex])``
+def decode_doc_meta(doc_rows: DataFrame) -> DataFrame:
+    """Inverse of the doc-metadata packing: ``(doc_id, doclen, sha hex)``
     one row per document.  Input: the ``term == ''`` rows of
     :func:`packed_term_runs` output."""
 
@@ -549,20 +528,18 @@ def decode_doc_meta(doc_rows: DataFrame, with_sha: bool = False) -> DataFrame:
             starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
             base = np.where(starts > 0, c[starts - 1], 0)
             ids = c - np.repeat(base, counts)
-            cols = {"doc_id": ids, "doclen": lens}
-            if with_sha:
-                hex_all = b"".join(
-                    bytes(b) for b in pdf["sha_data"]
-                ).hex()
-                cols["content_sha256"] = [
+            hex_all = b"".join(bytes(b) for b in pdf["sha_data"]).hex()
+            yield pd.DataFrame({
+                "doc_id": ids,
+                "doclen": lens,
+                "content_sha256": [
                     hex_all[i * 64:(i + 1) * 64] for i in range(ids.size)
-                ]
-            yield pd.DataFrame(cols)
+                ],
+            })
 
-    cols = ["n_docs", "doc_deltas", "tfs"] + (["sha_data"] if with_sha else [])
-    return doc_rows.select(*cols).mapInPandas(
-        _unpack, schema=DOC_META_SHA_SCHEMA if with_sha else DOC_META_SCHEMA
-    )
+    return doc_rows.select(
+        "n_docs", "doc_deltas", "tfs", "sha_data"
+    ).mapInPandas(_unpack, schema=DOC_META_SCHEMA)
 
 
 def term_frequencies(

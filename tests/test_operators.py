@@ -2,6 +2,7 @@
 similarity vs exact cosine, multimodal plumbing, text stats."""
 
 import hashlib
+import math
 import re
 
 import numpy as np
@@ -1335,82 +1336,82 @@ def test_count_matches_vs_bruteforce(spark, tmp_path):
 # ---- round 5: vectorized IVF assignment + reseed discipline --------------
 
 
-def test_ivf_assign_udf_bit_equal_expr(spark):
-    """Round-4 verdict item 2: the Arrow-batched numpy assignment path must
-    agree with the Catalyst literal-expression path bit for bit at the
-    oracle seam (n_cells=8), and the full IVF query must return identical
-    rows under either method."""
+def _seq_assign_reference(vec, centroids):
+    """Nearest centroid by cosine in pure Python float64, every sum started
+    at 0.0 and added dimension by dimension (cosine_expr's order, which
+    the SQL oracles replay); exact ties go to the smallest cid."""
+    best = None
+    for cid, cv in sorted(centroids):
+        dot = xx = cc = 0.0
+        for a, c in zip(vec, cv):
+            dot += a * c
+        for a in vec:
+            xx += a * a
+        for c in cv:
+            cc += c * c
+        sim = dot / (math.sqrt(xx) * math.sqrt(cc))
+        if best is None or sim > best[0]:
+            best = (sim, cid)
+    return best[1]
+
+
+def test_ivf_assign_matches_sequential_reference(spark):
+    """ivf_assign equals the pure-Python sequential-sum reference at 8 and
+    at 256 cells, and on exact ties: constant vectors against centroids
+    that are coordinate permutations of one another tie on every cosine,
+    which a reordered (GEMM) sum splits by last-ulp noise."""
     rng = np.random.default_rng(31)
-    vecs = rng.standard_normal((400, 16)).astype(np.float32)
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(400)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cent_rows = df.orderBy("vec_id").limit(8).collect()
-    centroids = [
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in cent_rows
-    ]
-    a = df.select(
-        "vec_id",
-        similarity.ivf_assign_expr(F.col("embedding"), centroids).alias("c"),
-    ).collect()
-    b = df.select(
-        "vec_id",
-        similarity.ivf_assign_udf(F.col("embedding"), centroids).alias("c"),
-    ).collect()
-    assert {r["vec_id"]: r["c"] for r in a} == {
-        r["vec_id"]: r["c"] for r in b
+    dim = 16
+    vecs = rng.standard_normal((200, dim)).astype(np.float32)
+    base = rng.standard_normal(dim).astype(np.float32)
+    consts = rng.standard_normal(200).astype(np.float32)
+    cases = {
+        "8 cells": (vecs, vecs[:8]),
+        "256 cells": (vecs, rng.standard_normal((256, dim)).astype(np.float32)),
+        "exact tie": (
+            np.repeat(consts[:, None], dim, axis=1),
+            np.stack([base[rng.permutation(dim)] for _ in range(8)]),
+        ),
     }
-    q = [float(x) for x in vecs[0]]
-    got_e = similarity.ivf_cosine_topk(
-        df, q, k=10, nprobe=3, centroids=centroids, assign_method="expr"
-    ).collect()
-    got_u = similarity.ivf_cosine_topk(
-        df, q, k=10, nprobe=3, centroids=centroids, assign_method="udf"
-    ).collect()
-    assert [(r["vec_id"], r["cosine"]) for r in got_e] == [
-        (r["vec_id"], r["cosine"]) for r in got_u
-    ]
-
-
-def test_ivf_assign_auto_dispatch(spark):
-    """auto selects the expression path under IVF_EXPR_MAX_TERMS and the
-    pandas_udf path above it (plan-shape check: ArrowEvalPython only in the
-    large-cell plan), and both dispatch targets agree on assignments."""
-    rng = np.random.default_rng(37)
-    dim = 32
-    vecs = rng.standard_normal((300, dim)).astype(np.float32)
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(300)]
-    df = spark.createDataFrame(
-        rows, f"vec_id long, embedding array<float>"
+    for name, (xs, cs) in cases.items():
+        rows = [(i, [float(x) for x in xs[i]]) for i in range(len(xs))]
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        centroids = [(i, [float(x) for x in c]) for i, c in enumerate(cs)]
+        got = {
+            r["vec_id"]: r["c"]
+            for r in df.select(
+                "vec_id",
+                similarity.ivf_assign(F.col("embedding"), centroids).alias("c"),
+            ).collect()
+        }
+        want = {i: _seq_assign_reference(v, centroids) for i, v in rows}
+        assert got == want, name
+    # a zero vector has no cosine to anything: it goes to the smallest cid
+    zero = spark.createDataFrame(
+        [(0, [0.0] * dim)], "vec_id long, embedding array<float>"
     )
-    small = [(i, [float(x) for x in vecs[i]]) for i in range(8)]
-    # 256 centroids x 32 dims = 8192 terms > IVF_EXPR_MAX_TERMS=4096
-    big = [(i, [float(x) for x in vecs[i]]) for i in range(256)]
-    assert sum(len(v) for _, v in small) <= similarity.IVF_EXPR_MAX_TERMS
-    assert sum(len(v) for _, v in big) > similarity.IVF_EXPR_MAX_TERMS
+    centroids = [(7, [1.0] * dim), (3, [2.0] * dim)]
+    assert zero.select(
+        similarity.ivf_assign(F.col("embedding"), centroids)
+    ).first()[0] == 3
 
-    plan_small = df.select(
-        similarity.ivf_assign(F.col("embedding"), small).alias("c")
-    )._jdf.queryExecution().executedPlan().toString()
-    plan_big = df.select(
-        similarity.ivf_assign(F.col("embedding"), big).alias("c")
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan_small
-    assert "ArrowEvalPython" in plan_big
 
-    got_auto = df.select(
-        "vec_id", similarity.ivf_assign(F.col("embedding"), big).alias("c")
-    ).collect()
-    got_expr = df.select(
-        "vec_id",
-        similarity.ivf_assign(F.col("embedding"), big, "expr").alias("c"),
-    ).collect()
-    assert {r["vec_id"]: r["c"] for r in got_auto} == {
-        r["vec_id"]: r["c"] for r in got_expr
-    }
-
-    with pytest.raises(ValueError):
-        similarity.ivf_assign(F.col("embedding"), small, "bogus")
+def test_zero_norm_centroid_rejected(spark, tmp_path):
+    """A zero-norm centroid has no cosine to anything: every IVF entry
+    point rejects it by cid instead of letting it capture all vectors or
+    none."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 2.0]), (1, [2.0, 1.0])], "vec_id long, embedding array<float>"
+    )
+    centroids = [(0, [1.0, 0.0]), (3, [0.0, 0.0]), (5, [0.0, 1.0])]
+    with pytest.raises(ValueError, match="cid 3"):
+        similarity.ivf_assign(F.col("embedding"), centroids)
+    with pytest.raises(ValueError, match="cid 3"):
+        similarity.ivf_cosine_topk(df, [1.0, 1.0], centroids=centroids)
+    with pytest.raises(ValueError, match="cid 3"):
+        similarity.ivf_cosine_topk_partitioned(
+            spark, str(tmp_path / "absent"), [1.0, 1.0], centroids
+        )
 
 
 def test_lloyd_simultaneous_empty_cells_reseed_distinct():

@@ -134,7 +134,7 @@ def test_fixed_driver_window_is_a_prefix_and_complete():
         sys.path.remove(ROOT)
     q = entry.queries()
     keys = list(q)
-    win = entry._DRIVER_WINDOW_R5
+    win = entry._DRIVER_WINDOW_R6
     assert len(win) == 50
     assert keys[: len(win)] == list(win)
     # a stale window name must fail loudly, not silently reorder

@@ -48,7 +48,7 @@ def docs(spark):
 
 
 def test_runs_match_posting_rows(spark, docs):
-    runs = packed_term_runs(docs, docs_per_shard=DOCS_PER_SHARD, with_sha=True)
+    runs = packed_term_runs(docs, docs_per_shard=DOCS_PER_SHARD)
     term_rows = runs.where(F.col("term") != "")
     ref = term_frequencies(docs)
     got = term_rows.agg(
@@ -71,10 +71,8 @@ def test_runs_match_posting_rows(spark, docs):
 
 
 def test_doc_meta_roundtrip(spark, docs):
-    runs = packed_term_runs(docs, docs_per_shard=DOCS_PER_SHARD, with_sha=True)
-    meta = decode_doc_meta(
-        runs.where(F.col("term") == ""), with_sha=True
-    ).toPandas()
+    runs = packed_term_runs(docs, docs_per_shard=DOCS_PER_SHARD)
+    meta = decode_doc_meta(runs.where(F.col("term") == "")).toPandas()
     assert len(meta) == docs.count()
     ref = docs.select(
         "doc_id",
@@ -135,10 +133,11 @@ def test_tokenless_docs_carry_meta_only(spark):
         }
     )
     docs = spark.createDataFrame(pdf)
-    runs = packed_term_runs(docs, docs_per_shard=2, with_sha=True)
-    meta = decode_doc_meta(
-        runs.where(F.col("term") == ""), with_sha=True
-    ).toPandas().sort_values("doc_id").reset_index(drop=True)
+    runs = packed_term_runs(docs, docs_per_shard=2)
+    meta = (
+        decode_doc_meta(runs.where(F.col("term") == ""))
+        .toPandas().sort_values("doc_id").reset_index(drop=True)
+    )
     assert list(meta["doc_id"]) == [0, 1, 2]
     assert list(meta["doclen"]) == [0, 0, 2]
     assert runs.where(F.col("term") != "").count() > 0
