@@ -4,7 +4,7 @@
 (documents / embeddings / TPC-H-ish), each paired with an ANSI-SQL oracle in
 ``oracle_sql()`` that DuckDB executes on the same tables.  The inverted-index
 engine queries run through the REAL pipeline: corpus -> SPIMI build ->
-posting blocks -> DAAT/naive BM25 — not a SQL shortcut; the oracle replays
+posting blocks -> DAAT BM25 — not a SQL shortcut; the oracle replays
 the semantics in SQL.
 
 Column-name discipline: every computed column is aliased identically in the

@@ -5,7 +5,7 @@ Wraps a published IndexStore generation and exposes:
 - ``search(query, k, mode)``      — BM25 top-k via the DAAT path, hits joined
                                     to document metadata (late
                                     materialization);
-- ``search_naive(query, k, mode)``— the Catalyst-only baseline plan;
+- ``search_min_match(query, m, k)``— m-of-n relaxed conjunction, same kernel;
 - exact stats accessors (df/cf/avgdl) for tests and planning.
 """
 
@@ -18,8 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .build.index_store import IndexStore
-from .query.bm25 import bm25_topk_naive
-from .query.daat import bm25_topk_daat
+from .query.daat import bm25_topk_daat, prune_shards_default
 from .query.planner import QueryPlan, plan_query
 
 
@@ -197,8 +196,8 @@ class SearchEngine:
         ``exclude``: NOT-term clause — documents containing ANY of these
         terms (same frozen tokenizer rule) are removed from the result set
         BEFORE top-k selection; global BM25 statistics (idf, avgdl, N) are
-        untouched.  The term-level lift of the P2 blacklist anti-join
-        (query/bm25.py), executed shard-locally inside the DAAT kernel: the
+        untouched.  The term-level lift of the P2 blacklist anti-join,
+        executed shard-locally inside the DAAT kernel (query/daat.py): the
         excluded terms' posting blocks ride the same pushed-down scan and
         zero their docs out of the eligibility mask.  Absent excluded terms
         are no-ops; an excluded term that is also a query term simply
@@ -256,20 +255,10 @@ class SearchEngine:
                     _, evicted = self._pred_norms.popitem(last=False)
                     evicted.unpersist()
             norms = self._pred_norms[key]
-        n_shards = self.meta.get("n_shards") or 0
         if prune_shards is None:
-            # Pruning adds TWO scheduler round-trips (metadata phase-0 +
-            # probe phase-1) before the scoring job; it pays only when the
-            # decode work it can skip exceeds that fixed cost.  Decode work
-            # is proportional to the query's candidate posting volume =
-            # sum of group dfs (exact, from the plan), so prune only when
-            # the volume is large AND there are enough shards to skip.
-            # Measured: at 120k docs a head-term query is 3x FASTER
-            # single-pass (0.42s vs 1.17s); at 10^12 docs any head term
-            # clears the threshold by orders of magnitude and pruning is
-            # the only viable plan.
-            volume = sum(g.df for g in plan.groups)
-            prune_shards = n_shards > 64 and volume > 2_000_000
+            prune_shards = prune_shards_default(
+                self.meta.get("n_shards") or 0, plan.groups
+            )
         if offset and after is not None:
             raise ValueError("offset and after are mutually exclusive")
         hits = bm25_topk_daat(
@@ -833,29 +822,6 @@ class SearchEngine:
             .limit(k)
         )
 
-    def search_naive(
-        self,
-        query: str,
-        k: int = 10,
-        mode: str = "or",
-        with_meta: bool = False,
-        expansions: dict[str, list[str]] | None = None,
-    ) -> DataFrame:
-        from .tokenizer import analyze_text
-
-        plan = self.plan(
-            analyze_text(query, self.analyzer), expansions=expansions
-        )
-        hits = bm25_topk_naive(
-            self.spark,
-            self.postings,
-            self.doc_map.select("doc_id", "doclen"),
-            plan,
-            k=k,
-            mode=mode,
-        )
-        return self._materialize(hits, k) if with_meta else hits
-
     def search_min_match(
         self,
         query: str,
@@ -867,20 +833,25 @@ class SearchEngine:
         """Relaxed conjunction (Elasticsearch ``minimum_should_match``): a
         hit must match at least ``min_match`` of the query's scoring groups
         — min_match=1 is OR, min_match=n is AND, anything between is the
-        m-of-n middle ground AND/OR cannot express.  Same deterministic
-        scoring contract as ``search`` (query/bm25.py for the plan)."""
+        m-of-n middle ground AND/OR cannot express.  Same DAAT kernel and
+        deterministic scoring contract as ``search``: the kernel's OR hit
+        threshold becomes ``min_match`` (query/daat.py)."""
         from .tokenizer import analyze_text
 
         plan = self.plan(
             analyze_text(query, self.analyzer), expansions=expansions
         )
-        hits = bm25_topk_naive(
+        hits = bm25_topk_daat(
             self.spark,
             self.postings,
-            self.doc_map.select("doc_id", "doclen"),
+            self.norms,
             plan,
+            docs_per_shard=self.meta["docs_per_shard"],
             k=k,
             mode="or",
+            prune_shards=prune_shards_default(
+                self.meta.get("n_shards") or 0, plan.groups
+            ),
             min_match=min_match,
         )
         return self._materialize(hits, k) if with_meta else hits

@@ -8,16 +8,13 @@ Analogue of the reference's query lifecycle (SURVEY.md §3.1):
 - planner.py — query tokenization, term dictionary lookup, df-ascending
   ordering (O1), dedup (KruskalMotifPruner analogue), empty-result early exit
   (O5), allow/deny/partition filters (P1-P3).
-- bm25.py    — the *naive* Catalyst-only BM25 plan (decode postings ->
-  join norms -> grouped deterministic-order sum -> TakeOrderedAndProject).
-  Oracle-parity baseline; also the plan DuckDB can mirror in SQL.
-- daat.py    — the production path: document-at-a-time scoring inside one
+- daat.py    — the one BM25 top-k kernel (OR / AND / MUST+SHOULD /
+  m-of-n / nested boolean): document-at-a-time scoring inside one
   grouped-cogroup pandas UDF per shard, block skip pointers, per-shard
   top-k heaps, global top-k merge.
 """
 
 from .planner import QueryPlan, plan_query
-from .bm25 import bm25_topk_naive
 from .daat import bm25_topk_daat
 
-__all__ = ["QueryPlan", "plan_query", "bm25_topk_naive", "bm25_topk_daat"]
+__all__ = ["QueryPlan", "plan_query", "bm25_topk_daat"]

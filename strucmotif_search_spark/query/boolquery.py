@@ -19,7 +19,7 @@ Semantics (Lucene-equivalent, exactly replayable):
 - summation order is ascending term_id (the engine's total order), ties
   at the k cut break by doc_id ascending.
 
-Production plan shape (:func:`bool_topk` — the DAAT shard kernel,
+Plan shape (:func:`bool_topk` — the DAAT shard kernel,
 query/daat.py mode='expr'):
 
   postings.where(term_id IN all-expression-terms)   <- ONE pushed-down scan,
@@ -45,12 +45,6 @@ under all-false flags) so the common case never pays it.  Shard-level
 block-max pruning stays available for non-widening expressions, with
 phase-0 upper bounds over positive groups only.
 
-:func:`bool_topk_naive` keeps the original pure-Catalyst formulation
-(per-(doc, term) contributions, groupBy(doc_id) presence flags, compiled
-WHERE, doc-universe left join when widening) as an independently-planned
-cross-check twin — two exchanges plus a doclen join, never the production
-path.
-
 Grammar:  expr   := or
           or     := and (OR and)*
           and    := unary ((AND)? unary)*     -- adjacency is AND
@@ -65,8 +59,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..oracle import tokenize
 from ..tokenizer import analyze_text
@@ -205,18 +198,6 @@ def accepts_all_absent(node: Node) -> bool:
     return any(accepts_all_absent(c) for c in node.children)
 
 
-def _to_condition(node: Node, flag_of: dict[str, Column]) -> Column:
-    if isinstance(node, Term):
-        return flag_of[node.term]
-    if isinstance(node, Not):
-        return ~_to_condition(node.child, flag_of)
-    cols = [_to_condition(c, flag_of) for c in node.children]
-    out = cols[0]
-    for c in cols[1:]:
-        out = (out & c) if isinstance(node, And) else (out | c)
-    return out
-
-
 # ---- execution ----------------------------------------------------------
 @dataclass(frozen=True)
 class ExprSpec:
@@ -271,9 +252,11 @@ def bool_topk(
     join: even the widening case (`NOT a`, `a OR NOT b` — the match set is
     provably corpus-sized) stays in the kernel, scoring every norms shard
     through the full-outer cogroup instead of joining the doc universe.
-    Semantics identical to :func:`bool_topk_naive` (randomized cross-check
-    in tests/test_boolquery.py)."""
-    from .daat import bm25_topk_daat
+    Semantics checked against a brute-force replay of the module
+    docstring's rules (randomized, tests/test_boolquery.py).  A
+    non-widening expression with no positive term in the vocabulary
+    returns empty from ``bm25_topk_daat`` before any scoring job."""
+    from .daat import bm25_topk_daat, prune_shards_default
 
     ast = parse_bool(query, engine.analyzer)
     all_terms = sorted(expr_terms(ast))
@@ -282,10 +265,6 @@ def bool_topk(
     pos_ids = frozenset(
         vocab[t][0] for t in positive_terms(ast) if t in vocab
     )
-    if not widen and not pos_ids:
-        # monotonicity: a non-widening expression needs >= 1 positive term
-        # present, and none exists in the vocabulary
-        return engine.spark.createDataFrame([], "doc_id long, score double")
     # singleton groups for every PRESENT expression term (negative ones
     # included — their presence flags gate matching); gkey == term_id.
     # Built directly from the vocab lookup (term_ids already in hand) —
@@ -303,13 +282,13 @@ def bool_topk(
         score_keys=pos_ids,
         widen=widen,
     )
-    # volume-aware shard-prune default (engine.search convention), over the
-    # positive groups only — they alone decide candidacy and decode cost;
-    # explicit prune_shards overrides (tests pin both paths)
+    # volume over the positive groups only — they alone decide candidacy
+    # and decode cost; explicit prune_shards overrides (tests pin both)
     if prune_shards is None:
-        n_shards = engine.meta.get("n_shards") or 0
-        volume = sum(g.df for g in plan.groups if g.key in pos_ids)
-        prune_shards = n_shards > 64 and volume > 2_000_000
+        prune_shards = prune_shards_default(
+            engine.meta.get("n_shards") or 0,
+            [g for g in plan.groups if g.key in pos_ids],
+        )
     return bm25_topk_daat(
         engine.spark,
         engine.postings,
@@ -320,88 +299,4 @@ def bool_topk(
         mode="expr",
         prune_shards=prune_shards,
         expr=spec,
-    )
-
-
-def bool_topk_naive(engine, query: str, k: int = 10) -> DataFrame:
-    """Top-k (doc_id, score) for a nested boolean expression (see module
-    docstring for semantics and plan shape).  ``engine``: SearchEngine.
-
-    The pure-Catalyst formulation (per-(doc, term) contributions, one
-    groupBy(doc_id) with collect_set presence flags, compiled WHERE) — two
-    exchanges plus a doclen join, kept as the independently-planned
-    cross-check twin of the production DAAT path above."""
-    ast = parse_bool(query, engine.analyzer)
-    all_terms = sorted(expr_terms(ast))
-    vocab = engine._vocab_lookup(all_terms)  # {term: (term_id, df)}
-    pos_ids = sorted(
-        vocab[t][0] for t in positive_terms(ast) if t in vocab
-    )
-    widen = accepts_all_absent(ast)
-
-    if not vocab and not widen:
-        return engine.spark.createDataFrame([], "doc_id long, score double")
-
-    if vocab:
-        # singleton scoring groups for every expression term (negative ones
-        # included: their presence flags gate matching; gkey == term_id);
-        # built from the vocab lookup directly — no tokenizer round-trip
-        plan = plan_analyzed(
-            vocab,
-            int(engine._stats_row["n_docs"]),
-            float(engine._stats_row["avgdl"]),
-        )
-        from .bm25 import bm25_group_contribs
-
-        d = bm25_group_contribs(
-            engine.postings, engine.doc_map.select("doc_id", "doclen"), plan
-        )
-        per_doc = d.groupBy("doc_id").agg(
-            F.aggregate(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            F.col("gkey").isin(pos_ids)
-                            if pos_ids
-                            else F.lit(False),
-                            F.struct("gkey", "contrib"),
-                        )
-                    )
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            ).alias("score"),
-            F.collect_set("gkey").alias("present"),
-        )
-    else:
-        per_doc = engine.spark.createDataFrame(
-            [], "doc_id long, score double, present array<long>"
-        )
-
-    if widen:
-        # semantics force a corpus-sized match set: metadata-only left join
-        # (doc_id column of the dictionary; no content, no postings beyond
-        # the candidate scan above)
-        universe = engine.doc_map.select("doc_id")
-        per_doc = universe.join(per_doc, on="doc_id", how="left").select(
-            "doc_id",
-            F.coalesce(F.col("score"), F.lit(0.0)).alias("score"),
-            F.coalesce(
-                F.col("present"), F.array().cast("array<long>")
-            ).alias("present"),
-        )
-
-    flag_of = {
-        t: (
-            F.array_contains(F.col("present"), F.lit(vocab[t][0]))
-            if t in vocab
-            else F.lit(False)
-        )
-        for t in all_terms
-    }
-    matched = per_doc.where(_to_condition(ast, flag_of))
-    return (
-        matched.select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
     )

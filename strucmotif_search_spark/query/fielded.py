@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import TOKEN_PATTERN
-from .bm25 import bm25_group_contribs
+from ..build.postings import decode_postings
 from .planner import QueryPlan, idf
 
 _CONTRIB_SCHEMA = "doc_id long, term string, c double"
@@ -92,6 +92,48 @@ def field_stats(
         F.avg(F.size(toks)).alias("avg_fl"),
     ).first()
     return int(row["n"]), float(row["avg_fl"] or 0.0)
+
+
+def bm25_group_contribs(
+    postings: DataFrame,
+    norms_decoded: DataFrame,  # (doc_id, doclen) — doc_map works too
+    plan: QueryPlan,
+) -> DataFrame:
+    """Per-(doc, scoring-group) BM25 contributions: (doc_id, gkey, contrib)
+    — the content side of the fielded scorer, which needs contributions at
+    group granularity (not per-doc sums) to full-outer-join them with a
+    second field's contributions before the combined top-k."""
+    q_ids = sorted({tid for g in plan.groups for tid in g.member_ids})
+    blocks = postings.where(F.col("term_id").isin(q_ids))
+    decoded = decode_postings(blocks)
+
+    # member term_id -> expansion-group key / idf (A4: a group's tf is the
+    # SUM of member tfs — posting-list union with payload concat,
+    # DefaultTargetAssembler.java:85-88; singleton groups for plain queries)
+    key_of = {tid: g.key for g in plan.groups for tid in g.member_ids}
+    idf_of = {g.key: g.idf for g in plan.groups}
+    key_map = F.create_map(
+        *[F.lit(x) for x in chain.from_iterable(key_of.items())]
+    )
+    idf_map = F.create_map(
+        *[F.lit(x) for x in chain.from_iterable(idf_of.items())]
+    )
+    grouped = (
+        decoded.withColumn("gkey", key_map[F.col("term_id")])
+        .groupBy("doc_id", "gkey")
+        .agg(F.sum("tf").alias("tf"))
+    )
+    d = grouped.join(norms_decoded.select("doc_id", "doclen"), on="doc_id")
+    contrib = (
+        idf_map[F.col("gkey")]
+        * (F.col("tf") * (plan.k1 + 1.0))
+        / (
+            F.col("tf")
+            + plan.k1
+            * (1.0 - plan.b + plan.b * F.col("doclen") / F.lit(plan.avgdl))
+        )
+    )
+    return d.withColumn("contrib", contrib.cast("double"))
 
 
 def fielded_topk(

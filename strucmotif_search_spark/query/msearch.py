@@ -23,7 +23,7 @@ Plan shape (pure Catalyst — one job, no per-query loop):
 
 Determinism matches the single-query contract exactly (ascending-gkey
 summation, score desc / doc_id asc ties), so each query's slice of the
-result is bitwise-identical to running it alone through the naive path —
+result is bitwise-identical to running it alone through ``search`` —
 tests assert equality against the same numpy oracle.
 """
 

@@ -178,22 +178,6 @@ def test_random_expressions_match_brute_force(fixture):
             [s for _, s in got], [s for _, s in exp], rtol=0, atol=1e-12,
             err_msg=render(ast),
         )
-        if trial % 5 == 0:
-            # independently-planned twin: the pure-Catalyst formulation
-            # must agree with the same brute-force reference
-            from strucmotif_search_spark.query.boolquery import (
-                bool_topk_naive,
-            )
-
-            got_n = [
-                (r["doc_id"], r["score"])
-                for r in bool_topk_naive(eng, render(ast), k=15).collect()
-            ]
-            assert [d for d, _ in got_n] == [d for d, _ in exp], render(ast)
-            np.testing.assert_allclose(
-                [s for _, s in got_n], [s for _, s in exp],
-                rtol=0, atol=1e-12, err_msg=render(ast),
-            )
     assert n_widened >= 2  # the widened (corpus-sized) path was exercised
 
 

@@ -128,19 +128,6 @@ def test_topk_rank_identical_daat(built, spark, query, mode):
     assert [s for _, s in got] == [s for _, s in expected]
 
 
-@pytest.mark.parametrize("query,mode", QUERIES[:6])
-def test_topk_rank_identical_naive(built, spark, query, mode):
-    engine, oracle, _ = built
-    expected = bm25_topk(oracle, query, k=10, mode=mode)
-    got = [
-        (r["doc_id"], r["score"])
-        for r in engine.search_naive(query, k=10, mode=mode).collect()
-    ]
-    assert [d for d, _ in got] == [d for d, _ in expected]
-    for (_, s_got), (_, s_exp) in zip(got, expected):
-        assert s_got == pytest.approx(s_exp, abs=1e-12)
-
-
 # A4 query expansion (ResiduePairOccurrence.java:166-227 analogue): each
 # base term + synonyms = one scoring group; tf sums, df = max member df.
 EXPANSION_CASES = [
@@ -166,21 +153,6 @@ def test_expanded_rank_identical_daat(built, spark, query, exp, mode):
     ]
     assert [d for d, _ in got] == [d for d, _ in expected]
     assert [s for _, s in got] == [s for _, s in expected]
-
-
-@pytest.mark.parametrize("query,exp,mode", EXPANSION_CASES[:3])
-def test_expanded_rank_identical_naive(built, spark, query, exp, mode):
-    engine, oracle, _ = built
-    expected = bm25_topk(oracle, query, k=10, mode=mode, expansions=exp)
-    got = [
-        (r["doc_id"], r["score"])
-        for r in engine.search_naive(
-            query, k=10, mode=mode, expansions=exp
-        ).collect()
-    ]
-    assert [d for d, _ in got] == [d for d, _ in expected]
-    for (_, s_got), (_, s_exp) in zip(got, expected):
-        assert s_got == pytest.approx(s_exp, abs=1e-12)
 
 
 def test_expanded_beats_unexpanded_recall(built):

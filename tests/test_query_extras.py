@@ -17,6 +17,7 @@ from strucmotif_search_spark.oracle import (
     ql_topk,
     tokenize,
 )
+from strucmotif_search_spark.query.daat import bm25_topk_daat
 
 TOK = re.compile(TOKEN_PATTERN)
 
@@ -523,10 +524,12 @@ def test_delete_by_query_absent_is_noop(spark, tmp_path_factory):
 
 def test_min_match_sweep_vs_brute_force(engine):
     """m-of-n for every m: m=1 equals OR, m=n equals AND, the middle is the
-    n_matched>=m filter over the OR scoring — checked against the numpy
-    oracle's scored set."""
+    n_matched>=m filter over the OR scoring — bit-identical to the numpy
+    oracle's scored set, and to the shard-pruned plan (probe_shards=1, so
+    phase 2 decides the other shards against the probe's theta)."""
     oracle, texts = _oracle(engine)
     q = "table query stream"
+    plan = engine.plan(q)
     q_terms = sorted(set(tokenize(q)))
     or_hits = {d: s for d, s in bm25_topk(oracle, q, k=100, mode="or")}
     for m in (1, 2, 3):
@@ -547,7 +550,17 @@ def test_min_match_sweep_vs_brute_force(engine):
             (r["doc_id"], r["score"])
             for r in engine.search_min_match(q, min_match=m, k=100).collect()
         ]
-        assert got == pytest.approx(exp), f"m={m}"
+        assert got == exp, f"m={m}"
+        for k in (1, 2, 100):
+            pruned = [
+                (r["doc_id"], r["score"])
+                for r in bm25_topk_daat(
+                    engine.spark, engine.postings, engine.norms, plan,
+                    docs_per_shard=engine.meta["docs_per_shard"], k=k,
+                    prune_shards=True, probe_shards=1, min_match=m,
+                ).collect()
+            ]
+            assert pruned == exp[:k], f"m={m} k={k}"
     # m=n equals AND exactly
     and_hits = [
         (r["doc_id"], r["score"])
@@ -621,23 +634,65 @@ def test_empty_should_clause_stays_or(engine):
         assert got == base
 
 
-def test_naive_and_min_match_equal_search_results(engine):
-    """search_naive and search_min_match(min_match=1) rank identically to
-    the DAAT search (shared analyzed plan, same scoring contract)."""
+def test_min_match_one_equals_search_results(engine):
+    """search_min_match(min_match=1) is plain OR: the same kernel, plan
+    and scores as ``search``."""
     exp = [
         (r["doc_id"], r["score"])
         for r in engine.search("table query", k=20, with_meta=False).collect()
-    ]
-    naive = [
-        (r["doc_id"], r["score"])
-        for r in engine.search_naive("table query", k=20).collect()
     ]
     mm = [
         (r["doc_id"], r["score"])
         for r in engine.search_min_match("table query", min_match=1, k=20).collect()
     ]
-    assert [d for d, _ in naive] == [d for d, _ in exp]
-    assert [d for d, _ in mm] == [d for d, _ in exp]
+    assert mm == exp
+
+
+def test_min_match_disables_in_shard_maxscore(spark, tmp_path_factory):
+    """The in-shard MaxScore prune must stay off under min_match > 1: its
+    theta is the k-th best PARTIAL score, and here that is the lone
+    'alpha' doc, which never reaches two groups.  Pruning against it would
+    drop every beta+gamma doc and answer k=1 with nothing."""
+    rows = [("alpha alpha alpha alpha alpha",)] + [
+        (f"beta gamma filler{i} " + "pad " * i,) for i in range(7)
+    ]
+    docs = spark.createDataFrame(
+        [("r", f"p{i}", "c", "py", t) for i, (t,) in enumerate(rows)],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    store = IndexStore(tmp_path_factory.mktemp("mm_guard"))
+    build_index(spark, docs, store, docs_per_shard=64)
+    eng = SearchEngine(spark, store)
+    assert eng.meta["n_shards"] == 1
+    q = "alpha beta gamma"
+    texts = {
+        r["doc_id"]: rows[int(r["path"][1:])][0] for r in eng.doc_map.collect()
+    }
+    ids = sorted(texts)
+    oracle = build_oracle(ids, [texts[d] for d in ids])
+    exp = [
+        (d, s) for d, s in bm25_topk(oracle, q, k=100, mode="or")
+        if "beta" in texts[d]
+    ][:1]
+    got = [
+        (r["doc_id"], r["score"])
+        for r in eng.search_min_match(q, min_match=2, k=1).collect()
+    ]
+    assert len(got) == 1 and got == exp
+    plan = eng.plan(q)
+    for k in (1, 3):
+        pruned, unpruned = (
+            [
+                (r["doc_id"], r["score"])
+                for r in bm25_topk_daat(
+                    spark, eng.postings, eng.norms, plan,
+                    docs_per_shard=eng.meta["docs_per_shard"], k=k,
+                    prune_shards=prune, min_match=2,
+                ).collect()
+            ]
+            for prune in (True, False)
+        )
+        assert pruned == unpruned and len(unpruned) == k, k
 
 
 def test_phrase_longer_than_slot_capacity_raises(engine):
