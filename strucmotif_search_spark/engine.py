@@ -303,39 +303,10 @@ class SearchEngine:
         as a member of a wildcard group merges into that group (documented
         planner dedup semantics).
         """
-        from .oracle import tokenize
-
-        base_tokens: list[str] = []
-        expansions: dict[str, list[str]] = {}
-        for raw in query.split():
-            if not (raw.endswith("*") and len(raw) > 1):
-                base_tokens.append(raw)
-                continue
-            prefix = raw[:-1]
-            toks = tokenize(prefix)
-            if len(toks) != 1 or toks[0] != prefix:
-                raise ValueError(f"invalid wildcard prefix {raw!r}")
-            rows = (
-                self.terms.where(F.col("term").startswith(prefix))
-                .select("term")
-                .orderBy("term")
-                .limit(max_expansions + 1)
-                .collect()
-            )
-            members = [r["term"] for r in rows]
-            if len(members) > max_expansions:
-                raise ValueError(
-                    f"{raw!r} expands to more than {max_expansions} terms"
-                )
-            if not members:
-                base_tokens.append(prefix)  # absent group
-                continue
-            base_tokens.append(members[0])
-            if members[1:]:
-                expansions.setdefault(members[0], []).extend(members[1:])
-        return self.search(
-            " ".join(base_tokens), k=k, mode=mode,
-            expansions=expansions or None, **kw,
+        return self._multiterm_search(
+            query, "*", "wildcard prefix",
+            lambda prefix: self.terms.where(F.col("term").startswith(prefix)),
+            max_expansions, k=k, mode=mode, **kw,
         )
 
     def fuzzy_search(
@@ -366,31 +337,53 @@ class SearchEngine:
         within distance contributes an absent group (ignored under OR,
         empties the result under AND).
         """
+
+        def probe(base: str) -> DataFrame:
+            return self.terms.where(
+                F.length("term").between(
+                    len(base) - max_dist, len(base) + max_dist
+                )
+            ).where(
+                # bounded DP: the 3-arg levenshtein early-exits rows whose
+                # distance exceeds the threshold (returns -1 for those)
+                F.levenshtein(F.col("term"), F.lit(base), max_dist).between(
+                    0, max_dist
+                )
+            )
+
+        return self._multiterm_search(
+            query, "~", "fuzzy token", probe, max_expansions,
+            k=k, mode=mode, **kw,
+        )
+
+    def _multiterm_search(
+        self,
+        query: str,
+        suffix: str,
+        what: str,
+        probe,
+        max_expansions: int,
+        **search_kw,
+    ) -> DataFrame:
+        """The prefix/fuzzy multi-term rewrite: each token ending in
+        ``suffix`` expands to the vocabulary terms ``probe(stem)`` selects
+        (a filtered terms table), blended into ONE expansion group; every
+        other token passes through.  More than ``max_expansions`` members
+        raises; no member leaves the stem as an absent group."""
         from .oracle import tokenize
 
         base_tokens: list[str] = []
         expansions: dict[str, list[str]] = {}
         for raw in query.split():
-            if not (raw.endswith("~") and len(raw) > 1):
+            if not (raw.endswith(suffix) and len(raw) > 1):
                 base_tokens.append(raw)
                 continue
-            base = raw[:-1]
-            toks = tokenize(base)
-            if len(toks) != 1 or toks[0] != base:
-                raise ValueError(f"invalid fuzzy token {raw!r}")
+            stem = raw[:-1]
+            toks = tokenize(stem)
+            if len(toks) != 1 or toks[0] != stem:
+                raise ValueError(f"invalid {what} {raw!r}")
             rows = (
-                self.terms.where(
-                    F.length("term").between(
-                        len(base) - max_dist, len(base) + max_dist
-                    )
-                )
-                # bounded DP: the 3-arg levenshtein early-exits rows whose
-                # distance exceeds the threshold (returns -1 for those)
-                .where(
-                    F.levenshtein(
-                        F.col("term"), F.lit(base), max_dist
-                    ).between(0, max_dist)
-                )
+                probe(stem)
                 .select("term")
                 .orderBy("term")
                 .limit(max_expansions + 1)
@@ -402,14 +395,13 @@ class SearchEngine:
                     f"{raw!r} expands to more than {max_expansions} terms"
                 )
             if not members:
-                base_tokens.append(base)  # absent group
+                base_tokens.append(stem)  # absent group
                 continue
             base_tokens.append(members[0])
             if members[1:]:
                 expansions.setdefault(members[0], []).extend(members[1:])
         return self.search(
-            " ".join(base_tokens), k=k, mode=mode,
-            expansions=expansions or None, **kw,
+            " ".join(base_tokens), expansions=expansions or None, **search_kw
         )
 
     def regex_search(
@@ -458,7 +450,7 @@ class SearchEngine:
         elif mode == "and" or not base_tokens:
             # absent group: empties the conjunction; with no other terms
             # the disjunction is empty too
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._no_hits(k, kw.get("with_meta", True))
         return self.search(
             " ".join(base_tokens), k=k, mode=mode,
             expansions=expansions or None, **kw,
@@ -526,18 +518,12 @@ class SearchEngine:
         still matches through the field, and vice versa; AND mode requires
         every query term in at least one of the two fields."""
         from .oracle import tokenize
-        from .query.fielded import field_postings, field_stats, fielded_topk
+        from .query.fielded import fielded_topk
         from .tokenizer import analyze_text
 
         query = analyze_text(query, self.analyzer)
         toks = sorted(set(tokenize(query)))
-        if field not in self._field_cache:
-            fp = field_postings(self.doc_map, field, self.analyzer).persist()
-            fp.count()
-            self._field_cache[field] = (
-                fp, field_stats(self.doc_map, field, self.analyzer)
-            )
-        fp, (fn_docs, avg_fl) = self._field_cache[field]
+        fp, fn_docs, avg_fl = self._field_side(field)
         plan = self.plan(query)
         # singleton groups: key == the term's term_id (planner.TermGroup)
         found = self._vocab_lookup(toks)
@@ -659,12 +645,7 @@ class SearchEngine:
         run through the generation's analyzer AFTER parsing (a camelCase
         qualified term can fan out to several clauses in that field)."""
         from .oracle import tokenize
-        from .query.fielded import (
-            field_postings,
-            field_stats,
-            parse_qualified,
-            qualified_topk,
-        )
+        from .query.fielded import parse_qualified, qualified_topk
         from .tokenizer import analyze_text
 
         clauses: list[tuple[str | None, str]] = []
@@ -678,21 +659,7 @@ class SearchEngine:
         term_of_key = {tid: t for t, (tid, _df) in found.items()}
         field_sides = {}
         for fname in sorted({f for f, _t in clauses if f is not None}):
-            if fname not in self.doc_map.columns:
-                raise ValueError(
-                    f"unknown query field {fname!r}; doc_map fields: "
-                    f"{[c for c in self.doc_map.columns]}"
-                )
-            if fname not in self._field_cache:
-                fp = field_postings(
-                    self.doc_map, fname, self.analyzer
-                ).persist()
-                fp.count()
-                self._field_cache[fname] = (
-                    fp, field_stats(self.doc_map, fname, self.analyzer)
-                )
-            fp, (fn_docs, avg_fl) = self._field_cache[fname]
-            field_sides[fname] = (fp, fn_docs, avg_fl)
+            field_sides[fname] = self._field_side(fname)
         hits = qualified_topk(
             self.spark,
             self.postings,
@@ -715,8 +682,9 @@ class SearchEngine:
     ) -> DataFrame:
         """Batch BM25: answer every query in ``queries`` (query_id -> query
         string) in ONE index pass (query/msearch.py) — one pushed-down
-        posting scan over the union of all query terms, per-query top-k via
-        a window.  Each query's slice is bitwise-identical to running it
+        posting scan over the union of all query terms, scored per shard by
+        the DAAT kernel against the cached norms, per-query top-k via a
+        window.  Each query's slice is bitwise-identical to running it
         alone.  Returns (query_id, doc_id, score[, metadata])."""
         from .query.msearch import msearch_topk
         from .tokenizer import analyze_text
@@ -726,7 +694,8 @@ class SearchEngine:
             for qid, q in queries.items()
         }
         hits = msearch_topk(
-            self.spark, self.postings, self.doc_map, plans, k=k, mode=mode
+            self.spark, self.postings, self.norms, plans,
+            self.meta["docs_per_shard"], k=k, mode=mode,
         )
         if not with_meta:
             return hits
@@ -980,6 +949,31 @@ class SearchEngine:
         """
         df = self.search(query, k=k, mode=mode, with_meta=False, **kw)
         return collect_with_timeout(self.spark, df, timeout_s)
+
+    def _field_side(self, field: str) -> tuple[DataFrame, int, float]:
+        """(derived field postings, n_docs, avg_fieldlen) for a doc_map
+        string column — derived and persisted once per engine.  An unknown
+        field name raises ValueError."""
+        from .query.fielded import field_postings, field_stats
+
+        if field not in self.doc_map.columns:
+            raise ValueError(
+                f"unknown query field {field!r}; doc_map fields: "
+                f"{list(self.doc_map.columns)}"
+            )
+        if field not in self._field_cache:
+            fp = field_postings(self.doc_map, field, self.analyzer).persist()
+            fp.count()
+            self._field_cache[field] = (
+                fp, field_stats(self.doc_map, field, self.analyzer)
+            )
+        fp, (n_docs, avg_fl) = self._field_cache[field]
+        return fp, n_docs, avg_fl
+
+    def _no_hits(self, k: int, with_meta: bool) -> DataFrame:
+        """The empty answer, with the columns a matching answer has."""
+        hits = self.spark.createDataFrame([], "doc_id long, score double")
+        return self._materialize(hits, k) if with_meta else hits
 
     def _materialize(self, hits: DataFrame, k: int) -> DataFrame:
         """Late materialization: join metadata only for the <=k winners

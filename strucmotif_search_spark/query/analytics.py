@@ -337,7 +337,7 @@ def more_like_this(
         ),
     )[:max_terms]
     if not weighted:
-        return engine.spark.createDataFrame([], "doc_id long, score double")
+        return engine._no_hits(k, search_kw.get("with_meta", True))
     search_kw.setdefault("mode", "or")  # caller-supplied mode wins
     return engine.search(
         " ".join(t for _w, t in weighted), k=k, **search_kw

@@ -24,6 +24,15 @@ Scale shape: a query touching T terms reads T posting lists split across S
 shards; the only shuffle is blocks+norms -> shard groups, and the result is
 S*k rows.  No join against the doc dictionary until after the top-k (late
 materialization, TargetStructure.java:24-27 analogue).
+
+This module is the one owner of per-shard scoring and per-shard top-k.  The
+shard code is module-level so every per-shard scorer shares it:
+``_posting_blocks`` (the pushed-down block scan), ``_score_shards`` (the
+shard cogroup with the bucketed norms), ``_shard_norms`` (norms unpack),
+``group_tf`` (dense tf decode with block skipping) and ``_shard_topk``
+(boundary-tie shard heap).  ``msearch`` (query/msearch.py) runs one
+``_make_scorer`` per query inside a single cogroup; Dirichlet QL
+(query/ql.py) keeps only its formula and candidate rule.
 """
 
 from __future__ import annotations
@@ -46,6 +55,92 @@ _NO_POSTINGS = np.zeros(0, dtype=np.float64)
 def _empty_pdf() -> pd.DataFrame:
     return pd.DataFrame({"doc_id": [], "score": []}).astype(
         {"doc_id": "int64", "score": "float64"}
+    )
+
+
+def _shard_norms(
+    right: pd.DataFrame, docs_per_shard: int
+) -> tuple[int, np.ndarray]:
+    """Unpack a shard's packed norms row: (base doc id of the shard, dense
+    float64 doclen array indexed by doc id - base).  A doc absent from the
+    norms row reads doclen 0 — the eligibility mask every scorer applies."""
+    base = int(right["shard"].iloc[0]) * docs_per_shard
+    norm_ids, norm_lens = unpack_block(
+        bytes(right["doc_gaps"].iloc[0]), bytes(right["doclens"].iloc[0])
+    )
+    dense_len = np.zeros(docs_per_shard, dtype=np.float64)
+    dense_len[norm_ids - base] = norm_lens
+    return base, dense_len
+
+
+def group_tf(
+    groups_by_tid: dict[int, pd.DataFrame],
+    member_ids,
+    base: int,
+    docs_per_shard: int,
+    lo: int = -1,
+    hi: int = 1 << 62,
+) -> np.ndarray | None:
+    """Dense per-shard tf vector for one expansion group: sum of member
+    tfs (posting-list union, J2 shape).  Blocks outside [lo, hi] are
+    skipped without decoding (skip pointers).  Returns None if no member
+    has a (surviving) posting in this shard."""
+    dense = None
+    for tid in member_ids:
+        g = groups_by_tid.get(tid)
+        if g is None:
+            continue
+        # itertuples over block rows (1 row per ~128 postings): column
+        # access stays numpy; no per-posting python
+        for row in g.sort_values("first_doc_id").itertuples(index=False):
+            if row.max_doc_id < lo or row.first_doc_id > hi:
+                continue
+            ids, tfs = unpack_block(bytes(row.doc_gaps), bytes(row.tfs))
+            if dense is None:
+                dense = np.zeros(docs_per_shard, dtype=np.float64)
+            dense[ids - base] += tfs
+    return dense
+
+
+def _shard_topk(
+    hit: np.ndarray, s: np.ndarray, base: int, k: int
+) -> pd.DataFrame:
+    """Per-shard top-k heap over shard-local doc offsets ``hit`` with scores
+    ``s``: argpartition, then keep ALL docs tied with the boundary score
+    before the exact (score desc, doc_id asc) order — selecting by score
+    alone would break the doc_id-asc tie-break rule when distinct docs tie
+    bitwise at the k boundary."""
+    if hit.size > k:
+        part = np.argpartition(-s, k - 1)
+        thresh = s[part[k - 1]]
+        keep = np.flatnonzero(s >= thresh)
+        hit, s = hit[keep], s[keep]
+    order = np.lexsort((hit, -s))[:k]
+    return pd.DataFrame(
+        {"doc_id": (hit[order] + base).astype("int64"), "score": s[order]}
+    )
+
+
+def _posting_blocks(postings: DataFrame, term_ids) -> DataFrame:
+    """The pushed-down posting-block scan every shard kernel reads: the
+    blocks of ``term_ids`` with their skip metadata and packed payloads."""
+    return postings.where(
+        F.col("term_id").isin(term_ids) if term_ids else F.lit(False)
+    ).select(
+        "shard", "term_id", "first_doc_id", "max_doc_id", "block_max_tf",
+        "doc_gaps", "tfs",
+    )
+
+
+def _score_shards(
+    blocks: DataFrame, norms: DataFrame, fn, schema: str = _RESULT_SCHEMA
+) -> DataFrame:
+    """One cogroup-pandas task per document shard: ``fn(blocks, norms_row)``
+    over the shard's posting blocks and its packed norms row."""
+    return (
+        blocks.groupBy("shard")
+        .cogroup(norms.groupBy("shard"))
+        .applyInPandas(fn, schema=schema)
     )
 
 
@@ -88,27 +183,6 @@ def _make_scorer(
     n_required = len(required)
     k1, b, avgdl = plan.k1, plan.b, plan.avgdl
 
-    def group_tf(groups_by_tid, grp, base, lo=-1, hi=1 << 62):
-        """Dense per-shard tf vector for one expansion group: sum of member
-        tfs (posting-list union, J2 shape).  Blocks outside [lo, hi] are
-        skipped without decoding (skip pointers).  Returns None if no member
-        has a (surviving) posting in this shard."""
-        dense = None
-        for tid in grp.member_ids:
-            g = groups_by_tid.get(tid)
-            if g is None:
-                continue
-            # itertuples over block rows (1 row per ~128 postings): column
-            # access stays numpy; no per-posting python
-            for row in g.sort_values("first_doc_id").itertuples(index=False):
-                if row.max_doc_id < lo or row.first_doc_id > hi:
-                    continue
-                ids, tfs = unpack_block(bytes(row.doc_gaps), bytes(row.tfs))
-                if dense is None:
-                    dense = np.zeros(docs_per_shard, dtype=np.float64)
-                dense[ids - base] += tfs
-        return dense
-
     def score_shard(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(right) == 0:
             return _empty_pdf()
@@ -116,14 +190,7 @@ def _make_scorer(
             # no query-term postings in this shard: only a widening
             # expression can still match here (all-absent docs, score 0)
             return _empty_pdf()
-        shard = int(right["shard"].iloc[0])
-        base = shard * docs_per_shard
-        norm_ids, norm_lens = unpack_block(
-            bytes(right["doc_gaps"].iloc[0]), bytes(right["doclens"].iloc[0])
-        )
-        dense_len = np.zeros(docs_per_shard, dtype=np.float64)
-        dense_len[norm_ids - base] = norm_lens
-
+        base, dense_len = _shard_norms(right, docs_per_shard)
         groups_by_tid: dict[int, pd.DataFrame] = {
             int(t): g for t, g in left.groupby("term_id", sort=False)
         }
@@ -160,7 +227,9 @@ def _make_scorer(
                     if cand is not None and cand.size
                     else 1 << 62
                 )
-                dense = group_tf(groups_by_tid, grp, base, lo, hi)
+                dense = group_tf(
+                    groups_by_tid, grp.member_ids, base, docs_per_shard, lo, hi
+                )
                 if dense is None:
                     return _empty_pdf()
                 decoded[grp.key] = dense
@@ -173,7 +242,10 @@ def _make_scorer(
                 for grp in rarest_first:
                     if grp.required:
                         continue
-                    dense = group_tf(groups_by_tid, grp, base, clo, chi)
+                    dense = group_tf(
+                        groups_by_tid, grp.member_ids, base, docs_per_shard,
+                        clo, chi,
+                    )
                     decoded[grp.key] = (
                         dense if dense is not None else _NO_POSTINGS
                     )
@@ -231,12 +303,10 @@ def _make_scorer(
                             cand_range = (
                                 int(cidx[0]) + base, int(cidx[-1]) + base,
                             ) if cidx.size else (base, base)
-                if cand_range is None:
-                    dense = group_tf(groups_by_tid, grp, base)
-                else:
-                    dense = group_tf(
-                        groups_by_tid, grp, base, *cand_range
-                    )
+                dense = group_tf(
+                    groups_by_tid, grp.member_ids, base, docs_per_shard,
+                    *(cand_range or ()),
+                )
                 if dense is None:
                     # every block range-skipped for this group — remember
                     # the outcome so the accumulation loop below does not
@@ -266,7 +336,9 @@ def _make_scorer(
         for grp in by_key:
             dense = decoded.get(grp.key)
             if dense is None:
-                dense = group_tf(groups_by_tid, grp, base)
+                dense = group_tf(
+                    groups_by_tid, grp.member_ids, base, docs_per_shard
+                )
                 if dense is None:
                     continue
             if dense.size == 0:  # _NO_POSTINGS under candidate restriction
@@ -305,8 +377,6 @@ def _make_scorer(
             # shard's top-k (partial + remaining-ub < theta) and may carry
             # incomplete sums — drop them before emission
             hit = hit[cmask[hit]]
-        if hit.size == 0:
-            return _empty_pdf()
         s = score[hit]
         if after is not None:
             # strictly after the (score desc, doc_id asc) cursor; float64
@@ -314,21 +384,7 @@ def _make_scorer(
             cs, cd = after
             keep = (s < cs) | ((s == cs) & ((hit + base) > cd))
             hit, s = hit[keep], s[keep]
-            if hit.size == 0:
-                return _empty_pdf()
-        # per-shard top-k heap: argpartition, then keep ALL docs tied with
-        # the boundary score before the exact (score desc, doc_id asc)
-        # order — selecting by score alone would break the doc_id-asc
-        # tie-break rule when distinct docs tie bitwise at the k boundary
-        if hit.size > k:
-            part = np.argpartition(-s, k - 1)
-            thresh = s[part[k - 1]]
-            keep = np.flatnonzero(s >= thresh)
-            hit, s = hit[keep], s[keep]
-        order = np.lexsort((hit, -s))[:k]
-        return pd.DataFrame(
-            {"doc_id": (hit[order] + base).astype("int64"), "score": s[order]}
-        )
+        return _shard_topk(hit, s, base, k)
 
     return score_shard
 
@@ -433,23 +489,14 @@ def bm25_topk_daat(
     # as the scoring terms (their doc ids mask eligibility shard-locally);
     # shard upper bounds stay true upper bounds — exclusion only removes docs
     scan_ids = sorted(set(all_ids) | set(exclude_ids))
-    blocks = postings.where(
-        F.col("term_id").isin(scan_ids) if scan_ids else F.lit(False)
-    ).select(
-        "shard", "term_id", "first_doc_id", "max_doc_id", "block_max_tf",
-        "doc_gaps", "tfs",
-    )
+    blocks = _posting_blocks(postings, scan_ids)
     scorer = _make_scorer(
         plan, docs_per_shard, k, mode, tuple(exclude_ids), after=after,
         expr=expr, min_match=min_match,
     )
 
     def score_blocks(b: DataFrame) -> DataFrame:
-        return (
-            b.groupBy("shard")
-            .cogroup(norms.groupBy("shard"))
-            .applyInPandas(scorer, schema=_RESULT_SCHEMA)
-        )
+        return _score_shards(b, norms, scorer)
 
     if not prune_shards:
         scored = score_blocks(blocks)

@@ -98,11 +98,13 @@ def bm25_group_contribs(
     postings: DataFrame,
     norms_decoded: DataFrame,  # (doc_id, doclen) — doc_map works too
     plan: QueryPlan,
+    term_of_key: dict[int, str],
 ) -> DataFrame:
-    """Per-(doc, scoring-group) BM25 contributions: (doc_id, gkey, contrib)
-    — the content side of the fielded scorer, which needs contributions at
-    group granularity (not per-doc sums) to full-outer-join them with a
-    second field's contributions before the combined top-k."""
+    """Per-(doc, scoring-group) BM25 contributions: (doc_id, term, c), the
+    group key mapped back to its term string through ``term_of_key`` — the
+    content side of the fielded scorers, which need contributions at group
+    granularity (not per-doc sums) to combine them with a second field's
+    contributions before the combined top-k."""
     q_ids = sorted({tid for g in plan.groups for tid in g.member_ids})
     blocks = postings.where(F.col("term_id").isin(q_ids))
     decoded = decode_postings(blocks)
@@ -133,7 +135,71 @@ def bm25_group_contribs(
             * (1.0 - plan.b + plan.b * F.col("doclen") / F.lit(plan.avgdl))
         )
     )
-    return d.withColumn("contrib", contrib.cast("double"))
+    term_map = F.create_map(
+        *[F.lit(x) for x in chain.from_iterable(term_of_key.items())]
+    )
+    return d.select(
+        "doc_id",
+        term_map[F.col("gkey")].alias("term"),
+        contrib.cast("double").alias("c"),
+    )
+
+
+def _field_contribs(
+    fposts: DataFrame,
+    terms: list[str],
+    n_docs: int,
+    avg_fieldlen: float,
+    plan: QueryPlan,
+    key,
+) -> DataFrame | None:
+    """Field-side BM25 contributions (doc_id, ``key``, c) of ``terms`` from
+    a derived field posting table, under the field's own df / average
+    length and the plan's k1 / b.  ``key`` is the summation-key column.
+    None when no term occurs in the field."""
+    qf = fposts.where(F.col("term").isin(terms))
+    # dictionary-sized collect: one df per query term (same class as the
+    # planner's vocab lookup)
+    df_rows = qf.groupBy("term").agg(F.count("*").alias("df")).collect()
+    fidf = {r["term"]: idf(n_docs, int(r["df"])) for r in df_rows}
+    if not fidf:
+        return None
+    idf_map = F.create_map(
+        *[F.lit(x) for x in chain.from_iterable(fidf.items())]
+    )
+    denom = F.col("tf") + plan.k1 * (
+        1.0 - plan.b + plan.b * F.col("fieldlen") / F.lit(avg_fieldlen)
+    )
+    return qf.select(
+        "doc_id",
+        key,
+        (idf_map[F.col("term")] * (F.col("tf") * (plan.k1 + 1.0)) / denom)
+        .cast("double")
+        .alias("c"),
+    )
+
+
+def _ordered_sum_topk(
+    contribs: DataFrame, key: str, n_keys: int, k: int, mode: str
+) -> DataFrame:
+    """Top-k (doc_id, score) over (doc_id, ``key``, c) contributions: per-doc
+    float64 sum in ascending ``key`` order; AND keeps docs matching all
+    ``n_keys`` keys."""
+    per_doc = contribs.groupBy("doc_id").agg(
+        F.aggregate(
+            F.array_sort(F.collect_list(F.struct(key, "c"))),
+            F.lit(0.0),
+            lambda acc, x: acc + x["c"],
+        ).alias("score"),
+        F.count("*").alias("n_matched"),
+    )
+    if mode == "and":
+        per_doc = per_doc.where(F.col("n_matched") == n_keys)
+    return (
+        per_doc.select("doc_id", "score")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
+    )
 
 
 def fielded_topk(
@@ -172,39 +238,13 @@ def fielded_topk(
     if plan.empty_or:
         cc = spark.createDataFrame([], _CONTRIB_SCHEMA)
     else:
-        term_map = F.create_map(
-            *[F.lit(x) for x in chain.from_iterable(term_of_key.items())]
-        )
-        cc = (
-            bm25_group_contribs(postings, norms_decoded, plan)
-            .select(
-                "doc_id",
-                term_map[F.col("gkey")].alias("term"),
-                F.col("contrib").alias("c"),
-            )
-        )
+        cc = bm25_group_contribs(postings, norms_decoded, plan, term_of_key)
 
     # ---- field side: contributions from the derived field postings ----
-    qf = fposts.where(F.col("term").isin(query_terms))
-    # dictionary-sized collect: one df per query term (same class as the
-    # planner's vocab lookup)
-    df_rows = qf.groupBy("term").agg(F.count("*").alias("df")).collect()
-    fidf = {r["term"]: idf(field_n_docs, int(r["df"])) for r in df_rows}
-    if fidf:
-        idf_map = F.create_map(
-            *[F.lit(x) for x in chain.from_iterable(fidf.items())]
-        )
-        denom = F.col("tf") + plan.k1 * (
-            1.0 - plan.b + plan.b * F.col("fieldlen") / F.lit(avg_fieldlen)
-        )
-        fc = qf.select(
-            "doc_id",
-            "term",
-            (idf_map[F.col("term")] * (F.col("tf") * (plan.k1 + 1.0)) / denom)
-            .cast("double")
-            .alias("c"),
-        )
-    else:
+    fc = _field_contribs(
+        fposts, query_terms, field_n_docs, avg_fieldlen, plan, F.col("term")
+    )
+    if fc is None:
         fc = spark.createDataFrame([], _CONTRIB_SCHEMA)
 
     # ---- combine: union of matches at (doc, term) granularity ----
@@ -221,21 +261,7 @@ def fielded_topk(
             + F.lit(float(w_field)) * F.coalesce(F.col("c_field"), F.lit(0.0))
         ).alias("c"),
     )
-    per_doc = comb.groupBy("doc_id").agg(
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("term", "c"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["c"],
-        ).alias("score"),
-        F.count("*").alias("n_matched"),
-    )
-    if mode == "and":
-        per_doc = per_doc.where(F.col("n_matched") == len(query_terms))
-    return (
-        per_doc.select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _ordered_sum_topk(comb, "term", len(query_terms), k, mode)
 
 
 def parse_qualified(query: str) -> list[tuple[str | None, str]]:
@@ -286,57 +312,24 @@ def qualified_topk(
     sides = []
     content_terms = sorted({t for f, t in clauses if f is None})
     if content_terms and not plan.empty_or:
-        term_map = F.create_map(
-            *[F.lit(x) for x in chain.from_iterable(term_of_key.items())]
+        cc = bm25_group_contribs(postings, norms_decoded, plan, term_of_key)
+        sides.append(
+            cc.select(
+                "doc_id", F.concat(F.lit(":"), "term").alias("ckey"), "c"
+            )
         )
-        cc = bm25_group_contribs(postings, norms_decoded, plan).select(
-            "doc_id",
-            F.concat(F.lit(":"), term_map[F.col("gkey")]).alias("ckey"),
-            F.col("contrib").alias("c"),
-        )
-        sides.append(cc)
     for fname in sorted({f for f, _t in clauses if f is not None}):
         fposts, fn, avg_fl = field_sides[fname]
         f_terms = sorted({t for f, t in clauses if f == fname})
-        qf = fposts.where(F.col("term").isin(f_terms))
-        df_rows = qf.groupBy("term").agg(F.count("*").alias("df")).collect()
-        fidf = {r["term"]: idf(fn, int(r["df"])) for r in df_rows}
-        if not fidf:
-            continue
-        idf_map = F.create_map(
-            *[F.lit(x) for x in chain.from_iterable(fidf.items())]
+        fc = _field_contribs(
+            fposts, f_terms, fn, avg_fl, plan,
+            F.concat(F.lit(fname + ":"), F.col("term")).alias("ckey"),
         )
-        denom = F.col("tf") + plan.k1 * (
-            1.0 - plan.b + plan.b * F.col("fieldlen") / F.lit(avg_fl)
-        )
-        sides.append(
-            qf.select(
-                "doc_id",
-                F.concat(F.lit(fname + ":"), F.col("term")).alias("ckey"),
-                (
-                    idf_map[F.col("term")]
-                    * (F.col("tf") * (plan.k1 + 1.0))
-                    / denom
-                ).cast("double").alias("c"),
-            )
-        )
+        if fc is not None:
+            sides.append(fc)
     if not sides:
         return empty
     u = sides[0]
     for s in sides[1:]:
         u = u.unionByName(s)
-    per_doc = u.groupBy("doc_id").agg(
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("ckey", "c"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["c"],
-        ).alias("score"),
-        F.count("*").alias("n_matched"),
-    )
-    if mode == "and":
-        per_doc = per_doc.where(F.col("n_matched") == len(clauses))
-    return (
-        per_doc.select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _ordered_sum_topk(u, "ckey", len(clauses), k, mode)

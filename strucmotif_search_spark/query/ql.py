@@ -17,10 +17,12 @@ their smoothing mass (tf = 0), which the dense per-shard tf arrays give for
 free.  Absent-from-vocabulary terms (cf = 0 -> ln 0) are dropped at plan
 time, mirroring the BM25 planner's vocabulary gate.
 
-Execution shape is the DAAT kernel's (query/daat.py): one cogroup-pandas
-task per document shard over the SAME pushed-down posting-block scan and
-bucketed norms — no new index artifact, no extra shuffle; each shard emits
-its local top-k and Catalyst's TakeOrderedAndProject merges the heaps.
+Execution shape is the DAAT kernel's, built from its shard code
+(query/daat.py): the same pushed-down posting-block scan and bucketed-norms
+cogroup (one pandas task per document shard), the same norms unpack and
+per-term dense tf decode, and the same boundary-tie per-shard top-k — only
+the score formula and the candidate rule live here.  No new index artifact,
+no extra shuffle; Catalyst's TakeOrderedAndProject merges the shard heaps.
 Summation runs in ascending term_id order (deterministic float64 order,
 matching the numpy oracle bit-for-bit).
 """
@@ -32,17 +34,17 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..codec import unpack_block
-
-_RESULT_SCHEMA = "doc_id long, score double"
+from .daat import (
+    _RESULT_SCHEMA,
+    _empty_pdf,
+    _posting_blocks,
+    _score_shards,
+    _shard_norms,
+    _shard_topk,
+    group_tf,
+)
 
 QL_MU = 2000.0  # Dirichlet prior (Zhai & Lafferty 2001 recommended range)
-
-
-def _empty_pdf() -> pd.DataFrame:
-    return pd.DataFrame({"doc_id": [], "score": []}).astype(
-        {"doc_id": "int64", "score": "float64"}
-    )
 
 
 def ql_topk(
@@ -71,60 +73,26 @@ def ql_topk(
     def score_shard(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(left) == 0 or len(right) == 0:
             return _empty_pdf()
-        shard = int(left["shard"].iloc[0])
-        base = shard * docs_per_shard
-        norm_ids, norm_lens = unpack_block(
-            bytes(right["doc_gaps"].iloc[0]), bytes(right["doclens"].iloc[0])
-        )
-        dense_len = np.zeros(docs_per_shard, dtype=np.float64)
-        dense_len[norm_ids - base] = norm_lens
-
+        base, dense_len = _shard_norms(right, docs_per_shard)
         by_tid = {int(t): g for t, g in left.groupby("term_id", sort=False)}
         denses: dict[int, np.ndarray] = {}
         matched = np.zeros(docs_per_shard, dtype=bool)
         for tid in tids:
-            g = by_tid.get(tid)
-            if g is None:
+            dense = group_tf(by_tid, (tid,), base, docs_per_shard)
+            if dense is None:
                 continue
-            dense = np.zeros(docs_per_shard, dtype=np.float64)
-            for row in g.itertuples(index=False):
-                ids, tfs = unpack_block(bytes(row.doc_gaps), bytes(row.tfs))
-                dense[ids - base] += tfs
             denses[tid] = dense
             matched |= dense > 0
         # candidates: >=1 matched term AND eligible (doclen > 0 in norms —
         # the P1-P3 predicate mask rides the same norms sidecar as BM25)
         cand = np.flatnonzero(matched & (dense_len > 0))
-        if cand.size == 0:
-            return _empty_pdf()
         dl = dense_len[cand]
         log_denom = np.log(dl + mu)
         score = np.zeros(cand.size, dtype=np.float64)
         for tid in tids:  # ascending term_id: deterministic float64 order
             tf = denses[tid][cand] if tid in denses else 0.0
             score += np.log(tf + smooth[tid]) - log_denom
-        # per-shard top-k with boundary-tie retention (same protocol as the
-        # BM25 kernel: keep every doc tied at the k-th score, then exact
-        # (score desc, doc_id asc) order)
-        if cand.size > k:
-            part = np.argpartition(-score, k - 1)
-            thresh = score[part[k - 1]]
-            keep = np.flatnonzero(score >= thresh)
-            cand, score = cand[keep], score[keep]
-        order = np.lexsort((cand, -score))[:k]
-        return pd.DataFrame(
-            {
-                "doc_id": (cand[order] + base).astype("int64"),
-                "score": score[order],
-            }
-        )
+        return _shard_topk(cand, score, base, k)
 
-    blocks = postings.where(F.col("term_id").isin(tids)).select(
-        "shard", "term_id", "doc_gaps", "tfs"
-    )
-    scored = (
-        blocks.groupBy("shard")
-        .cogroup(norms.groupBy("shard"))
-        .applyInPandas(score_shard, schema=_RESULT_SCHEMA)
-    )
+    scored = _score_shards(_posting_blocks(postings, tids), norms, score_shard)
     return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

@@ -240,6 +240,11 @@ def test_qualified_unknown_field_raises(engine):
         engine.search_qualified("nosuch:term", k=5)
 
 
+def test_fielded_unknown_field_raises(engine):
+    with pytest.raises(ValueError, match="unknown query field"):
+        engine.fielded_search("table", field="nope", k=5)
+
+
 def test_qualified_absent_term_and_empty(engine):
     assert engine.search_qualified("repo:zz_none", k=5).count() == 0
     assert (

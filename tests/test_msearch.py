@@ -102,9 +102,11 @@ def test_msearch_k_cut_per_query(engine):
 def test_msearch_single_scan_plan(engine):
     hits = engine.msearch({"a": "table", "b": "scan"}, k=3)
     plan = hits._jdf.queryExecution().executedPlan().toString()
-    # exactly one scan of the postings parquet (the batched read), with the
-    # union-of-terms filter pushed down
-    assert plan.count("Scan parquet") <= 2  # postings + tiny plan-table side
+    # every query rides ONE shard-kernel cogroup over the union-of-terms
+    # posting scan (filter pushed down) and the cached norms; doc lengths
+    # come from the norms rows, so the doc dictionary is never scanned
+    assert plan.count("FlatMapCoGroupsInPandas") == 1
+    assert "doc_map" not in plan
     assert "term_id" in plan
 
 

@@ -171,6 +171,15 @@ def test_regex_no_match_semantics(engine):
     )
 
 
+def test_regex_empty_answer_keeps_columns(engine):
+    # default with_meta: a pattern matching nothing answers with the same
+    # columns as a matching one
+    hit = engine.regex_search("tab.*", k=5)
+    miss = engine.regex_search("zzz.*qqq", k=5)
+    assert miss.count() == 0 and hit.count() > 0
+    assert miss.columns == hit.columns
+
+
 def test_regex_expansion_cap_raises(engine):
     with pytest.raises(ValueError, match="matches more than"):
         engine.regex_search(".*", k=5, max_expansions=2)
@@ -353,6 +362,15 @@ def test_more_like_this_all_unknown_empty(engine):
     from strucmotif_search_spark.query.analytics import more_like_this
 
     assert more_like_this(engine, "zz1 zz2 zz3", k=5).count() == 0
+
+
+def test_more_like_this_empty_answer_keeps_columns(engine):
+    from strucmotif_search_spark.query.analytics import more_like_this
+
+    hit = more_like_this(engine, "stream batch", k=5)
+    miss = more_like_this(engine, "zz1 zz2 zz3", k=5)
+    assert miss.count() == 0 and hit.count() > 0
+    assert miss.columns == hit.columns
 
 
 # ---------------------------------------------------------------------------
