@@ -84,16 +84,32 @@ class IndexStore:
         if gen is None:
             return set()
         live = {gen}
+        for path, _excl in self.posting_parts(gen):
+            try:
+                rel = Path(path).relative_to(self.root)
+            except ValueError:
+                continue
+            if rel.parts:
+                live.add(rel.parts[0])
+        return live
+
+    def posting_parts(self, gen: str | None = None) -> list[tuple[str, list[int]]]:
+        """A generation's posting files as ``[(path, exclude_shards)]``:
+        its own ``postings`` dir when it holds files (excluding nothing),
+        then every `_refs.json` reference to a prior generation's postings
+        with its delete predicate.  The one reader of the refs format."""
+        gen = gen or self.current_gen()
+        parts: list[tuple[str, list[int]]] = []
+        base = self.root / gen / "postings"
+        if base.exists() and any(base.iterdir()):
+            parts.append((str(base), []))
         refs_file = self.root / gen / "_refs.json"
         if refs_file.exists():
-            for r in json.loads(refs_file.read_text()):
-                try:
-                    rel = Path(r["path"]).relative_to(self.root)
-                except ValueError:
-                    continue
-                if rel.parts:
-                    live.add(rel.parts[0])
-        return live
+            parts += [
+                (r["path"], sorted(r.get("exclude_shards", [])))
+                for r in json.loads(refs_file.read_text())
+            ]
+        return parts
 
     def expire_generations(self, keep_last: int = 0) -> list[str]:
         """Delete generation dirs (and their stage-1 partials) that are NOT
@@ -245,22 +261,19 @@ class IndexStore:
         return spark.table(tbl)
 
     def read_postings(self, spark: SparkSession, gen: str | None = None) -> DataFrame:
-        """Resolve a generation's postings: its own files plus `_refs.json`
-        references to prior-gen files, each with an ``exclude_shards``
-        predicate (the Iceberg data-file + delete-predicate shape used by
-        incremental ADD/REMOVE)."""
-        import json as _json
-
+        """Resolve a generation's postings: the union of its
+        ``posting_parts``, each ref with its ``exclude_shards`` predicate
+        (the Iceberg data-file + delete-predicate shape used by incremental
+        ADD/REMOVE)."""
         from pyspark.sql import functions as F
 
         from .postings import POSTINGS_POS_SCHEMA, POSTINGS_SCHEMA
 
         gen = gen or self.current_gen()
-        base = self.root / gen / "postings"
-        refs_file = self.root / gen / "_refs.json"
+        own = self.table_path("postings", gen)
         meta_file = self.root / gen / "_meta.json"
         with_pos = bool(
-            _json.loads(meta_file.read_text()).get("with_positions")
+            json.loads(meta_file.read_text()).get("with_positions")
         ) if meta_file.exists() else False
         # canonical projection per part: parts come from heterogeneous
         # layouts (flat bucketed files, chunk=N partition dirs of older
@@ -272,19 +285,18 @@ class IndexStore:
             for f in (POSTINGS_POS_SCHEMA if with_pos else POSTINGS_SCHEMA)
         ]
         parts = []
-        if base.exists() and any(base.iterdir()):
-            # bucket-aware when written bucketed (exchange-free queries);
-            # a union with refs below keeps correctness but drops the
-            # bucketed output partitioning — incremental gens pay one
-            # query-time exchange until compact() restores the layout
-            parts.append(self.read_bucketed(spark, "postings", gen).select(*canon))
-        if refs_file.exists():
-            for ref in _json.loads(refs_file.read_text()):
-                df = spark.read.parquet(ref["path"])
-                excl = ref.get("exclude_shards", [])
-                if excl:
-                    df = df.where(~F.col("shard").isin(excl))
-                parts.append(df.select(*canon))
+        for path, excl in self.posting_parts(gen):
+            if path == own:
+                # bucket-aware when written bucketed (exchange-free
+                # queries); a union with refs keeps correctness but drops
+                # the bucketed output partitioning — incremental gens pay
+                # one query-time exchange until compact() restores it
+                df = self.read_bucketed(spark, "postings", gen)
+            else:
+                df = spark.read.parquet(path)
+            if excl:
+                df = df.where(~F.col("shard").isin(excl))
+            parts.append(df.select(*canon))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

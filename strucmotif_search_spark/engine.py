@@ -2,29 +2,48 @@
 analogue, strucmotif-search-core Strucmotif.java:27-37).
 
 Wraps a published IndexStore generation and exposes:
-- ``search(query, k, mode)``      — BM25 top-k via the DAAT path, hits joined
-                                    to document metadata (late
+- ``search(query, k, mode)``      — BM25 top-k via the DAAT kernel, hits
+                                    joined to document metadata (late
                                     materialization);
 - ``search_min_match(query, m, k)``— m-of-n relaxed conjunction, same kernel;
 - exact stats accessors (df/cf/avgdl) for tests and planning.
+
+``search`` and ``search_min_match`` run the DAAT kernel on one of two arms
+(query/daat.py), picked per plan by ``daat.fits_driver``: a small plan is
+scored on the driver over pyarrow reads of only its own rows and returned
+as an Arrow-built frame (no Spark job); a large plan, or one with a
+``doc_predicate``, runs the Spark cogroup arm.  One kernel, so both arms
+answer bit-identically.
 """
 
 from __future__ import annotations
 
 import json
+from functools import cached_property
 from pathlib import Path
 
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .build.index_store import IndexStore
-from .query.daat import bm25_topk_daat, prune_shards_default
+from .query import daat
 from .query.planner import QueryPlan, plan_query
+from .session import local_frame
+
+# the metadata columns a hit is joined to (late materialization)
+_META_COLS = ("doc_id", "repo", "path", "commit", "lang")
 
 
-def collect_with_timeout(spark: SparkSession, df: DataFrame, timeout_s: float):
-    """Run ``df.collect()`` under a job group; cancel the group and raise
-    TimeoutError if it exceeds ``timeout_s`` (no lingering tasks)."""
+def collect_with_timeout(spark: SparkSession, fn, timeout_s: float):
+    """Run ``fn()`` (a search plus its collect) under a job group; cancel
+    the group and raise TimeoutError if it exceeds ``timeout_s``.  Spark
+    tasks are interrupted; driver-side work in flight is abandoned on its
+    daemon thread and its result dropped."""
     import threading
     import uuid
 
@@ -36,7 +55,7 @@ def collect_with_timeout(spark: SparkSession, df: DataFrame, timeout_s: float):
     def run() -> None:
         sc.setJobGroup(group, "timed query", interruptOnCancel=True)
         try:
-            out.append(df.collect())
+            out.append(fn())
         except Exception as e:  # noqa: BLE001 — surfaced to caller below
             err.append(e)
 
@@ -45,7 +64,6 @@ def collect_with_timeout(spark: SparkSession, df: DataFrame, timeout_s: float):
     t.join(timeout_s)
     if t.is_alive():
         sc.cancelJobGroup(group)
-        t.join(10)
         raise TimeoutError(f"query exceeded {timeout_s}s; job group cancelled")
     if err:
         raise err[0]
@@ -95,9 +113,10 @@ class SearchEngine:
         # driver-side vocabulary cache: repeated queries must not pay a Spark
         # job for a dictionary lookup (the reference precomputes exactly this
         # as its informativeness table, ResiduePairOccurrence.java:230-463).
-        # Hot entries AND negative lookups are memoized; only cache misses
-        # trigger a (tiny, pushed-down) terms-table scan.
-        self._vocab: dict[str, tuple[int, int] | None] = {}
+        # term -> (term_id, df, cf); hot entries AND negative lookups are
+        # memoized; only cache misses read the terms table (a pyarrow
+        # pushdown read — the table is written sorted by term).
+        self._vocab: dict[str, tuple[int, int, int] | None] = {}
         # per-predicate norms cache (P3 search-space filters): building the
         # filtered norms sidecar is a corpus-wide job — pay it once per
         # distinct predicate, not once per query.  Bounded LRU: each entry
@@ -118,18 +137,167 @@ class SearchEngine:
         self._field_cache: dict[str, tuple[DataFrame, tuple[int, float]]] = {}
 
     # ---- planning ------------------------------------------------------
-    def _vocab_lookup(self, terms: list[str]) -> dict[str, tuple[int, int]]:
-        misses = [t for t in terms if t not in self._vocab]
+    def _term_stats(self, terms: list[str]) -> dict[str, tuple[int, int, int]]:
+        """{term: (term_id, df, cf)} for the vocabulary terms among
+        ``terms``; misses are read once from the terms table."""
+        misses = sorted({t for t in terms if t not in self._vocab})
         if misses:
-            rows = (
-                self.terms.where(F.col("term").isin(misses))
-                .select("term", "term_id", "df")
-                .collect()
-            )
-            found = {r["term"]: (int(r["term_id"]), int(r["df"])) for r in rows}
+            rows = self._arrow_table(
+                "terms", ("term", "term_id", "df", "cf"),
+                pc.field("term").isin(misses),
+            ).to_pylist()
+            found = {
+                r["term"]: (int(r["term_id"]), int(r["df"]), int(r["cf"]))
+                for r in rows
+            }
             for t in misses:
                 self._vocab[t] = found.get(t)  # None memoizes absence
         return {t: v for t in terms if (v := self._vocab[t]) is not None}
+
+    def _vocab_lookup(self, terms: list[str]) -> dict[str, tuple[int, int]]:
+        return {
+            t: (tid, df) for t, (tid, df, _cf) in self._term_stats(terms).items()
+        }
+
+    # ---- driver-arm reads ----------------------------------------------
+    # pyarrow datasets over this generation's files, opened once: a
+    # generation is immutable.  Every read filters on the table's sort key
+    # (term, term_id, shard, doc_id), so row-group statistics prune it.
+    @cached_property
+    def _datasets(self) -> dict[str, ds.Dataset]:
+        return {
+            name: ds.dataset(self.store.table_path(name, self.gen), format="parquet")
+            for name in ("terms", "norms", "doc_map")
+        }
+
+    @cached_property
+    def _posting_datasets(self) -> list[tuple[ds.Dataset, list[int]]]:
+        return [
+            (ds.dataset(path, format="parquet"), excl)
+            for path, excl in self.store.posting_parts(self.gen)
+        ]
+
+    def _arrow_table(self, name: str, columns, where) -> pa.Table:
+        return self._datasets[name].to_table(columns=list(columns), filter=where)
+
+    def _local_blocks(self, term_ids: list[int]) -> pd.DataFrame:
+        """The scan terms' posting blocks from every posting part, each
+        ref part minus its excluded shards."""
+        tables = []
+        for dset, excl in self._posting_datasets:
+            where = pc.field("term_id").isin(term_ids)
+            if excl:
+                where &= ~pc.field("shard").isin(excl)
+            tables.append(dset.to_table(columns=list(daat.BLOCK_COLS), filter=where))
+        return pa.concat_tables(tables, promote_options="permissive").to_pandas()
+
+    def _local_topk(
+        self, plan: QueryPlan, k: int, mode: str, exclude_ids: list[int],
+        after, min_match: int,
+    ) -> pd.DataFrame:
+        """The driver arm: read the plan's blocks, then the norms of the
+        shards they touch, and score them with the shared kernel."""
+        if daat.plan_mode(plan, mode, min_match) is None:
+            return daat._empty_pdf()  # provably no hit: read nothing
+        scan_ids = sorted(
+            {t for g in plan.groups for t in g.member_ids} | set(exclude_ids)
+        )
+        blocks = self._local_blocks(scan_ids)
+        touched = sorted(int(s) for s in blocks["shard"].unique())
+        norms = self._arrow_table(
+            "norms", ("shard", "doc_gaps", "doclens"),
+            pc.field("shard").isin(touched),
+        ).to_pandas()
+        return daat.bm25_topk_local(
+            blocks, norms, plan, self.meta["docs_per_shard"], k, mode,
+            exclude_ids, after, min_match,
+        )
+
+    @cached_property
+    def _meta_schema(self) -> StructType:
+        """The columns and types ``_materialize`` returns."""
+        return StructType(
+            StructType.fromDDL(daat._RESULT_SCHEMA).fields
+            + [self.doc_map.schema[c] for c in _META_COLS[1:]]
+        )
+
+    def _local_meta(self, hits: pd.DataFrame) -> pd.DataFrame:
+        """``_materialize`` on the driver: inner-join the winners' metadata
+        from a doc_id-filtered doc_map read, in the result order."""
+        meta = self._arrow_table(
+            "doc_map", _META_COLS,
+            pc.field("doc_id").isin(hits["doc_id"].tolist()),
+        ).to_pandas()
+        return hits.merge(meta, on="doc_id", how="inner").sort_values(
+            ["score", "doc_id"], ascending=[False, True]
+        ).reset_index(drop=True)
+
+    def _topk(
+        self,
+        plan: QueryPlan,
+        k: int,
+        mode: str = "or",
+        with_meta: bool = True,
+        exclude: dict[str, tuple[int, int]] | None = None,
+        offset: int = 0,
+        after: tuple[float, int] | None = None,
+        min_match: int = 1,
+        doc_predicate=None,
+        prune_shards: bool | None = None,
+    ) -> DataFrame:
+        """BM25 top-k of ``plan`` (ranks ``offset`` .. ``offset + k``) on
+        the arm ``daat.fits_driver`` picks; ``exclude`` is the NOT-terms'
+        {term: (term_id, df)}.  Both arms answer bit-identically."""
+        exclude_ids = sorted(tid for tid, _df in (exclude or {}).values())
+        volume = sum(plan.dfs) + sum(df for _tid, df in (exclude or {}).values())
+        if doc_predicate is None and daat.fits_driver(
+            self.meta.get("n_shards") or 0, volume
+        ):
+            hits = self._local_topk(
+                plan, k + offset, mode, exclude_ids, after, min_match
+            ).iloc[offset:]
+            if not with_meta:
+                return local_frame(self.spark, hits, daat._RESULT_SCHEMA)
+            return local_frame(
+                self.spark, self._local_meta(hits), self._meta_schema
+            )
+        norms = self.norms
+        if doc_predicate is not None:
+            # public key derivation: str(Column) renders the expression tree
+            # (works under classic and Connect; no private _jc access)
+            key = str(doc_predicate)
+            if key in self._pred_norms:
+                self._pred_norms.move_to_end(key)
+            else:
+                from .build.norms import build_norms
+
+                self._pred_norms[key] = build_norms(
+                    self.doc_map.where(doc_predicate)
+                ).cache()
+                while len(self._pred_norms) > self._pred_norms_cap:
+                    _, evicted = self._pred_norms.popitem(last=False)
+                    evicted.unpersist()
+            norms = self._pred_norms[key]
+        if prune_shards is None:
+            prune_shards = daat.prune_shards_default(
+                self.meta.get("n_shards") or 0, plan.groups
+            )
+        hits = daat.bm25_topk_daat(
+            self.spark,
+            self.postings,
+            norms,
+            plan,
+            docs_per_shard=self.meta["docs_per_shard"],
+            k=k + offset,
+            mode=mode,
+            prune_shards=prune_shards,
+            exclude_ids=exclude_ids or None,
+            after=after,
+            min_match=min_match,
+        )
+        if offset:
+            hits = hits.offset(offset)
+        return self._materialize(hits, k) if with_meta else hits
 
     def plan(
         self,
@@ -162,7 +330,9 @@ class SearchEngine:
         offset: int = 0,
         after: tuple[float, int] | None = None,
     ) -> DataFrame:
-        """BM25 top-k via the DAAT path.
+        """BM25 top-k via the DAAT kernel, on the driver arm for a small plan
+        (``daat.fits_driver``) and on the Spark arm otherwise; both answer
+        bit-identically.
 
         ``offset``: pagination — skip the first ``offset`` ranked hits and
         return the next ``k`` (SQL LIMIT k OFFSET n semantics under the
@@ -207,9 +377,11 @@ class SearchEngine:
         ``F.col('lang') == 'py'``) — the search-space filter (P3 analogue,
         DefaultTargetAssembler.java:159-162).  Implemented by masking norms:
         docs outside the predicate get doclen 0 in the scorer's dense array
-        and are never scored, so the filter applies BEFORE top-k.
+        and are never scored, so the filter applies BEFORE top-k.  A
+        predicate always runs the Spark arm.
         ``prune_shards``: shard-level block-max pruning; default = on when
-        the index has enough shards for a 2-phase plan to pay off.
+        the index has enough shards for a 2-phase plan to pay off.  Spark
+        arm only: the driver arm reads only the plan's shards anyway.
         ``expansions``: per-term synonym lists (A4 query expansion,
         ResiduePairOccurrence.java:166-227): each query term and its
         expansions form one scoring group whose posting lists are unioned
@@ -232,50 +404,15 @@ class SearchEngine:
         plan = self.plan(query, expansions=expansions, should=should or "")
         if should is not None:
             mode = "bool"
-        exclude_ids: list[int] = []
-        if exclude:
-            from .oracle import tokenize
-
-            found = self._vocab_lookup(sorted(set(tokenize(exclude))))
-            exclude_ids = sorted(tid for tid, _df in found.values())
-        norms = self.norms
-        if doc_predicate is not None:
-            # public key derivation: str(Column) renders the expression tree
-            # (works under classic and Connect; no private _jc access)
-            key = str(doc_predicate)
-            if key in self._pred_norms:
-                self._pred_norms.move_to_end(key)
-            else:
-                from .build.norms import build_norms
-
-                self._pred_norms[key] = build_norms(
-                    self.doc_map.where(doc_predicate)
-                ).cache()
-                while len(self._pred_norms) > self._pred_norms_cap:
-                    _, evicted = self._pred_norms.popitem(last=False)
-                    evicted.unpersist()
-            norms = self._pred_norms[key]
-        if prune_shards is None:
-            prune_shards = prune_shards_default(
-                self.meta.get("n_shards") or 0, plan.groups
-            )
         if offset and after is not None:
             raise ValueError("offset and after are mutually exclusive")
-        hits = bm25_topk_daat(
-            self.spark,
-            self.postings,
-            norms,
-            plan,
-            docs_per_shard=self.meta["docs_per_shard"],
-            k=k + offset,
-            mode=mode,
+        return self._topk(
+            plan, k, mode, with_meta=with_meta,
+            exclude=self._vocab_lookup(sorted(set(tokenize(exclude))))
+            if exclude else None,
+            offset=offset, after=after, doc_predicate=doc_predicate,
             prune_shards=prune_shards,
-            exclude_ids=exclude_ids or None,
-            after=after,
         )
-        if offset:
-            hits = hits.offset(offset)
-        return self._materialize(hits, k) if with_meta else hits
 
     def prefix_search(
         self,
@@ -475,19 +612,13 @@ class SearchEngine:
         from .tokenizer import analyze_text
 
         query = analyze_text(query, self.analyzer)
-        distinct = sorted(set(tokenize(query)))
-        found = self._vocab_lookup(distinct)
-        present = sorted(found)  # drop absent terms
-        term_cfs: list[tuple[int, int]] = []
-        if present:
-            # cf is not in the vocab cache (planner only needs df) — one
-            # tiny pushed-down terms scan per query's novel terms
-            rows = (
-                self.terms.where(F.col("term").isin(present))
-                .select("term_id", "cf")
-                .collect()
-            )
-            term_cfs = sorted((int(r["term_id"]), int(r["cf"])) for r in rows)
+        # absent terms drop out of the vocabulary lookup
+        term_cfs = sorted(
+            (tid, cf)
+            for tid, _df, cf in self._term_stats(
+                sorted(set(tokenize(query)))
+            ).values()
+        )
         hits = ql_topk(
             self.spark,
             self.postings,
@@ -810,20 +941,7 @@ class SearchEngine:
         plan = self.plan(
             analyze_text(query, self.analyzer), expansions=expansions
         )
-        hits = bm25_topk_daat(
-            self.spark,
-            self.postings,
-            self.norms,
-            plan,
-            docs_per_shard=self.meta["docs_per_shard"],
-            k=k,
-            mode="or",
-            prune_shards=prune_shards_default(
-                self.meta.get("n_shards") or 0, plan.groups
-            ),
-            min_match=min_match,
-        )
-        return self._materialize(hits, k) if with_meta else hits
+        return self._topk(plan, k, with_meta=with_meta, min_match=min_match)
 
     def term_vector(self, repo: str, path: str, commit: str) -> DataFrame:
         """Per-document term vector (the Elasticsearch _termvectors API):
@@ -933,7 +1051,7 @@ class SearchEngine:
             )
         matched = match_set(self, query, mode=mode)
         if matched is None:
-            matched = self.spark.createDataFrame([], "doc_id long")
+            matched = local_frame(self.spark, [], "doc_id long")
         keys = self.doc_map.join(matched, on="doc_id", how="left_semi").select(
             "repo", "path", "commit"
         )
@@ -947,8 +1065,13 @@ class SearchEngine:
         the analogue of the reference's future.get(timeout) + interrupt
         protocol (DefaultStrucmotifRuntime.java:244-278, QueryTimeoutTest).
         """
-        df = self.search(query, k=k, mode=mode, with_meta=False, **kw)
-        return collect_with_timeout(self.spark, df, timeout_s)
+        return collect_with_timeout(
+            self.spark,
+            lambda: self.search(
+                query, k=k, mode=mode, with_meta=False, **kw
+            ).collect(),
+            timeout_s,
+        )
 
     def _field_side(self, field: str) -> tuple[DataFrame, int, float]:
         """(derived field postings, n_docs, avg_fieldlen) for a doc_map
@@ -972,7 +1095,7 @@ class SearchEngine:
 
     def _no_hits(self, k: int, with_meta: bool) -> DataFrame:
         """The empty answer, with the columns a matching answer has."""
-        hits = self.spark.createDataFrame([], "doc_id long, score double")
+        hits = local_frame(self.spark, [], daat._RESULT_SCHEMA)
         return self._materialize(hits, k) if with_meta else hits
 
     def _materialize(self, hits: DataFrame, k: int) -> DataFrame:
@@ -981,10 +1104,7 @@ class SearchEngine:
         tiny hit side so the doc dictionary is never shuffled."""
         return (
             F.broadcast(hits)
-            .join(
-                self.doc_map.select("doc_id", "repo", "path", "commit", "lang"),
-                on="doc_id",
-            )
+            .join(self.doc_map.select(*_META_COLS), on="doc_id")
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )

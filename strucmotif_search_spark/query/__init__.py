@@ -9,9 +9,10 @@ Analogue of the reference's query lifecycle (SURVEY.md §3.1):
   ordering (O1), dedup (KruskalMotifPruner analogue), empty-result early exit
   (O5), allow/deny/partition filters (P1-P3).
 - daat.py    — the one BM25 top-k kernel (OR / AND / MUST+SHOULD /
-  m-of-n / nested boolean): document-at-a-time scoring inside one
-  grouped-cogroup pandas UDF per shard, block skip pointers, per-shard
-  top-k heaps, global top-k merge.
+  m-of-n / nested boolean): document-at-a-time scoring per shard, block
+  skip pointers, per-shard top-k heaps, global top-k merge; run inside one
+  grouped-cogroup pandas UDF per shard (Spark arm) or in-process over a
+  small plan's rows (driver arm).
 """
 
 from .planner import QueryPlan, plan_query

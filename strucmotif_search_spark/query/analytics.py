@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..build.postings import decode_postings
+from ..session import local_frame
 
 
 def tfidf_top_terms(engine, k: int = 3) -> DataFrame:
@@ -79,8 +80,8 @@ def facet_counts(
     """
     matched = match_set(engine, query, mode=mode)
     if matched is None:
-        return engine.spark.createDataFrame(
-            [], schema=f"{facet_col} string, n_docs long"
+        return local_frame(
+            engine.spark, [], f"{facet_col} string, n_docs long"
         )
     dm = engine.doc_map.select("doc_id", facet_col)
     return matched.join(dm, on="doc_id").groupBy(facet_col).agg(
@@ -110,9 +111,7 @@ def facet_histogram(
         raise ValueError(f"interval must be positive, got {interval}")
     matched = match_set(engine, query, mode=mode)
     if matched is None:
-        return engine.spark.createDataFrame(
-            [], schema="bucket long, n_docs long"
-        )
+        return local_frame(engine.spark, [], "bucket long, n_docs long")
     dm = engine.doc_map.select("doc_id", "doclen")
     return (
         matched.join(dm, on="doc_id")
@@ -259,11 +258,10 @@ def explain_contributions(
         stats_row=engine._stats_row,
         vocab_lookup=engine._vocab_lookup,
     )
-    empty = engine.spark.createDataFrame(
-        [], "doc_id long, term string, tf long, contrib double"
-    )
     if not plan.term_ids or not doc_ids:
-        return empty
+        return local_frame(
+            engine.spark, [], "doc_id long, term string, tf long, contrib double"
+        )
     dps = int(engine.meta["docs_per_shard"])
     shards = sorted({d // dps for d in doc_ids})
     blocks = engine.postings.where(

@@ -1,8 +1,17 @@
-"""DAAT BM25 scoring — the production read path.
+"""DAAT BM25 scoring: one per-shard kernel, two arms that run it.
 
-One grouped cogroup-pandas UDF per *shard* (document-sharded index): each task
-receives the query terms' posting blocks for its shard plus the shard's packed
-norms row, and runs document-at-a-time scoring entirely in numpy:
+Both arms call the same ``_make_scorer`` once per *shard* (document-sharded
+index) with the query terms' posting blocks for that shard plus the shard's
+packed norms row, and run document-at-a-time scoring entirely in numpy:
+
+- the Spark arm, ``bm25_topk_daat``: one grouped cogroup-pandas UDF task
+  per shard, the global top-k merged by Catalyst; the scale path, and the
+  only one for shard pruning and doc predicates;
+- the driver arm, ``bm25_topk_local``: the same kernel over pandas inputs
+  the caller read for a small plan (``fits_driver``), no Spark job.
+
+Both share their early exits (``plan_mode``) and the kernel's summation
+order, so their answers are bit-identical by construction.  The kernel:
 
 - scoring units are expansion GROUPS (A4, ResiduePairOccurrence.java:166-227):
   a group's tf per doc is the sum of its member terms' tfs (posting-list
@@ -17,25 +26,28 @@ norms row, and runs document-at-a-time scoring entirely in numpy:
 - scores accumulate into a dense per-shard float64 array in ascending
   group-key order — bitwise-identical summation order to the oracle;
 - each shard emits only its local top-k; the global
-  ``orderBy(score desc, doc_id asc).limit(k)`` merges shard heaps
-  (Catalyst TakeOrderedAndProject).
+  ``(score desc, doc_id asc)`` top-k merges shard heaps (Catalyst
+  TakeOrderedAndProject on the Spark arm, a stable pandas sort on the
+  driver arm).
 
-Scale shape: a query touching T terms reads T posting lists split across S
-shards; the only shuffle is blocks+norms -> shard groups, and the result is
-S*k rows.  No join against the doc dictionary until after the top-k (late
-materialization, TargetStructure.java:24-27 analogue).
+Scale shape (Spark arm): a query touching T terms reads T posting lists
+split across S shards; the only shuffle is blocks+norms -> shard groups,
+and the result is S*k rows.  No join against the doc dictionary until after
+the top-k (late materialization, TargetStructure.java:24-27 analogue).
 
 This module is the one owner of per-shard scoring and per-shard top-k.  The
 shard code is module-level so every per-shard scorer shares it:
 ``_posting_blocks`` (the pushed-down block scan), ``_score_shards`` (the
 shard cogroup with the bucketed norms), ``_shard_norms`` (norms unpack),
-``group_tf`` (dense tf decode with block skipping) and ``_shard_topk``
-(boundary-tie shard heap).  ``msearch`` (query/msearch.py) runs one
+``term_blocks`` + ``group_tf`` (dense tf decode with block skipping) and
+``_shard_topk`` (boundary-tie shard heap).  ``msearch`` (query/msearch.py) runs one
 ``_make_scorer`` per query inside a single cogroup; Dirichlet QL
 (query/ql.py) keeps only its formula and candidate rule.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -43,9 +55,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..codec import unpack_block
+from ..session import local_frame
 from .planner import QueryPlan
 
 _RESULT_SCHEMA = "doc_id long, score double"
+
+# the posting-block columns every shard kernel reads
+BLOCK_COLS = (
+    "shard", "term_id", "first_doc_id", "max_doc_id", "block_max_tf",
+    "doc_gaps", "tfs",
+)
 
 # sentinel: "this group was decoded under a candidate-range restriction and
 # produced no postings" — distinct from "not decoded yet" (None)
@@ -73,8 +92,43 @@ def _shard_norms(
     return base, dense_len
 
 
+class TermBlocks(NamedTuple):
+    """One term's posting blocks in one shard, in doc order, as numpy
+    columns (one entry per ~128 postings)."""
+
+    first: np.ndarray   # first_doc_id
+    last: np.ndarray    # max_doc_id
+    gaps: np.ndarray    # packed doc-gap payloads
+    tfs: np.ndarray     # packed tf payloads
+    max_tf: int         # max block_max_tf
+
+
+def term_blocks(left: pd.DataFrame) -> dict[int, TermBlocks]:
+    """A shard's posting blocks split by term_id, sorted once per shard so
+    the decode loops step over numpy arrays, never pandas rows."""
+    if len(left) == 0:
+        return {}
+    order = np.lexsort(
+        (left["first_doc_id"].to_numpy(), left["term_id"].to_numpy())
+    )
+    tid, first, last, gaps, tfs, mtf = (
+        left[c].to_numpy()[order]
+        for c in (
+            "term_id", "first_doc_id", "max_doc_id", "doc_gaps", "tfs",
+            "block_max_tf",
+        )
+    )
+    cuts = np.flatnonzero(np.diff(tid)) + 1
+    return {
+        int(tid[a]): TermBlocks(
+            first[a:b], last[a:b], gaps[a:b], tfs[a:b], int(mtf[a:b].max())
+        )
+        for a, b in zip(np.r_[0, cuts], np.r_[cuts, tid.size])
+    }
+
+
 def group_tf(
-    groups_by_tid: dict[int, pd.DataFrame],
+    groups_by_tid: dict[int, TermBlocks],
     member_ids,
     base: int,
     docs_per_shard: int,
@@ -90,15 +144,14 @@ def group_tf(
         g = groups_by_tid.get(tid)
         if g is None:
             continue
-        # itertuples over block rows (1 row per ~128 postings): column
-        # access stays numpy; no per-posting python
-        for row in g.sort_values("first_doc_id").itertuples(index=False):
-            if row.max_doc_id < lo or row.first_doc_id > hi:
+        # one step per block, in doc order: no per-posting python
+        for first, last, gaps, tfs in zip(g.first, g.last, g.gaps, g.tfs):
+            if last < lo or first > hi:
                 continue
-            ids, tfs = unpack_block(bytes(row.doc_gaps), bytes(row.tfs))
+            ids, tf = unpack_block(bytes(gaps), bytes(tfs))
             if dense is None:
                 dense = np.zeros(docs_per_shard, dtype=np.float64)
-            dense[ids - base] += tfs
+            dense[ids - base] += tf
     return dense
 
 
@@ -126,10 +179,7 @@ def _posting_blocks(postings: DataFrame, term_ids) -> DataFrame:
     blocks of ``term_ids`` with their skip metadata and packed payloads."""
     return postings.where(
         F.col("term_id").isin(term_ids) if term_ids else F.lit(False)
-    ).select(
-        "shard", "term_id", "first_doc_id", "max_doc_id", "block_max_tf",
-        "doc_gaps", "tfs",
-    )
+    ).select(*BLOCK_COLS)
 
 
 def _score_shards(
@@ -191,9 +241,7 @@ def _make_scorer(
             # expression can still match here (all-absent docs, score 0)
             return _empty_pdf()
         base, dense_len = _shard_norms(right, docs_per_shard)
-        groups_by_tid: dict[int, pd.DataFrame] = {
-            int(t): g for t, g in left.groupby("term_id", sort=False)
-        }
+        groups_by_tid = term_blocks(left)
 
         # --- NOT-term exclusion (P2 lifted to term level): zero excluded
         # docs out of dense_len, which doubles as the eligibility mask —
@@ -205,8 +253,8 @@ def _make_scorer(
             g = groups_by_tid.get(tid)
             if g is None:
                 continue
-            for row in g.itertuples(index=False):
-                ids, _ = unpack_block(bytes(row.doc_gaps), bytes(row.tfs))
+            for gaps, tfs in zip(g.gaps, g.tfs):
+                ids, _ = unpack_block(bytes(gaps), bytes(tfs))
                 dense_len[ids - base] = 0.0
 
         # --- candidate narrowing (AND/bool): rarest-first, block skipping ---
@@ -277,7 +325,7 @@ def _make_scorer(
                 for tid in grp.member_ids:
                     g = groups_by_tid.get(tid)
                     if g is not None:
-                        mtf += int(g["block_max_tf"].max())
+                        mtf += g.max_tf
                 if mtf > 0:
                     ubs.append(
                         (term_upper_bound(grp.idf, mtf, k1, b), grp)
@@ -409,6 +457,98 @@ def prune_shards_default(n_shards: int, groups) -> bool:
     return n_shards > 64 and sum(g.df for g in groups) > 2_000_000
 
 
+def fits_driver(n_shards: int, volume: int) -> bool:
+    """Whether a plan is small enough for the driver arm
+    (``bm25_topk_local``).  ``volume`` is the posting count the arm reads:
+    the df sum of the scan terms (scoring members plus NOT-terms).  The
+    arm's cost grows with the shards it touches, at most
+    ``min(volume, n_shards)``, and with ``volume``; the Spark arm pays a
+    floor of ~420 ms on a 2-shard index and ~0.9-1.6 s on 16-64 shards,
+    whatever the plan.  Both bounds keep the worst admitted plan under the
+    smaller floor.  Measured on a 4-core box, ``local[4]``, warm engine,
+    ``generate_corpus(12000, seed=1)``, median of 5 ``search().collect()``,
+    driver / Spark arm:
+    - 64 shards: 167 / 1,378 ms at 16,376 postings; 389 / 1,278 ms at
+      130,951 (the worst admitted plan); 723 / 1,296 ms at 258,574; a
+      61-term plan of 488 postings over all 64 shards 298 / 1,295 ms;
+    - 32 shards: 293 / 1,170 ms at 130,951; 448 / 1,025 ms at 258,574;
+    - 16 shards: 214 / 883 ms at 130,951; 398 / 1,028 ms at 258,574."""
+    return min(volume, n_shards) <= 64 and volume <= 1 << 17
+
+
+def plan_mode(
+    plan: QueryPlan, mode: str, min_match: int = 1, expr=None
+) -> str | None:
+    """The driver-side early exits both arms take before any read: None
+    when the plan provably has no hit, else the mode the kernel runs."""
+    if mode == "expr":
+        # nested boolean expression (query/boolquery.py).  A match provably
+        # contains >= 1 POSITIVE (even-parity) term unless the expression
+        # accepts the all-absent document (monotonicity: odd-parity terms
+        # can only turn a false match falser)
+        if expr is None:
+            raise ValueError("mode='expr' requires an ExprSpec")
+        if not expr.widen and not (
+            expr.score_keys & {g.key for g in plan.groups}
+        ):
+            return None
+        return mode
+    if (
+        plan.empty_or
+        or (mode in ("and", "bool") and plan.empty_and)
+        or min_match > len(plan.groups)
+    ):
+        # NB: an absent-from-vocabulary MUST clause empties the result
+        # (checked BEFORE the no-MUST degradation below — n_required == 0
+        # with n_absent > 0 means the MUST side existed but matched nothing)
+        return None
+    if mode == "bool" and plan.n_required == 0:
+        return "or"  # the user gave no MUST clause -> pure disjunction
+    return mode
+
+
+def bm25_topk_local(
+    blocks: pd.DataFrame,
+    norms: pd.DataFrame,
+    plan: QueryPlan,
+    docs_per_shard: int,
+    k: int = 10,
+    mode: str = "or",
+    exclude_ids=(),
+    after: tuple[float, int] | None = None,
+    min_match: int = 1,
+) -> pd.DataFrame:
+    """The driver arm of ``bm25_topk_daat`` (no ``expr``, no shard
+    pruning): top-k (doc_id, score) of the same per-shard kernel, run
+    in-process over ``blocks`` (``BLOCK_COLS`` rows of the scan terms:
+    scoring members plus ``exclude_ids``) and ``norms`` (packed rows of
+    at least the shards in ``blocks``).  A shard with blocks but no norms
+    row scores nothing, as in the cogroup.  Bit-identical to the Spark
+    arm: same exits, same kernel, same (score desc, doc_id asc) order."""
+    mode = plan_mode(plan, mode, min_match)
+    if mode is None or len(blocks) == 0:
+        return _empty_pdf()
+    scorer = _make_scorer(
+        plan, docs_per_shard, k, mode, tuple(sorted(set(exclude_ids))),
+        after=after, min_match=min_match,
+    )
+    norms_of = {int(s): g for s, g in norms.groupby("shard", sort=False)}
+    parts = [
+        scorer(left, norms_of[int(s)])
+        for s, left in blocks.groupby("shard", sort=False)
+        if int(s) in norms_of
+    ]
+    parts = [p for p in parts if len(p)]
+    if not parts:
+        return _empty_pdf()
+    return (
+        pd.concat(parts, ignore_index=True)
+        .sort_values(["score", "doc_id"], ascending=[False, True])
+        .head(k)
+        .reset_index(drop=True)
+    )
+
+
 def bm25_topk_daat(
     spark: SparkSession,
     postings: DataFrame,
@@ -451,33 +591,15 @@ def bm25_topk_daat(
     shard AND queries additionally skip blocks by doc-range (cursor-style
     skip pointers).
     """
-    if mode == "expr":
-        # nested boolean expression (query/boolquery.py).  A match provably
-        # contains >= 1 POSITIVE (even-parity) term unless the expression
-        # accepts the all-absent document (monotonicity: odd-parity terms
-        # can only turn a false match falser), so:
-        if expr is None:
-            raise ValueError("mode='expr' requires an ExprSpec")
-        if not expr.widen and not (
-            expr.score_keys & {g.key for g in plan.groups}
-        ):
-            return spark.createDataFrame([], _RESULT_SCHEMA)
+    run_mode = plan_mode(plan, mode, min_match, expr)
+    if run_mode is None:
+        return local_frame(spark, [], _RESULT_SCHEMA)
+    if mode == "expr" and expr.widen:
         # widening answers are corpus-sized in the match-set sense; every
         # norms shard must be scored (including posting-less ones, via the
         # full-outer cogroup), so shard pruning is off by construction
-        if expr.widen:
-            prune_shards = False
-    elif (
-        plan.empty_or
-        or (mode in ("and", "bool") and plan.empty_and)
-        or min_match > len(plan.groups)
-    ):
-        # NB: an absent-from-vocabulary MUST clause empties the result
-        # (checked BEFORE the no-MUST degradation below — n_required == 0
-        # with n_absent > 0 means the MUST side existed but matched nothing)
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    if mode == "bool" and plan.n_required == 0:
-        mode = "or"  # the user gave no MUST clause -> pure disjunction
+        prune_shards = False
+    mode = run_mode
     all_ids = sorted({tid for g in plan.groups for tid in g.member_ids})
     if len(all_ids) < sum(len(g.member_ids) for g in plan.groups):
         # a term shared by two expansion groups would make the phase-0
@@ -563,12 +685,12 @@ def bm25_topk_daat(
         .collect()
     ]
     if not probe:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
+        return local_frame(spark, [], _RESULT_SCHEMA)
     first = score_blocks(blocks.where(F.col("shard").isin(probe))).orderBy(
         F.desc("score"), F.asc("doc_id")
     ).limit(k)
-    rows = first.collect()
-    theta = rows[-1]["score"] if len(rows) >= k else float("-inf")
+    rows = first.toPandas()
+    theta = float(rows["score"].iloc[-1]) if len(rows) >= k else float("-inf")
     # phase 2: only shards whose upper bound beats theta can change the top-k
     remaining = shard_ub.where(
         (~F.col("shard").isin(probe)) & (F.col("ub") > theta)
@@ -576,5 +698,5 @@ def bm25_topk_daat(
     second = score_blocks(
         blocks.join(remaining, on="shard", how="left_semi")
     )
-    merged = spark.createDataFrame(rows, _RESULT_SCHEMA).unionByName(second)
+    merged = local_frame(spark, rows, _RESULT_SCHEMA).unionByName(second)
     return merged.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from .. import TOKEN_PATTERN
 from ..build.postings import decode_postings
+from ..session import local_frame
 from .planner import QueryPlan, idf
 
 _CONTRIB_SCHEMA = "doc_id long, term string, c double"
@@ -230,13 +231,13 @@ def fielded_topk(
     neither field anywhere makes the result empty, exactly like single-field
     AND with an absent term.
     """
-    empty = spark.createDataFrame([], "doc_id long, score double")
+    empty = local_frame(spark, [], "doc_id long, score double")
     if not query_terms:
         return empty
 
     # ---- content side: per-(doc, term) contributions from the index ----
     if plan.empty_or:
-        cc = spark.createDataFrame([], _CONTRIB_SCHEMA)
+        cc = local_frame(spark, [], _CONTRIB_SCHEMA)
     else:
         cc = bm25_group_contribs(postings, norms_decoded, plan, term_of_key)
 
@@ -245,7 +246,7 @@ def fielded_topk(
         fposts, query_terms, field_n_docs, avg_fieldlen, plan, F.col("term")
     )
     if fc is None:
-        fc = spark.createDataFrame([], _CONTRIB_SCHEMA)
+        fc = local_frame(spark, [], _CONTRIB_SCHEMA)
 
     # ---- combine: union of matches at (doc, term) granularity ----
     u = cc.withColumnRenamed("c", "c_content").join(
@@ -305,7 +306,7 @@ def qualified_topk(
 
     ``field_sides``: field -> (field postings DF, n_docs, avg_fieldlen).
     """
-    empty = spark.createDataFrame([], "doc_id long, score double")
+    empty = local_frame(spark, [], "doc_id long, score double")
     if not clauses:
         return empty
 

@@ -33,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .daat import _make_scorer, _posting_blocks, _score_shards
 from .planner import QueryPlan
 
@@ -58,7 +59,7 @@ def msearch_topk(
         if not p.empty_or and not (mode == "and" and p.empty_and)
     }
     if not live:
-        return spark.createDataFrame([], _SCHEMA)
+        return local_frame(spark, [], _SCHEMA)
     scorers = {
         qid: _make_scorer(p, docs_per_shard, k, mode)
         for qid, p in live.items()

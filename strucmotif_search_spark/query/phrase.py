@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from ..build.postings import unpack_positions
 from ..codec import unpack_block
 from ..oracle import tokenize
+from ..session import local_frame
 
 _RESULT = "doc_id long, phrase_tf long"
 _POS_CAP = 1 << 22  # max positions per doc supported by the packed key
@@ -68,7 +69,7 @@ def phrase_topk(
     """
     seq = tokenize(phrase)
     if not seq:
-        return spark.createDataFrame([], _RESULT)
+        return local_frame(spark, [], _RESULT)
     if len(seq) > 64:
         # the packed key's +64 bias keeps (pos - slot) non-negative only
         # for slot indexes <= 64; a longer phrase would underflow slot
@@ -84,7 +85,7 @@ def phrase_topk(
         ).select("term", "term_id", "df").collect()
     }
     if any(t not in lookup for t in seq):  # absent term -> empty (O5 analogue)
-        return spark.createDataFrame([], _RESULT)
+        return local_frame(spark, [], _RESULT)
     slots = [(i, lookup[t][0]) for i, t in enumerate(seq)]
     # narrowing order: df ascending (rarest first), term_id tie-break
     order_tids = [
@@ -241,7 +242,7 @@ def near_topk(
     seq_tokens = tokenize(query)
     seq = sorted(set(seq_tokens))
     if not seq or window < 0:
-        return spark.createDataFrame([], _NEAR_RESULT)
+        return local_frame(spark, [], _NEAR_RESULT)
     lookup = {
         r["term"]: (int(r["term_id"]), int(r["df"]))
         for r in terms_table.where(F.col("term").isin(seq))
@@ -249,7 +250,7 @@ def near_topk(
         .collect()
     }
     if any(t not in lookup for t in seq):  # absent term -> empty conjunction
-        return spark.createDataFrame([], _NEAR_RESULT)
+        return local_frame(spark, [], _NEAR_RESULT)
     # narrowing order: df ascending (rarest first), term_id tie-break
     order_tids = [
         tid for tid, _df in sorted(lookup.values(), key=lambda p: (p[1], p[0]))

@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .daat import (
     _RESULT_SCHEMA,
     _empty_pdf,
@@ -42,6 +43,7 @@ from .daat import (
     _shard_norms,
     _shard_topk,
     group_tf,
+    term_blocks,
 )
 
 QL_MU = 2000.0  # Dirichlet prior (Zhai & Lafferty 2001 recommended range)
@@ -64,7 +66,7 @@ def ql_topk(
     terms.  Deterministic: ascending-term_id summation, ties doc_id asc.
     """
     if not term_cfs or coll_len <= 0:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
+        return local_frame(spark, [], _RESULT_SCHEMA)
     terms = sorted(term_cfs)  # ascending term_id — fixed summation order
     tids = [t for t, _ in terms]
     # smoothing mass per term: mu * P(t|C); log(dl + mu) is shared
@@ -74,7 +76,7 @@ def ql_topk(
         if len(left) == 0 or len(right) == 0:
             return _empty_pdf()
         base, dense_len = _shard_norms(right, docs_per_shard)
-        by_tid = {int(t): g for t, g in left.groupby("term_id", sort=False)}
+        by_tid = term_blocks(left)
         denses: dict[int, np.ndarray] = {}
         matched = np.zeros(docs_per_shard, dtype=bool)
         for tid in tids:

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Allocator pinning for the driver JVM and every Python worker it forks.
 #
@@ -156,3 +156,25 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, pdf, schema) -> DataFrame:
+    """A DataFrame over rows already on the driver, without a Python job.
+
+    Rows go through Arrow ``createDataFrame`` (a local relation: no job,
+    float64 bit patterns kept).  No rows become a typed
+    ``SELECT CAST(NULL AS …) … WHERE false``, which Catalyst folds to an
+    empty local relation; an empty ``createDataFrame`` costs ~25x more.
+    ``schema`` is a DDL string or a StructType; ``pdf`` is a pandas frame
+    with those columns, or any empty sequence."""
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if len(pdf):
+        return spark.createDataFrame(pdf, schema)
+    cols = ", ".join(
+        f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
+        for f in schema.fields
+    )
+    return spark.sql(f"SELECT {cols} WHERE false")

@@ -8,3 +8,13 @@ def spark():
     s = get_spark("tests", cores=8, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def spark_arm(monkeypatch):
+    """Send every search to the Spark arm of the DAAT kernel, for tests
+    that assert Spark-plan properties (a small plan takes the driver arm,
+    whose result frame has no scan, so such asserts would pass vacuously)."""
+    from strucmotif_search_spark.query import daat
+
+    monkeypatch.setattr(daat, "fits_driver", lambda n_shards, volume: False)

@@ -117,6 +117,15 @@ def test_block_metadata_true_maxima(built):
 
 @pytest.mark.parametrize("query,mode", QUERIES)
 def test_topk_rank_identical_daat(built, spark, query, mode):
+    _check_topk_rank_identical(built, query, mode)
+
+
+@pytest.mark.parametrize("query,mode", QUERIES)
+def test_topk_rank_identical_daat_spark_arm(built, spark_arm, query, mode):
+    _check_topk_rank_identical(built, query, mode)
+
+
+def _check_topk_rank_identical(built, query, mode):
     engine, oracle, _ = built
     expected = bm25_topk(oracle, query, k=10, mode=mode)
     got = [
@@ -199,7 +208,9 @@ def test_search_with_metadata(built):
     )
 
 
-def test_fused_build_query_plan_is_exchange_free(spark, tmp_path_factory):
+def test_fused_build_query_plan_is_exchange_free(
+    spark, tmp_path_factory, spark_arm
+):
     """The production (fused, bucketed) layout must answer a BM25 query in
     one exchange-free stage + TakeOrderedAndProject (PLANS.md §11): both
     cogroup sides come hash(shard)-clustered straight from the bucketed
@@ -415,7 +426,7 @@ def test_bool_composes_with_exclude(built):
     assert [s for _, s in got] == [s for _, s in expected]
 
 
-def test_bool_with_shard_pruning(built):
+def test_bool_with_shard_pruning(built, spark_arm):
     """Bool mode through the 2-phase shard-pruned plan must equal the
     unpruned plan (shards lacking a MUST group are skipped)."""
     engine, oracle, _ = built

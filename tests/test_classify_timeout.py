@@ -79,7 +79,7 @@ def test_timeout_cancels_long_job(engine, spark):
     df = spark.range(8).repartition(8).mapInPandas(slow, "id long")
     t0 = time.time()
     with pytest.raises(TimeoutError):
-        collect_with_timeout(spark, df, timeout_s=3)
+        collect_with_timeout(spark, df.collect, timeout_s=3)
     assert time.time() - t0 < 25  # cancelled well before the sleeps finish
 
 

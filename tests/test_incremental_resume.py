@@ -255,7 +255,7 @@ def test_remove_on_fused_base_reads_back(spark, corpus, tmp_path_factory):
 
 
 def test_compact_collapses_refs_and_restores_bucketing(
-    spark, corpus, tmp_path_factory
+    spark, corpus, tmp_path_factory, spark_arm
 ):
     """ADD leaves a refs-unioned (exchange-paying) read plan; compact()
     folds everything into one fresh bucketed generation: identical decoded
@@ -305,7 +305,7 @@ def test_compact_collapses_refs_and_restores_bucketing(
 
 
 def test_compact_after_remove_restores_bucketing(
-    spark, corpus, tmp_path_factory
+    spark, corpus, tmp_path_factory, spark_arm
 ):
     """REMOVE-path twin of the ADD compact regression above (round-3
     verdict item 8): REMOVE also leaves a refs generation, and compact()

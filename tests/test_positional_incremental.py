@@ -103,7 +103,7 @@ def test_positional_remove_keeps_phrase_capability(spark, stores):
     }
 
 
-def test_positional_compact_restores_bucketing(spark, stores):
+def test_positional_compact_restores_bucketing(spark, stores, spark_arm):
     import json as _json
     from pathlib import Path
 

@@ -31,7 +31,7 @@ QUERIES = [
 
 
 @pytest.mark.parametrize("q,mode,k", QUERIES)
-def test_pruned_equals_unpruned(engine, q, mode, k):
+def test_pruned_equals_unpruned(engine, q, mode, k, spark_arm):
     plain = [
         (r["doc_id"], r["score"])
         for r in engine.search(
