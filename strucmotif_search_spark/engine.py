@@ -43,7 +43,16 @@ def collect_with_timeout(spark: SparkSession, fn, timeout_s: float):
     """Run ``fn()`` (a search plus its collect) under a job group; cancel
     the group and raise TimeoutError if it exceeds ``timeout_s``.  Spark
     tasks are interrupted; driver-side work in flight is abandoned on its
-    daemon thread and its result dropped."""
+    daemon thread and its result dropped.
+
+    ``fn`` may run several actions in a row (the pruned Spark arm runs
+    three), and ``cancelJobGroup`` stops only the jobs running when it is
+    called.  So the group is cancelled with its future jobs, which refuses
+    any action ``fn`` starts after the timeout, and the cancel is repeated
+    every 50 ms until the thread exits, which also stops the shuffle-stage
+    jobs an action submits before its own (the refusal does not cover
+    them).  The call waits up to 0.5 s for the thread to unwind, then
+    raises either way."""
     import threading
     import uuid
 
@@ -63,8 +72,19 @@ def collect_with_timeout(spark: SparkSession, fn, timeout_s: float):
     t.start()
     t.join(timeout_s)
     if t.is_alive():
-        sc.cancelJobGroup(group)
-        raise TimeoutError(f"query exceeded {timeout_s}s; job group cancelled")
+
+        def reap() -> None:
+            while t.is_alive():
+                # PySpark does not wrap this SparkContext method (Spark >= 4)
+                sc._jsc.sc().cancelJobGroupAndFutureJobs(group)
+                t.join(0.05)
+
+        reaper = threading.Thread(target=reap, daemon=True)
+        reaper.start()
+        reaper.join(0.5)
+        raise TimeoutError(
+            f"query exceeded {timeout_s}s; job group {group} cancelled"
+        )
     if err:
         raise err[0]
     return out[0]
@@ -228,9 +248,7 @@ class SearchEngine:
             "doc_map", _META_COLS,
             pc.field("doc_id").isin(hits["doc_id"].tolist()),
         ).to_pandas()
-        return hits.merge(meta, on="doc_id", how="inner").sort_values(
-            ["score", "doc_id"], ascending=[False, True]
-        ).reset_index(drop=True)
+        return hits.merge(meta, on="doc_id", how="inner").reset_index(drop=True)
 
     def _topk(
         self,
@@ -249,9 +267,9 @@ class SearchEngine:
         the arm ``daat.fits_driver`` picks; ``exclude`` is the NOT-terms'
         {term: (term_id, df)}.  Both arms answer bit-identically."""
         exclude_ids = sorted(tid for tid, _df in (exclude or {}).values())
-        volume = sum(plan.dfs) + sum(df for _tid, df in (exclude or {}).values())
+        dfs = plan.dfs + [df for _tid, df in (exclude or {}).values()]
         if doc_predicate is None and daat.fits_driver(
-            self.meta.get("n_shards") or 0, volume
+            self.meta.get("n_shards") or 0, dfs
         ):
             hits = self._local_topk(
                 plan, k + offset, mode, exclude_ids, after, min_match

@@ -457,23 +457,42 @@ def prune_shards_default(n_shards: int, groups) -> bool:
     return n_shards > 64 and sum(g.df for g in groups) > 2_000_000
 
 
-def fits_driver(n_shards: int, volume: int) -> bool:
-    """Whether a plan is small enough for the driver arm
-    (``bm25_topk_local``).  ``volume`` is the posting count the arm reads:
-    the df sum of the scan terms (scoring members plus NOT-terms).  The
-    arm's cost grows with the shards it touches, at most
-    ``min(volume, n_shards)``, and with ``volume``; the Spark arm pays a
-    floor of ~420 ms on a 2-shard index and ~0.9-1.6 s on 16-64 shards,
-    whatever the plan.  Both bounds keep the worst admitted plan under the
-    smaller floor.  Measured on a 4-core box, ``local[4]``, warm engine,
-    ``generate_corpus(12000, seed=1)``, median of 5 ``search().collect()``,
-    driver / Spark arm:
-    - 64 shards: 167 / 1,378 ms at 16,376 postings; 389 / 1,278 ms at
-      130,951 (the worst admitted plan); 723 / 1,296 ms at 258,574; a
-      61-term plan of 488 postings over all 64 shards 298 / 1,295 ms;
-    - 32 shards: 293 / 1,170 ms at 130,951; 448 / 1,025 ms at 258,574;
-    - 16 shards: 214 / 883 ms at 130,951; 398 / 1,028 ms at 258,574."""
-    return min(volume, n_shards) <= 64 and volume <= 1 << 17
+def driver_work(n_shards: int, dfs) -> int:
+    """The driver arm's cost for a plan whose scan terms (scoring members
+    plus NOT-terms) have ``dfs``, in postings.  It reads ``sum(dfs)``
+    postings in at most ``sum(min(df, n_shards))`` (term, shard) posting
+    lists over at most ``min(sum(dfs), n_shards)`` shards; fitted on the
+    plans in ``fits_driver``, to within ~15%, a posting costs ~0.8 us, a
+    list ~0.12 ms and a shard ~2 ms."""
+    volume = sum(dfs)
+    lists = sum(min(df, n_shards) for df in dfs)
+    return volume + 150 * lists + 2_500 * min(volume, n_shards)
+
+
+def fits_driver(n_shards: int, dfs) -> bool:
+    """Whether a plan runs faster on the driver arm (``bm25_topk_local``)
+    than on the Spark arm: its ``driver_work`` is at most 1.4M.
+
+    That bound is the lowest measured crossover: on 2 shards the driver
+    arm wins at 1.33M (1,087 / 1,470 ms) and ties at 1.53M (1,331 /
+    1,302).  With more shards the Spark arm has more tasks
+    to spread and the crossover sits higher, so the bound sends some plans
+    to Spark that the driver would answer faster: on 64 shards the driver
+    wins at 1.46M (1,050 / 1,246) and 2.08M (1,589 / 1,683), ties at 1.82M
+    (125 terms, 1,564 / 1,563) and loses at 2.46M (1,961 / 1,615); on 16
+    shards it ties at 2.34M (2,075 / 1,962).  Every admitted plan below
+    ran faster on the driver, every plan the Spark arm won is refused:
+    - 2 shards: 0.13M-1.07M, 172-926 / 612-1,168 ms;
+    - 16 shards: 0.23M-1.16M, 264-1,054 / 1,095-1,575 ms;
+    - 64 shards: 0.28M-1.05M, 291-904 / 962-1,966 ms;
+    - 375 shards, 32-360 rare terms (36-419 postings): 0.09M-0.99M,
+      89-808 / 1,373-2,581 ms.
+    Measured on a 4-core box, ``local[4]``, warm engine,
+    ``generate_corpus(n, seed=1)`` with n = 12k or 64k, OR plans of the
+    most frequent terms (of one rare term per shard on 375 shards), k = 10,
+    median of 5 ``search().collect()``, driver / Spark arm
+    (``tools/arm_crossover.py``)."""
+    return driver_work(n_shards, dfs) <= 1_400_000
 
 
 def plan_mode(

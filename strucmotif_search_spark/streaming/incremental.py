@@ -253,6 +253,8 @@ def add_documents(
     (Path(store.root) / gen / "_refs.json").write_text(
         json.dumps(_carry_refs(store, old_gen, affected))
     )
+    # minted ids past the old max open new shards: the shard count grows
+    meta["n_shards"] = max(meta.get("n_shards") or 0, max(affected) + 1)
     (Path(store.root) / gen / "_meta.json").write_text(json.dumps(meta))
     tf_new.unpersist()
     store.publish(gen)

@@ -17,4 +17,4 @@ def spark_arm(monkeypatch):
     whose result frame has no scan, so such asserts would pass vacuously)."""
     from strucmotif_search_spark.query import daat
 
-    monkeypatch.setattr(daat, "fits_driver", lambda n_shards, volume: False)
+    monkeypatch.setattr(daat, "fits_driver", lambda n_shards, dfs: False)

@@ -117,15 +117,6 @@ def test_block_metadata_true_maxima(built):
 
 @pytest.mark.parametrize("query,mode", QUERIES)
 def test_topk_rank_identical_daat(built, spark, query, mode):
-    _check_topk_rank_identical(built, query, mode)
-
-
-@pytest.mark.parametrize("query,mode", QUERIES)
-def test_topk_rank_identical_daat_spark_arm(built, spark_arm, query, mode):
-    _check_topk_rank_identical(built, query, mode)
-
-
-def _check_topk_rank_identical(built, query, mode):
     engine, oracle, _ = built
     expected = bm25_topk(oracle, query, k=10, mode=mode)
     got = [
@@ -135,6 +126,11 @@ def _check_topk_rank_identical(built, query, mode):
     assert [d for d, _ in got] == [d for d, _ in expected]
     # bitwise-equal float64 (identical summation order)
     assert [s for _, s in got] == [s for _, s in expected]
+
+
+@pytest.mark.parametrize("query,mode", QUERIES)
+def test_topk_rank_identical_daat_spark_arm(built, spark, spark_arm, query, mode):
+    test_topk_rank_identical_daat(built, spark, query, mode)
 
 
 # A4 query expansion (ResiduePairOccurrence.java:166-227 analogue): each

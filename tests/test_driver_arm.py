@@ -7,7 +7,9 @@ scores, metadata and column types must be identical — checked here on an
 ADD + REMOVE generation whose postings span `_refs.json` parts with
 excluded shards, the hardest layout the driver arm reads."""
 
+import re
 import struct
+import threading
 import time
 
 import pandas as pd
@@ -52,14 +54,19 @@ def test_local_frame_keeps_names_types_and_bits(spark, n):
 
 
 def test_fits_driver_boundary():
-    # at most 64 touchable shards and 2^17 postings
-    assert daat.fits_driver(64, 1 << 17)
-    assert daat.fits_driver(10_000, 64)
-    assert daat.fits_driver(2, 1 << 17)
-    assert daat.fits_driver(0, 0)
-    assert not daat.fits_driver(65, 65)
-    assert not daat.fits_driver(2, (1 << 17) + 1)
-    assert not daat.fits_driver(10_000, 1 << 17)
+    # work = postings + 150 per (term, shard) list + 2,500 per shard
+    assert daat.driver_work(64, [20_000] * 40) == 800_000 + 384_000 + 160_000
+    assert daat.fits_driver(0, [])
+    assert daat.fits_driver(1, [1_400_000 - 150 - 2_500])
+    assert not daat.fits_driver(1, [1_400_000 - 150 - 2_500 + 1])
+    assert daat.fits_driver(2, [1_300_000])
+    assert not daat.fits_driver(2, [1_400_000])
+    # lists: 40 frequent terms on 64 shards fit, 42 do not
+    assert daat.fits_driver(64, [20_000] * 40)
+    assert not daat.fits_driver(64, [20_000] * 42)
+    # shards: 360 single-posting terms on 375 shards fit, 600 on 1,000 not
+    assert daat.fits_driver(375, [1] * 360)
+    assert not daat.fits_driver(1_000, [1] * 600)
 
 
 @pytest.fixture(scope="module")
@@ -131,7 +138,7 @@ def test_arms_answer_alike_on_refs_generation(
     monkeypatch.setattr(daat, "bm25_topk_local", counted)
     driver = _run(eng, kind, query, kw, with_meta)
     with monkeypatch.context() as m:
-        m.setattr(daat, "fits_driver", lambda n_shards, volume: False)
+        m.setattr(daat, "fits_driver", lambda n_shards, dfs: False)
         spark_rows = _run(eng, kind, query, kw, with_meta)
     assert driver[0] == spark_rows[0]  # names and types
     assert driver[1] == spark_rows[1]
@@ -169,3 +176,42 @@ def test_search_with_timeout_bounds_driver_arm(refs_engine, monkeypatch):
     with pytest.raises(TimeoutError):
         refs_engine.search_with_timeout("import", timeout_s=0.5)
     assert time.perf_counter() - t0 < 1.5
+
+
+def test_search_with_timeout_cancels_jobs_started_after_it(
+    refs_engine, spark_arm, monkeypatch
+):
+    """The pruned Spark arm runs its actions one after another.  A timeout
+    that lands between two of them must still stop the search: the next
+    action is refused, and no job of the group is left running."""
+    eng = refs_engine
+    tracker = eng.spark.sparkContext.statusTracker()
+    eng.search("import def", prune_shards=True).collect()  # warm
+    frame = type(eng.postings)
+    to_pandas = frame.toPandas
+    entered, refused, done = (threading.Event() for _ in range(3))
+
+    def slow_phase1(self):  # the pruned plan's probe-shard collect
+        entered.set()
+        time.sleep(3)
+        try:
+            return to_pandas(self)
+        except Exception:
+            refused.set()
+            raise
+        finally:
+            done.set()
+
+    monkeypatch.setattr(frame, "toPandas", slow_phase1)
+    with pytest.raises(TimeoutError) as exc:
+        eng.search_with_timeout("import def", timeout_s=2, prune_shards=True)
+    assert entered.is_set()  # the timeout landed between two jobs
+    group = re.search(r"job group (\S+)", str(exc.value)).group(1)
+    before = set(tracker.getJobIdsForGroup(group))
+    assert done.wait(20) and refused.is_set()
+    time.sleep(0.5)
+    later = [
+        tracker.getJobInfo(j).status
+        for j in tracker.getJobIdsForGroup(group) if j not in before
+    ]
+    assert "RUNNING" not in later

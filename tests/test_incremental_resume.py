@@ -74,6 +74,19 @@ def test_add_matches_fresh_rebuild(spark, corpus, tmp_path_factory):
     assert res == {"orphan_doc_ids": 0, "inconsistent_terms": 0}
 
 
+def test_add_counts_the_shards_it_opens(spark, corpus, tmp_path_factory):
+    """ADD mints ids past the old max, so its generation's ``n_shards``
+    (which bounds the shards a plan can touch) must count the new shards."""
+    _full, base, extra = corpus
+    store = IndexStore(tmp_path_factory.mktemp("nshards"))
+    build_index(spark, base, store, docs_per_shard=64)
+    before = SearchEngine(spark, store).meta["n_shards"]
+    add_documents(spark, store, extra)
+    eng = SearchEngine(spark, store)
+    assert eng.meta["n_shards"] == eng.doc_map.agg(F.max("shard")).first()[0] + 1
+    assert eng.meta["n_shards"] == -(-(N0 + N_ADD) // 64) > before
+
+
 def test_add_is_idempotent(spark, corpus, tmp_path_factory):
     full, base, extra = corpus
     store = IndexStore(tmp_path_factory.mktemp("idem"))

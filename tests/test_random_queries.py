@@ -5,9 +5,9 @@ checks in test_operators.py).
 
 The corpus is built with a SMALL docs_per_shard so queries cross many
 shards and posting blocks, exercising block boundaries, shard-local top-k
-heaps and the skip-pointer ranges that tiny fixtures cannot.  Each BM25
-check runs on both arms of the DAAT kernel: the driver arm (every plan here
-is small) and, through ``spark_arm``, the Spark cogroup arm."""
+heaps and the skip-pointer ranges that tiny fixtures cannot.  The BM25
+checks run on both arms of the DAAT kernel: as written on the driver arm
+(every plan here is small), and through ``spark_arm`` on the Spark arm."""
 
 import random
 import re
@@ -75,14 +75,6 @@ def _rand_terms(rng, n):
 
 
 def test_random_bm25_or_and(engine, oracle_and_texts):
-    _check_random_bm25_or_and(engine, oracle_and_texts)
-
-
-def test_random_bm25_or_and_spark_arm(engine, oracle_and_texts, spark_arm):
-    _check_random_bm25_or_and(engine, oracle_and_texts)
-
-
-def _check_random_bm25_or_and(engine, oracle_and_texts):
     idx, _ = oracle_and_texts
     rng = random.Random(7)
     for trial in range(12):
@@ -100,14 +92,6 @@ def _check_random_bm25_or_and(engine, oracle_and_texts):
 
 
 def test_random_bm25_not_and_bool(engine, oracle_and_texts):
-    _check_random_bm25_not_and_bool(engine, oracle_and_texts)
-
-
-def test_random_bm25_not_and_bool_spark_arm(engine, oracle_and_texts, spark_arm):
-    _check_random_bm25_not_and_bool(engine, oracle_and_texts)
-
-
-def _check_random_bm25_not_and_bool(engine, oracle_and_texts):
     idx, _ = oracle_and_texts
     rng = random.Random(13)
     for trial in range(8):
@@ -125,14 +109,6 @@ def _check_random_bm25_not_and_bool(engine, oracle_and_texts):
 
 
 def test_random_expansions(engine, oracle_and_texts):
-    _check_random_expansions(engine, oracle_and_texts)
-
-
-def test_random_expansions_spark_arm(engine, oracle_and_texts, spark_arm):
-    _check_random_expansions(engine, oracle_and_texts)
-
-
-def _check_random_expansions(engine, oracle_and_texts):
     idx, _ = oracle_and_texts
     rng = random.Random(29)
     for trial in range(8):
@@ -188,14 +164,6 @@ def test_random_near_unordered_and_ordered(engine, oracle_and_texts):
 
 
 def test_random_cursor_pages_equal_offset(engine, oracle_and_texts):
-    _check_random_cursor_pages_equal_offset(engine, oracle_and_texts)
-
-
-def test_random_cursor_pages_equal_offset_spark_arm(engine, oracle_and_texts, spark_arm):
-    _check_random_cursor_pages_equal_offset(engine, oracle_and_texts)
-
-
-def _check_random_cursor_pages_equal_offset(engine, oracle_and_texts):
     idx, _ = oracle_and_texts
     rng = random.Random(41)
     for trial in range(5):
@@ -262,3 +230,17 @@ def test_random_msearch_slices_equal_solo(engine, oracle_and_texts):
         for qid, q in batch.items():
             expected = bm25_topk(idx, q, k=k, mode=mode)
             assert got.get(qid, []) == expected, (trial, qid, q, mode, k)
+
+
+@pytest.mark.parametrize(
+    "check",
+    [
+        test_random_bm25_or_and,
+        test_random_bm25_not_and_bool,
+        test_random_expansions,
+        test_random_cursor_pages_equal_offset,
+    ],
+    ids=lambda f: f.__name__,
+)
+def test_random_bm25_on_spark_arm(engine, oracle_and_texts, spark_arm, check):
+    check(engine, oracle_and_texts)
