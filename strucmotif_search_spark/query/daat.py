@@ -461,9 +461,10 @@ def driver_work(n_shards: int, dfs) -> int:
     """The driver arm's cost for a plan whose scan terms (scoring members
     plus NOT-terms) have ``dfs``, in postings.  It reads ``sum(dfs)``
     postings in at most ``sum(min(df, n_shards))`` (term, shard) posting
-    lists over at most ``min(sum(dfs), n_shards)`` shards; fitted on the
-    plans in ``fits_driver``, to within ~15%, a posting costs ~0.8 us, a
-    list ~0.12 ms and a shard ~2 ms."""
+    lists over at most ``min(sum(dfs), n_shards)`` shards.  Fitted on the
+    34 plans in ``fits_driver``, a posting costs ~0.8 us, a list ~0.12 ms
+    and a shard ~2 ms; the fit's median error is 9%, its largest 39%
+    (plans under 650 ms, which it under-predicts)."""
     volume = sum(dfs)
     lists = sum(min(df, n_shards) for df in dfs)
     return volume + 150 * lists + 2_500 * min(volume, n_shards)
@@ -475,14 +476,14 @@ def fits_driver(n_shards: int, dfs) -> bool:
 
     That bound is the lowest measured crossover: on 2 shards the driver
     arm wins at 1.33M (1,087 / 1,470 ms) and ties at 1.53M (1,331 /
-    1,302).  With more shards the Spark arm has more tasks
-    to spread and the crossover sits higher, so the bound sends some plans
-    to Spark that the driver would answer faster: on 64 shards the driver
+    1,302).  With more shards the Spark arm has more tasks to spread and
+    the crossover sits higher, so the bound sends some plans to Spark
+    that the driver would answer faster: on 64 shards the driver
     wins at 1.46M (1,050 / 1,246) and 2.08M (1,589 / 1,683), ties at 1.82M
     (125 terms, 1,564 / 1,563) and loses at 2.46M (1,961 / 1,615); on 16
     shards it ties at 2.34M (2,075 / 1,962).  Every admitted plan below
     ran faster on the driver, every plan the Spark arm won is refused:
-    - 2 shards: 0.13M-1.07M, 172-926 / 612-1,168 ms;
+    - 2 shards: 0.13M-1.33M, 172-1,087 / 612-1,470 ms;
     - 16 shards: 0.23M-1.16M, 264-1,054 / 1,095-1,575 ms;
     - 64 shards: 0.28M-1.05M, 291-904 / 962-1,966 ms;
     - 375 shards, 32-360 rare terms (36-419 postings): 0.09M-0.99M,
