@@ -386,6 +386,54 @@ DECODED_POS_SCHEMA = StructType(
 )
 
 
+def decode_blocks(pdf: pd.DataFrame, with_positions: bool = False) -> pd.DataFrame:
+    """Decode a frame of posting blocks (``term_id``, ``doc_gaps``,
+    ``tfs``[, ``pos_data``]) -> one row per posting (term_id, doc_id,
+    tf[, positions]), in block order.  The kernel under
+    :func:`decode_postings` and the driver-side commit arm
+    (streaming/local_commit.py)."""
+    from ..codec import varint_decode
+
+    # whole-frame decode: varint is per-value independent, so the
+    # concatenation of the rows' buffers decodes to the concatenation of
+    # their values — one decode per column, no per-block Python loop (this
+    # sits on the REMOVE/compact hot path; a 128-posting block is far too
+    # little work per loop trip)
+    gap_bufs = [bytes(b) for b in pdf["doc_gaps"]]
+    blob = b"".join(gap_bufs)
+    raw = np.frombuffer(blob, dtype=np.uint8)
+    gaps = varint_decode(blob).astype(np.int64)
+    tfs = varint_decode(b"".join(bytes(b) for b in pdf["tfs"]))
+    tfs = tfs.astype(np.int64)
+    # postings per block = terminator bytes per doc_gaps buffer
+    ends = np.cumsum(
+        np.fromiter((len(b) for b in gap_bufs), np.int64, len(gap_bufs))
+    )
+    cum_end = np.cumsum((raw & 0x80) == 0)
+    counts = np.diff(np.concatenate([[0], cum_end[ends - 1]]))
+    # segmented delta-decode: global cumsum, minus each block's preceding
+    # prefix (a block's first gap is its absolute first id).  int64
+    # headroom: the running sum is bounded by (rows per frame, ~10^4 per
+    # Arrow batch) x max doc_id (< 2^40 at the 10^12-doc design point)
+    # ~ 2^53, far under 2^63
+    c = np.cumsum(gaps)
+    starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
+    base = np.where(starts > 0, c[starts - 1], 0)
+    doc_ids = c - np.repeat(base, counts)
+    cols = {
+        "term_id": np.repeat(pdf["term_id"].to_numpy(np.int64), counts),
+        "doc_id": doc_ids,
+        "tf": tfs,
+    }
+    if with_positions:
+        # per-posting runs are delimited by tf regardless of block
+        # boundaries, so one segmented decode covers the whole frame
+        cols["positions"] = unpack_positions(
+            b"".join(bytes(b) for b in pdf["pos_data"]), tfs
+        )
+    return pd.DataFrame(cols)
+
+
 def decode_postings(blocks: DataFrame, with_positions: bool = False) -> DataFrame:
     """Inverse of pack_postings -> (term_id, doc_id, tf[, positions]).  Used
     by tests, ADD/REMOVE repacks (E1-E3) and the orphan-consistency check
@@ -395,51 +443,9 @@ def decode_postings(blocks: DataFrame, with_positions: bool = False) -> DataFram
     io/DefaultInvertedIndex.java:472-510)."""
 
     def _unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codec import varint_decode
-
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # whole-batch decode: varint is per-value independent, so the
-            # concatenation of the rows' buffers decodes to the concatenation
-            # of their values — one decode per column per Arrow batch, no
-            # per-block Python loop (this sits on the REMOVE/compact hot
-            # path; a 128-posting block is far too little work per loop trip)
-            gap_bufs = [bytes(b) for b in pdf["doc_gaps"]]
-            blob = b"".join(gap_bufs)
-            raw = np.frombuffer(blob, dtype=np.uint8)
-            gaps = varint_decode(blob).astype(np.int64)
-            tfs = varint_decode(b"".join(bytes(b) for b in pdf["tfs"]))
-            tfs = tfs.astype(np.int64)
-            # postings per block = terminator bytes per doc_gaps buffer
-            ends = np.cumsum(
-                np.fromiter((len(b) for b in gap_bufs), np.int64, len(gap_bufs))
-            )
-            cum_end = np.cumsum((raw & 0x80) == 0)
-            counts = np.diff(np.concatenate([[0], cum_end[ends - 1]]))
-            # segmented delta-decode: global cumsum, minus each block's
-            # preceding prefix (a block's first gap is its absolute first id).
-            # int64 headroom: the running sum is bounded by (rows per Arrow
-            # batch, ~10^4) x max doc_id (< 2^40 at the 10^12-doc design
-            # point) ~ 2^53, far under 2^63
-            c = np.cumsum(gaps)
-            starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
-            base = np.where(starts > 0, c[starts - 1], 0)
-            doc_ids = c - np.repeat(base, counts)
-            cols = {
-                "term_id": np.repeat(
-                    pdf["term_id"].to_numpy(np.int64), counts
-                ),
-                "doc_id": doc_ids,
-                "tf": tfs,
-            }
-            if with_positions:
-                # per-posting runs are delimited by tf regardless of block
-                # boundaries, so one segmented decode covers the whole batch
-                cols["positions"] = unpack_positions(
-                    b"".join(bytes(b) for b in pdf["pos_data"]), tfs
-                )
-            yield pd.DataFrame(cols)
+            if len(pdf):
+                yield decode_blocks(pdf, with_positions)
 
     cols = ["term_id", "doc_gaps", "tfs"] + (
         ["pos_data"] if with_positions else []

@@ -19,6 +19,14 @@ an ``exclude_shards`` predicate (the Iceberg delete-file shape).  Only shards
 actually touched by the delta are repacked; everything else is reused
 by reference — at 10^12 scale this is the difference between an O(delta)
 commit and an O(corpus) rewrite.
+
+Two arms, one set of kernels: a small commit (the batch collected in one
+Spark job, the shards it touches small — ``fits_driver_commit``) runs on
+the driver (streaming/local_commit.py: pyarrow reads of the rows it needs,
+the build's numpy kernels, pyarrow writes); any other commit runs the
+Spark arm below.  Both publish row-identical tables through the same
+``_refs.json`` / ``_meta.json`` / CURRENT protocol, and each ``done``
+lineage event records the ``arm`` taken.
 """
 
 from __future__ import annotations
@@ -37,6 +45,11 @@ from ..build.norms import build_norms
 from ..build.postings import decode_postings, pack_postings
 from ..build.terms import build_stats
 from ..tokenizer import term_frequencies
+from . import local_commit
+from .local_commit import repeated_key_error
+
+# the most batch rows the driver arm collects; a larger batch runs on Spark
+MAX_BATCH = 10_000
 
 
 def _meta(store: IndexStore, gen: str) -> dict:
@@ -54,26 +67,72 @@ def _free_ids(spark: SparkSession, store: IndexStore, gen: str) -> DataFrame | N
 
 
 def _carry_refs(store: IndexStore, old_gen: str, exclude_shards: list[int]) -> list:
-    """New gen references the old gen's own files and transitively its refs,
-    each with the new exclusions appended."""
-    refs = [
-        {
-            "path": str(Path(store.root) / old_gen / "postings"),
-            "exclude_shards": sorted(exclude_shards),
-        }
+    """New gen references every posting part of the old gen (its own files
+    and, transitively, its refs), each with the new exclusions appended.
+    A generation that wrote no postings of its own (an ADD with nothing
+    new) contributes no ref, so no ref ever names a missing directory."""
+    return [
+        {"path": path, "exclude_shards": sorted(set(excl) | set(exclude_shards))}
+        for path, excl in store.posting_parts(old_gen)
     ]
-    old_refs = Path(store.root) / old_gen / "_refs.json"
-    if old_refs.exists():
-        for r in json.loads(old_refs.read_text()):
-            refs.append(
-                {
-                    "path": r["path"],
-                    "exclude_shards": sorted(
-                        set(r.get("exclude_shards", [])) | set(exclude_shards)
-                    ),
-                }
-            )
-    return refs
+
+
+def commit_work(n_docs: int, batch_rows: int, affected_docs: int) -> int:
+    """The driver arm's fitted cost of a commit, in units of one affected
+    doc (~90 us on a 4-core box): the affected shards' docs it decodes and
+    repacks, each batch row it tokenizes and packs (2 units), and the
+    ``doc_map`` it reads and rewrites whole (1/25 unit per indexed doc)."""
+    return n_docs // 25 + 2 * batch_rows + affected_docs
+
+
+def fits_driver_commit(n_docs: int, batch_rows: int, affected_docs: int) -> bool:
+    """Whether a commit runs on the driver arm: its ``commit_work`` is at
+    most 30,000.  Monotone in every argument, so a refusal before
+    ``affected_docs`` is known is final.
+
+    Measured with ``tools/arm_crossover.py commit`` (4-core box,
+    ``local[4]``, ``generate_corpus(n, seed=1)``, 8,192 docs per shard,
+    each commit on a fresh copy of the index; work: driver / Spark ms):
+    - 12k docs: ADD 200 4,688: 722 / 13,658; REMOVE 100 from one shard
+      8,872: 874 / 5,974; ADD 2,000 8,288: 965 / 10,909; ADD 8,000
+      20,288: 2,261 / 13,978; REMOVE 4,000 over both shards 20,480:
+      1,061 / 6,161;
+    - 160k docs: ADD 200 11,152: 1,277 / 10,548; REMOVE 100 from one
+      shard 14,792: 1,551 / 5,832; REMOVE 4,000 over all 20 shards
+      174,400: 16,044 / 20,133;
+    - 48k docs, positional: ADD 200 9,360: 2,866 / 14,087; REMOVE 100
+      from one shard 10,312: 2,833 / 13,590; REMOVE 2,400 over all 6
+      shards 54,720: 19,413 / 22,917.
+    Every admitted commit ran 4.4-19x faster on the driver.  No measured
+    commit ran faster on Spark: the two refused ones, a REMOVE spread
+    over every shard, came closest (the driver faster by 15% and 20%),
+    because both arms' cost grows at ~90 us per affected doc there.  The
+    bound sits below them, where the driver's lead is still several-fold,
+    and so also caps what the driver holds in memory (the affected
+    shards' decoded postings, ~100 per doc at this corpus's density)."""
+    return commit_work(n_docs, batch_rows, affected_docs) <= 30_000
+
+
+def _driver_commit(spark, store, old_gen, rows: DataFrame, place):
+    """The driver arm's placed commit when the rule admits it, else None.
+    ``rows`` is the batch's projection; it is collected once (the arm's
+    only Spark job) and handed to ``place``."""
+    stats = local_commit.read_table(store, "stats", old_gen)
+    n_docs = int(stats["n_docs"][0].as_py()) if stats.num_rows else 0
+    if not fits_driver_commit(n_docs, 0, 0):
+        return None
+    batch = rows.limit(MAX_BATCH + 1).toPandas()
+    if len(batch) > MAX_BATCH or not fits_driver_commit(n_docs, len(batch), 0):
+        return None
+    placed = place(batch)
+    if not fits_driver_commit(n_docs, len(batch), placed.affected_docs):
+        return None
+    return placed
+
+
+def _codec(spark: SparkSession) -> str:
+    codec = spark.conf.get("spark.sql.parquet.compression.codec", "zstd")
+    return {"uncompressed": "none"}.get(codec, codec)
 
 
 def add_documents(
@@ -86,9 +145,59 @@ def add_documents(
 
     Touches only the shards that receive new documents (normally just the
     tail shard + fresh shards, since new doc_ids are minted after max).
-    Returns the published generation name.
+    Exact duplicate rows in the batch collapse to one; a natural key that
+    still repeats raises ``ValueError``.  A small commit runs on the driver
+    arm (``fits_driver_commit``), any other on Spark; both publish the
+    same tables.  Returns the published generation name.
     """
     t0 = time.time()
+    old_gen = store.current_gen()
+    meta = _meta(store, old_gen)
+    local = _driver_commit(
+        spark, store, old_gen, new_docs.select(*DOC_KEY, "lang", content_col),
+        lambda batch: local_commit.LocalAdd(
+            store, old_gen, meta, batch, content_col
+        ),
+    )
+    if local is None:
+        return _add_spark(spark, store, new_docs, content_col, t0)
+    gen = store.new_gen()
+    store.log(gen=gen, stage="add", status="start", base=old_gen)
+    local.commit(gen, _codec(spark))
+    _publish(store, old_gen, gen, _grown_meta(meta, local.affected),
+             local.affected)
+    store.log(
+        gen=gen, stage="add", status="done", n_added=local.n_added,
+        affected_shards=len(local.affected),
+        wall_ms=int((time.time() - t0) * 1000), arm="driver",
+    )
+    return gen
+
+
+def _publish(store, old_gen, gen, meta: dict, affected: list[int]) -> None:
+    """Write the generation's ``_refs.json`` (the old postings minus the
+    affected shards) and ``_meta.json``, then flip CURRENT: the driver
+    arm's tail for both commit kinds."""
+    (Path(store.root) / gen / "_refs.json").write_text(
+        json.dumps(_carry_refs(store, old_gen, affected))
+    )
+    (Path(store.root) / gen / "_meta.json").write_text(json.dumps(meta))
+    store.publish(gen)
+
+
+def _grown_meta(meta: dict, affected: list[int]) -> dict:
+    """Minted ids past the old max open new shards: the shard count
+    grows to cover every affected shard."""
+    if not affected:
+        return meta
+    return {**meta, "n_shards": max(meta.get("n_shards") or 0, max(affected) + 1)}
+
+
+def _add_spark(
+    spark: SparkSession, store: IndexStore, new_docs: DataFrame,
+    content_col: str, t0: float,
+) -> str:
+    """The Spark arm of ``add_documents``."""
     old_gen = store.current_gen()
     meta = _meta(store, old_gen)
     dps = meta["docs_per_shard"]
@@ -96,11 +205,22 @@ def add_documents(
     doc_map = store.read_table(spark, "doc_map")
     terms = store.read_table(spark, "terms")
 
+    # E1 delta-plus: requested − known (left-anti on the natural key).
+    # Exact duplicate rows collapse to one; a key that still repeats would
+    # fan out in the id join below, so it is refused
+    unknown = new_docs.dropDuplicates([*DOC_KEY, "lang", content_col]).join(
+        doc_map.select(*DOC_KEY), on=DOC_KEY, how="left_anti"
+    )
+    repeated = (
+        unknown.groupBy(*DOC_KEY).count().where(F.col("count") > 1)
+        .select(*DOC_KEY).limit(1).collect()
+    )
+    if repeated:
+        raise repeated_key_error(tuple(repeated[0]))
+
     gen = store.new_gen()
     store.log(gen=gen, stage="add", status="start", base=old_gen)
 
-    # E1 delta-plus: requested − known (left-anti on the natural key)
-    unknown = new_docs.join(doc_map.select(*DOC_KEY), on=DOC_KEY, how="left_anti")
     max_id = doc_map.agg(F.max("doc_id")).first()[0]
     # doc-id minting with FREE-LIST REUSE (the reference's reclaim protocol,
     # DefaultStructureIndexProvider.java:36-89,114-122): ids retired by
@@ -168,7 +288,10 @@ def add_documents(
         )
         (Path(store.root) / gen / "_meta.json").write_text(json.dumps(meta))
         store.publish(gen)
-        store.log(gen=gen, stage="add", status="done", n_added=0)
+        store.log(
+            gen=gen, stage="add", status="done", n_added=0, affected_shards=0,
+            wall_ms=int((time.time() - t0) * 1000), arm="spark",
+        )
         return gen
     # free list shrinks by the consumed ids (reads from the OLD gen's table,
     # so the overwrite into the new gen is safe)
@@ -253,15 +376,16 @@ def add_documents(
     (Path(store.root) / gen / "_refs.json").write_text(
         json.dumps(_carry_refs(store, old_gen, affected))
     )
-    # minted ids past the old max open new shards: the shard count grows
-    meta["n_shards"] = max(meta.get("n_shards") or 0, max(affected) + 1)
-    (Path(store.root) / gen / "_meta.json").write_text(json.dumps(meta))
+    (Path(store.root) / gen / "_meta.json").write_text(
+        json.dumps(_grown_meta(meta, affected))
+    )
     tf_new.unpersist()
     store.publish(gen)
     n_added = ids.count()
     store.log(
         gen=gen, stage="add", status="done", n_added=n_added,
         affected_shards=len(affected), wall_ms=int((time.time() - t0) * 1000),
+        arm="spark",
     )
     return gen
 
@@ -274,8 +398,34 @@ def remove_documents(
     exactly; retired doc_ids go to the generation's free list, where the
     next ADD reuses them smallest-first (see ``add_documents``) — external
     references keyed by doc_id must therefore treat a REMOVE as
-    invalidating the id, not parking it."""
+    invalidating the id, not parking it.  A small commit runs on the
+    driver arm (``fits_driver_commit``), any other on Spark; both publish
+    the same tables."""
     t0 = time.time()
+    old_gen = store.current_gen()
+    meta = _meta(store, old_gen)
+    local = _driver_commit(
+        spark, store, old_gen, keys.select(*DOC_KEY),
+        lambda batch: local_commit.LocalRemove(store, old_gen, meta, batch),
+    )
+    if local is None:
+        return _remove_spark(spark, store, keys, t0)
+    gen = store.new_gen()
+    store.log(gen=gen, stage="remove", status="start", base=old_gen)
+    local.commit(gen, _codec(spark))
+    _publish(store, old_gen, gen, meta, local.affected)
+    store.log(
+        gen=gen, stage="remove", status="done",
+        affected_shards=len(local.affected),
+        wall_ms=int((time.time() - t0) * 1000), arm="driver",
+    )
+    return gen
+
+
+def _remove_spark(
+    spark: SparkSession, store: IndexStore, keys: DataFrame, t0: float
+) -> str:
+    """The Spark arm of ``remove_documents``."""
     old_gen = store.current_gen()
     meta = _meta(store, old_gen)
     dps = meta["docs_per_shard"]
@@ -343,6 +493,7 @@ def remove_documents(
     store.log(
         gen=gen, stage="remove", status="done",
         affected_shards=len(affected), wall_ms=int((time.time() - t0) * 1000),
+        arm="spark",
     )
     return gen
 
@@ -399,12 +550,18 @@ def compact(spark: SparkSession, store: IndexStore) -> str:
 
 
 def verify_consistency(spark: SparkSession, store: IndexStore) -> dict:
-    """E5 orphan check + df/cf cross-check; returns counts (all zeros = OK).
+    """E5 orphan check + df/cf cross-check + doc-dictionary uniqueness;
+    returns counts (all zeros = OK).  ``duplicate_docs`` counts the
+    ``doc_map`` rows beyond the first per ``doc_id`` plus those beyond the
+    first per natural key.
 
     Mirrors the reference's lingering-key reconciliation
     (StrucmotifUpdate.java:536-546 / DefaultInvertedIndex.reportKnownKeys).
     """
     doc_map = store.read_table(spark, "doc_map")
+    n, n_ids, n_keys = doc_map.agg(
+        F.count("*"), F.countDistinct("doc_id"), F.countDistinct(*DOC_KEY)
+    ).first()
     terms = store.read_table(spark, "terms")
     decoded = decode_postings(store.read_postings(spark))
     orphans = (
@@ -424,7 +581,10 @@ def verify_consistency(spark: SparkSession, store: IndexStore) -> dict:
         )
         .count()
     )
-    return {"orphan_doc_ids": orphans, "inconsistent_terms": bad_terms}
+    return {
+        "orphan_doc_ids": orphans, "inconsistent_terms": bad_terms,
+        "duplicate_docs": (n - n_ids) + (n - n_keys),
+    }
 
 
 def generation_changes(

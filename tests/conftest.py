@@ -18,3 +18,16 @@ def spark_arm(monkeypatch):
     from strucmotif_search_spark.query import daat
 
     monkeypatch.setattr(daat, "fits_driver", lambda n_shards, dfs: False)
+
+
+@pytest.fixture
+def spark_commit_arm(monkeypatch):
+    """Send every ADD / REMOVE to the Spark arm of the commit
+    (streaming/incremental.py), for tests that must hold on both arms (a
+    small commit otherwise takes the driver arm)."""
+    from strucmotif_search_spark.streaming import incremental
+
+    monkeypatch.setattr(
+        incremental, "fits_driver_commit",
+        lambda n_docs, batch_rows, affected_docs: False,
+    )

@@ -18,7 +18,7 @@ def test_empty_source_publishes_empty_generation(spark, tmp_path):
     assert eng.search("import", k=10).collect() == []
     assert eng.stats.first()["n_docs"] == 0
     assert verify_consistency(spark, store) == {
-        "orphan_doc_ids": 0, "inconsistent_terms": 0,
+        "orphan_doc_ids": 0, "inconsistent_terms": 0, "duplicate_docs": 0,
     }
 
 

@@ -71,7 +71,9 @@ def test_add_matches_fresh_rebuild(spark, corpus, tmp_path_factory):
     assert inc_stats.equals(fresh_stats)
     # terms table df/cf match the recount
     res = verify_consistency(spark, store_inc)
-    assert res == {"orphan_doc_ids": 0, "inconsistent_terms": 0}
+    assert res == {
+        "orphan_doc_ids": 0, "inconsistent_terms": 0, "duplicate_docs": 0,
+    }
 
 
 def test_add_counts_the_shards_it_opens(spark, corpus, tmp_path_factory):
@@ -115,7 +117,9 @@ def test_remove_shrinks_exactly_and_query_parity(spark, corpus, tmp_path_factory
     # remove the 'extra' subset
     remove_documents(spark, store, extra.select("repo", "path", "commit"))
     res = verify_consistency(spark, store)
-    assert res == {"orphan_doc_ids": 0, "inconsistent_terms": 0}
+    assert res == {
+        "orphan_doc_ids": 0, "inconsistent_terms": 0, "duplicate_docs": 0,
+    }
 
     # engine over removed index == oracle over base-only corpus
     eng = SearchEngine(spark, store)
@@ -216,7 +220,7 @@ def test_docid_free_list_reuse(spark, corpus, tmp_path_factory):
     free2 = spark.read.parquet(str(store.root / store.current_gen() / "free_ids"))
     assert free2.count() == 0
     assert verify_consistency(spark, store) == {
-        "orphan_doc_ids": 0, "inconsistent_terms": 0,
+        "orphan_doc_ids": 0, "inconsistent_terms": 0, "duplicate_docs": 0,
     }
     # query parity vs oracle over the full corpus through the churned index
     dm = eng2.doc_map.select("doc_id", "repo", "path", "commit").toPandas()
@@ -236,6 +240,12 @@ def test_docid_free_list_reuse(spark, corpus, tmp_path_factory):
         )
 
 
+def test_docid_free_list_reuse_spark_arm(
+    spark, corpus, tmp_path_factory, spark_commit_arm
+):
+    test_docid_free_list_reuse(spark, corpus, tmp_path_factory)
+
+
 def test_remove_on_fused_base_reads_back(spark, corpus, tmp_path_factory):
     """REMOVE against the fused/bucketed production layout (the layout
     __spark_entry__ and bench publish) must produce a readable generation —
@@ -249,7 +259,7 @@ def test_remove_on_fused_base_reads_back(spark, corpus, tmp_path_factory):
     eng = SearchEngine(spark, store)
     assert eng.doc_map.count() == N0
     assert verify_consistency(spark, store) == {
-        "orphan_doc_ids": 0, "inconsistent_terms": 0,
+        "orphan_doc_ids": 0, "inconsistent_terms": 0, "duplicate_docs": 0,
     }
     # query parity vs oracle over the surviving corpus
     dm = eng.doc_map.select("doc_id", "repo", "path", "commit").toPandas()
@@ -313,7 +323,7 @@ def test_compact_collapses_refs_and_restores_bucketing(
     )
     assert "Exchange" not in plan
     assert verify_consistency(spark, store) == {
-        "orphan_doc_ids": 0, "inconsistent_terms": 0,
+        "orphan_doc_ids": 0, "inconsistent_terms": 0, "duplicate_docs": 0,
     }
 
 
@@ -366,7 +376,7 @@ def test_compact_after_remove_restores_bucketing(
     assert "Exchange" not in plan
     assert eng.doc_map.count() == N0
     assert verify_consistency(spark, store) == {
-        "orphan_doc_ids": 0, "inconsistent_terms": 0,
+        "orphan_doc_ids": 0, "inconsistent_terms": 0, "duplicate_docs": 0,
     }
 
 
@@ -644,7 +654,7 @@ def test_free_list_mint_base_avoids_collision(spark, tmp_path_factory):
     assert dm.is_unique, "duplicate doc_ids minted"
     assert len(dm) == 98 + extra.count()
     assert verify_consistency(spark, store) == {
-        "orphan_doc_ids": 0, "inconsistent_terms": 0,
+        "orphan_doc_ids": 0, "inconsistent_terms": 0, "duplicate_docs": 0,
     }
     all_docs.unpersist()
 
@@ -673,10 +683,20 @@ def test_add_after_remove_all(spark, tmp_path_factory):
     dm = eng.doc_map.select("doc_id").toPandas()["doc_id"]
     assert dm.is_unique
     assert verify_consistency(spark, store) == {
-        "orphan_doc_ids": 0, "inconsistent_terms": 0,
+        "orphan_doc_ids": 0, "inconsistent_terms": 0, "duplicate_docs": 0,
     }
     assert eng.search("import", k=5, with_meta=False).count() > 0
     docs.unpersist()
+
+
+def test_free_list_mint_base_avoids_collision_spark_arm(
+    spark, tmp_path_factory, spark_commit_arm
+):
+    test_free_list_mint_base_avoids_collision(spark, tmp_path_factory)
+
+
+def test_add_after_remove_all_spark_arm(spark, tmp_path_factory, spark_commit_arm):
+    test_add_after_remove_all(spark, tmp_path_factory)
 
 
 def test_delete_by_query_compact_time_travel_triple(
@@ -849,3 +869,9 @@ def test_random_mutation_history_equals_rebuild(
     for gen_id, want in snapshots:
         got = hits(SearchEngine(spark, store, gen=gen_id))
         assert got == want, f"time-travel divergence at {gen_id}"
+
+
+def test_random_mutation_history_equals_rebuild_spark_arm(
+    spark, corpus, tmp_path_factory, spark_commit_arm
+):
+    test_random_mutation_history_equals_rebuild(spark, corpus, tmp_path_factory)

@@ -64,8 +64,7 @@ def _got(engine, phrase: str):
     return sorted(tuple(r) for r in joined.collect())
 
 
-@pytest.fixture(scope="module")
-def stores(spark, tmp_path_factory):
+def _stores(spark, tmp_path_factory):
     base = spark.createDataFrame(BASE, _SCHEMA)
     extra = spark.createDataFrame(EXTRA, _SCHEMA)
     store = IndexStore(tmp_path_factory.mktemp("posinc"))
@@ -76,6 +75,18 @@ def stores(spark, tmp_path_factory):
     return store, base, extra
 
 
+@pytest.fixture(scope="module")
+def stores(spark, tmp_path_factory):
+    return _stores(spark, tmp_path_factory)
+
+
+@pytest.fixture(scope="module")
+def spark_arm_stores(spark, tmp_path_factory):
+    """A second positional store, for the same ADD / REMOVE sequence on
+    the Spark commit arm."""
+    return _stores(spark, tmp_path_factory)
+
+
 def test_positional_add_keeps_phrase_capability(spark, stores):
     store, base, extra = stores
     add_documents(spark, store, extra)
@@ -84,7 +95,7 @@ def test_positional_add_keeps_phrase_capability(spark, stores):
     for phrase in ("new york", "def def", "new york new york", "absent words"):
         assert _got(eng, phrase) == _expected(BASE + EXTRA, phrase)
     assert verify_consistency(spark, store) == {
-        "orphan_doc_ids": 0, "inconsistent_terms": 0,
+        "orphan_doc_ids": 0, "inconsistent_terms": 0, "duplicate_docs": 0,
     }
 
 
@@ -99,7 +110,7 @@ def test_positional_remove_keeps_phrase_capability(spark, stores):
     for phrase in ("new york", "def def", "york city"):
         assert _got(eng, phrase) == _expected(survivors, phrase)
     assert verify_consistency(spark, store) == {
-        "orphan_doc_ids": 0, "inconsistent_terms": 0,
+        "orphan_doc_ids": 0, "inconsistent_terms": 0, "duplicate_docs": 0,
     }
 
 
@@ -125,5 +136,17 @@ def test_positional_compact_restores_bucketing(spark, stores, spark_arm):
     )
     assert "Exchange" not in plan
     assert verify_consistency(spark, store) == {
-        "orphan_doc_ids": 0, "inconsistent_terms": 0,
+        "orphan_doc_ids": 0, "inconsistent_terms": 0, "duplicate_docs": 0,
     }
+
+
+def test_positional_add_keeps_phrase_capability_spark_arm(
+    spark, spark_arm_stores, spark_commit_arm
+):
+    test_positional_add_keeps_phrase_capability(spark, spark_arm_stores)
+
+
+def test_positional_remove_keeps_phrase_capability_spark_arm(
+    spark, spark_arm_stores, spark_commit_arm
+):
+    test_positional_remove_keeps_phrase_capability(spark, spark_arm_stores)

@@ -498,6 +498,7 @@ def test_delete_by_query_removes_full_match_set(spark, tmp_path_factory):
     assert verify_consistency(spark, store) == {
         "orphan_doc_ids": 0,
         "inconsistent_terms": 0,
+        "duplicate_docs": 0,
     }
     # surviving docs still rank identically vs an oracle over survivors
     survivors = {

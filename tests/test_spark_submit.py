@@ -99,6 +99,7 @@ def test_spark_submit_pyfiles_multi_executor(spark, tmp_path):
     assert verify_consistency(spark, store) == {
         "orphan_doc_ids": 0,
         "inconsistent_terms": 0,
+        "duplicate_docs": 0,
     }
 
     # top-k parity with the pure-numpy oracle (rank-identical, scores @6dp)
@@ -184,7 +185,7 @@ def test_update_submit_operation_chain(spark, tmp_path):
     assert out["removed"]  # pre-compact generations reclaimed
     out = run("RECOVER")
     assert out["healthy"] and out["report"] == {
-        "orphan_doc_ids": 0, "inconsistent_terms": 0,
+        "orphan_doc_ids": 0, "inconsistent_terms": 0, "duplicate_docs": 0,
     }
 
     # deleted term really is gone from the surviving corpus

@@ -45,6 +45,7 @@ def test_stream_ingest_available_now(spark, tmp_path_factory):
     assert verify_consistency(spark, store) == {
         "orphan_doc_ids": 0,
         "inconsistent_terms": 0,
+        "duplicate_docs": 0,
     }
 
     # restart over the same source: offsets consumed, nothing re-added

@@ -1,21 +1,37 @@
-"""Time one plan family on both arms of the DAAT kernel (query/daat.py), to
-place and check ``daat.fits_driver``'s bound.
+"""Time both arms of the DAAT kernel (query/daat.py) on one plan family, or
+both arms of an incremental commit (streaming/incremental.py), to place
+and check ``daat.fits_driver``'s and ``incremental.fits_driver_commit``'s
+bounds.
 
     python tools/arm_crossover.py INDEX_DIR DOCS DOCS_PER_SHARD \\
         volume 131072 262144 ...   # OR plans of the most frequent terms
     python tools/arm_crossover.py INDEX_DIR DOCS DOCS_PER_SHARD \\
         shards 32 64 ...           # one rare (df <= 2) term per shard
+    python tools/arm_crossover.py INDEX_DIR DOCS DOCS_PER_SHARD \\
+        commit add:200 remove:100/1 remove:4000/20 ...
+    python tools/arm_crossover.py INDEX_DIR DOCS DOCS_PER_SHARD \\
+        commit-positions ...       # the same on a positional index
 
-Builds ``generate_corpus(DOCS, seed=1)`` under INDEX_DIR on first use, then
-prints one JSON line per plan: its shard count, terms, postings (volume),
-touched shards, ``daat.driver_work``, ``daat.fits_driver`` and the median of
-5 warm ``search().collect()`` per arm.  For the volume family each target is
-the smallest top-df prefix reaching it.
+Builds ``generate_corpus(DOCS, seed=1)`` under INDEX_DIR on first use.  A
+plan family prints one JSON line per plan: its shard count, terms,
+postings (volume), touched shards, ``daat.driver_work``,
+``daat.fits_driver`` and the median of 5 warm ``search().collect()`` per
+arm.  For the volume family each target is the smallest top-df prefix
+reaching it.
+
+``commit`` takes ``add:ROWS`` (new documents, ``generate_corpus(ROWS,
+seed=2)`` under fresh repo names) and ``remove:ROWS/SHARDS`` (ROWS indexed
+documents spread evenly over the first SHARDS shards) and prints one JSON
+line per commit: the index's docs, the batch rows, the affected shards and
+the docs they hold, ``commit_work``, ``fits_driver_commit`` and the wall
+of the commit on each arm, each on a fresh copy of the index (driver
+arm: median of 2 runs, one before and one after the Spark arm's run).
 """
 
 from __future__ import annotations
 
 import json
+import shutil
 import statistics
 import sys
 import time
@@ -30,6 +46,10 @@ from strucmotif_search_spark.corpus import generate_corpus  # noqa: E402
 from strucmotif_search_spark.engine import SearchEngine  # noqa: E402
 from strucmotif_search_spark.query import daat  # noqa: E402
 from strucmotif_search_spark.session import get_spark  # noqa: E402
+from strucmotif_search_spark.streaming import (  # noqa: E402
+    incremental,
+    local_commit,
+)
 
 
 def timed(eng: SearchEngine, query: str, on_driver: bool, reps: int = 5) -> float:
@@ -68,9 +88,80 @@ def plans(eng: SearchEngine, family: str, targets: list[int]) -> list[list[str]]
     return [first_shard[:s] for s in targets]
 
 
+def commit_batch(spark, eng: SearchEngine, target: str):
+    """(commit function, batch frame) for one ``commit`` target."""
+    kind, size = target.split(":")
+    if kind == "add":
+        docs = generate_corpus(spark, int(size), seed=2)
+        return incremental.add_documents, docs.withColumn(
+            "repo", F.concat(F.lit("added/"), "repo")
+        ).cache()
+    rows, shards = (int(x) for x in size.split("/"))
+    dm = eng.doc_map.select("repo", "path", "commit", "shard").toPandas()
+    picked = (
+        dm[dm["shard"] < shards].sort_values(["repo", "path", "commit"])
+        .groupby("shard").head(-(-rows // shards)).head(rows)
+    )
+    return incremental.remove_documents, spark.createDataFrame(
+        picked[["repo", "path", "commit"]]
+    ).cache()
+
+
+def timed_commit(spark, root: str, fn, batch, on_driver: bool) -> tuple:
+    """Wall ms of one commit on a fresh copy of the index at ``root``, and
+    its ``done`` lineage event."""
+    copy = f"{root}.commit-copy"
+    shutil.rmtree(copy, ignore_errors=True)
+    shutil.copytree(root, copy)
+    rule = incremental.fits_driver_commit
+    incremental.fits_driver_commit = lambda *a: on_driver
+    try:
+        store = IndexStore(copy)
+        t0 = time.perf_counter()
+        fn(spark, store, batch)
+        ms = (time.perf_counter() - t0) * 1000
+    finally:
+        incremental.fits_driver_commit = rule
+    done = store.lineage()[-1]
+    shutil.rmtree(copy, ignore_errors=True)
+    return ms, done
+
+
+def commits(spark, root: str, eng: SearchEngine, targets: list[str]) -> None:
+    store = IndexStore(root)
+    meta = incremental._meta(store, eng.gen)
+    n_docs = eng._stats_row["n_docs"]
+    for target in targets:
+        fn, batch = commit_batch(spark, eng, target)
+        pdf = batch.select("repo", "path", "commit", *(
+            ["lang", "content"] if fn is incremental.add_documents else []
+        )).toPandas()
+        placed = (
+            local_commit.LocalAdd(store, eng.gen, meta, pdf, "content")
+            if fn is incremental.add_documents
+            else local_commit.LocalRemove(store, eng.gen, meta, pdf)
+        )
+        rows, held = len(pdf), placed.affected_docs
+        driver = [timed_commit(spark, root, fn, batch, True)]
+        spark_ms, done = timed_commit(spark, root, fn, batch, False)
+        driver.append(timed_commit(spark, root, fn, batch, True))
+        assert done["arm"] == "spark"
+        assert all(d["arm"] == "driver" for _ms, d in driver), driver
+        print(json.dumps({
+            "target": target, "n_docs": n_docs, "rows": rows,
+            "affected_shards": len(placed.affected), "affected_docs": held,
+            "work": incremental.commit_work(n_docs, rows, held),
+            "fits_driver_commit": incremental.fits_driver_commit(
+                n_docs, rows, held
+            ),
+            "driver_ms": round(statistics.median(ms for ms, _d in driver)),
+            "spark_ms": round(spark_ms),
+        }), flush=True)
+        batch.unpersist()
+
+
 def main() -> None:
     root, n, dps, family = sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4]
-    targets = [int(x) for x in sys.argv[5:]]
     spark = get_spark(
         "arm-crossover", cores=4,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
@@ -78,11 +169,16 @@ def main() -> None:
     store = IndexStore(root)
     if store.current_gen() is None:
         build_index(
-            spark, generate_corpus(spark, n, seed=1), store, docs_per_shard=dps
+            spark, generate_corpus(spark, n, seed=1), store, docs_per_shard=dps,
+            with_positions=family == "commit-positions",
         )
     eng = SearchEngine(spark, store)
+    if family.startswith("commit"):
+        commits(spark, root, eng, sys.argv[5:])
+        spark.stop()
+        return
     n_shards = eng.meta["n_shards"]
-    for terms in plans(eng, family, targets):
+    for terms in plans(eng, family, [int(x) for x in sys.argv[5:]]):
         query = " ".join(terms)
         dfs = eng.plan(query).dfs
         blocks = eng._local_blocks(
