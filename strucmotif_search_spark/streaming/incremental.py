@@ -20,11 +20,12 @@ actually touched by the delta are repacked; everything else is reused
 by reference — at 10^12 scale this is the difference between an O(delta)
 commit and an O(corpus) rewrite.
 
-Two arms, one set of kernels: a small commit (the batch collected in one
-Spark job, the shards it touches small — ``fits_driver_commit``) runs on
-the driver (streaming/local_commit.py: pyarrow reads of the rows it needs,
-the build's numpy kernels, pyarrow writes); any other commit runs the
-Spark arm below.  Both publish row-identical tables through the same
+Two arms, one set of kernels: a commit the driver can hold (the batch
+collected in one Spark job, its estimated memory within one task slot's
+heap — ``fits_driver_commit``) runs on the driver
+(streaming/local_commit.py: pyarrow reads of the rows it needs, the
+build's numpy kernels, pyarrow writes); any other commit runs the Spark
+arm below.  Both publish row-identical tables through the same
 ``_refs.json`` / ``_meta.json`` / CURRENT protocol, and each ``done``
 lineage event records the ``arm`` taken.
 """
@@ -47,10 +48,6 @@ from ..build.terms import build_stats
 from ..tokenizer import term_frequencies
 from . import local_commit
 from .local_commit import repeated_key_error
-
-# the most batch rows the driver arm collects; a larger batch runs on Spark
-MAX_BATCH = 10_000
-
 
 def _meta(store: IndexStore, gen: str) -> dict:
     return json.loads((Path(store.root) / gen / "_meta.json").read_text())
@@ -77,55 +74,94 @@ def _carry_refs(store: IndexStore, old_gen: str, exclude_shards: list[int]) -> l
     ]
 
 
-def commit_work(n_docs: int, batch_rows: int, affected_docs: int) -> int:
-    """The driver arm's fitted cost of a commit, in units of one affected
-    doc (~90 us on a 4-core box): the affected shards' docs it decodes and
-    repacks, each batch row it tokenizes and packs (2 units), and the
-    ``doc_map`` it reads and rewrites whole (1/25 unit per indexed doc)."""
-    return n_docs // 25 + 2 * batch_rows + affected_docs
+# the most a commit may add to the driver's resident memory and still run
+# there, in KB: the heap ``session.get_spark`` gives one task slot (768 MB),
+# as the driver arm is one single-threaded task
+DRIVER_KB = 768 * 1024
 
 
-def fits_driver_commit(n_docs: int, batch_rows: int, affected_docs: int) -> bool:
-    """Whether a commit runs on the driver arm: its ``commit_work`` is at
-    most 30,000.  Monotone in every argument, so a refusal before
+def commit_kb(
+    n_docs: int, n_terms: int, batch_rows: int, affected_docs: int,
+    positional: bool,
+) -> int:
+    """The driver arm's fitted peak resident growth for a commit, in KB:
+    1/3 KB per indexed doc and per vocabulary term (``doc_map`` and
+    ``terms`` are read and rewritten whole), 20 KB per batch row (an ADD
+    row's content and tokens; a REMOVE key row costs far less, but one
+    weight keeps the collect limit simple) and 16 KB per doc the affected
+    shards hold (their decoded, sorted and repacked postings).  Rows and
+    affected docs cost twice as much on a positional index."""
+    scale = 2 if positional else 1
+    per_commit = 20 * batch_rows + 16 * affected_docs
+    return (n_docs + n_terms) // 3 + scale * per_commit
+
+
+def fits_driver_commit(
+    n_docs: int, n_terms: int, batch_rows: int, affected_docs: int,
+    positional: bool,
+) -> bool:
+    """Whether a commit runs on the driver arm: its ``commit_kb`` is at
+    most ``DRIVER_KB``.  Monotone in every count, so a refusal before
     ``affected_docs`` is known is final.
 
-    Measured with ``tools/arm_crossover.py commit`` (4-core box,
-    ``local[4]``, ``generate_corpus(n, seed=1)``, 8,192 docs per shard,
-    each commit on a fresh copy of the index; work: driver / Spark ms):
-    - 12k docs: ADD 200 4,688: 722 / 13,658; REMOVE 100 from one shard
-      8,872: 874 / 5,974; ADD 2,000 8,288: 965 / 10,909; ADD 8,000
-      20,288: 2,261 / 13,978; REMOVE 4,000 over both shards 20,480:
-      1,061 / 6,161;
-    - 160k docs: ADD 200 11,152: 1,277 / 10,548; REMOVE 100 from one
-      shard 14,792: 1,551 / 5,832; REMOVE 4,000 over all 20 shards
-      174,400: 16,044 / 20,133;
-    - 48k docs, positional: ADD 200 9,360: 2,866 / 14,087; REMOVE 100
-      from one shard 10,312: 2,833 / 13,590; REMOVE 2,400 over all 6
-      shards 54,720: 19,413 / 22,917.
-    Every admitted commit ran 4.4-19x faster on the driver.  No measured
-    commit ran faster on Spark: the two refused ones, a REMOVE spread
-    over every shard, came closest (the driver faster by 15% and 20%),
-    because both arms' cost grows at ~90 us per affected doc there.  The
-    bound sits below them, where the driver's lead is still several-fold,
-    and so also caps what the driver holds in memory (the affected
-    shards' decoded postings, ~100 per doc at this corpus's density)."""
-    return commit_work(n_docs, batch_rows, affected_docs) <= 30_000
+    The bound is placed by memory, not by speed: no measured commit ran
+    faster on Spark.  Measured with ``tools/arm_crossover.py commit``
+    (4-core box, ``local[4]``, ``generate_corpus(n, seed=1)``, 8,192 docs
+    per shard, one commit per process on a fresh copy of the index;
+    ``commit_kb`` / measured growth of the driver's RSS in MB, then
+    driver / Spark ms):
+    - 12k docs, 20,785 terms: ADD 200 74/74, 1,073/16,174; ADD 8,000
+      226/189, 2,981/19,778; ADD 24,000 539/523, 7,292/28,047; REMOVE 100
+      from one shard 141/140, 1,273/12,337; REMOVE 6,000 over both shards
+      315/133, 1,340/13,385;
+    - the same, positional: ADD 200 137/151, 2,386/15,776; ADD 8,000
+      442/377, 7,493/25,106; REMOVE 100 from one shard 271/303,
+      4,126/22,207; REMOVE 6,000 over both shards 620/327, 4,500/21,386;
+    - 12k docs with 64 unique tokens each (``commit-vocab``), 788,785
+      terms: ADD 200 324/280, 4,242/18,988; REMOVE 100 from one shard
+      391/474, 5,487/17,674;
+    - 96k docs, 26,395 terms: ADD 200 136/147, 1,744/14,253; REMOVE 100
+      from one shard 170/208, 2,083/16,017; ADD 8,000 288/265,
+      4,296/25,234; REMOVE 4,800 over all 12 shards 1,634/1,351 (refused),
+      13,327/24,023.
+    ``commit_kb`` reads 18% under to 21% over the measured growth, and
+    up to 2.4x over for a REMOVE of many keys.  The driver ran 1.8-15x
+    faster on every commit, the refused one included: the Spark arm pays
+    ~12-16 s of fixed jobs and per-row work that grows as fast as the
+    driver's (ADD 24,000: 28 s), so no batch the driver can hold reaches
+    a time crossover.  What the driver cannot do is hold a large commit:
+    the one refused above grew it by 1.35 GB."""
+    return commit_kb(
+        n_docs, n_terms, batch_rows, affected_docs, positional
+    ) <= DRIVER_KB
 
 
-def _driver_commit(spark, store, old_gen, rows: DataFrame, place):
+def max_driver_rows(n_docs: int, n_terms: int, positional: bool) -> int:
+    """The most batch rows ``fits_driver_commit`` admits before the
+    affected shards are known."""
+    fixed = commit_kb(n_docs, n_terms, 0, 0, positional)
+    per_row = commit_kb(0, 0, 1, 0, positional)
+    return max(DRIVER_KB - fixed, 0) // per_row
+
+
+def _driver_commit(spark, store, old_gen, meta, rows: DataFrame, place):
     """The driver arm's placed commit when the rule admits it, else None.
     ``rows`` is the batch's projection; it is collected once (the arm's
     only Spark job) and handed to ``place``."""
     stats = local_commit.read_table(store, "stats", old_gen)
     n_docs = int(stats["n_docs"][0].as_py()) if stats.num_rows else 0
-    if not fits_driver_commit(n_docs, 0, 0):
+    n_terms = local_commit.count_rows(store, "terms", old_gen)
+    wp = bool(meta.get("with_positions"))
+    if not fits_driver_commit(n_docs, n_terms, 0, 0, wp):
         return None
-    batch = rows.limit(MAX_BATCH + 1).toPandas()
-    if len(batch) > MAX_BATCH or not fits_driver_commit(n_docs, len(batch), 0):
+    # one row past what the rule admits shows that the batch is larger
+    batch = rows.limit(max_driver_rows(n_docs, n_terms, wp) + 1).toPandas()
+    if not fits_driver_commit(n_docs, n_terms, len(batch), 0, wp):
         return None
     placed = place(batch)
-    if not fits_driver_commit(n_docs, len(batch), placed.affected_docs):
+    if not fits_driver_commit(
+        n_docs, n_terms, len(batch), placed.affected_docs, wp
+    ):
         return None
     return placed
 
@@ -154,13 +190,16 @@ def add_documents(
     old_gen = store.current_gen()
     meta = _meta(store, old_gen)
     local = _driver_commit(
-        spark, store, old_gen, new_docs.select(*DOC_KEY, "lang", content_col),
+        spark, store, old_gen, meta,
+        new_docs.select(*DOC_KEY, "lang", content_col),
         lambda batch: local_commit.LocalAdd(
             store, old_gen, meta, batch, content_col
         ),
     )
     if local is None:
-        return _add_spark(spark, store, new_docs, content_col, t0)
+        return _add_spark(
+            spark, store, old_gen, meta, new_docs, content_col, t0
+        )
     gen = store.new_gen()
     store.log(gen=gen, stage="add", status="start", base=old_gen)
     local.commit(gen, _codec(spark))
@@ -176,8 +215,8 @@ def add_documents(
 
 def _publish(store, old_gen, gen, meta: dict, affected: list[int]) -> None:
     """Write the generation's ``_refs.json`` (the old postings minus the
-    affected shards) and ``_meta.json``, then flip CURRENT: the driver
-    arm's tail for both commit kinds."""
+    affected shards) and ``_meta.json``, then flip CURRENT: the tail of
+    every ADD and REMOVE, on either arm."""
     (Path(store.root) / gen / "_refs.json").write_text(
         json.dumps(_carry_refs(store, old_gen, affected))
     )
@@ -194,12 +233,10 @@ def _grown_meta(meta: dict, affected: list[int]) -> dict:
 
 
 def _add_spark(
-    spark: SparkSession, store: IndexStore, new_docs: DataFrame,
-    content_col: str, t0: float,
+    spark: SparkSession, store: IndexStore, old_gen: str, meta: dict,
+    new_docs: DataFrame, content_col: str, t0: float,
 ) -> str:
     """The Spark arm of ``add_documents``."""
-    old_gen = store.current_gen()
-    meta = _meta(store, old_gen)
     dps = meta["docs_per_shard"]
     wp = bool(meta.get("with_positions"))
     doc_map = store.read_table(spark, "doc_map")
@@ -283,11 +320,7 @@ def _add_spark(
             store.write_table(store.read_table(spark, t, old_gen), t, gen)
         if free is not None:
             store.write_table(free, "free_ids", gen)
-        (Path(store.root) / gen / "_refs.json").write_text(
-            json.dumps(_carry_refs(store, old_gen, []))
-        )
-        (Path(store.root) / gen / "_meta.json").write_text(json.dumps(meta))
-        store.publish(gen)
+        _publish(store, old_gen, gen, meta, [])
         store.log(
             gen=gen, stage="add", status="done", n_added=0, affected_shards=0,
             wall_ms=int((time.time() - t0) * 1000), arm="spark",
@@ -373,14 +406,8 @@ def _add_spark(
     pack_postings(union, with_positions=wp).write.mode("overwrite").parquet(
         str(Path(store.root) / gen / "postings" / "chunk=add")
     )
-    (Path(store.root) / gen / "_refs.json").write_text(
-        json.dumps(_carry_refs(store, old_gen, affected))
-    )
-    (Path(store.root) / gen / "_meta.json").write_text(
-        json.dumps(_grown_meta(meta, affected))
-    )
     tf_new.unpersist()
-    store.publish(gen)
+    _publish(store, old_gen, gen, _grown_meta(meta, affected), affected)
     n_added = ids.count()
     store.log(
         gen=gen, stage="add", status="done", n_added=n_added,
@@ -405,11 +432,11 @@ def remove_documents(
     old_gen = store.current_gen()
     meta = _meta(store, old_gen)
     local = _driver_commit(
-        spark, store, old_gen, keys.select(*DOC_KEY),
+        spark, store, old_gen, meta, keys.select(*DOC_KEY),
         lambda batch: local_commit.LocalRemove(store, old_gen, meta, batch),
     )
     if local is None:
-        return _remove_spark(spark, store, keys, t0)
+        return _remove_spark(spark, store, old_gen, meta, keys, t0)
     gen = store.new_gen()
     store.log(gen=gen, stage="remove", status="start", base=old_gen)
     local.commit(gen, _codec(spark))
@@ -423,11 +450,10 @@ def remove_documents(
 
 
 def _remove_spark(
-    spark: SparkSession, store: IndexStore, keys: DataFrame, t0: float
+    spark: SparkSession, store: IndexStore, old_gen: str, meta: dict,
+    keys: DataFrame, t0: float,
 ) -> str:
     """The Spark arm of ``remove_documents``."""
-    old_gen = store.current_gen()
-    meta = _meta(store, old_gen)
     dps = meta["docs_per_shard"]
     wp = bool(meta.get("with_positions"))
     doc_map = store.read_table(spark, "doc_map")
@@ -485,11 +511,7 @@ def _remove_spark(
     surviving_blocks.write.mode("overwrite").parquet(
         str(Path(store.root) / gen / "postings" / "chunk=remove")
     )
-    (Path(store.root) / gen / "_refs.json").write_text(
-        json.dumps(_carry_refs(store, old_gen, affected))
-    )
-    (Path(store.root) / gen / "_meta.json").write_text(json.dumps(meta))
-    store.publish(gen)
+    _publish(store, old_gen, gen, meta, affected)
     store.log(
         gen=gen, stage="remove", status="done",
         affected_shards=len(affected), wall_ms=int((time.time() - t0) * 1000),

@@ -81,6 +81,15 @@ def read_table(store: IndexStore, name: str, gen: str) -> pa.Table | None:
     return ds.dataset(str(path), format="parquet").to_table()
 
 
+def count_rows(store: IndexStore, name: str, gen: str) -> int:
+    """A generation's table row count from its parquet footers alone (0
+    when it was never written)."""
+    path = Path(store.table_path(name, gen))
+    if not path.exists():
+        return 0
+    return ds.dataset(str(path), format="parquet").count_rows()
+
+
 def _keys(table: pa.Table) -> pd.MultiIndex:
     """``table``'s natural keys, for E1 / E2 membership tests."""
     return pd.MultiIndex.from_arrays(

@@ -29,5 +29,5 @@ def spark_commit_arm(monkeypatch):
 
     monkeypatch.setattr(
         incremental, "fits_driver_commit",
-        lambda n_docs, batch_rows, affected_docs: False,
+        lambda n_docs, n_terms, batch_rows, affected_docs, positional: False,
     )

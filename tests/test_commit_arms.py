@@ -219,16 +219,25 @@ def test_small_commits_run_at_most_one_spark_job(spark, tmp_path):
 
 
 def test_fits_driver_commit_boundary():
-    # work = n_docs / 25 + 2 per batch row + 1 per affected doc
-    assert incremental.commit_work(160_000, 200, 4_352) == 6_400 + 400 + 4_352
-    assert incremental.fits_driver_commit(0, 0, 0)
-    assert incremental.fits_driver_commit(0, 0, 30_000)
-    assert not incremental.fits_driver_commit(0, 0, 30_001)
-    assert incremental.fits_driver_commit(25 * 30_000, 0, 0)
-    assert not incremental.fits_driver_commit(25 * 30_000 + 25, 0, 0)
-    assert not incremental.fits_driver_commit(0, 15_001, 0)
-    # the measured extremes: admitted ADD 8,000 on 12k docs, refused
-    # REMOVEs spread over every shard
-    assert incremental.fits_driver_commit(12_000, 8_000, 3_808)
-    assert not incremental.fits_driver_commit(160_000, 4_000, 160_000)
-    assert not incremental.fits_driver_commit(48_000, 2_400, 48_000)
+    # KB = (docs + terms) / 3 + (20 per batch row + 16 per affected doc),
+    # the second part doubled on a positional index
+    fits, kb = incremental.fits_driver_commit, incremental.commit_kb
+    assert kb(12_000, 20_785, 200, 3_808, False) == 10_928 + 4_000 + 60_928
+    assert kb(12_000, 20_785, 200, 3_808, True) == 10_928 + 2 * 64_928
+    bound = incremental.DRIVER_KB
+    assert fits(0, 0, 0, 0, False)
+    assert fits(0, 0, 0, bound // 16, False)
+    assert not fits(0, 0, 0, bound // 16 + 1, False)
+    assert not fits(0, 0, 0, bound // 32 + 1, True)
+    assert fits(3 * bound, 0, 0, 0, False)
+    assert not fits(3 * bound + 3, 0, 0, 0, False)
+    assert not fits(0, 3 * bound + 3, 0, 0, False)
+    # the collect limit is the rule's own: one more row is refused
+    for n_docs, n_terms, wp in ((0, 0, False), (96_000, 26_395, True)):
+        rows = incremental.max_driver_rows(n_docs, n_terms, wp)
+        assert fits(n_docs, n_terms, rows, 0, wp)
+        assert not fits(n_docs, n_terms, rows + 1, 0, wp)
+    # the measured extremes: admitted ADD 24,000 on 12k docs, refused
+    # REMOVE spread over all 12 shards of 96k docs
+    assert fits(12_000, 20_785, 24_000, 3_808, False)
+    assert not fits(96_000, 26_395, 4_800, 96_000, False)

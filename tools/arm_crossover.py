@@ -11,6 +11,8 @@ bounds.
         commit add:200 remove:100/1 remove:4000/20 ...
     python tools/arm_crossover.py INDEX_DIR DOCS DOCS_PER_SHARD \\
         commit-positions ...       # the same on a positional index
+    python tools/arm_crossover.py INDEX_DIR DOCS DOCS_PER_SHARD \\
+        commit-vocab ...           # each doc also holds 64 unique tokens
 
 Builds ``generate_corpus(DOCS, seed=1)`` under INDEX_DIR on first use.  A
 plan family prints one JSON line per plan: its shard count, terms,
@@ -22,18 +24,22 @@ reaching it.
 ``commit`` takes ``add:ROWS`` (new documents, ``generate_corpus(ROWS,
 seed=2)`` under fresh repo names) and ``remove:ROWS/SHARDS`` (ROWS indexed
 documents spread evenly over the first SHARDS shards) and prints one JSON
-line per commit: the index's docs, the batch rows, the affected shards and
-the docs they hold, ``commit_work``, ``fits_driver_commit`` and the wall
-of the commit on each arm, each on a fresh copy of the index (driver
-arm: median of 2 runs, one before and one after the Spark arm's run).
+line per commit: the index's docs and terms, the batch rows, the affected
+shards and the docs they hold, ``commit_kb``, ``fits_driver_commit``, the
+wall of the commit on each arm, each on a fresh copy of the index (driver
+arm: median of 2 runs, one before and one after the Spark arm's run), and
+the larger of the two driver runs' growth of this process's RSS.  Give
+one commit per invocation for that growth to start from a fresh process.
 """
 
 from __future__ import annotations
 
 import json
 import shutil
+import os
 import statistics
 import sys
+import threading
 import time
 from pathlib import Path
 
@@ -107,30 +113,68 @@ def commit_batch(spark, eng: SearchEngine, target: str):
     ).cache()
 
 
+def _rss_mb() -> float:
+    """This (driver) process's resident set, in MB (Linux ``statm``)."""
+    with open("/proc/self/statm") as f:
+        return int(f.read().split()[1]) * os.sysconf("SC_PAGE_SIZE") / 2**20
+
+
+class _PeakRss:
+    """The driver process's peak resident set above its level at entry,
+    sampled every 5 ms while the block runs (the Spark JVM is another
+    process and is not counted)."""
+
+    def __enter__(self):
+        self.base = self.peak = _rss_mb()
+        self._stop = threading.Event()
+        self._thread = threading.Thread(target=self._sample, daemon=True)
+        self._thread.start()
+        return self
+
+    def _sample(self):
+        while not self._stop.wait(0.005):
+            self.peak = max(self.peak, _rss_mb())
+
+    def __exit__(self, *exc):
+        self._stop.set()
+        self._thread.join()
+        self.peak = max(self.peak, _rss_mb())
+
+    @property
+    def grown_mb(self) -> float:
+        return self.peak - self.base
+
+
 def timed_commit(spark, root: str, fn, batch, on_driver: bool) -> tuple:
-    """Wall ms of one commit on a fresh copy of the index at ``root``, and
-    its ``done`` lineage event."""
+    """Wall ms of one commit on a fresh copy of the index at ``root``, its
+    ``done`` lineage event and the driver process's RSS growth (MB)."""
     copy = f"{root}.commit-copy"
     shutil.rmtree(copy, ignore_errors=True)
     shutil.copytree(root, copy)
-    rule = incremental.fits_driver_commit
+    rule, bound = incremental.fits_driver_commit, incremental.DRIVER_KB
     incremental.fits_driver_commit = lambda *a: on_driver
+    # lift the bound too: it also caps the rows the driver arm collects
+    incremental.DRIVER_KB = 2**30 if on_driver else bound
     try:
         store = IndexStore(copy)
-        t0 = time.perf_counter()
-        fn(spark, store, batch)
-        ms = (time.perf_counter() - t0) * 1000
+        with _PeakRss() as rss:
+            t0 = time.perf_counter()
+            fn(spark, store, batch)
+            ms = (time.perf_counter() - t0) * 1000
     finally:
         incremental.fits_driver_commit = rule
+        incremental.DRIVER_KB = bound
     done = store.lineage()[-1]
     shutil.rmtree(copy, ignore_errors=True)
-    return ms, done
+    return ms, done, rss.grown_mb
 
 
 def commits(spark, root: str, eng: SearchEngine, targets: list[str]) -> None:
     store = IndexStore(root)
     meta = incremental._meta(store, eng.gen)
     n_docs = eng._stats_row["n_docs"]
+    n_terms = local_commit.count_rows(store, "terms", eng.gen)
+    wp = bool(meta.get("with_positions"))
     for target in targets:
         fn, batch = commit_batch(spark, eng, target)
         pdf = batch.select("repo", "path", "commit", *(
@@ -143,21 +187,34 @@ def commits(spark, root: str, eng: SearchEngine, targets: list[str]) -> None:
         )
         rows, held = len(pdf), placed.affected_docs
         driver = [timed_commit(spark, root, fn, batch, True)]
-        spark_ms, done = timed_commit(spark, root, fn, batch, False)
+        spark_ms, done, _rss = timed_commit(spark, root, fn, batch, False)
         driver.append(timed_commit(spark, root, fn, batch, True))
         assert done["arm"] == "spark"
-        assert all(d["arm"] == "driver" for _ms, d in driver), driver
+        assert all(d["arm"] == "driver" for _ms, d, _rss in driver), driver
         print(json.dumps({
             "target": target, "n_docs": n_docs, "rows": rows,
             "affected_shards": len(placed.affected), "affected_docs": held,
-            "work": incremental.commit_work(n_docs, rows, held),
+            "n_terms": n_terms,
+            "commit_kb": incremental.commit_kb(n_docs, n_terms, rows, held, wp),
             "fits_driver_commit": incremental.fits_driver_commit(
-                n_docs, rows, held
+                n_docs, n_terms, rows, held, wp
             ),
-            "driver_ms": round(statistics.median(ms for ms, _d in driver)),
+            "driver_ms": round(statistics.median(ms for ms, _d, _r in driver)),
             "spark_ms": round(spark_ms),
+            "driver_rss_mb": round(max(r for _ms, _d, r in driver)),
         }), flush=True)
         batch.unpersist()
+
+
+def with_unique_tokens(docs, per_doc: int):
+    """``docs`` with ``per_doc`` tokens no other doc holds appended to each
+    content: a large vocabulary at a small doc count."""
+    i = F.monotonically_increasing_id().cast("string")
+    extra = F.concat_ws(" ", F.transform(
+        F.sequence(F.lit(0), F.lit(per_doc - 1)),
+        lambda j: F.concat(F.lit("u"), i, F.lit("x"), j.cast("string")),
+    ))
+    return docs.withColumn("content", F.concat_ws(" ", "content", extra))
 
 
 def main() -> None:
@@ -168,8 +225,11 @@ def main() -> None:
     )
     store = IndexStore(root)
     if store.current_gen() is None:
+        docs = generate_corpus(spark, n, seed=1)
+        if family == "commit-vocab":
+            docs = with_unique_tokens(docs, 64)
         build_index(
-            spark, generate_corpus(spark, n, seed=1), store, docs_per_shard=dps,
+            spark, docs, store, docs_per_shard=dps,
             with_positions=family == "commit-positions",
         )
     eng = SearchEngine(spark, store)
