@@ -141,7 +141,7 @@ def max_driver_rows(n_docs: int, n_terms: int, positional: bool) -> int:
     affected shards are known."""
     fixed = commit_kb(n_docs, n_terms, 0, 0, positional)
     per_row = commit_kb(0, 0, 1, 0, positional)
-    return max(DRIVER_KB - fixed, 0) // per_row
+    return (DRIVER_KB - fixed) // per_row
 
 
 def _driver_commit(spark, store, old_gen, meta, rows: DataFrame, place):
