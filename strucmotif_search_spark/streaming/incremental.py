@@ -182,9 +182,9 @@ def add_documents(
     Touches only the shards that receive new documents (normally just the
     tail shard + fresh shards, since new doc_ids are minted after max).
     Exact duplicate rows in the batch collapse to one; a natural key that
-    still repeats raises ``ValueError``.  A small commit runs on the driver
-    arm (``fits_driver_commit``), any other on Spark; both publish the
-    same tables.  Returns the published generation name.
+    still repeats raises ``ValueError``.  A commit whose estimated driver
+    memory fits the bound runs on the driver arm (``fits_driver_commit``),
+    any other on Spark; both publish the same tables.  Returns the published generation name.
     """
     t0 = time.time()
     old_gen = store.current_gen()
@@ -425,9 +425,9 @@ def remove_documents(
     exactly; retired doc_ids go to the generation's free list, where the
     next ADD reuses them smallest-first (see ``add_documents``) — external
     references keyed by doc_id must therefore treat a REMOVE as
-    invalidating the id, not parking it.  A small commit runs on the
-    driver arm (``fits_driver_commit``), any other on Spark; both publish
-    the same tables."""
+    invalidating the id, not parking it.  A commit whose estimated driver
+    memory fits the bound runs on the driver arm (``fits_driver_commit``),
+    any other on Spark; both publish the same tables."""
     t0 = time.time()
     old_gen = store.current_gen()
     meta = _meta(store, old_gen)

@@ -10,7 +10,8 @@ new generation with the kernels the Spark arm runs (``_tf_batches`` after
 ``analyze_text``, ``decode_blocks``, ``_pack_partition``, ``_pack_norms``) and
 writes the same tables with ``pyarrow.parquet``.  Both arms therefore
 publish row-identical generations; ``incremental.fits_driver_commit``
-picks the arm, and nothing is written before it has.
+picks the arm by the driver memory the commit is estimated to need, and
+nothing is written before it has.
 
 Each commit is a two-step object: the constructor reads and places the
 batch (E1 / E2, minted ids, ``affected`` shards and the docs they hold),
