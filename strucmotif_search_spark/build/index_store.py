@@ -38,6 +38,15 @@ from pyspark.sql import DataFrame, SparkSession
 TABLES = ["doc_map", "terms", "stats", "postings"]
 
 
+def has_data(path: str | os.PathLike) -> bool:
+    """Whether a table directory holds a data file.  Spark writes a
+    bucketed table of no rows as a directory with only ``_SUCCESS``."""
+    return any(
+        p.is_file() and not p.name.startswith(("_", "."))
+        for p in Path(path).rglob("*")
+    )
+
+
 class IndexStore:
     def __init__(self, root: str | os.PathLike):
         self.root = Path(root)
@@ -95,21 +104,32 @@ class IndexStore:
 
     def posting_parts(self, gen: str | None = None) -> list[tuple[str, list[int]]]:
         """A generation's posting files as ``[(path, exclude_shards)]``:
-        its own ``postings`` dir when it holds files (excluding nothing),
+        its own ``postings`` dir when it holds data files (excluding nothing),
         then every `_refs.json` reference to a prior generation's postings
-        with its delete predicate.  The one reader of the refs format."""
+        with its delete predicate.  The one reader of the refs format: a
+        ref path is relative to the store root (``ref_path``), or absolute
+        as older generations wrote it."""
         gen = gen or self.current_gen()
         parts: list[tuple[str, list[int]]] = []
         base = self.root / gen / "postings"
-        if base.exists() and any(base.iterdir()):
+        if base.exists() and has_data(base):
             parts.append((str(base), []))
         refs_file = self.root / gen / "_refs.json"
         if refs_file.exists():
             parts += [
-                (r["path"], sorted(r.get("exclude_shards", [])))
+                (str(self.root / r["path"]), sorted(r.get("exclude_shards", [])))
                 for r in json.loads(refs_file.read_text())
             ]
         return parts
+
+    def ref_path(self, path: str) -> str:
+        """How `_refs.json` names a posting path: relative to the store
+        root when it lies under it, so a store can be moved or copied
+        whole."""
+        try:
+            return str(Path(path).relative_to(self.root))
+        except ValueError:
+            return path
 
     def expire_generations(self, keep_last: int = 0) -> list[str]:
         """Delete generation dirs (and their stage-1 partials) that are NOT
@@ -235,10 +255,15 @@ class IndexStore:
         bucketed table over the generation directory and reads through the
         catalog so the scan reports hash(shard) output partitioning.  Falls
         back to a plain parquet read when the table was not written
-        bucketed (older gens, incremental bundles)."""
+        bucketed (older gens, incremental bundles).  A directory with no
+        data file reads as no rows of the table's schema."""
         gen = gen or self.current_gen()
         meta = self._buckets_meta(gen).get(name)
         path = self.table_path(name, gen)
+        if not has_data(path):  # no file, so no schema to infer
+            from ..session import local_frame
+
+            return local_frame(spark, [], self.bucketed_schema(name, gen))
         if meta is None:
             return spark.read.parquet(path)
         tbl = self.bucket_table_name(name, gen)
@@ -260,30 +285,37 @@ class IndexStore:
             )
         return spark.table(tbl)
 
-    def read_postings(self, spark: SparkSession, gen: str | None = None) -> DataFrame:
-        """Resolve a generation's postings: the union of its
-        ``posting_parts``, each ref with its ``exclude_shards`` predicate
-        (the Iceberg data-file + delete-predicate shape used by incremental
-        ADD/REMOVE)."""
-        from pyspark.sql import functions as F
-
+    def bucketed_schema(self, name: str, gen: str):
+        """The schema of a bucketed table (``norms`` or ``postings``)."""
+        from .norms import NORMS_SCHEMA
         from .postings import POSTINGS_POS_SCHEMA, POSTINGS_SCHEMA
 
-        gen = gen or self.current_gen()
-        own = self.table_path("postings", gen)
+        if name == "norms":
+            return NORMS_SCHEMA
         meta_file = self.root / gen / "_meta.json"
         with_pos = bool(
             json.loads(meta_file.read_text()).get("with_positions")
         ) if meta_file.exists() else False
+        return POSTINGS_POS_SCHEMA if with_pos else POSTINGS_SCHEMA
+
+    def read_postings(self, spark: SparkSession, gen: str | None = None) -> DataFrame:
+        """Resolve a generation's postings: the union of its
+        ``posting_parts``, each ref with its ``exclude_shards`` predicate
+        (the Iceberg data-file + delete-predicate shape used by incremental
+        ADD/REMOVE).  A generation with no posting file reads as no rows."""
+        from pyspark.sql import functions as F
+
+        from ..session import local_frame
+
+        gen = gen or self.current_gen()
+        own = self.table_path("postings", gen)
         # canonical projection per part: parts come from heterogeneous
         # layouts (flat bucketed files, chunk=N partition dirs of older
         # builds, chunk=add/remove repacks) whose discovered schemas differ by
         # partition columns — project each to the one true POSTINGS schema
         # before the union (schema contract, not discovery accident)
-        canon = [
-            f.name
-            for f in (POSTINGS_POS_SCHEMA if with_pos else POSTINGS_SCHEMA)
-        ]
+        schema = self.bucketed_schema("postings", gen)
+        canon = [f.name for f in schema]
         parts = []
         for path, excl in self.posting_parts(gen):
             if path == own:
@@ -297,6 +329,8 @@ class IndexStore:
             if excl:
                 df = df.where(~F.col("shard").isin(excl))
             parts.append(df.select(*canon))
+        if not parts:
+            return local_frame(spark, [], schema)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

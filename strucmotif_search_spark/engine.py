@@ -8,10 +8,15 @@ Wraps a published IndexStore generation and exposes:
 - ``search_min_match(query, m, k)``— m-of-n relaxed conjunction, same kernel;
 - exact stats accessors (df/cf/avgdl) for tests and planning.
 
-``search`` and ``search_min_match`` run the DAAT kernel on one of two arms
-(query/daat.py), picked per plan by ``daat.fits_driver``: a small plan is
-scored on the driver over pyarrow reads of only its own rows and returned
-as an Arrow-built frame (no Spark job); a large plan, or one with a
+The engine opens with pyarrow reads: ``_meta.json`` and the one ``stats``
+row; the Spark frames (``doc_map``, ``terms``, ``stats``, ``postings``, the
+cached bucketed ``norms``) are built on first Spark-arm use.  So an open
+launches no Spark job.
+
+``search``, ``search_min_match`` and ``msearch`` run the DAAT kernel on one
+of two arms (query/daat.py), picked by ``daat.fits_driver``: a small plan
+(batch) is scored on the driver over pyarrow reads of only its own rows and
+returned as an Arrow-built frame (no Spark job); a large one, or one with a
 ``doc_predicate``, runs the Spark cogroup arm.  One kernel, so both arms
 answer bit-identically.
 """
@@ -26,9 +31,10 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import StructField, StructType
 
 from .build.index_store import IndexStore
 from .query import daat
@@ -118,18 +124,11 @@ class SearchEngine:
         if not gen_dir.is_dir():
             raise FileNotFoundError(f"generation {self.gen!r} not found")
         self.meta = json.loads((Path(gen_dir) / "_meta.json").read_text())
-        self.doc_map = store.read_table(spark, "doc_map", self.gen)
-        self.terms = store.read_table(spark, "terms", self.gen)
-        self.stats = store.read_table(spark, "stats", self.gen)
-        # norms: one compact row per shard — cache (the reference similarly
-        # keeps per-doc data resident, DefaultStructureDataProvider.java:202)
-        # bucket-aware read: hash(shard)-clustered from the scan, so the
-        # per-query cogroup with (equally bucketed) postings is exchange-
-        # free; the cache preserves the child partitioning
-        self.norms = store.read_bucketed(spark, "norms", self.gen).cache()
-        self.postings = store.read_postings(spark, self.gen)
-        # global stats are a single row — resolve once at engine construction
-        self._stats_row = self.stats.first()
+        # global stats are a single row: read it once, with pyarrow (the
+        # same fields and float64 values as ``self.stats.first()``)
+        self._stats_row = Row(**ds.dataset(
+            store.table_path("stats", self.gen), format="parquet"
+        ).to_table().to_pylist()[0])
         # driver-side vocabulary cache: repeated queries must not pay a Spark
         # job for a dictionary lookup (the reference precomputes exactly this
         # as its informativeness table, ResiduePairOccurrence.java:230-463).
@@ -155,6 +154,32 @@ class SearchEngine:
         # (persisted postings DF, (n_docs, avg_fieldlen)).  Bounded by the
         # doc_map's handful of string columns, so no eviction needed.
         self._field_cache: dict[str, tuple[DataFrame, tuple[int, float]]] = {}
+
+    # ---- Spark frames, built on first Spark-arm use ------------------------
+    @cached_property
+    def doc_map(self) -> DataFrame:
+        return self.store.read_table(self.spark, "doc_map", self.gen)
+
+    @cached_property
+    def terms(self) -> DataFrame:
+        return self.store.read_table(self.spark, "terms", self.gen)
+
+    @cached_property
+    def stats(self) -> DataFrame:
+        return self.store.read_table(self.spark, "stats", self.gen)
+
+    @cached_property
+    def norms(self) -> DataFrame:
+        """One compact row per shard, cached (the reference similarly keeps
+        per-doc data resident, DefaultStructureDataProvider.java:202).  A
+        bucket-aware read: hash(shard)-clustered from the scan, so the
+        per-query cogroup with (equally bucketed) postings is exchange-free;
+        the cache preserves the child partitioning."""
+        return self.store.read_bucketed(self.spark, "norms", self.gen).cache()
+
+    @cached_property
+    def postings(self) -> DataFrame:
+        return self.store.read_postings(self.spark, self.gen)
 
     # ---- planning ------------------------------------------------------
     def _term_stats(self, terms: list[str]) -> dict[str, tuple[int, int, int]]:
@@ -203,6 +228,8 @@ class SearchEngine:
     def _local_blocks(self, term_ids: list[int]) -> pd.DataFrame:
         """The scan terms' posting blocks from every posting part, each
         ref part minus its excluded shards."""
+        if not term_ids or not self._posting_datasets:
+            return pd.DataFrame(columns=list(daat.BLOCK_COLS))
         tables = []
         for dset, excl in self._posting_datasets:
             where = pc.field("term_id").isin(term_ids)
@@ -223,22 +250,37 @@ class SearchEngine:
             {t for g in plan.groups for t in g.member_ids} | set(exclude_ids)
         )
         blocks = self._local_blocks(scan_ids)
+        return daat.bm25_topk_local(
+            blocks, self._local_norms(blocks), plan,
+            self.meta["docs_per_shard"], k, mode, exclude_ids, after,
+            min_match,
+        )
+
+    def _local_norms(self, blocks: pd.DataFrame) -> pd.DataFrame:
+        """The packed norms rows of the shards ``blocks`` touch."""
         touched = sorted(int(s) for s in blocks["shard"].unique())
-        norms = self._arrow_table(
+        if not touched:
+            return pd.DataFrame(columns=["shard", "doc_gaps", "doclens"])
+        return self._arrow_table(
             "norms", ("shard", "doc_gaps", "doclens"),
             pc.field("shard").isin(touched),
         ).to_pandas()
-        return daat.bm25_topk_local(
-            blocks, norms, plan, self.meta["docs_per_shard"], k, mode,
-            exclude_ids, after, min_match,
-        )
+
+    @cached_property
+    def _meta_fields(self) -> list[StructField]:
+        """The metadata columns a hit is joined to, typed as Spark reads
+        them from ``doc_map`` (parquet columns read back nullable)."""
+        schema = self._datasets["doc_map"].schema
+        return [
+            StructField(c, from_arrow_type(schema.field(c).type), True)
+            for c in _META_COLS[1:]
+        ]
 
     @cached_property
     def _meta_schema(self) -> StructType:
         """The columns and types ``_materialize`` returns."""
         return StructType(
-            StructType.fromDDL(daat._RESULT_SCHEMA).fields
-            + [self.doc_map.schema[c] for c in _META_COLS[1:]]
+            StructType.fromDDL(daat._RESULT_SCHEMA).fields + self._meta_fields
         )
 
     def _local_meta(self, hits: pd.DataFrame) -> pd.DataFrame:
@@ -325,11 +367,9 @@ class SearchEngine:
     ) -> QueryPlan:
         return plan_query(
             query,
-            self.terms,
-            self.stats,
-            stats_row=self._stats_row,
+            self._stats_row,
+            self._vocab_lookup,
             expansions=expansions,
-            vocab_lookup=self._vocab_lookup,
             should=should,
         )
 
@@ -830,32 +870,48 @@ class SearchEngine:
         with_meta: bool = False,
     ) -> DataFrame:
         """Batch BM25: answer every query in ``queries`` (query_id -> query
-        string) in ONE index pass (query/msearch.py) — one pushed-down
-        posting scan over the union of all query terms, scored per shard by
-        the DAAT kernel against the cached norms, per-query top-k via a
-        window.  Each query's slice is bitwise-identical to running it
-        alone.  Returns (query_id, doc_id, score[, metadata])."""
-        from .query.msearch import msearch_topk
+        string) in ONE index pass (query/msearch.py) — one posting read of
+        the union of all query terms, each query scored by the DAAT kernel.
+        A small batch (``daat.fits_driver`` over every live plan's dfs) runs
+        on the driver arm, any other on the Spark arm.  Each query's slice
+        is bitwise-identical to running it alone.  Returns (query_id,
+        doc_id, score), with metadata (doc_id, query_id, score, ...) when
+        ``with_meta``."""
+        from .query import msearch as ms
         from .tokenizer import analyze_text
 
-        plans = {
+        live = ms.live_plans({
             qid: self.plan(analyze_text(q, self.analyzer))
             for qid, q in queries.items()
-        }
-        hits = msearch_topk(
-            self.spark, self.postings, self.norms, plans,
-            self.meta["docs_per_shard"], k=k, mode=mode,
+        }, mode)
+        dps = self.meta["docs_per_shard"]
+        if daat.fits_driver(
+            self.meta.get("n_shards") or 0,
+            [df for p in live.values() for df in p.dfs],
+        ):
+            blocks = self._local_blocks(ms.scan_ids(live))
+            hits = ms.msearch_topk_local(
+                blocks, self._local_norms(blocks), live, dps, k, mode
+            )
+            if not with_meta:
+                return local_frame(self.spark, hits, ms._SCHEMA)
+            schema = StructType(
+                StructType.fromDDL(
+                    "doc_id long, query_id string, score double"
+                ).fields
+                + self._meta_fields
+            )
+            return local_frame(
+                self.spark, self._local_meta(hits)[schema.names], schema
+            )
+        hits = ms.msearch_topk(
+            self.spark, self.postings, self.norms, live, dps, k=k, mode=mode,
         )
         if not with_meta:
             return hits
         return (
             F.broadcast(hits)
-            .join(
-                self.doc_map.select(
-                    "doc_id", "repo", "path", "commit", "lang"
-                ),
-                on="doc_id",
-            )
+            .join(self.doc_map.select(*_META_COLS), on="doc_id")
             .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
         )
 
@@ -1055,9 +1111,10 @@ class SearchEngine:
         The match set comes from the index alone (analytics.match_set:
         pushed-down posting scan, no scoring, no corpus read); its doc_ids
         join doc_map for the natural keys the REMOVE path consumes.
-        Returns the new generation id.  This engine's cached tables then
-        describe the PREVIOUS generation — construct a fresh SearchEngine
-        to query the result (same contract as add/remove_documents)."""
+        Returns the new generation id.  This engine stays on the
+        generation it opened (every read it makes, before or after, resolves
+        against that snapshot) — construct a fresh SearchEngine to query
+        the result (same contract as add/remove_documents)."""
         from .query.analytics import match_set
         from .streaming.incremental import remove_documents
 

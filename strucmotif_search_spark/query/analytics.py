@@ -144,13 +144,7 @@ def match_set(engine, query: str, mode: str = "or") -> DataFrame | None:
     # 'getFoo' as get+foo here too, or delete_by_query/facet_counts would
     # silently disagree with search on what matches
     query = analyze_text(query, engine.analyzer)
-    plan = plan_query(
-        query,
-        engine.terms,
-        engine.stats,
-        stats_row=engine._stats_row,
-        vocab_lookup=engine._vocab_lookup,
-    )
+    plan = plan_query(query, engine._stats_row, engine._vocab_lookup)
     if not plan.term_ids or (mode == "and" and plan.n_absent):
         return None
     decoded = decode_postings(
@@ -251,13 +245,7 @@ def explain_contributions(
     # analyze like engine.search so explained contributions sum to the
     # score the SEARCH actually produced, analyzer included
     query = analyze_text(query, engine.analyzer)
-    plan = plan_query(
-        query,
-        engine.terms,
-        engine.stats,
-        stats_row=engine._stats_row,
-        vocab_lookup=engine._vocab_lookup,
-    )
+    plan = plan_query(query, engine._stats_row, engine._vocab_lookup)
     if not plan.term_ids or not doc_ids:
         return local_frame(
             engine.spark, [], "doc_id long, term string, tf long, contrib double"

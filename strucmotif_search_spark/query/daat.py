@@ -492,7 +492,23 @@ def fits_driver(n_shards: int, dfs) -> bool:
     ``generate_corpus(n, seed=1)`` with n = 12k or 64k, OR plans of the
     most frequent terms (of one rare term per shard on 375 shards), k = 10,
     median of 5 ``search().collect()``, driver / Spark arm
-    (``tools/arm_crossover.py``)."""
+    (``tools/arm_crossover.py``).
+
+    ``SearchEngine.msearch`` applies the same rule to the dfs of every
+    live plan in a batch.  Measured as above (``tools/arm_crossover.py
+    msearch``: batches of two-term OR queries of mid or head terms, median
+    of 5 ``msearch().collect()``, driver / Spark ms):
+    - 12k docs, 2 shards: 2, 8, 32 and 128 mid queries, 0.01M-0.19M,
+      76-1,157 / 652-1,870; 2, 8 and 32 head queries, 0.05M-0.37M,
+      107-716 / 662-1,033;
+    - 64k docs, 16 shards: 2, 8 and 32 mid queries, 0.06M-0.38M,
+      141-1,069 / 860-1,219; 2 and 8 head queries, 0.29M-0.85M, 329-1,127
+      / 1,031-1,401; 32 head queries, 2.05M, refused, 3,030 / 2,410.
+    One measured batch goes to the slower arm: 128 mid queries on 16
+    shards (1.23M) took 5,205 ms on the driver and 4,183 on Spark.
+    ``driver_work`` counts a batch's shards once, but the driver arm
+    unpacks each touched shard's norms once per plan, so many small plans
+    over many shards cost it more than the rule says."""
     return driver_work(n_shards, dfs) <= 1_400_000
 
 

@@ -22,8 +22,8 @@ Reference analogues:
 The stats lookup goes through a driver-side vocabulary cache supplied by the
 engine (``vocab_lookup``) so repeated queries cost zero Spark jobs — the
 reference's precomputed informativeness table
-(ResiduePairOccurrence.java:230-463) plays the same role.  Without a cache
-it falls back to a tiny filtered scan of the terms table.
+(ResiduePairOccurrence.java:230-463) plays the same role.  The global stats
+come in as the engine's ``stats_row``, so planning launches no Spark job.
 """
 
 from __future__ import annotations
@@ -31,9 +31,6 @@ from __future__ import annotations
 import math
 from collections.abc import Callable
 from dataclasses import dataclass, field
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .. import BM25_B, BM25_K1
 from ..oracle import tokenize
@@ -135,14 +132,15 @@ def plan_analyzed(
 
 def plan_query(
     query: str,
-    terms_table: DataFrame,
-    stats_table: DataFrame,
-    stats_row=None,
+    stats_row,
+    vocab_lookup: VocabLookup,
     expansions: dict[str, list[str]] | None = None,
-    vocab_lookup: VocabLookup | None = None,
     should: str = "",
 ) -> QueryPlan:
-    """``should``: optional SHOULD-clause terms (Lucene BooleanQuery):
+    """``stats_row``: the generation's global stats (``n_docs``,
+    ``avgdl``); ``vocab_lookup``: the engine's vocabulary lookup.
+
+    ``should``: optional SHOULD-clause terms (Lucene BooleanQuery):
     their groups are marked ``required=False`` — they contribute to scores
     but not to the conjunction requirement.  A term appearing in both
     ``query`` and ``should`` is MUST (the stricter occur wins, matching
@@ -150,10 +148,10 @@ def plan_query(
     ignored (it never increments ``n_absent``)."""
     distinct = sorted(set(tokenize(query)))
     should_distinct = sorted(set(tokenize(should)) - set(distinct))
-    st = stats_row if stats_row is not None else stats_table.first()
     # an empty corpus has a null avgdl; read it as 0.0 like the oracle does
     # (no posting is ever scored against it)
-    n_docs, avgdl = int(st["n_docs"]), float(st["avgdl"] or 0.0)
+    n_docs = int(stats_row["n_docs"])
+    avgdl = float(stats_row["avgdl"] or 0.0)
     if not distinct and not should_distinct:
         return QueryPlan([], [], [], [], 0, n_docs, avgdl)
     # group member sets: base term ∪ its expansions (expansion terms go
@@ -175,15 +173,7 @@ def plan_query(
         groups_members.append((members, req))
 
     lookup_terms = sorted({m for ms, _ in groups_members for m in ms})
-    if vocab_lookup is not None:
-        found = vocab_lookup(lookup_terms)
-    else:
-        rows = (
-            terms_table.where(F.col("term").isin(lookup_terms))
-            .select("term", "term_id", "df")
-            .collect()
-        )
-        found = {r["term"]: (int(r["term_id"]), int(r["df"])) for r in rows}
+    found = vocab_lookup(lookup_terms)
 
     groups: list[TermGroup] = []
     n_absent = 0

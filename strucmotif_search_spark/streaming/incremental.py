@@ -33,6 +33,7 @@ lineage event records the ``arm`` taken.
 from __future__ import annotations
 
 import json
+import shutil
 import time
 from pathlib import Path
 
@@ -69,7 +70,10 @@ def _carry_refs(store: IndexStore, old_gen: str, exclude_shards: list[int]) -> l
     A generation that wrote no postings of its own (an ADD with nothing
     new) contributes no ref, so no ref ever names a missing directory."""
     return [
-        {"path": path, "exclude_shards": sorted(set(excl) | set(exclude_shards))}
+        {
+            "path": store.ref_path(path),
+            "exclude_shards": sorted(set(excl) | set(exclude_shards)),
+        }
         for path, excl in store.posting_parts(old_gen)
     ]
 
@@ -232,6 +236,12 @@ def _grown_meta(meta: dict, affected: list[int]) -> dict:
     return {**meta, "n_shards": max(meta.get("n_shards") or 0, max(affected) + 1)}
 
 
+def _drop_ids(store: IndexStore, gen: str) -> None:
+    """Delete ``_add_spark``'s scratch ``ids`` table after its last read,
+    so the published generation does not carry it."""
+    shutil.rmtree(store.table_path("ids", gen))
+
+
 def _add_spark(
     spark: SparkSession, store: IndexStore, old_gen: str, meta: dict,
     new_docs: DataFrame, content_col: str, t0: float,
@@ -316,6 +326,7 @@ def _add_spark(
 
     affected = [r["shard"] for r in ids.select("shard").distinct().collect()]
     if not affected:  # nothing new — republish old tables untouched
+        _drop_ids(store, gen)
         for t in ("doc_map", "terms", "stats", "norms"):
             store.write_table(store.read_table(spark, t, old_gen), t, gen)
         if free is not None:
@@ -406,9 +417,10 @@ def _add_spark(
     pack_postings(union, with_positions=wp).write.mode("overwrite").parquet(
         str(Path(store.root) / gen / "postings" / "chunk=add")
     )
-    tf_new.unpersist()
-    _publish(store, old_gen, gen, _grown_meta(meta, affected), affected)
     n_added = ids.count()
+    tf_new.unpersist()
+    _drop_ids(store, gen)
+    _publish(store, old_gen, gen, _grown_meta(meta, affected), affected)
     store.log(
         gen=gen, stage="add", status="done", n_added=n_added,
         affected_shards=len(affected), wall_ms=int((time.time() - t0) * 1000),

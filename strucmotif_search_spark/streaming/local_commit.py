@@ -33,7 +33,7 @@ import pyarrow.parquet as pq
 from pyspark.sql.types import StructType
 
 from ..build.doc_map import DOC_KEY
-from ..build.index_store import IndexStore
+from ..build.index_store import IndexStore, has_data
 from ..build.norms import NORMS_SCHEMA, _pack_norms
 from ..build.postings import (
     POSTINGS_POS_SCHEMA,
@@ -79,6 +79,9 @@ def read_table(store: IndexStore, name: str, gen: str) -> pa.Table | None:
     path = Path(store.table_path(name, gen))
     if not path.exists():
         return None
+    if name == "norms" and not has_data(path):
+        # Spark writes a bucketed table of no rows as no file (no schema)
+        return NORMS.empty_table()
     return ds.dataset(str(path), format="parquet").to_table()
 
 
@@ -153,11 +156,11 @@ class _Commit:
                     columns=cols, filter=where
                 )
             )
-        blocks = pa.concat_tables(tables, promote_options="permissive")
         return pd.concat(
             [_empty_postings(self.wp)] + [
                 decode_blocks(b.to_pandas(), self.wp)
-                for b in blocks.to_batches(max_chunksize=BATCH_ROWS)
+                for t in tables
+                for b in t.to_batches(max_chunksize=BATCH_ROWS)
                 if b.num_rows
             ],
             ignore_index=True,

@@ -146,8 +146,6 @@ def test_plan_analyzed_matches_plan_query(vocab, n_docs):
     direct = plan_analyzed(vocab, n_docs, avgdl)
     replanned = plan_query(
         " ".join(sorted(vocab)),
-        terms_table=None,
-        stats_table=None,
         stats_row={"n_docs": n_docs, "avgdl": avgdl},
         vocab_lookup=lambda terms: {
             t: vocab[t] for t in terms if t in vocab

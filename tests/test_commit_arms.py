@@ -218,6 +218,23 @@ def test_small_commits_run_at_most_one_spark_job(spark, tmp_path):
     assert verify_consistency(spark, store) == ZEROS
 
 
+def test_spark_add_publishes_no_scratch_ids(spark, tmp_path, spark_commit_arm):
+    """The Spark arm's ADD mints ids into a scratch table; the published
+    generation does not carry it, on a real ADD or a nothing-new one."""
+    docs = _docs(spark, 40, seed=13)
+    store = IndexStore(tmp_path / "ids")
+    build_index(
+        spark, spark.createDataFrame(docs.iloc[:30]), store, docs_per_shard=16
+    )
+    for rows in (docs.iloc[30:], docs.iloc[30:]):  # new, then nothing new
+        gen = add_documents(spark, store, spark.createDataFrame(rows))
+        assert _last_arm(store) == "spark"
+        assert not (store.root / gen / "ids").exists()
+        assert verify_consistency(spark, store) == ZEROS
+    added = [e["n_added"] for e in store.lineage() if "n_added" in e]
+    assert added == [10, 0]
+
+
 def test_fits_driver_commit_boundary():
     # KB = (docs + terms) / 3 + (20 per batch row + 16 per affected doc),
     # the second part doubled on a positional index

@@ -215,3 +215,102 @@ def test_search_with_timeout_cancels_jobs_started_after_it(
         for j in tracker.getJobIdsForGroup(group) if j not in before
     ]
     assert "RUNNING" not in later
+
+
+def _job_ids(sc, group: str, fn) -> list:
+    """The Spark jobs ``fn()`` launches, counted by job group."""
+    sc.setJobGroup(group, "driver arm")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_open_and_small_queries_run_no_spark_job(refs_engine):
+    """Opening an engine reads ``_meta.json`` and the stats row with
+    pyarrow; with a small search and a small msearch after it, no Spark
+    job runs — on the built, the ADD and the REMOVE generation."""
+    spark, store = refs_engine.spark, refs_engine.store
+    sc = spark.sparkContext
+    gens = sorted(p.name for p in store.root.glob("gen-*"))
+    assert len(gens) == 3 and gens[-1] == refs_engine.gen
+    for gen in gens:
+        opened = []
+        assert _job_ids(
+            sc, f"open-{gen}-{time.time_ns()}",
+            lambda: opened.append(SearchEngine(spark, store, gen=gen)),
+        ) == [], gen
+        eng = opened[0]
+        answers = {}
+
+        def queries():
+            answers["search"] = eng.search("import def", k=10).collect()
+            answers["msearch"] = eng.msearch(
+                {"a": "import def", "b": "v_00001", "c": "zz_absent"}, k=5,
+            ).collect()
+
+        assert _job_ids(sc, f"query-{gen}-{time.time_ns()}", queries) == [], gen
+        assert len(answers["search"]) == 10
+        assert {r["query_id"] for r in answers["msearch"]} == {"a", "b"}
+
+
+MSEARCH_BATCHES = {
+    "mixed": {
+        "q1": "import def", "q2": "v_00001 v_00002", "q3": "return",
+        "q4": "zz_absent", "q5": "import zz_absent",
+    },
+    "absent": {"x": "zz_absent", "y": "zz_absent zz_other"},
+}
+
+
+def _msearch_rows(eng, batch, mode, with_meta):
+    df = eng.msearch(batch, k=7, mode=mode, with_meta=with_meta)
+    rows = [tuple(r) for r in df.collect()]
+    if not with_meta:  # the Spark arm's window leaves rows unordered
+        rows.sort(key=lambda r: (r[0], -r[2], r[1]))
+    return df.dtypes, rows
+
+
+@pytest.mark.parametrize("with_meta", [False, True])
+@pytest.mark.parametrize("mode", ["or", "and"])
+@pytest.mark.parametrize("batch", sorted(MSEARCH_BATCHES))
+def test_msearch_arms_answer_alike_on_refs_generation(
+    refs_engine, monkeypatch, batch, mode, with_meta
+):
+    eng = refs_engine
+    queries = MSEARCH_BATCHES[batch]
+    calls = []
+    local = daat.bm25_topk_local
+
+    def counted(*a, **k):
+        calls.append(1)
+        return local(*a, **k)
+
+    monkeypatch.setattr(daat, "bm25_topk_local", counted)
+    driver = _msearch_rows(eng, queries, mode, with_meta)
+    with monkeypatch.context() as m:
+        m.setattr(daat, "fits_driver", lambda n_shards, dfs: False)
+        spark_rows = _msearch_rows(eng, queries, mode, with_meta)
+    assert driver[0] == spark_rows[0]  # names and types
+    assert driver[1] == spark_rows[1]
+    names = [name for name, _t in driver[0]]
+    qid_at, doc_at, score = (
+        names.index(c) for c in ("query_id", "doc_id", "score")
+    )
+    assert [_bits(r[score]) for r in driver[1]] == [
+        _bits(r[score]) for r in spark_rows[1]
+    ]
+    live = {
+        qid for qid, q in queries.items()
+        if daat.plan_mode(eng.plan(q), mode) is not None
+    }
+    assert len(calls) == len(live)
+    got = {r[qid_at] for r in driver[1]}
+    assert got <= live and bool(got) == (batch == "mixed")
+    # each query's slice is its solo search, bit for bit
+    for qid in live:
+        solo = eng.search(queries[qid], k=7, mode=mode, with_meta=False)
+        assert [
+            (r[doc_at], _bits(r[score])) for r in driver[1] if r[qid_at] == qid
+        ] == [(r["doc_id"], _bits(r["score"])) for r in solo.collect()]

@@ -3,6 +3,12 @@ index generation in tests/golden/ and match pinned answers WITHOUT
 rebuilding — the analogue of the reference's checked-in index.data +
 known.list integration fixtures (StructureIntegrationTest.java:151-204).
 
+The fixture's built generation is followed by an ADD and a REMOVE
+generation (a `_refs.json` chain with excluded shards, written by the
+driver commit arm); each generation's answers are pinned, and each is
+opened by a fresh engine, which reads its files only when a query needs
+them.
+
 If this fails after an intentional format change, regenerate with
 ``python tools/make_golden_index.py`` and commit the new bytes loudly.
 """
@@ -25,29 +31,44 @@ def golden(spark):
         pytest.skip("golden fixture not generated yet")
     with open(os.path.join(GOLDEN, "expected.json")) as f:
         expected = json.load(f)
-    eng = SearchEngine(spark, IndexStore(os.path.join(GOLDEN, "index")))
-    return eng, expected
+    store = IndexStore(os.path.join(GOLDEN, "index"))
+    return spark, store, expected
+
+
+def _pinned(golden, gen):
+    """(engine opened at ``gen``, that generation's pins)."""
+    spark, store, expected = golden
+    pins = expected if gen == expected["generation"] else next(
+        g for g in expected["incremental"] if g["generation"] == gen
+    )
+    return SearchEngine(spark, store, gen=gen), pins
 
 
 def test_golden_generation_pointer(golden):
-    eng, expected = golden
-    assert eng.gen == expected["generation"]
+    spark, store, expected = golden
+    eng = SearchEngine(spark, store, gen=expected["generation"])
+    assert eng.gen == "gen-000001"
+    assert [
+        (g["generation"], g["op"]) for g in expected["incremental"]
+    ] == [("gen-000002", "add"), ("gen-000003", "remove")]
+    assert store.current_gen() == "gen-000003"
+    # the REMOVE generation's postings span its own part and two refs,
+    # each ref minus the shards a later commit rewrote
+    parts = store.posting_parts("gen-000003")
+    assert [excl for _p, excl in parts] == [[], [0], [0, 3, 4]]
 
 
-def test_golden_stats(golden):
-    eng, expected = golden
+def _check_stats(eng, pins):
     got = {
         k: (float(v) if k == "avgdl" else int(v))
         for k, v in eng.stats.first().asDict().items()
     }
-    assert got == expected["stats"]
+    assert got == pins["stats"]
+    assert eng._stats_row == eng.stats.first()
 
 
-def test_golden_query_pins(golden):
-    """Every pinned query answers bit-identically from the committed bytes
-    (scores pinned to 9 decimals — float64 BM25 is deterministic here)."""
-    eng, expected = golden
-    for key, want in expected["queries"].items():
+def _check_queries(eng, pins):
+    for key, want in pins["queries"].items():
         q, mode, k = key.rsplit("|", 2)
         hits = eng.search(q, k=int(k), mode=mode, with_meta=True)
         got = [
@@ -57,12 +78,36 @@ def test_golden_query_pins(golden):
         assert got == [list(w) for w in want], key
 
 
-def test_golden_phrase_pin(golden):
-    """The committed position payloads decode to the pinned phrase counts
-    (guards the positional codec specifically)."""
-    eng, expected = golden
+def _check_phrase(eng, pins):
     ph = eng.phrase_search("import numpy", k=100).join(
         eng.doc_map.select("doc_id", "path"), on="doc_id"
     )
     got = sorted([r["path"], int(r["phrase_tf"])] for r in ph.collect())
-    assert got == [list(w) for w in expected["phrase"]]
+    assert got == [list(w) for w in pins["phrase"]]
+
+
+def test_golden_stats(golden):
+    _check_stats(*_pinned(golden, "gen-000001"))
+
+
+def test_golden_query_pins(golden):
+    """Every pinned query answers bit-identically from the committed bytes
+    (scores pinned to 9 decimals — float64 BM25 is deterministic here)."""
+    _check_queries(*_pinned(golden, "gen-000001"))
+
+
+def test_golden_phrase_pin(golden):
+    """The committed position payloads decode to the pinned phrase counts
+    (guards the positional codec specifically)."""
+    _check_phrase(*_pinned(golden, "gen-000001"))
+
+
+@pytest.mark.parametrize("gen", ["gen-000002", "gen-000003"])
+def test_golden_incremental_pins(golden, gen):
+    """The ADD and REMOVE generations answer their pins from the committed
+    refs chain: stats, queries and the phrase over positions repacked by
+    the driver commit arm."""
+    eng, pins = _pinned(golden, gen)
+    _check_stats(eng, pins)
+    _check_queries(eng, pins)
+    _check_phrase(eng, pins)

@@ -99,7 +99,7 @@ def test_msearch_k_cut_per_query(engine):
     assert all(len(v) == 2 for v in got.values())
 
 
-def test_msearch_single_scan_plan(engine):
+def test_msearch_single_scan_plan(engine, spark_arm):
     hits = engine.msearch({"a": "table", "b": "scan"}, k=3)
     plan = hits._jdf.queryExecution().executedPlan().toString()
     # every query rides ONE shard-kernel cogroup over the union-of-terms

@@ -8,6 +8,8 @@ bounds.
     python tools/arm_crossover.py INDEX_DIR DOCS DOCS_PER_SHARD \\
         shards 32 64 ...           # one rare (df <= 2) term per shard
     python tools/arm_crossover.py INDEX_DIR DOCS DOCS_PER_SHARD \\
+        msearch mid:2 head:32 ...  # msearch batches of two-term queries
+    python tools/arm_crossover.py INDEX_DIR DOCS DOCS_PER_SHARD \\
         commit add:200 remove:100/1 remove:4000/20 ...
     python tools/arm_crossover.py INDEX_DIR DOCS DOCS_PER_SHARD \\
         commit-positions ...       # the same on a positional index
@@ -20,6 +22,13 @@ postings (volume), touched shards, ``daat.driver_work``,
 ``daat.fits_driver`` and the median of 5 warm ``search().collect()`` per
 arm.  For the volume family each target is the smallest top-df prefix
 reaching it.
+
+``msearch`` takes ``BAND:QUERIES`` targets: a batch of QUERIES OR queries
+of two terms each, drawn in df order from the band (head: df >= 5% of the
+docs; mid: 0.2% < df < 5%), and prints one JSON line per batch: the
+summed postings of its plans, ``daat.driver_work`` and ``daat.fits_driver``
+over every plan's dfs (the rule ``SearchEngine.msearch`` applies), and the
+median of 5 warm ``msearch().collect()`` per arm.
 
 ``commit`` takes ``add:ROWS`` (new documents, ``generate_corpus(ROWS,
 seed=2)`` under fresh repo names) and ``remove:ROWS/SHARDS`` (ROWS indexed
@@ -58,19 +67,55 @@ from strucmotif_search_spark.streaming import (  # noqa: E402
 )
 
 
-def timed(eng: SearchEngine, query: str, on_driver: bool, reps: int = 5) -> float:
+def timed(call, on_driver: bool, reps: int = 5) -> float:
+    """Median ms of ``reps`` warm ``call()`` on one arm."""
     rule = daat.fits_driver
     daat.fits_driver = lambda n_shards, dfs: on_driver
     try:
-        eng.search(query, k=10).collect()  # warm
+        call()  # warm
         ts = []
         for _ in range(reps):
             t0 = time.perf_counter()
-            eng.search(query, k=10).collect()
+            call()
             ts.append((time.perf_counter() - t0) * 1000)
     finally:
         daat.fits_driver = rule
     return statistics.median(ts)
+
+
+def msearch_batches(eng: SearchEngine, n_docs: int, targets: list[str]) -> None:
+    terms = eng.terms.select("term", "df").toPandas().sort_values(
+        ["df", "term"], ascending=[False, True]
+    )
+    bands = {
+        "head": terms[terms["df"] >= 0.05 * n_docs]["term"].tolist(),
+        "mid": terms[
+            (terms["df"] > 0.002 * n_docs) & (terms["df"] < 0.05 * n_docs)
+        ]["term"].tolist(),
+    }
+    n_shards = eng.meta["n_shards"]
+    for target in targets:
+        band, n = target.split(":")
+        pool = bands[band]
+        queries = {
+            f"q{i}": f"{pool[2 * i % len(pool)]} {pool[(2 * i + 1) % len(pool)]}"
+            for i in range(int(n))
+        }
+        dfs = [df for q in queries.values() for df in eng.plan(q).dfs]
+
+        def call():
+            eng.msearch(queries, k=10).collect()
+
+        driver = [timed(call, True)]
+        spark_ms = timed(call, False)
+        driver.append(timed(call, True))
+        print(json.dumps({
+            "target": target, "n_shards": n_shards, "volume": sum(dfs),
+            "work": daat.driver_work(n_shards, dfs),
+            "fits_driver": daat.fits_driver(n_shards, dfs),
+            "driver_ms": round(statistics.median(driver), 1),
+            "spark_ms": round(spark_ms, 1),
+        }), flush=True)
 
 
 def plans(eng: SearchEngine, family: str, targets: list[int]) -> list[list[str]]:
@@ -237,6 +282,10 @@ def main() -> None:
         commits(spark, root, eng, sys.argv[5:])
         spark.stop()
         return
+    if family == "msearch":
+        msearch_batches(eng, n, sys.argv[5:])
+        spark.stop()
+        return
     n_shards = eng.meta["n_shards"]
     for terms in plans(eng, family, [int(x) for x in sys.argv[5:]]):
         query = " ".join(terms)
@@ -244,9 +293,13 @@ def main() -> None:
         blocks = eng._local_blocks(
             sorted(t for t, _df in eng._vocab_lookup(terms).values())
         )
-        driver = [timed(eng, query, True)]
-        spark_ms = timed(eng, query, False)
-        driver.append(timed(eng, query, True))
+
+        def call():
+            eng.search(query, k=10).collect()
+
+        driver = [timed(call, True)]
+        spark_ms = timed(call, False)
+        driver.append(timed(call, True))
         print(json.dumps({
             "n_shards": n_shards, "terms": len(terms), "volume": sum(dfs),
             "touched": int(blocks["shard"].nunique()),
