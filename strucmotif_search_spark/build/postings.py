@@ -170,25 +170,11 @@ def _pack_runs(
     return pd.DataFrame(cols)
 
 
-def _pack_partition(batches) -> "pd.DataFrame":
-    """mapInPandas kernel: pack a whole sorted partition, carrying the
-    trailing (possibly incomplete) (shard, term_id) run across Arrow batch
-    boundaries so runs split by batching are packed once."""
-
-    def emit(frame: pd.DataFrame) -> pd.DataFrame:
-        pos = (
-            frame["positions"].to_numpy()
-            if "positions" in frame.columns
-            else None
-        )
-        return _pack_runs(
-            frame["shard"].to_numpy(),
-            frame["term_id"].to_numpy(),
-            frame["doc_id"].to_numpy(),
-            frame["tf"].to_numpy(),
-            positions=pos,
-        )
-
+def _carry_runs(batches, emit) -> Iterator[pd.DataFrame]:
+    """Yield ``emit(frame)`` over the Arrow batches of a partition sorted
+    by (shard, term_id), carrying the trailing (possibly incomplete)
+    (shard, term_id) run across batch boundaries so a run split by
+    batching reaches ``emit`` whole."""
     carry: pd.DataFrame | None = None
     for pdf in batches:
         if len(pdf) == 0:
@@ -208,6 +194,24 @@ def _pack_partition(batches) -> "pd.DataFrame":
         yield emit(head)
     if carry is not None and len(carry):
         yield emit(carry)
+
+
+def _pack_rows(frame: pd.DataFrame) -> pd.DataFrame:
+    """Pack a frame of whole (shard, term_id) posting-row runs."""
+    pos = frame["positions"].to_numpy() if "positions" in frame.columns else None
+    return _pack_runs(
+        frame["shard"].to_numpy(),
+        frame["term_id"].to_numpy(),
+        frame["doc_id"].to_numpy(),
+        frame["tf"].to_numpy(),
+        positions=pos,
+    )
+
+
+def _pack_partition(batches) -> Iterator[pd.DataFrame]:
+    """mapInPandas kernel: pack a whole sorted partition of posting rows,
+    each (shard, term_id) run once."""
+    return _carry_runs(batches, _pack_rows)
 
 
 def pack_postings(
@@ -310,31 +314,13 @@ def _merge_pack_run_rows(frame: pd.DataFrame, with_positions: bool) -> pd.DataFr
 
 
 def _pack_runs_partition(with_positions: bool):
-    """mapInPandas kernel factory over packed run rows: carries the trailing
-    (shard, term_id) group across Arrow batch boundaries (same contract as
-    :func:`_pack_partition`)."""
+    """mapInPandas kernel factory over packed run rows sorted by
+    (shard, term_id): each (shard, term_id) group merged and packed once."""
 
     def _kernel(batches) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            last_shard = pdf["shard"].iloc[-1]
-            last_tid = pdf["term_id"].iloc[-1]
-            tail_mask = (
-                (pdf["shard"] == last_shard) & (pdf["term_id"] == last_tid)
-            )
-            n_tail = int(tail_mask.to_numpy()[::-1].argmin()) or len(pdf)
-            if n_tail == len(pdf):
-                carry = pdf
-                continue
-            head = pdf.iloc[: len(pdf) - n_tail]
-            carry = pdf.iloc[len(pdf) - n_tail :]
-            yield _merge_pack_run_rows(head, with_positions)
-        if carry is not None and len(carry):
-            yield _merge_pack_run_rows(carry, with_positions)
+        return _carry_runs(
+            batches, lambda f: _merge_pack_run_rows(f, with_positions)
+        )
 
     return _kernel
 

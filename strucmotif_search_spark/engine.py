@@ -96,6 +96,22 @@ def collect_with_timeout(spark: SparkSession, fn, timeout_s: float):
     return out[0]
 
 
+def _expansion_members(
+    matches: DataFrame, max_expansions: int, too_many: str
+) -> list[str]:
+    """The sorted ``term`` values of a filtered terms table: the members a
+    multi-term query expands to.  Collects at most ``max_expansions + 1``
+    rows and raises ``ValueError(too_many)`` when there are more than
+    ``max_expansions`` (the Lucene blowup guard)."""
+    rows = (
+        matches.select("term").orderBy("term").limit(max_expansions + 1)
+        .collect()
+    )
+    if len(rows) > max_expansions:
+        raise ValueError(too_many)
+    return [r["term"] for r in rows]
+
+
 class SearchEngine:
     def __init__(
         self, spark: SparkSession, store: IndexStore, gen: str | None = None
@@ -577,18 +593,10 @@ class SearchEngine:
             toks = tokenize(stem)
             if len(toks) != 1 or toks[0] != stem:
                 raise ValueError(f"invalid {what} {raw!r}")
-            rows = (
-                probe(stem)
-                .select("term")
-                .orderBy("term")
-                .limit(max_expansions + 1)
-                .collect()
+            members = _expansion_members(
+                probe(stem), max_expansions,
+                f"{raw!r} expands to more than {max_expansions} terms",
             )
-            members = [r["term"] for r in rows]
-            if len(members) > max_expansions:
-                raise ValueError(
-                    f"{raw!r} expands to more than {max_expansions} terms"
-                )
             if not members:
                 base_tokens.append(stem)  # absent group
                 continue
@@ -624,18 +632,11 @@ class SearchEngine:
         Lucene guard); a pattern matching nothing contributes an absent
         group (ignored under OR, empties the result under AND).
         """
-        rows = (
-            self.terms.where(F.col("term").rlike(f"^(?:{pattern})$"))
-            .select("term")
-            .orderBy("term")
-            .limit(max_expansions + 1)
-            .collect()
+        members = _expansion_members(
+            self.terms.where(F.col("term").rlike(f"^(?:{pattern})$")),
+            max_expansions,
+            f"{pattern!r} matches more than {max_expansions} terms",
         )
-        members = [r["term"] for r in rows]
-        if len(members) > max_expansions:
-            raise ValueError(
-                f"{pattern!r} matches more than {max_expansions} terms"
-            )
         base_tokens = list(extra_terms.split())
         expansions: dict[str, list[str]] = {}
         if members:
@@ -720,7 +721,8 @@ class SearchEngine:
         hits = fielded_topk(
             self.spark,
             self.postings,
-            self.doc_map,  # (doc_id, doclen) provider for the content side
+            self.norms,
+            self.meta["docs_per_shard"],
             plan,
             fp,
             fn_docs,
@@ -852,7 +854,8 @@ class SearchEngine:
         hits = qualified_topk(
             self.spark,
             self.postings,
-            self.doc_map,
+            self.norms,
+            self.meta["docs_per_shard"],
             plan,
             term_of_key,
             field_sides,
@@ -933,7 +936,7 @@ class SearchEngine:
 
         query = analyze_text(query, self.analyzer)
         return near_topk(
-            self.spark, self.postings, self.terms, query, window, k=k,
+            self.spark, self.postings, self._vocab_lookup, query, window, k=k,
             ordered=ordered,
         )
 
@@ -1069,7 +1072,7 @@ class SearchEngine:
 
         phrase = analyze_text(phrase, self.analyzer)
         return phrase_topk(
-            self.spark, self.postings, self.terms, phrase, k=k,
+            self.spark, self.postings, self._vocab_lookup, phrase, k=k,
             decoded_blocks_acc=decoded_blocks_acc,
         )
 

@@ -226,20 +226,20 @@ def explain_contributions(
 ) -> DataFrame:
     """Score transparency (the Lucene ``explain()`` surface): for each
     requested doc and each present query term, the exact BM25 contribution
-    ``(doc_id, term, tf, contrib)`` with
-    ``contrib = idf * tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))`` — summing
-    ``contrib`` over terms reproduces the search score bit-for-bit modulo
-    summation order.
+    ``(doc_id, term, tf, contrib)``.  Each ``contrib`` is the
+    ``daat.bm25_weight`` the search scorer adds for that term, so a doc's
+    contributions summed in ascending term_id order from 0.0 equal its
+    search score bit for bit.
 
-    Plan: the posting scan carries pushed-down ``In(term_id)`` AND
+    Plan: the DAAT contributions kernel (``daat.bm25_contributions``) over
+    a posting scan that carries pushed-down ``In(term_id)`` AND
     ``In(shard)`` predicates (the requested docs' shards are known
-    driver-side: ``doc_id // docs_per_shard``), so only the handful of
-    blocks that can contain the requested docs are read; decode is the
-    Arrow-vectorized block decoder; idf/doclen attach as a literal map and
-    a broadcast doc_map join; the contribution itself is a JVM expression.
-    Nothing here scales with the corpus — only with ``len(doc_ids)`` and
-    the query's posting blocks for those shards."""
+    driver-side: ``doc_id // docs_per_shard``), cogrouped with those
+    shards' norms rows; only the blocks overlapping the requested docs'
+    range are decoded.  Nothing here scales with the corpus — only with
+    ``len(doc_ids)`` and the query's posting blocks for those shards."""
     from ..tokenizer import analyze_text
+    from .daat import bm25_contributions
     from .planner import plan_query
 
     # analyze like engine.search so explained contributions sum to the
@@ -250,44 +250,10 @@ def explain_contributions(
         return local_frame(
             engine.spark, [], "doc_id long, term string, tf long, contrib double"
         )
-    dps = int(engine.meta["docs_per_shard"])
-    shards = sorted({d // dps for d in doc_ids})
-    blocks = engine.postings.where(
-        F.col("term_id").isin(plan.term_ids) & F.col("shard").isin(shards)
-    )
-    decoded = decode_postings(blocks).where(F.col("doc_id").isin(doc_ids))
-    idf_map = F.create_map(
-        *[
-            x
-            for tid, w in zip(plan.term_ids, plan.idfs)
-            for x in (F.lit(tid), F.lit(w))
-        ]
-    )
-    term_map = F.create_map(
-        *[
-            x
-            for tid, t in zip(plan.term_ids, plan.terms)
-            for x in (F.lit(tid), F.lit(t))
-        ]
-    )
-    dl = F.broadcast(
-        engine.doc_map.where(F.col("doc_id").isin(doc_ids)).select(
-            "doc_id", "doclen"
-        )
-    )
-    k1, b, avgdl = plan.k1, plan.b, plan.avgdl
-    tf = F.col("tf").cast("double")
-    contrib = (
-        idf_map[F.col("term_id")]
-        * (tf * (k1 + 1.0))
-        / (tf + k1 * (1.0 - b + b * F.col("doclen") / avgdl))
-    )
-    return decoded.join(dl, on="doc_id").select(
-        "doc_id",
-        term_map[F.col("term_id")].alias("term"),
-        F.col("tf").cast("long").alias("tf"),
-        contrib.alias("contrib"),
-    )
+    return bm25_contributions(
+        engine.postings, engine.norms, plan, int(engine.meta["docs_per_shard"]),
+        dict(zip(plan.term_ids, plan.terms)), doc_ids,
+    ).withColumnRenamed("c", "contrib")
 
 
 def more_like_this(

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from .. import BM25_B, BM25_K1
 from ..oracle import tokenize
 from ..tokenizer import analyze_text, term_frequencies
+from .daat import bm25_weight
 from .planner import idf as _idf
 
 
@@ -74,11 +75,9 @@ def classify_documents(
         .join(dl, on="doc_id")
         .withColumn(
             "contrib",
-            F.col("idf")
-            * (F.col("tf") * (BM25_K1 + 1.0))
-            / (
-                F.col("tf")
-                + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("doclen") / F.lit(avgdl))
+            bm25_weight(
+                F.col("idf"), F.col("tf"), F.col("doclen"),
+                BM25_K1, BM25_B, avgdl,
             ),
         )
     )

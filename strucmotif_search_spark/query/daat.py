@@ -35,14 +35,20 @@ split across S shards; the only shuffle is blocks+norms -> shard groups,
 and the result is S*k rows.  No join against the doc dictionary until after
 the top-k (late materialization, TargetStructure.java:24-27 analogue).
 
-This module is the one owner of per-shard scoring and per-shard top-k.  The
-shard code is module-level so every per-shard scorer shares it:
-``_posting_blocks`` (the pushed-down block scan), ``_score_shards`` (the
-shard cogroup with the bucketed norms), ``_shard_norms`` (norms unpack),
-``term_blocks`` + ``group_tf`` (dense tf decode with block skipping) and
-``_shard_topk`` (boundary-tie shard heap).  ``msearch`` (query/msearch.py) runs one
-``_make_scorer`` per query inside a single cogroup; Dirichlet QL
-(query/ql.py) keeps only its formula and candidate rule.
+This module is the one owner of per-shard scoring, per-shard top-k and the
+BM25 term weight (``bm25_weight``).  The shard code is module-level so every
+per-shard scorer shares it: ``_posting_blocks`` (the pushed-down block
+scan), ``_score_shards`` (the shard cogroup with the bucketed norms),
+``_shard_norms`` (norms unpack), ``term_blocks`` + ``group_tf`` (dense tf
+decode with block skipping) and ``_shard_topk`` (boundary-tie shard heap).
+Its users:
+- ``msearch`` (query/msearch.py) runs one ``_make_scorer`` per query inside
+  a single cogroup;
+- ``_make_contributions`` / ``bm25_contributions`` emit per-(doc, group)
+  weights instead of sums: the content side of ``fielded_search`` and
+  ``search_qualified`` (query/fielded.py) and ``explain_contributions``
+  (query/analytics.py);
+- Dirichlet QL (query/ql.py) keeps only its formula and candidate rule.
 """
 
 from __future__ import annotations
@@ -59,6 +65,7 @@ from ..session import local_frame
 from .planner import QueryPlan
 
 _RESULT_SCHEMA = "doc_id long, score double"
+_CONTRIB_SCHEMA = "doc_id long, term string, tf long, c double"
 
 # the posting-block columns every shard kernel reads
 BLOCK_COLS = (
@@ -192,6 +199,16 @@ def _score_shards(
         .cogroup(norms.groupBy("shard"))
         .applyInPandas(fn, schema=schema)
     )
+
+
+def bm25_weight(idf, tf, dl, k1: float, b: float, avgdl: float):
+    """The BM25 term weight ``idf * tf(k1+1) / (tf + k1(1-b+b*dl/avgdl))``
+    in the one operand order every scorer and contribution shares, so
+    their float64 results agree bit for bit.  Plain arithmetic: over numpy
+    arrays it computes the weights, over Spark Columns it builds the
+    equivalent Catalyst expression (the field side of query/fielded.py and
+    query/classify.py, whose inputs are not posting blocks)."""
+    return idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
 def _make_scorer(
@@ -373,9 +390,7 @@ def _make_scorer(
                 nz = np.flatnonzero(dense * (dense_len > 0))
                 tf = dense[nz]
                 dl = dense_len[nz]
-                prune_score[nz] += grp.idf * (tf * (k1 + 1.0)) / (
-                    tf + k1 * (1.0 - b + b * dl / avgdl)
-                )
+                prune_score[nz] += bm25_weight(grp.idf, tf, dl, k1, b, avgdl)
 
         # --- scoring: dense accumulation, ascending group key ---
         score = np.zeros(docs_per_shard, dtype=np.float64)
@@ -398,10 +413,7 @@ def _make_scorer(
                     continue  # purely negated term: gates matching only
             tf = dense[idx]
             dl = dense_len[idx]
-            contrib = grp.idf * (tf * (k1 + 1.0)) / (
-                tf + k1 * (1.0 - b + b * dl / avgdl)
-            )
-            score[idx] += contrib
+            score[idx] += bm25_weight(grp.idf, tf, dl, k1, b, avgdl)
             if mode != "bool" or grp.required:
                 matched[idx] += 1
 
@@ -435,6 +447,87 @@ def _make_scorer(
         return _shard_topk(hit, s, base, k)
 
     return score_shard
+
+
+def _empty_contribs() -> pd.DataFrame:
+    return pd.DataFrame(
+        {"doc_id": [], "term": [], "tf": [], "c": []}
+    ).astype({"doc_id": "int64", "term": "object", "tf": "int64", "c": "float64"})
+
+
+def _make_contributions(
+    plan: QueryPlan,
+    docs_per_shard: int,
+    term_of_key: dict[int, str],
+    doc_ids=None,
+):
+    """Per-shard BM25 contributions ``(doc_id, term, tf, c)`` (schema
+    ``_CONTRIB_SCHEMA``), one row per (doc, scoring group) with group tf > 0
+    and doclen > 0 — the scorer's eligibility mask.  ``c`` is the
+    ``bm25_weight`` that ``_make_scorer`` adds to the doc's score, so the
+    contributions of a doc, summed in ascending group-key order from 0.0,
+    equal its search score bit for bit.  ``term_of_key`` names each group;
+    ``doc_ids`` (optional) limits the rows to those docs, and the decode to
+    the blocks overlapping their range."""
+    by_key = sorted(plan.groups, key=lambda g: g.key)
+    k1, b, avgdl = plan.k1, plan.b, plan.avgdl
+    want = None if doc_ids is None else np.unique(np.asarray(doc_ids, np.int64))
+
+    def contribs(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if len(left) == 0 or len(right) == 0:
+            return _empty_contribs()
+        base, dense_len = _shard_norms(right, docs_per_shard)
+        groups_by_tid = term_blocks(left)
+        rng = () if want is None else (int(want[0]), int(want[-1]))
+        parts = []
+        for grp in by_key:
+            dense = group_tf(
+                groups_by_tid, grp.member_ids, base, docs_per_shard, *rng
+            )
+            if dense is None:
+                continue
+            idx = np.flatnonzero((dense > 0.0) & (dense_len > 0.0))
+            if want is not None:
+                idx = idx[np.isin(idx + base, want)]
+            tf = dense[idx]
+            parts.append(pd.DataFrame({
+                "doc_id": (idx + base).astype("int64"),
+                "term": term_of_key[grp.key],
+                "tf": tf.astype("int64"),
+                "c": bm25_weight(grp.idf, tf, dense_len[idx], k1, b, avgdl),
+            }))
+        if not parts:
+            return _empty_contribs()
+        return pd.concat(parts, ignore_index=True)
+
+    return contribs
+
+
+def bm25_contributions(
+    postings: DataFrame,
+    norms: DataFrame,
+    plan: QueryPlan,
+    docs_per_shard: int,
+    term_of_key: dict[int, str],
+    doc_ids=None,
+) -> DataFrame:
+    """``_make_contributions`` run per shard over the plan's pushed-down
+    block scan and the bucketed ``norms``: one cogroup task per shard, no
+    decode-and-join against the doc dictionary.  With ``doc_ids`` the scan
+    and the norms also carry ``In(shard)`` of those docs' shards."""
+    blocks = _posting_blocks(
+        postings, sorted({tid for g in plan.groups for tid in g.member_ids})
+    )
+    if doc_ids is not None:
+        in_shards = F.col("shard").isin(
+            sorted({d // docs_per_shard for d in doc_ids})
+        )
+        blocks, norms = blocks.where(in_shards), norms.where(in_shards)
+    return _score_shards(
+        blocks, norms,
+        _make_contributions(plan, docs_per_shard, term_of_key, doc_ids),
+        _CONTRIB_SCHEMA,
+    )
 
 
 def term_upper_bound(idf: float, max_tf: int, k1: float, b: float) -> float:

@@ -31,10 +31,13 @@ Determinism contract: per-doc summation is ordered by ascending term string
 by doc_id asc — same float64-replayable discipline as the rest of the query
 layer (oracle.py replays it bitwise in the tests).
 
-Scale shape: the content side is bounded by the query terms' posting lists
-(pushed-down ``term_id IN`` scan); the field side by the query terms' field
-df.  The full outer join shuffles both sides on (doc_id, term) — both are
-df-bounded, never corpus-wide; AQE right-sizes the exchange.
+Scale shape: the content side is the DAAT contributions kernel
+(``daat.bm25_contributions``): one cogroup task per shard over the query
+terms' pushed-down ``term_id IN`` block scan and the bucketed norms, with
+the search scorer's ``bm25_weight`` and no join against ``doc_map``.  The
+field side is bounded by the query terms' field df.  The full outer join
+shuffles both sides on (doc_id, term) — both are df-bounded, never
+corpus-wide; AQE right-sizes the exchange.
 """
 
 from __future__ import annotations
@@ -45,8 +48,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import TOKEN_PATTERN
-from ..build.postings import decode_postings
 from ..session import local_frame
+from .daat import bm25_contributions, bm25_weight
 from .planner import QueryPlan, idf
 
 _CONTRIB_SCHEMA = "doc_id long, term string, c double"
@@ -95,57 +98,6 @@ def field_stats(
     return int(row["n"]), float(row["avg_fl"] or 0.0)
 
 
-def bm25_group_contribs(
-    postings: DataFrame,
-    norms_decoded: DataFrame,  # (doc_id, doclen) — doc_map works too
-    plan: QueryPlan,
-    term_of_key: dict[int, str],
-) -> DataFrame:
-    """Per-(doc, scoring-group) BM25 contributions: (doc_id, term, c), the
-    group key mapped back to its term string through ``term_of_key`` — the
-    content side of the fielded scorers, which need contributions at group
-    granularity (not per-doc sums) to combine them with a second field's
-    contributions before the combined top-k."""
-    q_ids = sorted({tid for g in plan.groups for tid in g.member_ids})
-    blocks = postings.where(F.col("term_id").isin(q_ids))
-    decoded = decode_postings(blocks)
-
-    # member term_id -> expansion-group key / idf (A4: a group's tf is the
-    # SUM of member tfs — posting-list union with payload concat,
-    # DefaultTargetAssembler.java:85-88; singleton groups for plain queries)
-    key_of = {tid: g.key for g in plan.groups for tid in g.member_ids}
-    idf_of = {g.key: g.idf for g in plan.groups}
-    key_map = F.create_map(
-        *[F.lit(x) for x in chain.from_iterable(key_of.items())]
-    )
-    idf_map = F.create_map(
-        *[F.lit(x) for x in chain.from_iterable(idf_of.items())]
-    )
-    grouped = (
-        decoded.withColumn("gkey", key_map[F.col("term_id")])
-        .groupBy("doc_id", "gkey")
-        .agg(F.sum("tf").alias("tf"))
-    )
-    d = grouped.join(norms_decoded.select("doc_id", "doclen"), on="doc_id")
-    contrib = (
-        idf_map[F.col("gkey")]
-        * (F.col("tf") * (plan.k1 + 1.0))
-        / (
-            F.col("tf")
-            + plan.k1
-            * (1.0 - plan.b + plan.b * F.col("doclen") / F.lit(plan.avgdl))
-        )
-    )
-    term_map = F.create_map(
-        *[F.lit(x) for x in chain.from_iterable(term_of_key.items())]
-    )
-    return d.select(
-        "doc_id",
-        term_map[F.col("gkey")].alias("term"),
-        contrib.cast("double").alias("c"),
-    )
-
-
 def _field_contribs(
     fposts: DataFrame,
     terms: list[str],
@@ -168,16 +120,11 @@ def _field_contribs(
     idf_map = F.create_map(
         *[F.lit(x) for x in chain.from_iterable(fidf.items())]
     )
-    denom = F.col("tf") + plan.k1 * (
-        1.0 - plan.b + plan.b * F.col("fieldlen") / F.lit(avg_fieldlen)
+    c = bm25_weight(
+        idf_map[F.col("term")], F.col("tf"), F.col("fieldlen"),
+        plan.k1, plan.b, avg_fieldlen,
     )
-    return qf.select(
-        "doc_id",
-        key,
-        (idf_map[F.col("term")] * (F.col("tf") * (plan.k1 + 1.0)) / denom)
-        .cast("double")
-        .alias("c"),
-    )
+    return qf.select("doc_id", key, c.cast("double").alias("c"))
 
 
 def _ordered_sum_topk(
@@ -206,7 +153,8 @@ def _ordered_sum_topk(
 def fielded_topk(
     spark: SparkSession,
     postings: DataFrame,
-    norms_decoded: DataFrame,
+    norms: DataFrame,
+    docs_per_shard: int,
     plan: QueryPlan,
     fposts: DataFrame,
     field_n_docs: int,
@@ -239,7 +187,9 @@ def fielded_topk(
     if plan.empty_or:
         cc = local_frame(spark, [], _CONTRIB_SCHEMA)
     else:
-        cc = bm25_group_contribs(postings, norms_decoded, plan, term_of_key)
+        cc = bm25_contributions(
+            postings, norms, plan, docs_per_shard, term_of_key
+        )
 
     # ---- field side: contributions from the derived field postings ----
     fc = _field_contribs(
@@ -289,7 +239,8 @@ def parse_qualified(query: str) -> list[tuple[str | None, str]]:
 def qualified_topk(
     spark: SparkSession,
     postings: DataFrame,
-    norms_decoded: DataFrame,
+    norms: DataFrame,
+    docs_per_shard: int,
     plan: QueryPlan,
     term_of_key: dict[int, str],
     field_sides: dict[str, tuple[DataFrame, int, float]],
@@ -313,7 +264,9 @@ def qualified_topk(
     sides = []
     content_terms = sorted({t for f, t in clauses if f is None})
     if content_terms and not plan.empty_or:
-        cc = bm25_group_contribs(postings, norms_decoded, plan, term_of_key)
+        cc = bm25_contributions(
+            postings, norms, plan, docs_per_shard, term_of_key
+        )
         sides.append(
             cc.select(
                 "doc_id", F.concat(F.lit(":"), "term").alias("ckey"), "c"

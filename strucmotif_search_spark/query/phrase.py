@@ -41,9 +41,15 @@ from ..build.postings import unpack_positions
 from ..codec import unpack_block
 from ..oracle import tokenize
 from ..session import local_frame
+from .planner import VocabLookup
 
 _RESULT = "doc_id long, phrase_tf long"
 _POS_CAP = 1 << 22  # max positions per doc supported by the packed key
+# the posting-block columns both positional kernels read
+_POS_BLOCK_COLS = (
+    "shard", "term_id", "first_doc_id", "max_doc_id", "doc_gaps", "tfs",
+    "pos_data",
+)
 
 
 def _empty() -> pd.DataFrame:
@@ -52,16 +58,70 @@ def _empty() -> pd.DataFrame:
     )
 
 
+def _narrow(
+    pdf: pd.DataFrame, order_tids: list[int]
+) -> tuple[np.ndarray, dict[int, list], int]:
+    """Phase 1 of a shard's positional query: doc-id narrowing over
+    ``order_tids`` (rarest first), decoding a block only when its
+    ``[first_doc_id, max_doc_id]`` range can still hold a candidate.
+    Returns ``(cand, kept, n_decoded)``: the sorted unique doc ids holding
+    every term (empty when none), each term's decoded blocks that hold a
+    candidate as ``tid -> [(ids, tfs, pos_bytes), ...]``, and the number of
+    blocks decoded."""
+    no_docs = np.zeros(0, dtype=np.int64)
+    by_tid = {int(t): g for t, g in pdf.groupby("term_id", sort=False)}
+    if any(tid not in by_tid for tid in order_tids):
+        return no_docs, {}, 0  # a term with no postings here -> no match
+    n_decoded = 0
+    cand: np.ndarray | None = None  # sorted unique candidate doc_ids
+    kept: dict[int, list] = {}
+    for tid in order_tids:
+        g = by_tid[tid].sort_values("first_doc_id")
+        rows_kept: list = []
+        docs_l: list = []
+        for row in g.itertuples(index=False):
+            if cand is not None:
+                # block skip: no candidate falls in [first, max]
+                j = int(np.searchsorted(cand, row.first_doc_id))
+                if j >= cand.size or cand[j] > row.max_doc_id:
+                    continue
+            ids, tfs = unpack_block(bytes(row.doc_gaps), bytes(row.tfs))
+            n_decoded += 1
+            if cand is not None:
+                m = np.isin(ids, cand, assume_unique=True)
+                if not m.any():
+                    continue
+                docs_l.append(ids[m])
+            else:
+                docs_l.append(ids)
+            rows_kept.append((ids, tfs, row.pos_data))
+        if not docs_l:
+            return no_docs, kept, n_decoded
+        # blocks of one (shard, term) run are doc-ascending + disjoint,
+        # so the concat is already sorted unique
+        term_docs = np.concatenate(docs_l)
+        cand = (
+            term_docs if cand is None
+            else cand[np.isin(cand, term_docs, assume_unique=True)]
+        )
+        if cand.size == 0:
+            return cand, kept, n_decoded
+        kept[tid] = rows_kept
+    return cand, kept, n_decoded
+
+
 def phrase_topk(
     spark: SparkSession,
     postings: DataFrame,
-    terms_table: DataFrame,
+    vocab_lookup: VocabLookup,
     phrase: str,
     k: int = 10,
     decoded_blocks_acc=None,
 ) -> DataFrame:
     """Top-k docs containing the exact token sequence of ``phrase``, ranked
-    by occurrence count (ties -> ascending doc_id).
+    by occurrence count (ties -> ascending doc_id).  ``vocab_lookup`` is
+    the engine's vocabulary cache (``SearchEngine._vocab_lookup``), so the
+    query launches one Spark job, the scoring one.
 
     ``decoded_blocks_acc``: optional Spark accumulator incremented by the
     number of posting blocks actually payload-decoded — instrumentation for
@@ -78,12 +138,7 @@ def phrase_topk(
             f"phrase length {len(seq)} exceeds the packed-key slot "
             "capacity (64 tokens); split the phrase or widen the key"
         )
-    lookup = {
-        r["term"]: (int(r["term_id"]), int(r["df"]))
-        for r in terms_table.where(
-            F.col("term").isin(sorted(set(seq)))
-        ).select("term", "term_id", "df").collect()
-    }
+    lookup = vocab_lookup(sorted(set(seq)))
     if any(t not in lookup for t in seq):  # absent term -> empty (O5 analogue)
         return local_frame(spark, [], _RESULT)
     slots = [(i, lookup[t][0]) for i, t in enumerate(seq)]
@@ -96,56 +151,20 @@ def phrase_topk(
     tids = sorted({tid for _, tid in slots})
 
     blocks = postings.where(F.col("term_id").isin(tids)).select(
-        "shard", "term_id", "first_doc_id", "max_doc_id",
-        "doc_gaps", "tfs", "pos_data"
+        *_POS_BLOCK_COLS
     )
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        by_tid = {int(t): g for t, g in pdf.groupby("term_id", sort=False)}
-        if any(tid not in by_tid for tid in order_tids):
-            return _empty()  # a slot with no postings here -> no match
-        n_decoded = 0
+        # --- phase 1: doc-id narrowing, rarest first, skip by block range ---
+        cand, kept, n_decoded = _narrow(pdf, order_tids)
 
         def done(out: pd.DataFrame) -> pd.DataFrame:
             if decoded_blocks_acc is not None:
                 decoded_blocks_acc.add(n_decoded)
             return out
 
-        # --- phase 1: doc-id narrowing, rarest first, skip by block range ---
-        cand: np.ndarray | None = None  # sorted unique candidate doc_ids
-        kept: dict[int, list] = {}      # tid -> [(ids, tfs, pos_bytes), ...]
-        for tid in order_tids:
-            g = by_tid[tid].sort_values("first_doc_id")
-            rows_kept: list = []
-            docs_l: list = []
-            for row in g.itertuples(index=False):
-                if cand is not None:
-                    # block skip: no candidate falls in [first, max]
-                    j = int(np.searchsorted(cand, row.first_doc_id))
-                    if j >= cand.size or cand[j] > row.max_doc_id:
-                        continue
-                ids, tfs = unpack_block(bytes(row.doc_gaps), bytes(row.tfs))
-                n_decoded += 1
-                if cand is not None:
-                    m = np.isin(ids, cand, assume_unique=True)
-                    if not m.any():
-                        continue
-                    docs_l.append(ids[m])
-                else:
-                    docs_l.append(ids)
-                rows_kept.append((ids, tfs, row.pos_data))
-            if not docs_l:
-                return done(_empty())
-            # blocks of one (shard, term) run are doc-ascending + disjoint,
-            # so the concat is already sorted unique
-            term_docs = np.concatenate(docs_l)
-            cand = (
-                term_docs if cand is None
-                else cand[np.isin(cand, term_docs, assume_unique=True)]
-            )
-            if cand.size == 0:
-                return done(_empty())
-            kept[tid] = rows_kept
+        if cand.size == 0:
+            return done(_empty())
 
         # --- phase 2: positional intersection over surviving docs only ---
         keys: np.ndarray | None = None
@@ -204,7 +223,7 @@ def _empty_near() -> pd.DataFrame:
 def near_topk(
     spark: SparkSession,
     postings: DataFrame,
-    terms_table: DataFrame,
+    vocab_lookup: VocabLookup,
     query: str,
     window: int,
     k: int = 10,
@@ -228,10 +247,12 @@ def near_topk(
     minimum-window-subsequence DP over the merged position stream —
     O(P * n_slots); the unordered mode keeps the O(P) two-pointer cover.
 
-    Execution per shard (cogroup task) reuses the phrase kernel's two-phase
-    shape: (1) doc-id narrowing rarest-term-first with posting-block skip
-    pointers — only blocks whose [first_doc_id, max_doc_id] range can still
-    contain a surviving candidate are payload-decoded; (2) positional
+    ``vocab_lookup`` is the engine's vocabulary cache, as for
+    ``phrase_topk``.  Execution per shard (cogroup task) has the phrase
+    kernel's two-phase shape: (1) the same doc-id narrowing (``_narrow``),
+    rarest-term-first with posting-block skip pointers — only blocks whose
+    [first_doc_id, max_doc_id] range can still contain a surviving
+    candidate are payload-decoded; (2) positional
     minimal-cover-window over survivors only: per doc, the classic sorted
     two-pointer sweep over the merged (position, term) stream — O(P) per doc
     after an O(P log P) sort, P = total positions of the query terms in that
@@ -243,12 +264,7 @@ def near_topk(
     seq = sorted(set(seq_tokens))
     if not seq or window < 0:
         return local_frame(spark, [], _NEAR_RESULT)
-    lookup = {
-        r["term"]: (int(r["term_id"]), int(r["df"]))
-        for r in terms_table.where(F.col("term").isin(seq))
-        .select("term", "term_id", "df")
-        .collect()
-    }
+    lookup = vocab_lookup(seq)
     if any(t not in lookup for t in seq):  # absent term -> empty conjunction
         return local_frame(spark, [], _NEAR_RESULT)
     # narrowing order: df ascending (rarest first), term_id tie-break
@@ -264,47 +280,12 @@ def near_topk(
 
     blocks = postings.where(
         F.col("term_id").isin(sorted(order_tids))
-    ).select(
-        "shard", "term_id", "first_doc_id", "max_doc_id",
-        "doc_gaps", "tfs", "pos_data",
-    )
+    ).select(*_POS_BLOCK_COLS)
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        by_tid = {int(t): g for t, g in pdf.groupby("term_id", sort=False)}
-        if any(tid not in by_tid for tid in order_tids):
+        cand, kept, _ = _narrow(pdf, order_tids)
+        if cand.size == 0:
             return _empty_near()
-
-        # --- phase 1: doc-id narrowing (identical shape to phrase_topk) ---
-        cand: np.ndarray | None = None
-        kept: dict[int, list] = {}
-        for tid in order_tids:
-            g = by_tid[tid].sort_values("first_doc_id")
-            rows_kept: list = []
-            docs_l: list = []
-            for row in g.itertuples(index=False):
-                if cand is not None:
-                    j = int(np.searchsorted(cand, row.first_doc_id))
-                    if j >= cand.size or cand[j] > row.max_doc_id:
-                        continue
-                ids, tfs = unpack_block(bytes(row.doc_gaps), bytes(row.tfs))
-                if cand is not None:
-                    m = np.isin(ids, cand, assume_unique=True)
-                    if not m.any():
-                        continue
-                    docs_l.append(ids[m])
-                else:
-                    docs_l.append(ids)
-                rows_kept.append((ids, tfs, row.pos_data))
-            if not docs_l:
-                return _empty_near()
-            term_docs = np.concatenate(docs_l)
-            cand = (
-                term_docs if cand is None
-                else cand[np.isin(cand, term_docs, assume_unique=True)]
-            )
-            if cand.size == 0:
-                return _empty_near()
-            kept[tid] = rows_kept
 
         # --- phase 2: merged (doc, pos, term-tag) stream over survivors ---
         doc_parts: list = []

@@ -209,11 +209,17 @@ def test_match_set_and_explain_apply_analyzer(engine):
     assert {r["term"] for r in exp} <= {"get", "foo"}
     import collections
 
-    per_doc = collections.defaultdict(float)
+    # summed in ascending term_id order from 0.0 (the scorer's order), the
+    # contributions equal the search score exactly
+    tid = {t: v[0] for t, v in engine._vocab_lookup(["get", "foo"]).items()}
+    per_doc = collections.defaultdict(list)
     for r in exp:
-        per_doc[r["doc_id"]] += r["contrib"]
+        per_doc[r["doc_id"]].append((tid[r["term"]], r["contrib"]))
     for d, s in scores.items():
-        assert abs(per_doc[d] - s) < 1e-9
+        total = 0.0
+        for _tid, c in sorted(per_doc[d]):
+            total += c
+        assert total == s
 
     # MLT: a camelCase probe finds the camelCase-indexed docs
     mlt = more_like_this(engine, "some getFoo helper code", k=10)

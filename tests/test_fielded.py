@@ -45,14 +45,14 @@ def engine(spark, tmp_path_factory):
     return SearchEngine(spark, store)
 
 
-def _oracles(engine, field_idx):
+def _oracles(engine, field_idx, docs=DOCS):
     """(content OracleIndex, field OracleIndex) keyed by INTERNAL doc_id."""
     dm = {
         (r["repo"], r["path"], r["commit"]): r["doc_id"]
         for r in engine.doc_map.collect()
     }
     ids, texts, fields = [], [], []
-    for row in DOCS:
+    for row in docs:
         ids.append(dm[(row[0], row[1], row[2])])
         texts.append(row[4])
         fields.append(row[field_idx])
@@ -144,7 +144,7 @@ def test_k_cut_and_tie_order(engine):
 # field-qualified syntax (search_qualified)
 # ---------------------------------------------------------------------------
 
-def _qualified_oracle(engine, query, k=10, mode="or"):
+def _qualified_oracle(engine, query, k=10, mode="or", docs=DOCS):
     """Independent replica: per-clause BM25 in the clause's field, summed in
     ascending clause-key order ('' prefix for content)."""
     import numpy as np
@@ -152,9 +152,9 @@ def _qualified_oracle(engine, query, k=10, mode="or"):
     from strucmotif_search_spark.oracle import idf, tokenize
     from strucmotif_search_spark.query.fielded import parse_qualified
 
-    content, _ = _oracles(engine, 1)
+    content, _ = _oracles(engine, 1, docs)
     field_ix = {1: "path", 3: "lang", 0: "repo"}
-    fld = {name: _oracles(engine, i)[1] for i, name in field_ix.items()}
+    fld = {name: _oracles(engine, i, docs)[1] for i, name in field_ix.items()}
 
     clauses = sorted(
         {(f, t) for f, raw in parse_qualified(query) for t in tokenize(raw)},
@@ -269,6 +269,66 @@ def test_qualified_plan_pushes_term_filter(engine):
     plan = hits._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "term_id" in plan
     assert "InMemoryTableScan" in plan
+
+
+def test_refs_generation_matches_oracle_bitwise(spark, tmp_path):
+    """After one ADD and one REMOVE, the generation reads postings through
+    refs parts with excluded shards and norms a commit wrote; the content
+    side of fielded, qualified and explain still matches the oracle bit
+    for bit."""
+    from strucmotif_search_spark.corpus import generate_corpus
+    from strucmotif_search_spark.oracle import bm25_topk
+    from strucmotif_search_spark.query.analytics import explain_contributions
+    from strucmotif_search_spark.streaming.incremental import (
+        add_documents,
+        remove_documents,
+    )
+
+    schema = "repo string, path string, commit string, lang string, content string"
+    rows = [
+        tuple(r)
+        for r in generate_corpus(spark, 120, seed=3, partitions=2).collect()
+    ]
+    store = IndexStore(tmp_path / "refs")
+    build_index(
+        spark, spark.createDataFrame(rows[:100], schema), store,
+        docs_per_shard=16,
+    )
+    add_documents(spark, store, spark.createDataFrame(rows[100:], schema))
+    removed = rows[20:30]
+    remove_documents(
+        spark, store,
+        spark.createDataFrame(
+            [r[:3] for r in removed], "repo string, path string, commit string"
+        ),
+    )
+    assert any(excl for _path, excl in store.posting_parts())
+    live = [r for r in rows if r not in removed]
+    eng = SearchEngine(spark, store)
+
+    content, fld = _oracles(eng, 1, live)
+    for q, mode in [("import d03 v_00002 mod_010", "or"), ("import d03", "and")]:
+        got = _run(eng, q, k=10, mode=mode)
+        assert got and got == bm25f_topk(content, fld, q, k=10, mode=mode)
+
+    q = "path:d03 import v_00002"
+    got = [
+        (r["doc_id"], r["score"])
+        for r in eng.search_qualified(q, k=10, with_meta=False).collect()
+    ]
+    assert got and got == _qualified_oracle(eng, q, k=10, docs=live)
+
+    q = "import v_00002 return"
+    hits = bm25_topk(content, q, k=10)
+    tid = {t: v[0] for t, v in eng._vocab_lookup(q.split()).items()}
+    per_doc: dict[int, list] = {}
+    for r in explain_contributions(eng, q, [d for d, _s in hits]).collect():
+        per_doc.setdefault(r["doc_id"], []).append((tid[r["term"]], r["contrib"]))
+    for d, s in hits:
+        total = 0.0
+        for _tid, c in sorted(per_doc[d]):
+            total += c
+        assert total == s
 
 
 def test_field_stats_counts_null_fields_as_zero_tokens(spark):

@@ -110,6 +110,16 @@ def test_phrase_requires_positional_index(spark, tmp_path_factory):
         eng.phrase_search("new york")
 
 
+def test_phrase_and_near_use_the_vocabulary_cache(spark, engine):
+    """Phrase and NEAR look their terms up in the engine's pyarrow-backed
+    vocabulary cache, so neither builds the Spark ``terms`` frame."""
+    eng = SearchEngine(spark, engine.store)
+    assert eng.phrase_search("new york", k=10).count() > 0
+    assert eng.near_search("new york", 1, k=10).count() > 0
+    assert eng.phrase_search("absent phrase", k=10).count() == 0
+    assert "terms" not in eng.__dict__
+
+
 def test_bm25_unaffected_by_positions(engine):
     hits = engine.search("new york", k=10, mode="and", with_meta=False).collect()
     assert len(hits) >= 3  # docs 0, 1(!has both), 2, 3 contain both terms

@@ -421,19 +421,30 @@ def test_search_after_exclusive_with_offset(engine):
 
 
 def test_explain_contributions_sum_to_score(engine):
+    """Summed in ascending term_id order from 0.0 — the scorer's order —
+    a doc's contributions equal its search (and oracle) score exactly."""
     from strucmotif_search_spark.query.analytics import explain_contributions
 
     idx, _ = _oracle(engine)
     hits = bm25_topk(idx, "table query", k=5)
+    searched = [
+        (r["doc_id"], r["score"])
+        for r in engine.search("table query", k=5, with_meta=False).collect()
+    ]
+    assert searched == hits
     ids = [d for d, _s in hits]
     rows = explain_contributions(engine, "table query", ids).collect()
-    by_doc: dict[int, float] = {}
+    tid = {t: v[0] for t, v in engine._vocab_lookup(["table", "query"]).items()}
+    by_doc: dict[int, list] = {}
     for r in rows:
-        by_doc[r["doc_id"]] = by_doc.get(r["doc_id"], 0.0) + r["contrib"]
+        by_doc.setdefault(r["doc_id"], []).append((tid[r["term"]], r["contrib"]))
         # each contribution is a positive BM25 term share
         assert r["contrib"] > 0 and r["tf"] >= 1
     for d, s in hits:
-        assert by_doc[d] == pytest.approx(s, rel=1e-12)
+        total = 0.0
+        for _tid, c in sorted(by_doc[d]):
+            total += c
+        assert total == s
 
 
 def test_explain_empty_inputs(engine):
