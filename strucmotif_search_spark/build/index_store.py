@@ -33,6 +33,9 @@ import time
 import uuid
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = ["doc_map", "terms", "stats", "postings"]
@@ -47,6 +50,19 @@ def has_data(path: str | os.PathLike) -> bool:
     )
 
 
+def scan_postings(
+    parts: list[tuple[ds.Dataset, list[int]]], columns, where: pc.Expression
+) -> list[pa.Table]:
+    """``columns`` of the rows matching ``where`` in each posting part of
+    :meth:`IndexStore.posting_datasets`, each part minus its excluded
+    shards (the pyarrow form of ``IndexStore.read_postings``)."""
+    tables = []
+    for dset, excl in parts:
+        part_where = where & ~pc.field("shard").isin(excl) if excl else where
+        tables.append(dset.to_table(columns=list(columns), filter=part_where))
+    return tables
+
+
 class IndexStore:
     def __init__(self, root: str | os.PathLike):
         self.root = Path(root)
@@ -57,6 +73,11 @@ class IndexStore:
         self._buckets_lock = threading.Lock()
 
     # ---- generations -------------------------------------------------
+    def meta(self, gen: str) -> dict:
+        """A generation's ``_meta.json``: its layout (``docs_per_shard``,
+        shard and chunk counts, ``with_positions``, ``analyzer``)."""
+        return json.loads((self.root / gen / "_meta.json").read_text())
+
     def current_gen(self) -> str | None:
         cur = self.root / "CURRENT"
         if not cur.exists():
@@ -121,6 +142,14 @@ class IndexStore:
                 for r in json.loads(refs_file.read_text())
             ]
         return parts
+
+    def posting_datasets(self, gen: str) -> list[tuple[ds.Dataset, list[int]]]:
+        """``posting_parts`` opened as pyarrow datasets (for
+        :func:`scan_postings`)."""
+        return [
+            (ds.dataset(path, format="parquet"), excl)
+            for path, excl in self.posting_parts(gen)
+        ]
 
     def ref_path(self, path: str) -> str:
         """How `_refs.json` names a posting path: relative to the store
@@ -292,10 +321,10 @@ class IndexStore:
 
         if name == "norms":
             return NORMS_SCHEMA
-        meta_file = self.root / gen / "_meta.json"
-        with_pos = bool(
-            json.loads(meta_file.read_text()).get("with_positions")
-        ) if meta_file.exists() else False
+        # a build reads its postings back before it writes _meta.json
+        with_pos = (self.root / gen / "_meta.json").exists() and bool(
+            self.meta(gen).get("with_positions")
+        )
         return POSTINGS_POS_SCHEMA if with_pos else POSTINGS_SCHEMA
 
     def read_postings(self, spark: SparkSession, gen: str | None = None) -> DataFrame:

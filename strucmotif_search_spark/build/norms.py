@@ -3,9 +3,10 @@
 BM25's length normalization needs ``doclen`` for every scored doc.  Joining
 the full doc dictionary at query time would shuffle one row per document per
 query (untenable at 10^12 docs), so doclens are packed into ONE row per shard
-(varint doc_ids + varint doclens) — the Lucene "norms file per segment"
-pattern, and the analogue of the reference's decision to keep per-structure
-data addressable by docID without touching the state table
+(``doc_gaps`` + ``doclens``, laid out as codec.py describes) — the Lucene
+"norms file per segment" pattern, and the analogue of the reference's
+decision to keep per-structure data addressable by docID without touching
+the state table
 (io/DefaultStructureDataProvider.java:202-246).
 
 Query-time cost: the scorer cogroups postings with norms on ``shard`` — the
@@ -19,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
 
-from ..codec import pack_block, unpack_block
+from ..codec import decode_segments, pack_block
 
 NORMS_SCHEMA = StructType(
     [
@@ -54,27 +55,13 @@ def build_norms(doc_map: DataFrame) -> DataFrame:
 
 def _merge_doc_runs(pdf: pd.DataFrame) -> pd.DataFrame:
     """Merge one shard's packed doc-metadata runs into its norms row:
-    decode the varint (doc_id, doclen) runs, doc-sort, re-pack."""
-    from ..codec import varint_decode
-
-    shard = int(pdf["shard"].iloc[0])
-    counts = pdf["n_docs"].to_numpy().astype(np.int64)
-    gaps = varint_decode(
-        b"".join(bytes(b) for b in pdf["doc_deltas"])
-    ).astype(np.int64)
-    lens = varint_decode(
-        b"".join(bytes(b) for b in pdf["tfs"])
-    ).astype(np.int64)
-    c = np.cumsum(gaps)
-    starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
-    base = np.where(starts > 0, c[starts - 1], 0)
-    ids = c - np.repeat(base, counts)
-    order = np.argsort(ids, kind="stable")
-    gaps_b, lens_b = pack_block(ids[order], lens[order])
-    return pd.DataFrame(
-        [(shard, int(ids.size), gaps_b, lens_b)],
-        columns=["shard", "n_docs", "doc_gaps", "doclens"],
-    )
+    decode the runs, then pack them as :func:`build_norms` does."""
+    counts = pdf["n_docs"].to_numpy()
+    ids, _ = decode_segments(pdf["doc_deltas"], counts, delta=True)
+    lens, _ = decode_segments(pdf["tfs"], counts)
+    return _pack_norms(pd.DataFrame(
+        {"shard": pdf["shard"].iloc[0], "doc_id": ids, "doclen": lens}
+    ))
 
 
 def build_norms_from_doc_runs(doc_rows: DataFrame) -> DataFrame:
@@ -89,7 +76,3 @@ def build_norms_from_doc_runs(doc_rows: DataFrame) -> DataFrame:
         .groupBy("shard")
         .applyInPandas(_merge_doc_runs, schema=NORMS_SCHEMA)
     )
-
-
-def unpack_norms(doc_gaps: bytes, doclens: bytes) -> tuple[np.ndarray, np.ndarray]:
-    return unpack_block(doc_gaps, doclens)

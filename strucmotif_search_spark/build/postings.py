@@ -26,7 +26,8 @@ domain/bucket/ArrayBucket.java:32-34, plus skip pointers):
     n_docs int, block_max_tf int, doc_gaps binary, tfs binary
 Blocks within (shard, term_id) are doc-ascending; ``first_doc_id`` /
 ``max_doc_id`` are the skip pointers, ``block_max_tf`` the block-max score
-bound input for WAND.
+bound input for WAND.  The byte layout of ``doc_gaps`` / ``tfs`` /
+``pos_data`` is described, encoded and decoded in ``codec.py`` alone.
 """
 
 from __future__ import annotations
@@ -36,7 +37,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -46,7 +46,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..codec import varint_encode_with_lengths
+from ..codec import (
+    decode_segments,
+    encode_segments,
+    gather_segments,
+    offsets,
+    segment_starts,
+    undelta,
+)
 
 BLOCK_DOCS = 128
 
@@ -64,10 +71,9 @@ POSTINGS_SCHEMA = StructType(
     ]
 )
 
-# positional flavor: per block, the concatenation over its docs (in doc
-# order) of each doc's delta-encoded position list (tf values delimit the
-# per-doc runs, so no extra counts are stored) — the occurrence-payload
-# analogue of ArrayBucket.identifierData (ArrayBucket.java:34)
+# positional flavor: per block, its postings' token ordinals (``pos_data``,
+# see codec.py) — the occurrence-payload analogue of
+# ArrayBucket.identifierData (ArrayBucket.java:34)
 POSTINGS_POS_SCHEMA = StructType(
     POSTINGS_SCHEMA.fields
     + [StructField("pos_data", BinaryType(), False)]
@@ -81,13 +87,15 @@ def _pack_runs(
     tfs: np.ndarray,
     positions: np.ndarray | None = None,
 ) -> pd.DataFrame:
-    """Vectorized block packing of rows sorted by (shard, term_id, doc_id).
+    """Vectorized block packing of rows sorted by (shard, term_id, doc_id);
+    ``positions`` is every posting's ordinals flat in posting order (tf
+    values each).
 
     Zero per-posting Python: run/block boundaries are detected with array
-    ops, per-block maxima come from ``np.maximum.reduceat``, and the varint
-    payloads for the WHOLE input are encoded in one call then sliced at
-    value boundaries per block (varint is per-value independent).  The only
-    Python loop is over *blocks* (<=1 per 128 postings) doing a bytes slice.
+    ops, per-block maxima come from ``np.maximum.reduceat``, and each
+    payload column is encoded in one :func:`encode_segments` call.  The
+    only Python loop is over *blocks* (<=1 per 128 postings) doing a bytes
+    slice.
     """
     n = ids.size
     out_schema = POSTINGS_POS_SCHEMA if positions is not None else POSTINGS_SCHEMA
@@ -95,39 +103,14 @@ def _pack_runs(
         return pd.DataFrame(
             {f.name: pd.Series(dtype="object") for f in out_schema.fields}
         )
-    run_start = np.empty(n, dtype=bool)
-    run_start[0] = True
-    run_start[1:] = (tid[1:] != tid[:-1]) | (shard[1:] != shard[:-1])
-    run_idx = np.cumsum(run_start) - 1
-    run_first = np.flatnonzero(run_start)
-    idx_in_run = np.arange(n, dtype=np.int64) - run_first[run_idx]
-    block_start = (idx_in_run % BLOCK_DOCS) == 0
-    bstart = np.flatnonzero(block_start)
-    bend = np.append(bstart[1:], n)
-    nb = bstart.size
-    # block_id within each (shard, term) run
-    blk_run = run_idx[bstart]
-    blk_new_run = np.empty(nb, dtype=bool)
-    blk_new_run[0] = True
-    blk_new_run[1:] = blk_run[1:] != blk_run[:-1]
-    blk_run_first = np.flatnonzero(blk_new_run)
-    blk_run_idx = np.cumsum(blk_new_run) - 1
-    block_id = (np.arange(nb, dtype=np.int64) - blk_run_first[blk_run_idx]).astype(
-        np.int32
+    run_first = segment_starts(tid, shard)
+    idx_in_run = np.arange(n) - np.repeat(
+        run_first, np.diff(np.append(run_first, n))
     )
-    # delta gaps with absolute value at every block start
-    gaps = np.empty(n, dtype=np.int64)
-    gaps[0] = ids[0]
-    np.subtract(ids[1:], ids[:-1], out=gaps[1:])
-    gaps[bstart] = ids[bstart]
-    gap_bytes, gap_lens = varint_encode_with_lengths(gaps.astype(np.uint64))
-    tf_bytes, tf_lens = varint_encode_with_lengths(tfs.astype(np.uint64))
-    gap_off = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(gap_lens, out=gap_off[1:])
-    tf_off = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(tf_lens, out=tf_off[1:])
-    gv = memoryview(gap_bytes)
-    tv = memoryview(tf_bytes)
+    bstart = np.flatnonzero((idx_in_run % BLOCK_DOCS) == 0)
+    bend = np.append(bstart[1:], n)
+    # block_id within each (shard, term) run
+    block_id = (idx_in_run[bstart] // BLOCK_DOCS).astype(np.int32)
     cols = {
         "shard": shard[bstart].astype(np.int32),
         "term_id": tid[bstart].astype(np.int64),
@@ -136,37 +119,14 @@ def _pack_runs(
         "max_doc_id": ids[bend - 1].astype(np.int64),
         "n_docs": (bend - bstart).astype(np.int32),
         "block_max_tf": np.maximum.reduceat(tfs, bstart).astype(np.int32),
-        "doc_gaps": [
-            bytes(gv[gap_off[s] : gap_off[e]]) for s, e in zip(bstart, bend)
-        ],
-        "tfs": [
-            bytes(tv[tf_off[s] : tf_off[e]]) for s, e in zip(bstart, bend)
-        ],
+        "doc_gaps": encode_segments(ids, bstart, restarts=bstart),
+        "tfs": encode_segments(tfs, bstart),
     }
     if positions is not None:
-        # flatten all position lists (posting order), delta-encode with a
-        # reset at each doc's first position, varint once, slice per block
-        flat = (
-            np.concatenate(positions)
-            if len(positions)
-            else np.empty(0, dtype=np.int64)
-        ).astype(np.int64)
-        pcounts = tfs.astype(np.int64)
-        pstarts = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(pcounts, out=pstarts[1:])
-        pgaps = np.empty(flat.size, dtype=np.int64)
-        if flat.size:
-            pgaps[0] = flat[0]
-            np.subtract(flat[1:], flat[:-1], out=pgaps[1:])
-            pgaps[pstarts[:-1]] = flat[pstarts[:-1]]
-        pos_bytes, pos_lens = varint_encode_with_lengths(pgaps.astype(np.uint64))
-        pos_off = np.zeros(flat.size + 1, dtype=np.int64)
-        np.cumsum(pos_lens, out=pos_off[1:])
-        pv = memoryview(pos_bytes)
-        cols["pos_data"] = [
-            bytes(pv[pos_off[pstarts[s]] : pos_off[pstarts[e]]])
-            for s, e in zip(bstart, bend)
-        ]
+        pstarts = offsets(tfs)
+        cols["pos_data"] = encode_segments(
+            positions, pstarts[bstart], restarts=pstarts[:-1]
+        )
     return pd.DataFrame(cols)
 
 
@@ -198,7 +158,10 @@ def _carry_runs(batches, emit) -> Iterator[pd.DataFrame]:
 
 def _pack_rows(frame: pd.DataFrame) -> pd.DataFrame:
     """Pack a frame of whole (shard, term_id) posting-row runs."""
-    pos = frame["positions"].to_numpy() if "positions" in frame.columns else None
+    pos = (
+        np.concatenate(frame["positions"].to_numpy()).astype(np.int64)
+        if "positions" in frame.columns else None
+    )
     return _pack_runs(
         frame["shard"].to_numpy(),
         frame["term_id"].to_numpy(),
@@ -270,46 +233,25 @@ def _merge_pack_run_rows(frame: pd.DataFrame, with_positions: bool) -> pd.DataFr
     (shard, term_id) group to be contiguous in ``frame`` (the caller sorts
     run rows by (shard, term[, first_doc]) and carries split groups across
     batch boundaries)."""
-    from ..codec import varint_decode
-
-    counts = frame["n_docs"].to_numpy().astype(np.int64)
-    gaps = varint_decode(
-        b"".join(bytes(b) for b in frame["doc_deltas"])
-    ).astype(np.int64)
-    tfs = varint_decode(
-        b"".join(bytes(b) for b in frame["tfs"])
-    ).astype(np.int64)
-    # segmented absolute ids (a run's first gap is its absolute first doc)
-    c = np.cumsum(gaps)
-    starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
-    base = np.where(starts > 0, c[starts - 1], 0)
-    ids = c - np.repeat(base, counts)
+    counts = frame["n_docs"].to_numpy()
+    ids, counts = decode_segments(frame["doc_deltas"], counts, delta=True)
+    tfs, _ = decode_segments(frame["tfs"], counts)
+    # group index per run row: consecutive rows with equal (shard, term_id)
     r_shard = frame["shard"].to_numpy().astype(np.int64)
     r_tid = frame["term_id"].to_numpy().astype(np.int64)
-    # group index per run row: consecutive rows with equal (shard, term_id)
-    nr = len(frame)
-    new_grp = np.empty(nr, dtype=bool)
-    new_grp[0] = True
-    new_grp[1:] = (r_tid[1:] != r_tid[:-1]) | (r_shard[1:] != r_shard[:-1])
-    grp = np.cumsum(new_grp) - 1
-    e_grp = np.repeat(grp, counts)
-    e_shard = np.repeat(r_shard, counts)
-    e_tid = np.repeat(r_tid, counts)
+    new_grp = np.zeros(len(frame), dtype=np.int64)
+    new_grp[segment_starts(r_tid, r_shard)] = 1
+    e_grp = np.repeat(np.cumsum(new_grp), counts)
     # merge: runs of one group cover interleaved doc ranges (they came from
     # different map partitions), so order entries by (group, doc)
     order = np.lexsort((ids, e_grp))
     positions = None
     if with_positions:
-        pos_all = unpack_positions(
-            b"".join(bytes(b) for b in frame["pos_data"]), tfs
-        )
-        positions = np.empty(len(pos_all), dtype=object)
-        for i, a in enumerate(pos_all):
-            positions[i] = a
-        positions = positions[order]
+        pos, _ = decode_segments(frame["pos_data"])
+        positions = gather_segments(undelta(pos, tfs), tfs, order)
     return _pack_runs(
-        e_shard[order], e_tid[order], ids[order], tfs[order],
-        positions=positions,
+        np.repeat(r_shard, counts)[order], np.repeat(r_tid, counts)[order],
+        ids[order], tfs[order], positions=positions,
     )
 
 
@@ -378,34 +320,11 @@ def decode_blocks(pdf: pd.DataFrame, with_positions: bool = False) -> pd.DataFra
     tf[, positions]), in block order.  The kernel under
     :func:`decode_postings` and the driver-side commit arm
     (streaming/local_commit.py)."""
-    from ..codec import varint_decode
-
-    # whole-frame decode: varint is per-value independent, so the
-    # concatenation of the rows' buffers decodes to the concatenation of
-    # their values — one decode per column, no per-block Python loop (this
-    # sits on the REMOVE/compact hot path; a 128-posting block is far too
-    # little work per loop trip)
-    gap_bufs = [bytes(b) for b in pdf["doc_gaps"]]
-    blob = b"".join(gap_bufs)
-    raw = np.frombuffer(blob, dtype=np.uint8)
-    gaps = varint_decode(blob).astype(np.int64)
-    tfs = varint_decode(b"".join(bytes(b) for b in pdf["tfs"]))
-    tfs = tfs.astype(np.int64)
-    # postings per block = terminator bytes per doc_gaps buffer
-    ends = np.cumsum(
-        np.fromiter((len(b) for b in gap_bufs), np.int64, len(gap_bufs))
-    )
-    cum_end = np.cumsum((raw & 0x80) == 0)
-    counts = np.diff(np.concatenate([[0], cum_end[ends - 1]]))
-    # segmented delta-decode: global cumsum, minus each block's preceding
-    # prefix (a block's first gap is its absolute first id).  int64
-    # headroom: the running sum is bounded by (rows per frame, ~10^4 per
-    # Arrow batch) x max doc_id (< 2^40 at the 10^12-doc design point)
-    # ~ 2^53, far under 2^63
-    c = np.cumsum(gaps)
-    starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
-    base = np.where(starts > 0, c[starts - 1], 0)
-    doc_ids = c - np.repeat(base, counts)
+    # whole-frame decode: one decode per column, no per-block Python loop
+    # (this sits on the REMOVE/compact hot path; a 128-posting block is far
+    # too little work per loop trip)
+    doc_ids, counts = decode_segments(pdf["doc_gaps"], delta=True)
+    tfs, _ = decode_segments(pdf["tfs"], counts)
     cols = {
         "term_id": np.repeat(pdf["term_id"].to_numpy(np.int64), counts),
         "doc_id": doc_ids,
@@ -414,9 +333,7 @@ def decode_blocks(pdf: pd.DataFrame, with_positions: bool = False) -> pd.DataFra
     if with_positions:
         # per-posting runs are delimited by tf regardless of block
         # boundaries, so one segmented decode covers the whole frame
-        cols["positions"] = unpack_positions(
-            b"".join(bytes(b) for b in pdf["pos_data"]), tfs
-        )
+        cols["positions"] = unpack_positions(b"".join(pdf["pos_data"]), tfs)
     return pd.DataFrame(cols)
 
 
@@ -444,18 +361,8 @@ def decode_postings(blocks: DataFrame, with_positions: bool = False) -> DataFram
 def unpack_positions(pos_data: bytes, tfs: np.ndarray) -> list[np.ndarray]:
     """Inverse of the pos_data packing: per-doc ascending position arrays.
     ``tfs`` delimits the per-doc runs (tf == number of positions)."""
-    from ..codec import varint_decode
-
-    gaps = varint_decode(pos_data).astype(np.int64)
-    counts = np.asarray(tfs, dtype=np.int64)
-    starts = np.zeros(counts.size + 1, dtype=np.int64)
-    np.cumsum(counts, out=starts[1:])
-    if gaps.size == 0:
-        return [np.empty(0, dtype=np.int64) for _ in range(counts.size)]
-    c = np.cumsum(gaps)
-    seg = np.zeros(gaps.size, dtype=np.int64)
-    seg[starts[1:-1]] = 1
-    seg = np.cumsum(seg)
-    base = (c[starts[:-1]] - gaps[starts[:-1]])[seg]
-    absolute = c - base
-    return np.split(absolute, starts[1:-1])
+    tfs = np.asarray(tfs, dtype=np.int64)
+    if tfs.size == 0:
+        return []
+    gaps, _ = decode_segments([pos_data])
+    return np.split(undelta(gaps, tfs), offsets(tfs)[1:-1])

@@ -26,7 +26,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 HEAD_TERMS = ["import", "return", "def", "self", "if", "for"]
@@ -118,8 +117,3 @@ def generate_corpus(
     return seq.mapInPandas(
         lambda it: _render_partition(it, seed), schema=CORPUS_SCHEMA
     )
-
-
-def corpus_with_sha(docs: DataFrame) -> DataFrame:
-    """Attach the per-row content sha256 (input_hint invariant) JVM-side."""
-    return docs.withColumn("content_sha256", F.sha2(F.col("content"), 256))

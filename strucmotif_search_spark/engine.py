@@ -23,9 +23,7 @@ answer bit-identically.
 
 from __future__ import annotations
 
-import json
 from functools import cached_property
-from pathlib import Path
 
 import pandas as pd
 import pyarrow as pa
@@ -36,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_type
 from pyspark.sql.types import StructField, StructType
 
-from .build.index_store import IndexStore
+from .build.index_store import IndexStore, scan_postings
 from .query import daat
 from .query.planner import QueryPlan, plan_query
 from .session import local_frame
@@ -139,7 +137,7 @@ class SearchEngine:
         gen_dir = store.root / self.gen
         if not gen_dir.is_dir():
             raise FileNotFoundError(f"generation {self.gen!r} not found")
-        self.meta = json.loads((Path(gen_dir) / "_meta.json").read_text())
+        self.meta = store.meta(self.gen)
         # global stats are a single row: read it once, with pyarrow (the
         # same fields and float64 values as ``self.stats.first()``)
         self._stats_row = Row(**ds.dataset(
@@ -233,10 +231,7 @@ class SearchEngine:
 
     @cached_property
     def _posting_datasets(self) -> list[tuple[ds.Dataset, list[int]]]:
-        return [
-            (ds.dataset(path, format="parquet"), excl)
-            for path, excl in self.store.posting_parts(self.gen)
-        ]
+        return self.store.posting_datasets(self.gen)
 
     def _arrow_table(self, name: str, columns, where) -> pa.Table:
         return self._datasets[name].to_table(columns=list(columns), filter=where)
@@ -246,12 +241,10 @@ class SearchEngine:
         ref part minus its excluded shards."""
         if not term_ids or not self._posting_datasets:
             return pd.DataFrame(columns=list(daat.BLOCK_COLS))
-        tables = []
-        for dset, excl in self._posting_datasets:
-            where = pc.field("term_id").isin(term_ids)
-            if excl:
-                where &= ~pc.field("shard").isin(excl)
-            tables.append(dset.to_table(columns=list(daat.BLOCK_COLS), filter=where))
+        tables = scan_postings(
+            self._posting_datasets, daat.BLOCK_COLS,
+            pc.field("term_id").isin(term_ids),
+        )
         return pa.concat_tables(tables, promote_options="permissive").to_pandas()
 
     def _local_topk(

@@ -530,11 +530,13 @@ def bm25_contributions(
     )
 
 
-def term_upper_bound(idf: float, max_tf: int, k1: float, b: float) -> float:
+def term_upper_bound(idf, max_tf, k1: float, b: float):
     """Safe BM25 upper bound for a term given a tf ceiling: the dl -> 0 limit
-    of the normalization term (score is decreasing in dl)."""
-    tf = float(max_tf)
-    return idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b))
+    of the normalization term (score is decreasing in dl).  Plain
+    arithmetic, like :func:`bm25_weight`: over numbers it computes the
+    bound, over Spark Columns it builds the equivalent Catalyst expression
+    (the shard bounds of the pruned plan's phase 0)."""
+    return idf * (max_tf * (k1 + 1.0)) / (max_tf + k1 * (1.0 - b))
 
 
 def prune_shards_default(n_shards: int, groups) -> bool:
@@ -782,10 +784,8 @@ def bm25_topk_daat(
         .groupBy("shard", "gkey")
         .agg(F.sum("mtf").alias("gtf_ub"))
     )
-    tfub = (
-        idf_map[F.col("gkey")]
-        * (F.col("gtf_ub") * (plan.k1 + 1.0))
-        / (F.col("gtf_ub") + plan.k1 * (1.0 - plan.b))
+    tfub = term_upper_bound(
+        idf_map[F.col("gkey")], F.col("gtf_ub"), plan.k1, plan.b
     )
     shard_ub = (
         meta.withColumn("tub", tfub)

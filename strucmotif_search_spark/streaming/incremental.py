@@ -50,9 +50,6 @@ from ..tokenizer import term_frequencies
 from . import local_commit
 from .local_commit import repeated_key_error
 
-def _meta(store: IndexStore, gen: str) -> dict:
-    return json.loads((Path(store.root) / gen / "_meta.json").read_text())
-
 
 def _free_ids(spark: SparkSession, store: IndexStore, gen: str) -> DataFrame | None:
     """Retired doc_ids available for reuse (free-list analogue,
@@ -192,7 +189,7 @@ def add_documents(
     """
     t0 = time.time()
     old_gen = store.current_gen()
-    meta = _meta(store, old_gen)
+    meta = store.meta(old_gen)
     local = _driver_commit(
         spark, store, old_gen, meta,
         new_docs.select(*DOC_KEY, "lang", content_col),
@@ -442,7 +439,7 @@ def remove_documents(
     any other on Spark; both publish the same tables."""
     t0 = time.time()
     old_gen = store.current_gen()
-    meta = _meta(store, old_gen)
+    meta = store.meta(old_gen)
     local = _driver_commit(
         spark, store, old_gen, meta, keys.select(*DOC_KEY),
         lambda batch: local_commit.LocalRemove(store, old_gen, meta, batch),
@@ -547,7 +544,7 @@ def compact(spark: SparkSession, store: IndexStore) -> str:
     narrow rows -> repack, identical to the fused build's pack stage.
     """
     old_gen = store.current_gen()
-    meta = _meta(store, old_gen)
+    meta = store.meta(old_gen)
     wp = bool(meta.get("with_positions"))
     t0 = time.time()
     gen = store.new_gen()

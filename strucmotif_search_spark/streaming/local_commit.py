@@ -33,7 +33,7 @@ import pyarrow.parquet as pq
 from pyspark.sql.types import StructType
 
 from ..build.doc_map import DOC_KEY
-from ..build.index_store import IndexStore, has_data
+from ..build.index_store import IndexStore, has_data, scan_postings
 from ..build.norms import NORMS_SCHEMA, _pack_norms
 from ..build.postings import (
     POSTINGS_POS_SCHEMA,
@@ -146,16 +146,10 @@ class _Commit:
         positions]) from every posting part, each minus its excluded
         shards."""
         cols = ["term_id", "doc_gaps", "tfs"] + (["pos_data"] if self.wp else [])
-        tables = []
-        for path, excl in self.store.posting_parts(self.old_gen):
-            where = pc.field("shard").isin(self.affected)
-            if excl:
-                where &= ~pc.field("shard").isin(excl)
-            tables.append(
-                ds.dataset(path, format="parquet").to_table(
-                    columns=cols, filter=where
-                )
-            )
+        tables = scan_postings(
+            self.store.posting_datasets(self.old_gen), cols,
+            pc.field("shard").isin(self.affected),
+        )
         return pd.concat(
             [_empty_postings(self.wp)] + [
                 decode_blocks(b.to_pandas(), self.wp)

@@ -25,7 +25,10 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -36,6 +39,13 @@ from pyspark.sql.types import (
 )
 
 from . import TOKEN_PATTERN
+from .codec import (
+    decode_segments,
+    encode_segments,
+    gather_segments,
+    offsets,
+    segment_starts,
+)
 
 TF_SCHEMA = StructType(
     [
@@ -154,106 +164,113 @@ def _content_slices(pdf: "pd.DataFrame"):
         yield pdf.iloc[prev:]
 
 
+def _tokenize(content: pd.Series, with_positions: bool):
+    """The one tokenization of the frozen contract over a batch's content
+    -> ``(rows, codes, dictionary, ordinals)``: each token's owning row, its
+    code in ``dictionary`` and, when ``with_positions``, its ordinal within
+    its row (else ``None``).  ``dictionary`` is ``None`` when the batch
+    holds no token.
+
+    ``findall('[A-Za-z_][A-Za-z0-9_]*')`` is computed as the exactly
+    equivalent split-form: split on ``[^A-Za-z0-9_]+`` (maximal token-char
+    runs), strip any leading digits, drop empties.  Tokens stay in Arrow C
+    buffers and are counted by dictionary code, so no per-token Python
+    object exists (48M token objects per batch would thrash the allocator
+    and stall every core).
+    """
+    # 32-bit offsets: kept deliberately (the token array's OFFSETS are
+    # ~8 bytes x n_tokens with large_string — as large as the token bytes
+    # themselves, and the map stage is memory-bandwidth-bound).
+    # _content_slices guards the 2 GB offset limit: maxRecordsPerBatch
+    # bounds ROWS, not bytes, so large documents must be re-sliced.
+    toks = pc.split_pattern_regex(
+        pa.array(content, type=pa.string()), pattern="[^A-Za-z0-9_]+"
+    )
+    parent = pc.list_parent_indices(toks)
+    # "^[0-9]+" as a character-set trim — same result (digits can never
+    # start a token, only continue one), ~4x faster than the regex replace
+    # and with no extra full-array copy on the no-op path
+    flat = pc.utf8_ltrim(pc.list_flatten(toks), characters="0123456789")
+    mask = pc.not_equal(flat, "")
+    flat = flat.filter(mask)
+    rows = parent.filter(mask).to_numpy().astype(np.int64)
+    if len(flat) == 0:
+        return rows, None, None, None
+    d = pc.dictionary_encode(flat)
+    ordinals = None
+    if with_positions:
+        # token ordinal within its row: arange minus the row's first index
+        row_starts = segment_starts(rows)
+        ordinals = np.arange(rows.size) - np.repeat(
+            row_starts, np.diff(np.append(row_starts, rows.size))
+        )
+    return rows, d.indices.to_numpy().astype(np.int64), d.dictionary, ordinals
+
+
+def _count_pairs(rows: np.ndarray, codes: np.ndarray, ordinals):
+    """Aggregate tokens into their distinct (row, code) pairs, ascending
+    -> ``(rows, codes, tfs, positions)``; ``positions`` is each pair's
+    ordinals ascending, flat in pair order (``None`` without ordinals).
+    One uint64 key = row << 32 | code."""
+    key = (rows.astype(np.uint64) << np.uint64(32)) | codes.astype(np.uint64)
+    positions = None
+    if ordinals is None:
+        uniq, tfs = np.unique(key, return_counts=True)
+    else:
+        # stable sort by (row, code): ordinals stay ascending per pair
+        order = np.argsort(key, kind="stable")
+        uniq, tfs = np.unique(key[order], return_counts=True)
+        positions = ordinals[order]
+    return (
+        (uniq >> np.uint64(32)).astype(np.int64),
+        (uniq & np.uint64(0xFFFFFFFF)).astype(np.int64),
+        tfs.astype(np.int64),
+        positions,
+    )
+
+
 def _tf_batches(
     batches: Iterator[pd.DataFrame],
     pattern: str,
     with_positions: bool = False,
 ) -> Iterator[pd.DataFrame]:
-    """Arrow-native tf kernel: zero per-token Python objects.
-
-    ``findall('[A-Za-z_][A-Za-z0-9_]*')`` is computed as the exactly
-    equivalent split-form: split on ``[^A-Za-z0-9_]+`` (maximal token-char
-    runs), strip any leading digits, drop empties.  Tokens stay in Arrow C
-    buffers; per-(doc, term) counting runs on dictionary codes in numpy
-    (one uint64 key = row_index<<32 | code).  Python strings materialize
-    only for the far-smaller set of unique (doc, term) pairs.  This is what
-    keeps the map stage memory-bandwidth-light at scale (48M token objects
-    per batch would thrash the allocator and stall every core).
+    """Arrow-native tf kernel: :func:`_tokenize`, then one row per distinct
+    (doc, term) pair.  Python strings materialize only for the far-smaller
+    set of unique (doc, term) pairs.
     """
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     for whole in batches:
       if len(whole) == 0:
           continue
       for pdf in _content_slices(whole):
-        # 32-bit offsets: kept deliberately (the token array's OFFSETS are
-        # ~8 bytes x n_tokens with large_string — as large as the token
-        # bytes themselves, and the map stage is memory-bandwidth-bound).
-        # _content_slices guards the 2 GB offset limit: maxRecordsPerBatch
-        # bounds ROWS, not bytes, so large documents must be re-sliced.
-        content = pa.array(pdf["content"], type=pa.string())
-        toks = pc.split_pattern_regex(content, pattern="[^A-Za-z0-9_]+")
-        parent = pc.list_parent_indices(toks)
-        flat = pc.list_flatten(toks)
-        # "^[0-9]+" as a character-set trim — same result (digits can never
-        # start a token, only continue one), ~4x faster than the regex
-        # replace and with no extra full-array copy on the no-op path
-        flat = pc.utf8_ltrim(flat, characters="0123456789")
-        mask = pc.not_equal(flat, "")
-        flat = flat.filter(mask)
-        parent = parent.filter(mask)
-        if len(flat) == 0:
-            continue
-        d = pc.dictionary_encode(flat)
-        codes = d.indices.to_numpy().astype(np.int64)
-        rows = parent.to_numpy()
-        key = (rows.astype(np.uint64) << np.uint64(32)) | codes.astype(np.uint64)
-        if not with_positions:
-            uniq, counts = np.unique(key, return_counts=True)
-            urows = (uniq >> np.uint64(32)).astype(np.int64)
-            ucodes = (uniq & np.uint64(0xFFFFFFFF)).astype(np.int64)
-            doc_ids = pdf["doc_id"].to_numpy()[urows]
-            terms = d.dictionary.take(pa.array(ucodes)).to_pandas()
-            yield pd.DataFrame(
-                {
-                    "doc_id": doc_ids.astype("int64"),
-                    "term": terms.to_numpy(),
-                    "tf": counts.astype("int64"),
-                }
-            )
-            continue
-        # token ordinal within its doc: arange minus the doc's first index
-        row_change = np.empty(rows.size, dtype=bool)
-        row_change[0] = True
-        row_change[1:] = rows[1:] != rows[:-1]
-        row_starts = np.flatnonzero(row_change)
-        row_group = np.cumsum(row_change) - 1
-        ordinals = np.arange(rows.size, dtype=np.int64) - row_starts[row_group]
-        # stable sort by (row, code): ordinals stay ascending per pair
-        order = np.argsort(key, kind="stable")
-        skey = key[order]
-        spos = ordinals[order]
-        uniq, starts, counts = np.unique(skey, return_index=True, return_counts=True)
-        urows = (uniq >> np.uint64(32)).astype(np.int64)
-        ucodes = (uniq & np.uint64(0xFFFFFFFF)).astype(np.int64)
-        doc_ids = pdf["doc_id"].to_numpy()[urows]
-        terms = d.dictionary.take(pa.array(ucodes)).to_pandas()
-        positions = np.split(spos, starts[1:])
-        yield pd.DataFrame(
-            {
-                "doc_id": doc_ids.astype("int64"),
-                "term": terms.to_numpy(),
-                "tf": counts.astype("int64"),
-                "positions": positions,
-            }
+        rows, codes, dictionary, ordinals = _tokenize(
+            pdf["content"], with_positions
         )
+        if dictionary is None:
+            continue
+        urows, ucodes, tfs, positions = _count_pairs(rows, codes, ordinals)
+        cols = {
+            "doc_id": pdf["doc_id"].to_numpy()[urows].astype("int64"),
+            "term": dictionary.take(pa.array(ucodes)).to_pandas().to_numpy(),
+            "tf": tfs,
+        }
+        if with_positions:
+            cols["positions"] = np.split(positions, offsets(tfs)[1:-1])
+        yield pd.DataFrame(cols)
 
 
 # ---------------------------------------------------------------------------
 # SPIMI map-side packed runs (the build's map output)
 # ---------------------------------------------------------------------------
 #
-# One row per (shard, term) PER ARROW BATCH, postings varint-packed into
-# binary cells — the literal "per-partition posting-list construction pass"
+# One row per (shard, term) PER ARROW BATCH, postings packed into binary
+# cells (codec.py's SPIMI run payload) — the literal "per-partition posting-list construction pass"
 # of the SPIMI design: partial posting lists are built map-side and only the
 # packed runs cross the shuffle.  vs one row per posting, this cuts the
 # build's big exchange by ~10x in rows and ~5x in bytes (the non-scaling
 # resource on a multi-executor cluster), and the reduce side becomes a small
 # run-row sort + a numpy merge instead of a 10^8-row Tungsten sort.
 # Doc-level metadata (doclen, content sha256) rides the same output as one
-# packed row per (shard, batch) with term '' — so the build still makes
+# packed row per (shard, batch) with term '' (codec.py's doc-meta run) — so the build still makes
 # exactly ONE pass over document content and needs no separate doclen
 # aggregate over a posting-row table.
 #
@@ -292,18 +309,11 @@ def _run_batches(
     docs_per_shard: int,
     with_positions: bool,
 ) -> Iterator[pd.DataFrame]:
-    """Packed-run kernel: tokenization identical to :func:`_tf_batches`
-    (frozen contract), then entries are sorted (term-code, doc_id) in numpy
-    and each maximal (term, shard) run is varint-packed exactly like a
-    posting block payload (absolute first doc, then gaps; tfs as varints).
-    Doc-metadata rows (term '') pack (doc_id -> doclen, sha256) per shard.
+    """Packed-run kernel: :func:`_tokenize` and :func:`_count_pairs`, then
+    entries are sorted (term-code, doc_id) in numpy and each maximal (term,
+    shard) run is packed as a SPIMI run row, and each shard's docs as a
+    doc-meta row (payloads: see codec.py).
     """
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from .codec import varint_encode_with_lengths
-
     pos_cols = ["pos_data"] if with_positions else []
     all_cols = (
         ["shard", "term", "n_docs", "sum_tf", "first_doc", "doc_deltas",
@@ -313,37 +323,21 @@ def _run_batches(
     def _doc_rows(doc_ids, doclens, shas) -> pd.DataFrame:
         """One packed row per shard: this batch's (doc_id, doclen, sha)."""
         order = np.argsort(doc_ids, kind="stable")
-        ids = doc_ids[order].astype(np.int64)
-        lens = doclens[order].astype(np.int64)
-        shard = (ids // docs_per_shard).astype(np.int64)
-        rs = np.empty(ids.size, dtype=bool)
-        rs[0] = True
-        rs[1:] = shard[1:] != shard[:-1]
-        starts = np.flatnonzero(rs)
+        ids = doc_ids[order]
+        lens = doclens[order]
+        shard = ids // docs_per_shard
+        starts = segment_starts(shard)
         ends = np.append(starts[1:], ids.size)
-        gaps = np.empty(ids.size, dtype=np.int64)
-        gaps[0] = ids[0]
-        np.subtract(ids[1:], ids[:-1], out=gaps[1:])
-        gaps[starts] = ids[starts]
-        gb, gl = varint_encode_with_lengths(gaps.astype(np.uint64))
-        lb, ll = varint_encode_with_lengths(lens.astype(np.uint64))
-        go = np.zeros(ids.size + 1, dtype=np.int64)
-        np.cumsum(gl, out=go[1:])
-        lo = np.zeros(ids.size + 1, dtype=np.int64)
-        np.cumsum(ll, out=lo[1:])
-        gv, lv = memoryview(gb), memoryview(lb)
         cols = {
             "shard": shard[starts].astype(np.int32),
             "term": [""] * starts.size,
-            "n_docs": (ends - starts).astype(np.int64),
+            "n_docs": ends - starts,
             # sum_tf on doc rows = the run's total doclen, so corpus stats
             # need only SUM(sum_tf) over doc rows — no decode
-            "sum_tf": np.add.reduceat(lens, starts).astype(np.int64),
-            "first_doc": ids[starts].astype(np.int64),
-            "doc_deltas": [
-                bytes(gv[go[s]:go[e]]) for s, e in zip(starts, ends)
-            ],
-            "tfs": [bytes(lv[lo[s]:lo[e]]) for s, e in zip(starts, ends)],
+            "sum_tf": np.add.reduceat(lens, starts),
+            "first_doc": ids[starts],
+            "doc_deltas": encode_segments(ids, starts, restarts=starts),
+            "tfs": encode_segments(lens, starts),
         }
         if with_positions:
             cols["pos_data"] = [b""] * starts.size
@@ -356,47 +350,18 @@ def _run_batches(
           continue
       for pdf in _content_slices(whole):
         doc_id_arr = pdf["doc_id"].to_numpy().astype(np.int64)
-        sha_arr = pdf["content_sha256"].to_numpy()
-        content = pa.array(pdf["content"], type=pa.string())
-        toks = pc.split_pattern_regex(content, pattern="[^A-Za-z0-9_]+")
-        parent = pc.list_parent_indices(toks)
-        flat = pc.list_flatten(toks)
-        flat = pc.utf8_ltrim(flat, characters="0123456789")
-        mask = pc.not_equal(flat, "")
-        flat = flat.filter(mask)
-        parent = parent.filter(mask)
-        rows = parent.to_numpy() if len(parent) else np.empty(0, np.int64)
-        doclens = np.bincount(rows, minlength=len(pdf)).astype(np.int64)
-        if len(flat) == 0:
-            yield _doc_rows(doc_id_arr, doclens, sha_arr)
+        rows, codes, dictionary, ordinals = _tokenize(
+            pdf["content"], with_positions
+        )
+        doc_rows = _doc_rows(
+            doc_id_arr,
+            np.bincount(rows, minlength=len(pdf)).astype(np.int64),
+            pdf["content_sha256"].to_numpy(),
+        )
+        if dictionary is None:
+            yield doc_rows
             continue
-        d = pc.dictionary_encode(flat)
-        codes = d.indices.to_numpy().astype(np.int64)
-        key = (
-            rows.astype(np.uint64) << np.uint64(32)
-        ) | codes.astype(np.uint64)
-        if with_positions:
-            row_change = np.empty(rows.size, dtype=bool)
-            row_change[0] = True
-            row_change[1:] = rows[1:] != rows[:-1]
-            row_starts = np.flatnonzero(row_change)
-            row_group = np.cumsum(row_change) - 1
-            ordinals = (
-                np.arange(rows.size, dtype=np.int64)
-                - row_starts[row_group]
-            )
-            korder = np.argsort(key, kind="stable")
-            skey = key[korder]
-            spos = ordinals[korder]
-            uniq, starts, counts = np.unique(
-                skey, return_index=True, return_counts=True
-            )
-            entry_pos = np.split(spos, starts[1:])
-        else:
-            uniq, counts = np.unique(key, return_counts=True)
-            entry_pos = None
-        urows = (uniq >> np.uint64(32)).astype(np.int64)
-        ucodes = (uniq & np.uint64(0xFFFFFFFF)).astype(np.int64)
+        urows, ucodes, tfs, positions = _count_pairs(rows, codes, ordinals)
         e_docs = doc_id_arr[urows]
         # group entries by term code, doc-ascending within; shard is
         # monotonic in doc_id so (code, doc) order gives maximal
@@ -404,69 +369,28 @@ def _run_batches(
         order = np.lexsort((e_docs, ucodes))
         e_docs = e_docs[order]
         e_codes = ucodes[order]
-        e_tfs = counts[order].astype(np.int64)
-        e_shard = (e_docs // docs_per_shard).astype(np.int64)
-        n = e_docs.size
-        rs = np.empty(n, dtype=bool)
-        rs[0] = True
-        rs[1:] = (e_codes[1:] != e_codes[:-1]) | (e_shard[1:] != e_shard[:-1])
-        starts = np.flatnonzero(rs)
-        ends = np.append(starts[1:], n)
-        gaps = np.empty(n, dtype=np.int64)
-        gaps[0] = e_docs[0]
-        np.subtract(e_docs[1:], e_docs[:-1], out=gaps[1:])
-        gaps[starts] = e_docs[starts]
-        gb, gl = varint_encode_with_lengths(gaps.astype(np.uint64))
-        tb, tl = varint_encode_with_lengths(e_tfs.astype(np.uint64))
-        go = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(gl, out=go[1:])
-        to = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(tl, out=to[1:])
-        gv, tv = memoryview(gb), memoryview(tb)
-        terms = (
-            d.dictionary.take(pa.array(e_codes[starts])).to_pandas().to_numpy()
-        )
+        e_tfs = tfs[order]
+        e_shard = e_docs // docs_per_shard
+        starts = segment_starts(e_codes, e_shard)
         cols = {
             "shard": e_shard[starts].astype(np.int32),
-            "term": terms,
-            "n_docs": (ends - starts).astype(np.int64),
-            "sum_tf": np.add.reduceat(e_tfs, starts).astype(np.int64),
-            "first_doc": e_docs[starts].astype(np.int64),
-            "doc_deltas": [
-                bytes(gv[go[s]:go[e]]) for s, e in zip(starts, ends)
-            ],
-            "tfs": [bytes(tv[to[s]:to[e]]) for s, e in zip(starts, ends)],
+            "term": dictionary.take(pa.array(e_codes[starts]))
+            .to_pandas().to_numpy(),
+            "n_docs": np.diff(np.append(starts, e_docs.size)),
+            "sum_tf": np.add.reduceat(e_tfs, starts),
+            "first_doc": e_docs[starts],
+            "doc_deltas": encode_segments(e_docs, starts, restarts=starts),
+            "tfs": encode_segments(e_tfs, starts),
         }
         if with_positions:
-            # per-entry position lists, reordered to (code, doc) entry
-            # order, flattened with a reset at each entry's first position
-            # (same encoding as posting-block pos_data)
-            pos_sorted = [entry_pos[i] for i in order]
-            pflat = (
-                np.concatenate(pos_sorted)
-                if pos_sorted
-                else np.empty(0, dtype=np.int64)
-            ).astype(np.int64)
-            pstarts = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(e_tfs, out=pstarts[1:])
-            pgaps = np.empty(pflat.size, dtype=np.int64)
-            if pflat.size:
-                pgaps[0] = pflat[0]
-                np.subtract(pflat[1:], pflat[:-1], out=pgaps[1:])
-                pgaps[pstarts[:-1]] = pflat[pstarts[:-1]]
-            pb, pl = varint_encode_with_lengths(pgaps.astype(np.uint64))
-            po = np.zeros(pflat.size + 1, dtype=np.int64)
-            np.cumsum(pl, out=po[1:])
-            pv = memoryview(pb)
-            cols["pos_data"] = [
-                bytes(pv[po[pstarts[s]]:po[pstarts[e]]])
-                for s, e in zip(starts, ends)
-            ]
+            pstarts = offsets(e_tfs)
+            cols["pos_data"] = encode_segments(
+                gather_segments(positions, tfs, order),
+                pstarts[starts], restarts=pstarts[:-1],
+            )
         cols["sha_data"] = [None] * starts.size
-        out = pd.DataFrame(cols)[all_cols]
         yield pd.concat(
-            [out, _doc_rows(doc_id_arr, doclens, sha_arr)],
-            ignore_index=True,
+            [pd.DataFrame(cols)[all_cols], doc_rows], ignore_index=True
         )
 
 
@@ -510,25 +434,13 @@ def decode_doc_meta(doc_rows: DataFrame) -> DataFrame:
     :func:`packed_term_runs` output."""
 
     def _unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .codec import varint_decode
-
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            counts = pdf["n_docs"].to_numpy().astype(np.int64)
-            gaps = varint_decode(
-                b"".join(bytes(b) for b in pdf["doc_deltas"])
-            ).astype(np.int64)
-            lens = varint_decode(
-                b"".join(bytes(b) for b in pdf["tfs"])
-            ).astype(np.int64)
-            c = np.cumsum(gaps)
-            starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
-            base = np.where(starts > 0, c[starts - 1], 0)
-            ids = c - np.repeat(base, counts)
-            hex_all = b"".join(bytes(b) for b in pdf["sha_data"]).hex()
+            counts = pdf["n_docs"].to_numpy()
+            ids, _ = decode_segments(pdf["doc_deltas"], counts, delta=True)
+            lens, _ = decode_segments(pdf["tfs"], counts)
+            hex_all = b"".join(pdf["sha_data"]).hex()
             yield pd.DataFrame({
                 "doc_id": ids,
                 "doclen": lens,

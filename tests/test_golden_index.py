@@ -9,18 +9,30 @@ driver commit arm); each generation's answers are pinned, and each is
 opened by a fresh engine, which reads its files only when a query needs
 them.
 
+The other direction: ``test_rebuild_writes_the_committed_bytes`` reruns
+the fixture's history (``tools/make_golden_index.py``'s ``write_history``)
+into a temporary store, on each commit arm, and requires every table of
+every generation to equal the committed one, binary payloads byte for
+byte — so a codec change whose own output still round-trips, but whose
+bytes differ, fails here.
+
 If this fails after an intentional format change, regenerate with
 ``python tools/make_golden_index.py`` and commit the new bytes loudly.
 """
 
 import json
 import os
+import sys
+from pathlib import Path
 
+import pyarrow.dataset as ds
 import pytest
 
 from strucmotif_search_spark.engine import SearchEngine
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden")
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+TABLES = ("doc_map", "terms", "stats", "norms", "postings", "free_ids")
 
 
 @pytest.fixture(scope="module")
@@ -111,3 +123,43 @@ def test_golden_incremental_pins(golden, gen):
     _check_stats(eng, pins)
     _check_queries(eng, pins)
     _check_phrase(eng, pins)
+
+
+def _generation(root: Path, gen: str) -> dict:
+    """Every table of ``gen`` as (column names and Arrow types, rows
+    sorted; binary cells compare byte for byte), plus its ``_refs.json``
+    (``_meta.json`` is left out: the committed one carries layout fields
+    that later builds no longer write)."""
+    out = {}
+    for name in TABLES:
+        if (root / gen / name).exists():
+            table = ds.dataset(str(root / gen / name), format="parquet").to_table()
+            out[name] = (
+                [(f.name, f.type) for f in table.schema],
+                sorted((tuple(r.values()) for r in table.to_pylist()), key=repr),
+            )
+    if (root / gen / "_refs.json").exists():
+        out["_refs"] = json.loads((root / gen / "_refs.json").read_text())
+    return out
+
+
+@pytest.mark.parametrize("arm", ["driver", "spark"])
+def test_rebuild_writes_the_committed_bytes(spark, tmp_path, request, arm):
+    """The fixture's build, ADD and REMOVE rerun now write every committed
+    table again: the guard on the encoders, as the pins are on the
+    decoders."""
+    if arm == "spark":
+        request.getfixturevalue("spark_commit_arm")
+    sys.path.insert(0, TOOLS)
+    import make_golden_index
+
+    store = make_golden_index.write_history(spark, str(tmp_path / "index"))
+    assert store.lineage()[-1]["arm"] == arm
+    committed = Path(GOLDEN) / "index"
+    gens = sorted(p.name for p in committed.glob("gen-*"))
+    assert gens == ["gen-000001", "gen-000002", "gen-000003"]
+    assert sorted(p.name for p in store.root.glob("gen-*")) == gens
+    for gen in gens:
+        want = _generation(committed, gen)
+        assert set(want) >= set(TABLES[:5]), gen
+        assert _generation(store.root, gen) == want, gen

@@ -19,6 +19,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from strucmotif_search_spark.build.norms import (
+    build_norms,
+    build_norms_from_doc_runs,
+)
 from strucmotif_search_spark.build.postings import (
     pack_posting_runs,
     pack_postings,
@@ -123,6 +127,33 @@ def test_packed_blocks_byte_identical(spark, docs, with_positions):
     a = blocks_a.sort_values(key).reset_index(drop=True)
     b = blocks_b.sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
+
+
+def test_norms_from_doc_runs_byte_identical(spark, docs):
+    """build_norms_from_doc_runs over the packed doc-metadata rows writes
+    the same norms rows, byte for byte, as build_norms over the doc_map
+    those documents would have."""
+    doc_map = (
+        docs.select("doc_id")
+        .join(
+            term_frequencies(docs).groupBy("doc_id")
+            .agg(F.sum("tf").alias("doclen")),
+            on="doc_id", how="left",
+        )
+        .fillna({"doclen": 0})
+        .withColumn("shard", (F.col("doc_id") / DOCS_PER_SHARD).cast("int"))
+    )
+    runs = packed_term_runs(docs, docs_per_shard=DOCS_PER_SHARD)
+    got = (
+        build_norms_from_doc_runs(runs.where(F.col("term") == ""))
+        .toPandas().sort_values("shard").reset_index(drop=True)
+    )
+    want = (
+        build_norms(doc_map).toPandas()
+        .sort_values("shard").reset_index(drop=True)
+    )
+    assert len(want) == -(-docs.count() // DOCS_PER_SHARD)
+    pd.testing.assert_frame_equal(got, want)
 
 
 def test_tokenless_docs_carry_meta_only(spark):

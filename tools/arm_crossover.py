@@ -216,7 +216,7 @@ def timed_commit(spark, root: str, fn, batch, on_driver: bool) -> tuple:
 
 def commits(spark, root: str, eng: SearchEngine, targets: list[str]) -> None:
     store = IndexStore(root)
-    meta = incremental._meta(store, eng.gen)
+    meta = store.meta(eng.gen)
     n_docs = eng._stats_row["n_docs"]
     n_terms = local_commit.count_rows(store, "terms", eng.gen)
     wp = bool(meta.get("with_positions"))

@@ -5,10 +5,13 @@ tests open WITHOUT rebuilding (strucmotif-search-core
 src/test/resources/index.data + known.list,
 StructureIntegrationTest.java:151-204).  This script is the analogue: it
 builds a tiny deterministic generation into tests/golden/index/ and records
-pinned query answers in tests/golden/expected.json;
-tests/test_golden_index.py then opens the COMMITTED bytes each round — any
-silent codec/layout drift breaks the pin even though a rebuild-and-query
-round-trip would still pass.
+pinned query answers in tests/golden/expected.json.  The fixture guards the
+format in both directions: tests/test_golden_index.py opens the COMMITTED
+bytes (a reader that no longer decodes them breaks the pins), and its
+``test_rebuild_writes_the_committed_bytes`` reruns :func:`write_history`
+into a temporary store and requires every table to equal the committed
+one, payload bytes included (a writer whose bytes drift breaks it, even
+when its own output still round-trips).
 
 After the built generation (``gen-000001``) the script commits one ADD
 (``gen-000002``) and one REMOVE (``gen-000003``), so the fixture also holds
@@ -89,44 +92,30 @@ def reset_to_base(idx_root: str) -> None:
         f.write(BASE_GEN + "\n")
 
 
-def main() -> None:
-    sys.path.insert(0, ROOT)
+def write_history(spark, idx_root: str, rebuild: bool = True):
+    """Commit the fixture's history into ``idx_root``: build ``BASE_GEN``
+    (``rebuild``; else keep it and drop what follows it), then the ADD and
+    the REMOVE.  Returns the ``IndexStore``."""
     from pyspark.sql import functions as F
 
     from strucmotif_search_spark.build import IndexStore, build_index
     from strucmotif_search_spark.corpus import generate_corpus
-    from strucmotif_search_spark.engine import SearchEngine
-    from strucmotif_search_spark.session import get_spark
     from strucmotif_search_spark.streaming.incremental import (
         add_documents,
         remove_documents,
     )
 
-    spark = get_spark("golden", cores=4, shuffle_partitions=4)
-    idx_root = os.path.join(GOLDEN, "index")
-    expected_path = os.path.join(GOLDEN, "expected.json")
     docs = generate_corpus(spark, N_DOCS, seed=SEED, partitions=4)
-    rebuild = "--rebuild" in sys.argv[1:] or not os.path.isdir(
-        os.path.join(idx_root, BASE_GEN)
-    )
     if rebuild:
         shutil.rmtree(idx_root, ignore_errors=True)
-        os.makedirs(GOLDEN, exist_ok=True)
         store = IndexStore(idx_root)
         # positional so the fixture also pins the position-payload codec
         build_index(
             spark, docs, store, docs_per_shard=16, with_positions=True,
         )
-        expected: dict = {
-            "n_docs": N_DOCS, "seed": SEED, "generation": store.current_gen(),
-            **pins(SearchEngine(spark, store)),
-        }
     else:
         reset_to_base(idx_root)
         store = IndexStore(idx_root)
-        with open(expected_path) as f:
-            expected = json.load(f)
-
     added = generate_corpus(spark, ADD_DOCS, seed=SEED + 1, partitions=1)
     add_documents(spark, store, added.withColumn(
         "repo", F.concat(F.lit("added/"), "repo")
@@ -138,6 +127,30 @@ def main() -> None:
     remove_documents(spark, store, spark.createDataFrame(
         keys, "repo string, path string, commit string"
     ))
+    return store
+
+
+def main() -> None:
+    sys.path.insert(0, ROOT)
+    from strucmotif_search_spark.engine import SearchEngine
+    from strucmotif_search_spark.session import get_spark
+
+    spark = get_spark("golden", cores=4, shuffle_partitions=4)
+    idx_root = os.path.join(GOLDEN, "index")
+    expected_path = os.path.join(GOLDEN, "expected.json")
+    rebuild = "--rebuild" in sys.argv[1:] or not os.path.isdir(
+        os.path.join(idx_root, BASE_GEN)
+    )
+    os.makedirs(GOLDEN, exist_ok=True)
+    store = write_history(spark, idx_root, rebuild)
+    if rebuild:
+        expected: dict = {
+            "n_docs": N_DOCS, "seed": SEED, "generation": BASE_GEN,
+            **pins(SearchEngine(spark, store, BASE_GEN)),
+        }
+    else:
+        with open(expected_path) as f:
+            expected = json.load(f)
     expected["incremental"] = [
         {"generation": gen, "op": op, **pins(SearchEngine(spark, store, gen))}
         for gen, op in zip(
