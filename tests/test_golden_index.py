@@ -5,7 +5,8 @@ known.list integration fixtures (StructureIntegrationTest.java:151-204).
 
 The fixture's built generation is followed by an ADD and a REMOVE
 generation (a `_refs.json` chain with excluded shards, written by the
-driver commit arm); each generation's answers are pinned, and each is
+driver commit arm) and a ``compact`` that folds the chain into one
+bucketed generation; each generation's answers are pinned, and each is
 opened by a fresh engine, which reads its files only when a query needs
 them.
 
@@ -62,12 +63,17 @@ def test_golden_generation_pointer(golden):
     assert eng.gen == "gen-000001"
     assert [
         (g["generation"], g["op"]) for g in expected["incremental"]
-    ] == [("gen-000002", "add"), ("gen-000003", "remove")]
-    assert store.current_gen() == "gen-000003"
+    ] == [
+        ("gen-000002", "add"), ("gen-000003", "remove"),
+        ("gen-000004", "compact"),
+    ]
+    assert store.current_gen() == "gen-000004"
     # the REMOVE generation's postings span its own part and two refs,
-    # each ref minus the shards a later commit rewrote
+    # each ref minus the shards a later commit rewrote; the compact folds
+    # them into its own part alone
     parts = store.posting_parts("gen-000003")
     assert [excl for _p, excl in parts] == [[], [0], [0, 3, 4]]
+    assert [excl for _p, excl in store.posting_parts("gen-000004")] == [[]]
 
 
 def _check_stats(eng, pins):
@@ -114,11 +120,11 @@ def test_golden_phrase_pin(golden):
     _check_phrase(*_pinned(golden, "gen-000001"))
 
 
-@pytest.mark.parametrize("gen", ["gen-000002", "gen-000003"])
+@pytest.mark.parametrize("gen", ["gen-000002", "gen-000003", "gen-000004"])
 def test_golden_incremental_pins(golden, gen):
     """The ADD and REMOVE generations answer their pins from the committed
-    refs chain: stats, queries and the phrase over positions repacked by
-    the driver commit arm."""
+    refs chain, and the compact from its folded generation: stats, queries
+    and the phrase over repacked positions."""
     eng, pins = _pinned(golden, gen)
     _check_stats(eng, pins)
     _check_queries(eng, pins)
@@ -145,19 +151,19 @@ def _generation(root: Path, gen: str) -> dict:
 
 @pytest.mark.parametrize("arm", ["driver", "spark"])
 def test_rebuild_writes_the_committed_bytes(spark, tmp_path, request, arm):
-    """The fixture's build, ADD and REMOVE rerun now write every committed
-    table again: the guard on the encoders, as the pins are on the
-    decoders."""
+    """The fixture's build, ADD, REMOVE and compact rerun now write every
+    committed table again: the guard on the encoders, as the pins are on
+    the decoders."""
     if arm == "spark":
         request.getfixturevalue("spark_commit_arm")
     sys.path.insert(0, TOOLS)
     import make_golden_index
 
     store = make_golden_index.write_history(spark, str(tmp_path / "index"))
-    assert store.lineage()[-1]["arm"] == arm
+    assert [e["arm"] for e in store.lineage() if "arm" in e][-1] == arm
     committed = Path(GOLDEN) / "index"
     gens = sorted(p.name for p in committed.glob("gen-*"))
-    assert gens == ["gen-000001", "gen-000002", "gen-000003"]
+    assert gens == ["gen-000001", "gen-000002", "gen-000003", "gen-000004"]
     assert sorted(p.name for p in store.root.glob("gen-*")) == gens
     for gen in gens:
         want = _generation(committed, gen)

@@ -16,12 +16,13 @@ when its own output still round-trips).
 After the built generation (``gen-000001``) the script commits one ADD
 (``gen-000002``) and one REMOVE (``gen-000003``), so the fixture also holds
 a refs chain: postings that span `_refs.json` parts with excluded shards,
-and the driver arm's pyarrow-written tables.  Each generation's answers
-are pinned.
+and the driver arm's pyarrow-written tables.  A ``compact`` then folds the
+chain into one bucketed generation (``gen-000004``).  Each generation's
+answers are pinned.
 
 Rerun (only when the format changes ON PURPOSE; commit the diff loudly):
 
-    python tools/make_golden_index.py            # keep gen-000001, redo ADD/REMOVE
+    python tools/make_golden_index.py            # keep gen-000001, redo the rest
     python tools/make_golden_index.py --rebuild  # rebuild gen-000001 too
 
 Without ``--rebuild`` the committed ``gen-000001`` files and pins are kept
@@ -94,14 +95,15 @@ def reset_to_base(idx_root: str) -> None:
 
 def write_history(spark, idx_root: str, rebuild: bool = True):
     """Commit the fixture's history into ``idx_root``: build ``BASE_GEN``
-    (``rebuild``; else keep it and drop what follows it), then the ADD and
-    the REMOVE.  Returns the ``IndexStore``."""
+    (``rebuild``; else keep it and drop what follows it), then the ADD,
+    the REMOVE and the compact.  Returns the ``IndexStore``."""
     from pyspark.sql import functions as F
 
     from strucmotif_search_spark.build import IndexStore, build_index
     from strucmotif_search_spark.corpus import generate_corpus
     from strucmotif_search_spark.streaming.incremental import (
         add_documents,
+        compact,
         remove_documents,
     )
 
@@ -127,6 +129,7 @@ def write_history(spark, idx_root: str, rebuild: bool = True):
     remove_documents(spark, store, spark.createDataFrame(
         keys, "repo string, path string, commit string"
     ))
+    compact(spark, store)
     return store
 
 
@@ -155,7 +158,7 @@ def main() -> None:
         {"generation": gen, "op": op, **pins(SearchEngine(spark, store, gen))}
         for gen, op in zip(
             sorted(g for g in os.listdir(idx_root) if g.startswith("gen-"))[1:],
-            ("add", "remove"),
+            ("add", "remove", "compact"),
         )
     ]
 
