@@ -8,10 +8,14 @@ Reference analogues:
   (update/Context.java:50-73) are Spark's shuffle made explicit — we group by
   (shard, term_id) where ``shard`` is the doc-range partition;
 - stage 2 (merge + encode): DefaultInvertedIndex.commit's fold-and-encode
-  (io/DefaultInvertedIndex.java:120-239) becomes a grouped applyInPandas that
-  sorts each (shard, term) run by doc_id and packs delta-gap varint blocks
-  with skip metadata (north_rule upgrade over the reference's absolute-id
-  varints, io/codec/ColferCodec.java:101-133).
+  (io/DefaultInvertedIndex.java:120-239) becomes one partition-level merge
+  (:func:`_merge_pack_run_rows`) that sorts each (shard, term) group's
+  runs by doc_id and packs delta-gap varint blocks with skip metadata
+  (north_rule upgrade over the reference's absolute-id varints,
+  io/codec/ColferCodec.java:101-133).  As in the reference, build and
+  update share it: a posting block is a run, so ADD, REMOVE and compact
+  feed it the old blocks (:func:`blocks_as_runs`) plus an ADD's new runs,
+  minus a REMOVE's victims.
 
 Skew: head terms (df ~ N, e.g. ``import``) never form a single group because
 the index is document-sharded — a term's postings are split across shards by
@@ -37,8 +41,8 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     IntegerType,
     LongType,
@@ -130,7 +134,7 @@ def _pack_runs(
     return pd.DataFrame(cols)
 
 
-def _carry_runs(batches, emit) -> Iterator[pd.DataFrame]:
+def _carry_runs(batches, emit) -> Iterator:
     """Yield ``emit(frame)`` over the Arrow batches of a partition sorted
     by (shard, term_id), carrying the trailing (possibly incomplete)
     (shard, term_id) run across batch boundaries so a run split by
@@ -156,75 +160,29 @@ def _carry_runs(batches, emit) -> Iterator[pd.DataFrame]:
         yield emit(carry)
 
 
-def _pack_rows(frame: pd.DataFrame) -> pd.DataFrame:
-    """Pack a frame of whole (shard, term_id) posting-row runs."""
-    pos = (
-        np.concatenate(frame["positions"].to_numpy()).astype(np.int64)
-        if "positions" in frame.columns else None
-    )
-    return _pack_runs(
-        frame["shard"].to_numpy(),
-        frame["term_id"].to_numpy(),
-        frame["doc_id"].to_numpy(),
-        frame["tf"].to_numpy(),
-        positions=pos,
+# the posting-block column each SPIMI run column reads: a block is a run
+# of its postings (codec.py), so every repack merges old blocks as runs
+BLOCK_COLUMN = {"first_doc": "first_doc_id", "doc_deltas": "doc_gaps"}
+
+
+def run_columns(with_positions: bool) -> list[str]:
+    """The SPIMI run columns :func:`_merge_pack_run_rows` reads."""
+    return ["shard", "term_id", "first_doc", "n_docs", "doc_deltas", "tfs"] + (
+        ["pos_data"] if with_positions else []
     )
 
 
-def _pack_partition(batches) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: pack a whole sorted partition of posting rows,
-    each (shard, term_id) run once."""
-    return _carry_runs(batches, _pack_rows)
+def blocks_as_runs(blocks: DataFrame, with_positions: bool) -> DataFrame:
+    """Posting blocks -> SPIMI run rows (the same payloads, renamed)."""
+    return blocks.select(*[
+        F.col(BLOCK_COLUMN.get(c, c)).alias(c)
+        for c in run_columns(with_positions)
+    ])
 
 
-def pack_postings(
-    tf_with_ids: DataFrame,
-    partitions: int | None = None,
-    already_partitioned: bool = False,
-    with_positions: bool = False,
-    presorted: bool = False,
-) -> DataFrame:
-    """(doc_id, term_id, tf, shard) -> packed posting blocks.
-
-    One shuffle (repartition by shard) + in-partition sort, then a
-    partition-level vectorized packer.  Head terms cannot straggle: a term's
-    postings are bounded per shard by docs_per_shard, and a whole shard is
-    one task's worth of sorted input, not one groupBy group per term.
-
-    ``already_partitioned=True`` skips the repartition when the input is
-    already hash-partitioned by ``shard`` (e.g. the build persists tf
-    shard-partitioned so stage 2 is shuffle-free).
-
-    ``presorted=True`` additionally skips the in-partition sort: the caller
-    guarantees every (shard, term_id) run is already contiguous and
-    doc-ascending within each partition (the fused build writes its tf spill
-    shuffled + sorted, and parquet read-back of whole files preserves row
-    order).  This keeps the packer input on the columnar fast path — no
-    Tungsten row sort, no shuffle-row -> Arrow conversion (measured: the
-    row-path reduce burned ~10x the packer's own CPU in JVM sort + row
-    conversion).
-    """
-    cols = ["shard", "term_id", "doc_id", "tf"] + (
-        ["positions"] if with_positions else []
-    )
-    src = tf_with_ids.select(*cols)
-    if not already_partitioned:
-        src = (
-            src.repartition(partitions, "shard")
-            if partitions
-            else src.repartition("shard")
-        )
-    arranged = (
-        src if presorted
-        else src.sortWithinPartitions("shard", "term_id", "doc_id")
-    )
-    return arranged.mapInPandas(
-        _pack_partition,
-        schema=POSTINGS_POS_SCHEMA if with_positions else POSTINGS_SCHEMA,
-    )
-
-
-def _merge_pack_run_rows(frame: pd.DataFrame, with_positions: bool) -> pd.DataFrame:
+def _merge_pack_run_rows(
+    frame: pd.DataFrame, with_positions: bool, drop: np.ndarray | None = None
+) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Decode a batch of packed SPIMI run rows, merge-sort the postings of
     each (shard, term_id) group by doc_id, and emit final posting blocks via
     :func:`_pack_runs` — the "sort-merge posting-list merge" of the SPIMI
@@ -232,7 +190,12 @@ def _merge_pack_run_rows(frame: pd.DataFrame, with_positions: bool) -> pd.DataFr
     batch, one segmented cumsum, one lexsort).  Requires every
     (shard, term_id) group to be contiguous in ``frame`` (the caller sorts
     run rows by (shard, term[, first_doc]) and carries split groups across
-    batch boundaries)."""
+    batch boundaries).
+
+    The runs are the build's map output, or old posting blocks plus an
+    ADD's new runs.  The postings of the doc ids in ``drop`` (a REMOVE's
+    victims) are left out.  Returns the blocks and the left-out postings'
+    ``(term_id, tf)``, from which a REMOVE takes its df/cf decrement."""
     counts = frame["n_docs"].to_numpy()
     ids, counts = decode_segments(frame["doc_deltas"], counts, delta=True)
     tfs, _ = decode_segments(frame["tfs"], counts)
@@ -242,26 +205,33 @@ def _merge_pack_run_rows(frame: pd.DataFrame, with_positions: bool) -> pd.DataFr
     new_grp = np.zeros(len(frame), dtype=np.int64)
     new_grp[segment_starts(r_tid, r_shard)] = 1
     e_grp = np.repeat(np.cumsum(new_grp), counts)
+    e_tid = np.repeat(r_tid, counts)
     # merge: runs of one group cover interleaved doc ranges (they came from
     # different map partitions), so order entries by (group, doc)
     order = np.lexsort((ids, e_grp))
+    gone = np.zeros(ids.size, dtype=bool)
+    if drop is not None:
+        gone = np.isin(ids, drop)
+        order = order[~gone[order]]
     positions = None
     if with_positions:
         pos, _ = decode_segments(frame["pos_data"])
         positions = gather_segments(undelta(pos, tfs), tfs, order)
-    return _pack_runs(
-        np.repeat(r_shard, counts)[order], np.repeat(r_tid, counts)[order],
-        ids[order], tfs[order], positions=positions,
+    blocks = _pack_runs(
+        np.repeat(r_shard, counts)[order], e_tid[order], ids[order],
+        tfs[order], positions=positions,
     )
+    return blocks, pd.DataFrame({"term_id": e_tid[gone], "tf": tfs[gone]})
 
 
-def _pack_runs_partition(with_positions: bool):
+def _pack_runs_partition(with_positions: bool, drop: np.ndarray | None):
     """mapInPandas kernel factory over packed run rows sorted by
     (shard, term_id): each (shard, term_id) group merged and packed once."""
 
     def _kernel(batches) -> Iterator[pd.DataFrame]:
         return _carry_runs(
-            batches, lambda f: _merge_pack_run_rows(f, with_positions)
+            batches,
+            lambda f: _merge_pack_run_rows(f, with_positions, drop)[0],
         )
 
     return _kernel
@@ -272,22 +242,20 @@ def pack_posting_runs(
     with_positions: bool = False,
     presorted: bool = True,
     partitions: int | None = None,
+    drop: np.ndarray | None = None,
 ) -> DataFrame:
-    """Packed SPIMI run rows (shard, term_id, first_doc, n_docs, doc_deltas,
-    tfs[, pos_data]) -> final posting blocks, byte-identical to
-    ``pack_postings`` over the equivalent posting rows.
+    """Packed SPIMI run rows (:func:`run_columns`) -> final posting blocks,
+    byte-identical to :func:`_pack_runs` over the equivalent sorted posting
+    rows, minus the postings of the doc ids in ``drop``.
 
     ``presorted=True`` (the fused-build fast path): the input is already
     hash-partitioned by ``shard`` with every (shard, term_id) group
     contiguous (spill sorted by (shard, term, first_doc); term_id is the
     term's sorted rank, so the order survives the dictionary join) — the
-    packer is map-only.  Otherwise one small shuffle of run rows + an
-    in-partition sort restores the contract (still ~10x fewer rows than a
-    posting-row shuffle)."""
-    cols = ["shard", "term_id", "first_doc", "n_docs", "doc_deltas", "tfs"] + (
-        ["pos_data"] if with_positions else []
-    )
-    src = runs_with_ids.select(*cols)
+    packer is map-only.  Otherwise (every repack) one small shuffle of run
+    rows + an in-partition sort restores the contract (still ~10x fewer
+    rows than a posting-row shuffle)."""
+    src = runs_with_ids.select(*run_columns(with_positions))
     if not presorted:
         src = (
             src.repartition(partitions, "shard")
@@ -295,7 +263,7 @@ def pack_posting_runs(
             else src.repartition("shard")
         ).sortWithinPartitions("shard", "term_id", "first_doc")
     return src.mapInPandas(
-        _pack_runs_partition(with_positions),
+        _pack_runs_partition(with_positions, drop),
         schema=POSTINGS_POS_SCHEMA if with_positions else POSTINGS_SCHEMA,
     )
 
@@ -308,53 +276,33 @@ DECODED_SCHEMA = StructType(
     ]
 )
 
-DECODED_POS_SCHEMA = StructType(
-    DECODED_SCHEMA.fields
-    + [StructField("positions", ArrayType(LongType()), False)]
-)
 
-
-def decode_blocks(pdf: pd.DataFrame, with_positions: bool = False) -> pd.DataFrame:
+def decode_blocks(pdf: pd.DataFrame) -> pd.DataFrame:
     """Decode a frame of posting blocks (``term_id``, ``doc_gaps``,
-    ``tfs``[, ``pos_data``]) -> one row per posting (term_id, doc_id,
-    tf[, positions]), in block order.  The kernel under
-    :func:`decode_postings` and the driver-side commit arm
-    (streaming/local_commit.py)."""
+    ``tfs``) -> one row per posting (term_id, doc_id, tf), in block
+    order: the kernel under :func:`decode_postings`."""
     # whole-frame decode: one decode per column, no per-block Python loop
-    # (this sits on the REMOVE/compact hot path; a 128-posting block is far
-    # too little work per loop trip)
     doc_ids, counts = decode_segments(pdf["doc_gaps"], delta=True)
     tfs, _ = decode_segments(pdf["tfs"], counts)
-    cols = {
+    return pd.DataFrame({
         "term_id": np.repeat(pdf["term_id"].to_numpy(np.int64), counts),
         "doc_id": doc_ids,
         "tf": tfs,
-    }
-    if with_positions:
-        # per-posting runs are delimited by tf regardless of block
-        # boundaries, so one segmented decode covers the whole frame
-        cols["positions"] = unpack_positions(b"".join(pdf["pos_data"]), tfs)
-    return pd.DataFrame(cols)
+    })
 
 
-def decode_postings(blocks: DataFrame, with_positions: bool = False) -> DataFrame:
-    """Inverse of pack_postings -> (term_id, doc_id, tf[, positions]).  Used
-    by tests, ADD/REMOVE repacks (E1-E3) and the orphan-consistency check
-    (E5).  ``with_positions=True`` additionally decodes each posting's
-    occurrence-position array so a positional index survives a repack
-    round-trip (the payload-carrying CSR surgery analogue,
-    io/DefaultInvertedIndex.java:472-510)."""
+def decode_postings(blocks: DataFrame) -> DataFrame:
+    """Posting blocks -> (term_id, doc_id, tf) rows, for the reads that
+    need postings as rows: term vectors, ``query/analytics.py``, the Spark
+    arm's REMOVE df/cf decrement and the orphan-consistency check (E5)."""
 
     def _unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf):
-                yield decode_blocks(pdf, with_positions)
+                yield decode_blocks(pdf)
 
-    cols = ["term_id", "doc_gaps", "tfs"] + (
-        ["pos_data"] if with_positions else []
-    )
-    return blocks.select(*cols).mapInPandas(
-        _unpack, schema=DECODED_POS_SCHEMA if with_positions else DECODED_SCHEMA
+    return blocks.select("term_id", "doc_gaps", "tfs").mapInPandas(
+        _unpack, schema=DECODED_SCHEMA
     )
 
 

@@ -27,7 +27,11 @@ predecessor.  The payloads:
 - SPIMI run (``tokenizer.packed_term_runs``, one row per (shard, term) per
   Arrow batch): ``doc_deltas`` / ``tfs`` / ``pos_data`` laid out exactly as
   a posting block's ``doc_gaps`` / ``tfs`` / ``pos_data``, over any number
-  of postings.
+  of postings.  So a posting block is a run (``first_doc_id`` /
+  ``doc_gaps`` read as ``first_doc`` / ``doc_deltas``), and one merge
+  (``postings._merge_pack_run_rows``) packs every block written: the
+  build merges its map output's runs, and every repack (ADD, REMOVE,
+  ``compact``) merges the old blocks, plus an ADD's new runs.
 - doc-meta run (the ``term == ''`` rows of the same output, one per shard
   per Arrow batch): ``doc_deltas`` = the batch's doc_ids of that shard as
   one delta segment; ``tfs`` = their doclens as plain varints;
@@ -203,12 +207,13 @@ def decode_segments(
 def gather_segments(
     values: np.ndarray, counts: np.ndarray, order: np.ndarray
 ) -> np.ndarray:
-    """Reorder the consecutive segments of ``values`` (``counts`` values
-    each) into ``order``, keeping each segment's values in place."""
+    """The consecutive segments of ``values`` (``counts`` values each)
+    listed by ``order`` (a permutation or a subset of their indices), each
+    segment's values kept in place."""
     counts = np.asarray(counts, dtype=np.int64)
     new_counts = counts[order]
     shift = offsets(counts)[:-1][order] - offsets(new_counts)[:-1]
-    return values[np.arange(len(values)) + np.repeat(shift, new_counts)]
+    return values[np.arange(new_counts.sum()) + np.repeat(shift, new_counts)]
 
 
 def delta_encode(sorted_ids: np.ndarray) -> np.ndarray:

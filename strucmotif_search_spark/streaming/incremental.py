@@ -25,7 +25,12 @@ collected in one Spark job, its estimated memory within one task slot's
 heap — ``fits_driver_commit``) runs on the driver
 (streaming/local_commit.py: pyarrow reads of the rows it needs, the
 build's numpy kernels, pyarrow writes); any other commit runs the Spark
-arm below.  Both publish row-identical tables through the same
+arm below.  Both arms tokenize an ADD with the build's SPIMI run kernel
+(``tokenizer._run_batches``, under ``packed_term_runs`` on Spark) and
+repack postings with the build's merge (``postings._merge_pack_run_rows``,
+under ``pack_posting_runs`` on Spark): the affected shards' old blocks
+are read as runs, merged with an ADD's new runs, or with a REMOVE's
+victims left out.  Both publish row-identical tables through the same
 ``_refs.json`` / ``_meta.json`` / CURRENT protocol, and each ``done``
 lineage event records the ``arm`` taken.
 """
@@ -44,9 +49,9 @@ from ..build.doc_map import DOC_KEY
 from ..build.ids import assign_sorted_rank
 from ..build.index_store import IndexStore
 from ..build.norms import build_norms
-from ..build.postings import decode_postings, pack_postings
+from ..build.postings import blocks_as_runs, decode_postings, pack_posting_runs
 from ..build.terms import build_stats
-from ..tokenizer import term_frequencies
+from ..tokenizer import decode_doc_meta, packed_term_runs
 from . import local_commit
 from .local_commit import repeated_key_error
 
@@ -131,7 +136,11 @@ def fits_driver_commit(
     ~12-16 s of fixed jobs and per-row work that grows as fast as the
     driver's (ADD 24,000: 28 s), so no batch the driver can hold reaches
     a time crossover.  What the driver cannot do is hold a large commit:
-    the one refused above grew it by 1.35 GB."""
+    the one refused above grew it by 1.35 GB.  These runs predate the
+    repack by the build's posting merge, which decodes one slice of block
+    rows at a time: that commit now grows the driver by 230 MB (5,179 ms
+    driver, 13,345 ms Spark), so the per-doc weights overstate a REMOVE;
+    the bound is left as measured until it is refitted."""
     return commit_kb(
         n_docs, n_terms, batch_rows, affected_docs, positional
     ) <= DRIVER_KB
@@ -192,7 +201,10 @@ def add_documents(
     meta = store.meta(old_gen)
     local = _driver_commit(
         spark, store, old_gen, meta,
-        new_docs.select(*DOC_KEY, "lang", content_col),
+        new_docs.select(
+            *DOC_KEY, "lang", content_col,
+            F.unhex(F.sha2(F.col(content_col), 256)).alias("content_sha256"),
+        ),
         lambda batch: local_commit.LocalAdd(
             store, old_gen, meta, batch, content_col
         ),
@@ -342,37 +354,33 @@ def _add_spark(
         )
         store.write_table(remaining_free, "free_ids", gen)
 
-    # tokenize only the new docs (positions ride along on a positional index
+    # tokenize only the new docs with the build's kernel: SPIMI runs plus
+    # per-shard doc-meta rows (positions ride along on a positional index
     # so the repacked shards keep phrase capability)
-    tf_new = term_frequencies(
-        unknown.join(ids, on=DOC_KEY), content_col=content_col,
-        with_positions=wp, analyzer=meta.get("analyzer", "standard"),
-    ).join(ids.select("doc_id", "shard"), on="doc_id").persist()
-    tf_new.count()
+    runs_new = packed_term_runs(
+        unknown.join(ids, on=DOC_KEY), docs_per_shard=dps,
+        content_col=content_col, with_positions=wp,
+        analyzer=meta.get("analyzer", "standard"),
+    ).persist()
+    runs_new.count()
+    term_runs = runs_new.where(F.col("term") != "")
 
-    # doc_map: old ∪ new (doclen from the tokenize pass; sha from content)
+    # doc_map: old ∪ new (doclen and sha from the doc-meta rows)
     new_rows = (
-        unknown.select(
-            *DOC_KEY, "lang", F.sha2(F.col(content_col), 256).alias("content_sha256")
-        )
+        unknown.select(*DOC_KEY, "lang")
         .join(ids, on=DOC_KEY)
-        .join(
-            tf_new.groupBy("doc_id").agg(F.sum("tf").alias("doclen")),
-            on="doc_id",
-            how="left",
-        )
+        .join(decode_doc_meta(runs_new.where(F.col("term") == "")), on="doc_id")
         .select(
-            "doc_id", *DOC_KEY, "lang", "content_sha256",
-            F.coalesce(F.col("doclen"), F.lit(0)).cast("long").alias("doclen"),
-            "shard",
+            "doc_id", *DOC_KEY, "lang", "content_sha256", "doclen", "shard"
         )
     )
     store.write_table(doc_map.unionByName(new_rows), "doc_map", gen)
     doc_map_new = store.read_table(spark, "doc_map", gen)
 
-    # terms: exact df/cf merge; brand-new terms ranked after the old max id
-    delta = tf_new.groupBy("term").agg(
-        F.count("*").alias("df_add"), F.sum("tf").alias("cf_add")
+    # terms: exact df/cf merge from the run rows, as the build takes them;
+    # brand-new terms ranked after the old max id
+    delta = term_runs.groupBy("term").agg(
+        F.sum("n_docs").alias("df_add"), F.sum("sum_tf").alias("cf_add")
     )
     merged = terms.join(delta, on="term", how="full_outer")
     known_terms = merged.where(F.col("term_id").isNotNull()).select(
@@ -395,27 +403,27 @@ def _add_spark(
         "terms",
         gen,
     )
-    _p.unpersist()  # targeted: tf_new and caller caches must survive
+    _p.unpersist()  # targeted: runs_new and caller caches must survive
     terms_new = store.read_table(spark, "terms", gen)
 
     store.write_table(build_stats(doc_map_new), "stats", gen)
     store.write_table(build_norms(doc_map_new), "norms", gen)
 
-    # postings: repack ONLY affected shards = old decoded rows ∪ new tf
-    pcols = ["shard", "term_id", "doc_id", "tf"] + (["positions"] if wp else [])
-    old_affected = decode_postings(
+    # postings: repack ONLY affected shards = their old blocks merged with
+    # the new runs
+    old_runs = blocks_as_runs(
         store.read_postings(spark, old_gen).where(F.col("shard").isin(affected)),
-        with_positions=wp,
-    ).withColumn("shard", (F.col("doc_id") / dps).cast("int"))
-    new_with_ids = tf_new.join(terms_new.select("term", "term_id"), on="term").select(
-        *pcols
+        wp,
     )
-    union = old_affected.select(*pcols).unionByName(new_with_ids)
-    pack_postings(union, with_positions=wp).write.mode("overwrite").parquet(
+    new_runs = term_runs.join(terms_new.select("term", "term_id"), on="term")
+    pack_posting_runs(
+        old_runs.unionByName(new_runs.select(*old_runs.columns)),
+        with_positions=wp, presorted=False,
+    ).write.mode("overwrite").parquet(
         str(Path(store.root) / gen / "postings" / "chunk=add")
     )
     n_added = ids.count()
-    tf_new.unpersist()
+    runs_new.unpersist()
     _drop_ids(store, gen)
     _publish(store, old_gen, gen, _grown_meta(meta, affected), affected)
     store.log(
@@ -463,7 +471,6 @@ def _remove_spark(
     keys: DataFrame, t0: float,
 ) -> str:
     """The Spark arm of ``remove_documents``."""
-    dps = meta["docs_per_shard"]
     wp = bool(meta.get("with_positions"))
     doc_map = store.read_table(spark, "doc_map")
     terms = store.read_table(spark, "terms")
@@ -473,7 +480,8 @@ def _remove_spark(
 
     # E2 delta-minus: known ∩ requested
     victims = doc_map.join(keys.select(*DOC_KEY), on=DOC_KEY, how="left_semi")
-    affected = [r["shard"] for r in victims.select("shard").distinct().collect()]
+    placed = victims.select("doc_id", "shard").toPandas()
+    affected = sorted({int(s) for s in placed["shard"]})
     victim_ids = victims.select("doc_id")
 
     store.write_table(
@@ -485,12 +493,12 @@ def _remove_spark(
     retired = victim_ids if free is None else free.unionByName(victim_ids)
     store.write_table(retired.distinct(), "free_ids", gen)
 
-    old_affected = decode_postings(
-        store.read_postings(spark, old_gen).where(F.col("shard").isin(affected)),
-        with_positions=wp,
+    old_blocks = store.read_postings(spark, old_gen).where(
+        F.col("shard").isin(affected)
     )
-    removed_tf = old_affected.join(victim_ids, on="doc_id", how="left_semi")
-    survivors = old_affected.join(victim_ids, on="doc_id", how="left_anti")
+    removed_tf = decode_postings(old_blocks).join(
+        victim_ids, on="doc_id", how="left_semi"
+    )
 
     # terms: exact decrement (E3 df/cf surgery); drop df<=0 rows
     dec = removed_tf.groupBy("term_id").agg(
@@ -510,14 +518,11 @@ def _remove_spark(
     store.write_table(build_stats(doc_map_new), "stats", gen)
     store.write_table(build_norms(doc_map_new), "norms", gen)
 
-    pcols = ["shard", "term_id", "doc_id", "tf"] + (["positions"] if wp else [])
-    surviving_blocks = pack_postings(
-        survivors.withColumn("shard", (F.col("doc_id") / dps).cast("int")).select(
-            *pcols
-        ),
-        with_positions=wp,
-    )
-    surviving_blocks.write.mode("overwrite").parquet(
+    # the old blocks merged as runs, the victims' postings left out
+    pack_posting_runs(
+        blocks_as_runs(old_blocks, wp), with_positions=wp, presorted=False,
+        drop=placed["doc_id"].to_numpy(),
+    ).write.mode("overwrite").parquet(
         str(Path(store.root) / gen / "postings" / "chunk=remove")
     )
     _publish(store, old_gen, gen, meta, affected)
@@ -540,8 +545,10 @@ def compact(spark: SparkSession, store: IndexStore) -> str:
 
     Incremental ADD/REMOVE generations answer queries through a unioned,
     exchange-paying read plan; compaction restores the exchange-free
-    bucketed layout.  Scale shape: decode -> one hash(shard) shuffle of
-    narrow rows -> repack, identical to the fused build's pack stage.
+    bucketed layout.  Scale shape: one hash(shard) shuffle of posting
+    BLOCK rows, read as SPIMI runs, then the fused build's merge
+    (``pack_posting_runs``) into ``spark.sql.shuffle.partitions`` buckets;
+    postings are decoded only inside the merge.
     """
     old_gen = store.current_gen()
     meta = store.meta(old_gen)
@@ -549,14 +556,10 @@ def compact(spark: SparkSession, store: IndexStore) -> str:
     t0 = time.time()
     gen = store.new_gen()
     store.log(gen=gen, stage="compact", status="start", base=old_gen)
-    dps = meta["docs_per_shard"]
-    rows = decode_postings(
-        store.read_postings(spark), with_positions=wp
-    ).withColumn("shard", (F.col("doc_id") / dps).cast("int"))
     nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    pcols = ["shard", "term_id", "doc_id", "tf"] + (["positions"] if wp else [])
-    blocks = pack_postings(
-        rows.select(*pcols), partitions=nb, with_positions=wp
+    blocks = pack_posting_runs(
+        blocks_as_runs(store.read_postings(spark), wp), with_positions=wp,
+        presorted=False, partitions=nb,
     )
     store.write_bucketed(
         blocks, "postings", gen, n_buckets=nb,

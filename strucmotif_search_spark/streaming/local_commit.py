@@ -6,12 +6,12 @@ The Spark arm (``incremental.add_documents`` / ``remove_documents``) pays
 the one or two shards it touches.  This arm reads what the commit needs
 with pyarrow — ``doc_map``, ``free_ids`` and ``norms`` to place the batch,
 then ``terms`` and only the affected shards' posting blocks — computes the
-new generation with the kernels the Spark arm runs (``_tf_batches`` after
-``analyze_text``, ``decode_blocks``, ``_pack_partition``, ``_pack_norms``) and
-writes the same tables with ``pyarrow.parquet``.  Both arms therefore
-publish row-identical generations; ``incremental.fits_driver_commit``
-picks the arm by the driver memory the commit is estimated to need, and
-nothing is written before it has.
+new generation with the kernels the Spark arm runs (``_run_batches`` after
+``analyze_text``, ``_merge_pack_run_rows`` through ``_carry_runs``,
+``_pack_norms``) and writes the same tables with ``pyarrow.parquet``.
+Both arms therefore publish row-identical generations;
+``incremental.fits_driver_commit`` picks the arm by the driver memory the
+commit is estimated to need, and nothing is written before it has.
 
 Each commit is a two-step object: the constructor reads and places the
 batch (E1 / E2, minted ids, ``affected`` shards and the docs they hold),
@@ -20,7 +20,6 @@ batch (E1 / E2, minted ids, ``affected`` shards and the docs they hold),
 
 from __future__ import annotations
 
-import hashlib
 import uuid
 from pathlib import Path
 
@@ -36,16 +35,18 @@ from ..build.doc_map import DOC_KEY
 from ..build.index_store import IndexStore, has_data, scan_postings
 from ..build.norms import NORMS_SCHEMA, _pack_norms
 from ..build.postings import (
+    BLOCK_COLUMN,
     POSTINGS_POS_SCHEMA,
     POSTINGS_SCHEMA,
-    _pack_partition,
-    decode_blocks,
+    _carry_runs,
+    _merge_pack_run_rows,
+    run_columns,
 )
-from ..tokenizer import TOKEN_PATTERN, _tf_batches, analyze_text
+from ..tokenizer import _decode_doc_rows, _run_batches, analyze_text
 
-# rows per kernel call: the Spark arm's Arrow batch size
+# block rows per merge call: the Spark arm's Arrow batch size
 # (spark.sql.execution.arrow.maxRecordsPerBatch), which also bounds the
-# kernels' transient arrays on the driver
+# postings decoded at once on the driver
 BATCH_ROWS = 8192
 
 _ARROW_TYPES = {
@@ -141,43 +142,49 @@ class _Commit:
             ],
         )
 
-    def _old_postings(self) -> pd.DataFrame:
-        """The affected shards' postings decoded: (term_id, doc_id, tf[,
-        positions]) from every posting part, each minus its excluded
-        shards."""
-        cols = ["term_id", "doc_gaps", "tfs"] + (["pos_data"] if self.wp else [])
-        tables = scan_postings(
-            self.store.posting_datasets(self.old_gen), cols,
-            pc.field("shard").isin(self.affected),
-        )
-        return pd.concat(
-            [_empty_postings(self.wp)] + [
-                decode_blocks(b.to_pandas(), self.wp)
-                for t in tables
-                for b in t.to_batches(max_chunksize=BATCH_ROWS)
-                if b.num_rows
-            ],
-            ignore_index=True,
-        )
-
-    def _postings(self, rows: list[pd.DataFrame]) -> pa.Table:
-        """Posting rows -> blocks: sort by (shard, term_id, doc_id) and
-        pack in Arrow-batch slices with the Spark arm's ``_pack_partition``
-        (it carries a (shard, term) run across slices)."""
-        cols = ["term_id", "doc_id", "tf"] + (["positions"] if self.wp else [])
-        every = pd.concat([r[cols] for r in rows], ignore_index=True)
-        every.insert(0, "shard", every["doc_id"] // self.dps)
-        every = every.iloc[
-            np.lexsort((every["doc_id"], every["term_id"], every["shard"]))
-        ]
+    def _repack(
+        self, new_runs: pd.DataFrame | None = None,
+        drop: np.ndarray | None = None,
+    ) -> tuple[pa.Table, pd.DataFrame]:
+        """The affected shards' posting blocks read as SPIMI runs, plus an
+        ADD's ``new_runs``, minus the postings of the doc ids in ``drop``
+        (a REMOVE's victims), merged into new blocks.  Only the block rows
+        are sorted, by (shard, term_id, first_doc); the Spark arm's merge
+        then decodes them in ``BATCH_ROWS`` slices (``_carry_runs`` carries
+        a (shard, term_id) group across slices).  Returns the blocks and
+        the dropped postings' ``(term_id, tf)``."""
         schema = _arrow(POSTINGS_POS_SCHEMA if self.wp else POSTINGS_SCHEMA)
-        return pa.concat_tables([schema.empty_table()] + [
-            pa.Table.from_pandas(b, schema=schema, preserve_index=False)
-            for b in _pack_partition(
-                every.iloc[i : i + BATCH_ROWS]
-                for i in range(0, len(every), BATCH_ROWS)
+        cols = run_columns(self.wp)
+        block_cols = [BLOCK_COLUMN.get(c, c) for c in cols]
+        # the empty table keeps the schema when no posting part exists
+        tables = [
+            t.select(block_cols).rename_columns(cols)
+            for t in [schema.empty_table()] + scan_postings(
+                self.store.posting_datasets(self.old_gen), block_cols,
+                pc.field("shard").isin(self.affected),
             )
-        ])
+        ]
+        if new_runs is not None:
+            tables.append(
+                pa.Table.from_pandas(new_runs[cols], preserve_index=False)
+            )
+        runs = pa.concat_tables(tables, promote_options="permissive").sort_by(
+            [(c, "ascending") for c in ("shard", "term_id", "first_doc")]
+        )
+        blocks = [schema.empty_table()]
+        dropped = [pd.DataFrame({"term_id": [], "tf": []}, dtype=np.int64)]
+        for packed, gone in _carry_runs(
+            (
+                runs.slice(i, BATCH_ROWS).to_pandas()
+                for i in range(0, runs.num_rows, BATCH_ROWS)
+            ),
+            lambda f: _merge_pack_run_rows(f, self.wp, drop),
+        ):
+            blocks.append(
+                pa.Table.from_pandas(packed, schema=schema, preserve_index=False)
+            )
+            dropped.append(gone)
+        return pa.concat_tables(blocks), pd.concat(dropped, ignore_index=True)
 
     def _norms(self, doc_map: pa.Table) -> pa.Table:
         """Unaffected shards' norms rows as they are; the affected shards
@@ -220,8 +227,9 @@ class _Commit:
 
 
 class LocalAdd(_Commit):
-    """ADD of a collected batch (columns DOC_KEY, ``lang``,
-    ``content_col``): the Spark arm's E1, id minting and table merges."""
+    """ADD of a collected batch (columns DOC_KEY, ``lang``, ``content_col``
+    and ``content_sha256``, the raw digest the collect computes): the
+    Spark arm's E1, id minting and table merges."""
 
     chunk = "add"
 
@@ -272,25 +280,29 @@ class LocalAdd(_Commit):
                 pa.table({"doc_id": self.free_left}, schema=FREE_IDS),
                 "free_ids", gen, codec,
             )
-        content = self.rows[self.content_col]
         analyzer = self.meta.get("analyzer", "standard")
         text = pd.DataFrame({
             "doc_id": self.doc_ids,
-            "content": [analyze_text(c, analyzer) for c in content],
+            "content": [
+                analyze_text(c, analyzer) for c in self.rows[self.content_col]
+            ],
+            "content_sha256": self.rows["content_sha256"].to_numpy(),
         })
-        tf = pd.concat(
-            [_empty_tf(self.wp)]
-            + list(_tf_batches(iter([text]), TOKEN_PATTERN, self.wp)),
+        # the build's tokenize kernel: SPIMI term runs and doc-meta rows
+        runs = pd.concat(
+            list(_run_batches(iter([text]), self.dps, self.wp)),
             ignore_index=True,
         )
-        doclen = tf.groupby("doc_id")["tf"].sum()
+        is_doc = (runs["term"] == "").to_numpy()
+        doc_meta = _decode_doc_rows(runs[is_doc]).set_index("doc_id").reindex(
+            self.doc_ids
+        )
+        runs = runs[~is_doc]
         new_rows = pd.DataFrame({
             "doc_id": self.doc_ids,
             **{c: self.rows[c] for c in (*DOC_KEY, "lang")},
-            "content_sha256": [
-                hashlib.sha256(c.encode()).hexdigest() for c in content
-            ],
-            "doclen": doclen.reindex(self.doc_ids, fill_value=0).to_numpy(),
+            "content_sha256": doc_meta["content_sha256"].to_numpy(),
+            "doclen": doc_meta["doclen"].to_numpy(),
             "shard": (self.doc_ids // self.dps).astype(np.int32),
         })
         # the Spark arm's union: the old column order, every field nullable
@@ -301,10 +313,11 @@ class LocalAdd(_Commit):
                 new_rows[schema.names], schema=schema, preserve_index=False
             ),
         ])
-        # terms: exact df/cf add; fresh terms ranked after the old max id
+        # terms: exact df/cf add from the run rows, as the build takes
+        # them; fresh terms ranked after the old max id
         terms = read_table(self.store, "terms", self.old_gen).to_pandas()
-        delta = tf.groupby("term").agg(
-            df_add=("tf", "size"), cf_add=("tf", "sum")
+        delta = runs.groupby("term").agg(
+            df_add=("n_docs", "sum"), cf_add=("sum_tf", "sum")
         )
         add = delta.reindex(terms["term"], fill_value=0)
         terms["df"] += add["df_add"].to_numpy()
@@ -317,11 +330,11 @@ class LocalAdd(_Commit):
             "df": fresh["df_add"].to_numpy(),
             "cf": fresh["cf_add"].to_numpy(),
         })], ignore_index=True)
-        # postings: the affected shards' old rows ∪ the new rows
-        tf["term_id"] = tf["term"].map(
+        # postings: the affected shards' old blocks merged with the new runs
+        term_id = runs["term"].map(
             pd.Series(terms["term_id"].to_numpy(), index=terms["term"])
         ).astype(np.int64)
-        postings = self._postings([self._old_postings(), tf])
+        postings, _ = self._repack(new_runs=runs.assign(term_id=term_id))
         self._publish_tables(gen, codec, doc_map, terms, postings)
 
 
@@ -356,10 +369,9 @@ class LocalRemove(_Commit):
             ),
             "free_ids", gen, codec,
         )
-        old = self._old_postings()
-        gone = np.isin(old["doc_id"].to_numpy(), self.victim_ids)
+        postings, gone = self._repack(drop=self.victim_ids)
         # terms: exact df/cf decrement; rows left with df <= 0 drop out
-        dec = old[gone].groupby("term_id").agg(
+        dec = gone.groupby("term_id").agg(
             df_sub=("tf", "size"), cf_sub=("tf", "sum")
         )
         terms = read_table(self.store, "terms", self.old_gen).to_pandas()
@@ -367,24 +379,7 @@ class LocalRemove(_Commit):
         terms["df"] -= sub["df_sub"].to_numpy()
         terms["cf"] -= sub["cf_sub"].to_numpy()
         terms = terms[terms["df"] > 0]
-        postings = self._postings([old[~gone]])
         self._publish_tables(gen, codec, doc_map, terms, postings)
-
-
-def _empty_tf(with_positions: bool) -> pd.DataFrame:
-    cols = {
-        "doc_id": np.empty(0, np.int64), "term": np.empty(0, object),
-        "tf": np.empty(0, np.int64),
-    }
-    if with_positions:
-        cols["positions"] = np.empty(0, object)
-    return pd.DataFrame(cols)
-
-
-def _empty_postings(with_positions: bool) -> pd.DataFrame:
-    return _empty_tf(with_positions).drop(columns="term").assign(
-        term_id=np.empty(0, np.int64)
-    )
 
 
 def repeated_key_error(key: tuple) -> ValueError:

@@ -15,10 +15,12 @@ Three code paths, all JVM/Arrow friendly:
   whole-stage-codegen'd, used when a token *array column* is all we need.
 - :func:`term_frequencies` — ``mapInPandas`` kernel emitting
   ``(doc_id, term, tf)`` rows, array-at-a-time in Arrow + numpy (no
-  per-token Python); incremental ADD and classification tokenize with it.
+  per-token Python); classification tokenizes with it.
 - :func:`packed_term_runs` — the same tokenization packed map-side into
-  per-(shard, term) posting runs: the full build's SPIMI stage-1 map side
-  (StrucmotifUpdate.java:327-373 analogue).
+  per-(shard, term) posting runs: the SPIMI stage-1 map side of the full
+  build and of incremental ADD (StrucmotifUpdate.java:327-373 analogue);
+  the driver commit arm runs its kernel, :func:`_run_batches`, in
+  process.
 """
 
 from __future__ import annotations
@@ -230,9 +232,7 @@ def _count_pairs(rows: np.ndarray, codes: np.ndarray, ordinals):
 
 
 def _tf_batches(
-    batches: Iterator[pd.DataFrame],
-    pattern: str,
-    with_positions: bool = False,
+    batches: Iterator[pd.DataFrame], with_positions: bool = False
 ) -> Iterator[pd.DataFrame]:
     """Arrow-native tf kernel: :func:`_tokenize`, then one row per distinct
     (doc, term) pair.  Python strings materialize only for the far-smaller
@@ -304,10 +304,7 @@ def _runs_schema(with_positions: bool) -> StructType:
 
 
 def _run_batches(
-    batches: Iterator[pd.DataFrame],
-    pattern: str,
-    docs_per_shard: int,
-    with_positions: bool,
+    batches: Iterator[pd.DataFrame], docs_per_shard: int, with_positions: bool
 ) -> Iterator[pd.DataFrame]:
     """Packed-run kernel: :func:`_tokenize` and :func:`_count_pairs`, then
     entries are sorted (term-code, doc_id) in numpy and each maximal (term,
@@ -412,9 +409,8 @@ def packed_term_runs(
         analyze_expr(F.col(content_col), analyzer).alias("content"),
         F.unhex(F.sha2(F.col(content_col), 256)).alias("content_sha256"),
     )
-    pattern = TOKEN_PATTERN
     return src.mapInPandas(
-        lambda it: _run_batches(it, pattern, docs_per_shard, with_positions),
+        lambda it: _run_batches(it, docs_per_shard, with_positions),
         schema=_runs_schema(with_positions),
     )
 
@@ -428,6 +424,22 @@ DOC_META_SCHEMA = StructType(
 )
 
 
+def _decode_doc_rows(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Packed doc-metadata rows -> ``(doc_id, doclen, sha hex)``, one row
+    per document."""
+    counts = pdf["n_docs"].to_numpy()
+    ids, _ = decode_segments(pdf["doc_deltas"], counts, delta=True)
+    lens, _ = decode_segments(pdf["tfs"], counts)
+    hex_all = b"".join(pdf["sha_data"]).hex()
+    return pd.DataFrame({
+        "doc_id": ids,
+        "doclen": lens,
+        "content_sha256": [
+            hex_all[i * 64:(i + 1) * 64] for i in range(ids.size)
+        ],
+    })
+
+
 def decode_doc_meta(doc_rows: DataFrame) -> DataFrame:
     """Inverse of the doc-metadata packing: ``(doc_id, doclen, sha hex)``
     one row per document.  Input: the ``term == ''`` rows of
@@ -435,19 +447,8 @@ def decode_doc_meta(doc_rows: DataFrame) -> DataFrame:
 
     def _unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            counts = pdf["n_docs"].to_numpy()
-            ids, _ = decode_segments(pdf["doc_deltas"], counts, delta=True)
-            lens, _ = decode_segments(pdf["tfs"], counts)
-            hex_all = b"".join(pdf["sha_data"]).hex()
-            yield pd.DataFrame({
-                "doc_id": ids,
-                "doclen": lens,
-                "content_sha256": [
-                    hex_all[i * 64:(i + 1) * 64] for i in range(ids.size)
-                ],
-            })
+            if len(pdf):
+                yield _decode_doc_rows(pdf)
 
     return doc_rows.select(
         "n_docs", "doc_deltas", "tfs", "sha_data"
@@ -472,9 +473,8 @@ def term_frequencies(
     src = docs.select(
         "doc_id", analyze_expr(F.col(content_col), analyzer).alias("content")
     )
-    pattern = TOKEN_PATTERN
     schema = TFP_SCHEMA if with_positions else TF_SCHEMA
     return src.mapInPandas(
-        lambda it: _tf_batches(it, pattern, with_positions),
+        lambda it: _tf_batches(it, with_positions),
         schema=schema,
     )

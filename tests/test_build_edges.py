@@ -10,9 +10,11 @@ from strucmotif_search_spark.engine import SearchEngine
 from strucmotif_search_spark.oracle import bm25_topk, build_oracle
 from strucmotif_search_spark.streaming.incremental import (
     add_documents,
+    remove_documents,
     verify_consistency,
 )
 
+KEY = ["repo", "path", "commit"]
 ZEROS = {"orphan_doc_ids": 0, "inconsistent_terms": 0, "duplicate_docs": 0}
 
 
@@ -67,6 +69,27 @@ def test_add_onto_empty_generation(spark, tmp_path, request, arm):
             for r in eng.search(query, k=10, mode=mode).collect()
         ]
         assert got and got == bm25_topk(oracle, query, k=10, mode=mode)
+
+
+@pytest.mark.parametrize("arm", ["driver", "spark"])
+def test_remove_from_generation_without_postings(
+    spark, tmp_path, request, arm
+):
+    """A REMOVE of token-less documents from a generation whose postings
+    dir holds no data file: the repack merges no block."""
+    if arm == "spark":
+        request.getfixturevalue("spark_commit_arm")
+    store = IndexStore(tmp_path / "tokenless")
+    docs = spark.createDataFrame(
+        [("r", f"p{i}.py", "c1", "py", " ... ") for i in range(3)],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    build_index(spark, docs, store, docs_per_shard=16)
+    assert store.posting_parts() == []
+    remove_documents(spark, store, docs.limit(1).select(*KEY))
+    assert store.lineage()[-1]["arm"] == arm
+    assert verify_consistency(spark, store) == ZEROS
+    assert SearchEngine(spark, store).stats.first()["n_docs"] == 2
 
 
 def test_build_keeps_other_engines_caches(spark, tmp_path):

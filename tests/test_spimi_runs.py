@@ -4,8 +4,9 @@ The fused build's map output is one varint-packed row per (shard, term) per
 Arrow batch plus packed per-shard doc-metadata rows — postings never exist
 as individual rows anywhere in the build.  These tests pin the layout's
 correctness against the posting-row reference kernel
-(`tokenizer.term_frequencies`) and the row-path packer (`pack_postings`):
-same postings, same doclens/sha, byte-identical published blocks.
+(`tokenizer.term_frequencies`) and the block packer run over its sorted
+rows (`postings._pack_runs`): same postings, same doclens/sha,
+byte-identical published blocks.
 
 Reference analogue: per-thread partial posting files
 (update/Context.java:50-73) merged by commit
@@ -24,8 +25,8 @@ from strucmotif_search_spark.build.norms import (
     build_norms_from_doc_runs,
 )
 from strucmotif_search_spark.build.postings import (
+    _pack_runs,
     pack_posting_runs,
-    pack_postings,
 )
 from strucmotif_search_spark.corpus import generate_corpus
 from strucmotif_search_spark.tokenizer import (
@@ -96,19 +97,15 @@ def test_doc_meta_roundtrip(spark, docs):
 @pytest.mark.parametrize("with_positions", [False, True])
 def test_packed_blocks_byte_identical(spark, docs, with_positions):
     """pack_posting_runs over the runs layout must produce byte-identical
-    blocks to pack_postings over the equivalent posting rows (the published
-    index format is the contract — readers never know which path built it)."""
+    blocks to the block packer over the equivalent posting rows, sorted by
+    (shard, term_id, doc_id) (the published index format is the contract —
+    readers never know which path built it)."""
     runs = packed_term_runs(
         docs, docs_per_shard=DOCS_PER_SHARD, with_positions=with_positions
     )
-    tf = term_frequencies(docs, with_positions=with_positions).withColumn(
-        "shard", (F.col("doc_id") / DOCS_PER_SHARD).cast("int")
-    )
+    tf = term_frequencies(docs, with_positions=with_positions).toPandas()
     # same dictionary for both paths
-    terms = (
-        tf.select("term").distinct().toPandas()["term"]
-        .sort_values().reset_index(drop=True)
-    )
+    terms = tf["term"].drop_duplicates().sort_values().reset_index(drop=True)
     dict_pdf = pd.DataFrame({"term": terms, "term_id": np.arange(len(terms))})
     dict_df = F.broadcast(spark.createDataFrame(dict_pdf))
 
@@ -119,10 +116,15 @@ def test_packed_blocks_byte_identical(spark, docs, with_positions):
         .select(*run_cols),
         with_positions=with_positions, presorted=False, partitions=4,
     ).toPandas()
-    blocks_b = pack_postings(
-        tf.join(dict_df, on="term"), partitions=4,
-        with_positions=with_positions,
-    ).toPandas()
+    rows = tf.merge(dict_pdf, on="term").assign(
+        shard=lambda r: (r["doc_id"] // DOCS_PER_SHARD).astype(np.int32)
+    ).sort_values(["shard", "term_id", "doc_id"], ignore_index=True)
+    blocks_b = _pack_runs(
+        rows["shard"].to_numpy(), rows["term_id"].to_numpy(),
+        rows["doc_id"].to_numpy(), rows["tf"].to_numpy(),
+        positions=np.concatenate(rows["positions"].to_numpy()).astype(np.int64)
+        if with_positions else None,
+    )
     key = ["shard", "term_id", "block_id"]
     a = blocks_a.sort_values(key).reset_index(drop=True)
     b = blocks_b.sort_values(key).reset_index(drop=True)

@@ -38,15 +38,14 @@ def _make_batch():
 
 
 def worker(_i: int) -> float:
-    from strucmotif_search_spark import TOKEN_PATTERN
     from strucmotif_search_spark.tokenizer import _tf_batches
 
     pdf = _make_batch()
     # warm-up batch (allocator high-water mark, import costs)
-    list(_tf_batches(iter([pdf]), TOKEN_PATTERN))
+    list(_tf_batches(iter([pdf])))
     t0 = time.time()
     for _ in range(N_BATCHES):
-        for out in _tf_batches(iter([pdf]), TOKEN_PATTERN):
+        for out in _tf_batches(iter([pdf])):
             pass
     dt = time.time() - t0
     return (N_DOCS_PER_BATCH * N_BATCHES) / dt  # docs/sec in this worker
