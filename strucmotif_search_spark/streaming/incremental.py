@@ -480,8 +480,8 @@ def _remove_spark(
 
     # E2 delta-minus: known ∩ requested
     victims = doc_map.join(keys.select(*DOC_KEY), on=DOC_KEY, how="left_semi")
-    placed = victims.select("doc_id", "shard").toPandas()
-    affected = sorted({int(s) for s in placed["shard"]})
+    victim_rows = victims.select("doc_id", "shard").toPandas()
+    affected = sorted({int(s) for s in victim_rows["shard"]})
     victim_ids = victims.select("doc_id")
 
     store.write_table(
@@ -521,7 +521,7 @@ def _remove_spark(
     # the old blocks merged as runs, the victims' postings left out
     pack_posting_runs(
         blocks_as_runs(old_blocks, wp), with_positions=wp, presorted=False,
-        drop=placed["doc_id"].to_numpy(),
+        drop=victim_rows["doc_id"].to_numpy(),
     ).write.mode("overwrite").parquet(
         str(Path(store.root) / gen / "postings" / "chunk=remove")
     )

@@ -21,7 +21,11 @@ from strucmotif_search_spark.build.postings import (
     _pack_runs,
     run_columns,
 )
-from strucmotif_search_spark.codec import encode_segments, offsets
+from strucmotif_search_spark.codec import (
+    encode_segments,
+    gather_segments,
+    offsets,
+)
 
 DOCS_PER_SHARD = 300  # > 2 blocks of 128, so groups span several blocks
 
@@ -36,7 +40,9 @@ def _postings(rng, sizes, with_positions):
         shard.append(np.full(n, s))
         tid.append(np.full(n, i % 3))
         ids.append(s * DOCS_PER_SHARD + docs)
-    shard, tid, ids = (np.concatenate(a).astype(np.int64) for a in (shard, tid, ids))
+    shard, tid, ids = (
+        np.concatenate(a).astype(np.int64) for a in (shard, tid, ids)
+    )
     tfs = rng.integers(1, 5, ids.size)
     positions = None
     if with_positions:
@@ -60,13 +66,10 @@ def _as_runs(shard, tid, ids, tfs, positions, rows: np.ndarray) -> pd.DataFrame:
         "tfs": encode_segments(tfs[rows], starts),
     }
     if positions is not None:
-        pstarts = offsets(tfs)
-        own = np.concatenate(
-            [np.arange(pstarts[r], pstarts[r + 1]) for r in rows]
-        ).astype(np.int64)
-        ostarts = offsets(tfs[rows])
+        pstarts = offsets(tfs[rows])
         cols["pos_data"] = encode_segments(
-            positions[own], ostarts[starts], restarts=ostarts[:-1]
+            gather_segments(positions, tfs, rows), pstarts[starts],
+            restarts=pstarts[:-1],
         )
     return pd.DataFrame(cols)
 
@@ -89,14 +92,10 @@ def test_merge_equals_packing_the_sorted_survivors(
     parts = []
     old = np.flatnonzero(source == 0)
     if old.size:
-        pos_old = None
-        if with_positions:
-            pstarts = offsets(tfs)
-            pos_old = np.concatenate(
-                [positions[pstarts[r]:pstarts[r + 1]] for r in old]
-            ).astype(np.int64)
         blocks = _pack_runs(
-            shard[old], tid[old], ids[old], tfs[old], positions=pos_old
+            shard[old], tid[old], ids[old], tfs[old],
+            positions=gather_segments(positions, tfs, old)
+            if with_positions else None,
         )
         parts.append(blocks.rename(
             columns={b: r for r, b in BLOCK_COLUMN.items()}
